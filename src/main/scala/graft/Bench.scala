@@ -55,14 +55,7 @@ object Bench {
       Thread.sleep(15000)
       startLoad = osBean.getSystemLoadAverage
     }
-    val spark = SessionEnv.withMaster(SparkSession.builder(), cpus)
-      .withExtensions(new graft.plans.GraftSparkSessionExtension)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionEnv.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // Warmup: one scan per input table (file listing + footer reads + JIT).

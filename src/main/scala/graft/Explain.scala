@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality inspector: dumps formatted plans for the given query names
   * (default: a pushdown-sensitive subset) so scan pruning, PushedFilters,
   * broadcast joins, and WholeStageCodegen spans can be eyeballed/grepped. */
@@ -11,17 +9,9 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_pricing_summary", "q2_range_filter", "q3_join_topk",
         "q6_forecast_revenue", "q13_token_stats")
-    // extension registered + cpus honored (r17) so the dumped plans show
-    // exactly what Bench/Verify plan, incl. injected strategies
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftSparkSessionExtension)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the Bench/Verify session, so the dumped plans show exactly what
+    // they plan, incl. injected strategies
+    val spark = SessionEnv.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * Master selection for the driver-contract mains (Verify/Bench):
+ * Session set-up shared by the driver-contract mains (Verify/Bench) and
+ * the inspection tools (Explain, GateProfile), so all of them plan and
+ * run queries the same way. Master selection:
  * `SPARK_GRAFT_MASTER` overrides the default `local[cpus]` — the round-15
  * multi-process validation axis runs the same sweeps under
  * `local-cluster[w,c,mb]`, where executors are SEPARATE JVMs and every
@@ -37,9 +39,7 @@ object SessionEnv {
     // coalesces it. Purely a physical-planning knob: results are identical,
     // and at every scale the cached exchange sizes to the DATA, not to the
     // static partition count (guide §2.2).
-    val b0 = b.config(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+    val b0 = b.config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     val b1 = b0.master(master)
     if (!master.startsWith("local-cluster")) b1
     else b1
@@ -49,4 +49,20 @@ object SessionEnv {
       .config("spark.executor.memory",
         sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
   }
+
+  /** The engine session every main runs on: `cpus` task slots and
+    * shuffle partitions, the graft extension (native DDL verbs such as
+    * ALTER COLUMN SET NOT NULL need its analyzer rule), UTC, µs-unit
+    * output timestamps (not INT96, so DuckDB/pyarrow read back the same
+    * logical values the oracle computes) and nanosecond parquet
+    * timestamps read as longs (events.ts — see Tables.events). */
+  def session(cpus: String): SparkSession =
+    withMaster(SparkSession.builder(), cpus)
+      .withExtensions(new graft.plans.GraftSparkSessionExtension)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 }

@@ -36,7 +36,6 @@ object Tables {
     * count. For the scan shapes that reach this branch, `toRdd` computes
     * partitions from the file index without running a job. */
   def widen(df: DataFrame, bytesPerTask: Long = 128L << 10): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_WIDEN").contains("off")) return df
     import org.apache.spark.sql.catalyst.plans.logical._
     val shuffled = df.queryExecution.optimizedPlan.exists {
       case _: Join | _: Aggregate | _: Window | _: Sort |
@@ -61,12 +60,9 @@ object Tables {
       // bigrams, minhash shingles) pass 16 KB because their per-byte
       // compute is ~10× heavier, so even small inputs repay full fan-out.
       // Both constants were calibrated by 32-core A/B at sf0.1
-      // (OPTIMIZATION_r17.md); SPARK_GRAFT_WIDEN_BYTES_PER_TASK overrides
-      // globally for measurement.
-      val bpt = sys.env.get("SPARK_GRAFT_WIDEN_BYTES_PER_TASK")
-        .map(_.toLong).getOrElse(bytesPerTask)
+      // (OPTIMIZATION_r17.md).
       val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val byBytes = (bytes + bpt - 1) / bpt
+      val byBytes = (bytes + bytesPerTask - 1) / bytesPerTask
       val target = byBytes
         .min(BigInt(df.sparkSession.sparkContext.defaultParallelism))
         .max(BigInt(1)).toInt

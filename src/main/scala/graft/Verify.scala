@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,21 +12,7 @@ object Verify {
       s"unknown query name(s): ${unknown.mkString(", ")} - a typo here would " +
         "run nothing and read as a green verify")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionEnv.withMaster(SparkSession.builder(), cpus)
-      // build-time extension route: native DDL verbs (ALTER COLUMN SET
-      // NOT NULL) need an analyzer rule, which only exists on sessions
-      // built with the extension — the live-session ensure() route keeps
-      // the TVF surface for everything else.
-      .withExtensions(new graft.plans.GraftSparkSessionExtension)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs-unit timestamps in output parquet (not INT96) so DuckDB/pyarrow
-      // read back the same logical values the oracle computes.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.ts is TIMESTAMP(NANOS): read as ns-long, converted in Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionEnv.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected =

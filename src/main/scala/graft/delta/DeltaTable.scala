@@ -1,6 +1,6 @@
 package graft.delta
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -169,7 +169,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     val allRelative = snap.activeFiles.forall(f =>
       !f.path.startsWith("/") && !f.path.contains(":/"))
     // Partition directories are UTC-canonical by construction (see
-    // writeDataFilesRaw) — pin the file source's partition-value PARSING
+    // TaskWriter.dirOf) — pin the file source's partition-value PARSING
     // to UTC too, or a non-UTC session would shift every zoned-timestamp
     // partition value by its offset (the DSv2 path already parses at UTC
     // in GraftBatchScan.partitionValueRow).
@@ -421,9 +421,10 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
 
   /**
    * Batch write (reference: DeltaTable.write, src/delta/table.ts:694-837).
-   * Executors write Parquet into a staging dir; files are moved into the
-   * table layout; ONE aggregation computes per-file stats; the driver then
-   * commits atomically with OCC retry. Schema evolves additively
+   * Executors write Parquet under final names in the table layout (the
+   * task writer, [[writeDataFiles]]); per-file stats come from the
+   * footers; the driver then commits atomically with OCC retry — until
+   * that commit the files are invisible. Schema evolves additively
    * (src/delta/table.ts:1239-1280).
    */
   def write(df: DataFrame, mode: String = "append",
@@ -504,7 +505,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     // Baseline for the commit-time constraint catch-up below: read BEFORE
     // staging, so a constraint added at any later point counts as late.
     val enforcedConstraints = checkConstraints(snap0)
-    // the staged write is the job that consumes the allocator's pinned
+    // the write job is the one that consumes the allocator's pinned
     // blocks; release them as soon as it has run (commit retries below
     // replay metadata only, never the plan)
     val adds =
@@ -669,8 +670,8 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
    * of a 100-TB table without touching the rest). New rows MUST satisfy
    * `condition` (Delta's replaceWhere constraint): a row landing outside
    * the replaced region would silently coexist with the data it was meant
-   * to replace. The check rides the write job itself as an `Observation` —
-   * zero extra scans. Matched-file selection and the keep-row rewrite
+   * to replace. The task writer checks it on every row it writes — zero
+   * extra scans. Matched-file selection and the keep-row rewrite
    * reuse the CoW delete shape (pruned scan state, file-list restriction,
    * never a path-list `In`); concurrent appends whose stats say they may
    * carry rows inside the region CONFLICT (see [[commitRewrite]]'s tail
@@ -679,7 +680,6 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
    * omitted columns read back NULL and evaluate as NULL in the guard).
    */
   def replaceWhere(data: DataFrame, condition: Column): DmlResult = {
-    val pred = coalesce(condition, lit(false)) // null ⇒ not matched (SQL)
     val pruneFilter = graft.sources.ExprFilters.pruneJson(condition)
     val snap = scanState(None, pruneFilter)
     ProtocolSupport.assertWritable(snap, path)
@@ -700,29 +700,11 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       if (idSpecs.isEmpty) (data, () => ())
       else IdentityColumns.assign(spark, data, idSpecs)
     val aligned = alignTo(dataId, snap.schema)
-    // The guard may reference columns a sparse insert omits — backfill
-    // NULL for evaluation only; the written frame stays sparse.
-    val present = dataId.schema.fieldNames.toSet
-    val missing = snap.schema.fields.filterNot(f => present(f.name))
-    val backfilled = missing.foldLeft(aligned)((acc, f) =>
-      acc.withColumn(f.name, lit(null).cast(f.dataType)))
-    // observeForWrite, not the Observation API: the direct write path
-    // executes the plan without a Dataset action, so a listener-based
-    // Observation would block forever (see observeForWrite's scaladoc)
-    val (instrumented, reader) = observeForWrite(backfilled,
-      Seq(coalesce(sum(when(!pred, 1L).otherwise(0L)), lit(0L))
-        .as("__outside")))
-    val observed = instrumented.drop(missing.map(_.name).toIndexedSeq: _*)
+    // the task writer proves every row lies inside the region (a row
+    // outside fails the write before anything commits)
     val newAdds =
-      try writeDataFiles(observed, snap.partitionColumns, snap.schema)
+      try writeDataFiles(aligned, snap.partitionColumns, snap.schema, region = Some(condition))
       finally idRelease()
-    val outside = reader("__outside")
-    if (outside > 0L) {
-      newAdds.foreach(a => deleteDataFile(a.path))
-      throw new ValidationException(
-        s"replaceWhere: $outside inserted row(s) do not satisfy the " +
-          "replacement condition — they would land outside the replaced region")
-    }
     commitReplaceWhereAdds(snap, condition, newAdds,
       enforcedConstraints = checkConstraints(snap), idAlloc = idSpecs)
   }
@@ -738,19 +720,17 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
   }
 
   /** Commit core of [[replaceWhere]] over ALREADY-WRITTEN new adds —
-    * shared by the staged path above and the direct (task-side) write.
-    * The caller guarantees every row in `newAdds` satisfies `condition`
-    * (the staged path proves it with an Observation, the direct path with
-    * a per-row task predicate). Rewrites the kept remainder of matched
+    * shared with the catalog's REPLACE WHERE write. The caller guarantees
+    * every row in `newAdds` satisfies `condition` (the task writer's
+    * region check). Rewrites the kept remainder of matched
     * files, commits atomically with the region conflict, captures CDC. */
   private[graft] def commitReplaceWhereAdds(snap: Snapshot,
       condition: Column, newAdds: Seq[AddFile],
-      // constraint set enforced when the new rows were written (staged
-      // path: the staging snapshot's; direct path: the plan-time set the
-      // tasks evaluated) — anything added since re-validates at commit
+      // constraint set the tasks enforced when the new rows were written —
+      // anything added since re-validates at commit
       enforcedConstraints: Map[String, String] = Map.empty,
-      // specs identity values were allocated from (staged path's two-phase
-      // allocator, or the direct path's task-side lattice)
+      // specs identity values were allocated from (the two-phase
+      // allocator, or the task-side lattice)
       idAlloc: Seq[IdentityColumns.Spec] = Nil): DmlResult = {
     val pred = coalesce(condition, lit(false))
     val pruneFilter = graft.sources.ExprFilters.pruneJson(condition)
@@ -828,8 +808,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
   }
 
   /** Commit core of [[overwritePartitionsDynamic]] over ALREADY-WRITTEN
-    * adds — shared by the staged path above and the direct (task-side)
-    * write, which lands its parquet before this runs. */
+    * adds — shared with the catalog's dynamic partition overwrite. */
   private[graft] def commitDynamicOverwriteAdds(snap0: Snapshot,
                                                 adds: Seq[AddFile],
                                                 // see commitReplaceWhereAdds
@@ -863,9 +842,31 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     v
   }
 
+  /** Prepare task-written files for a commit: attach footer stats (keys
+    * remapped to logical names under column mapping), drop zero-row
+    * parts, build bloom sidecars. Shared by every commit shape. */
+  private[graft] def prepareAdds(raw: Seq[AddFile], schema: StructType, partCols: Seq[String],
+                                 configuration: Map[String, String]): Seq[AddFile] = {
+    if (raw.isEmpty) return Nil
+    // Stats collect against footer (= physical) names, then re-key to
+    // logical so FilePruner and readers keep one name space.
+    val withStats = physicalSchema(schema) match {
+      case Some(ps) => remapStatKeys(attachStats(raw, partCols, ps),
+        ps.fieldNames.zip(schema.fieldNames).toMap)
+      case None => attachStats(raw, partCols, schema)
+    }
+    // Zero-row parts carry no data; keeping them would grow the active set
+    // forever. Stats make them identifiable — drop add + file.
+    val (empty, adds) = withStats.partition(_.parsedStats.exists(_.numRecords == 0))
+    empty.foreach(f => deleteDataFile(f.path))
+    BloomIndex.buildSidecars(spark, tablePath, log.hadoopConf,
+      configuration, schema, partCols, adds)
+    adds
+  }
+
   /**
-   * Streaming-sink commit for TASK-written data files (the DSv2
-   * `StreamingWrite` path — executors have already landed parquet parts
+   * Append commit for TASK-written data files (the catalog's DSv2 writes
+   * and streaming epochs — executors have already landed parquet parts
    * in their final table locations; only metadata reaches the driver):
    * attach footer stats + bloom sidecars, drop zero-row parts, and append
    * (or, for Complete mode, overwrite-commit) everything in ONE
@@ -875,29 +876,6 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
    * files, and returns without committing. CDC capture reads back ONLY
    * the committed adds (lazy, only when the feed is enabled).
    */
-  /** Prepare TASK-WRITTEN files for a commit: attach footer stats (keys
-    * remapped to logical names under column mapping), drop zero-row parts,
-    * build bloom sidecars. Shared by every direct-write commit shape
-    * (append, truncate, dynamic partition overwrite, replaceWhere). */
-  private[graft] def prepareStreamedAdds(raw: Seq[AddFile],
-                                         snap0: Snapshot): Seq[AddFile] = {
-    val schema = snap0.schema
-    val partCols = snap0.partitionColumns
-    val physOpt = physicalSchema(schema)
-    val statsSchema = physOpt.getOrElse(schema)
-    val withStats = physOpt match {
-      case Some(ps) => remapStatKeys(attachStats(raw, partCols, statsSchema),
-        ps.fieldNames.zip(schema.fieldNames).toMap)
-      case None => attachStats(raw, partCols, schema)
-    }
-    val (empty, adds) = withStats.partition(
-      _.parsedStats.exists(_.numRecords == 0))
-    empty.foreach(f => deleteDataFile(f.path))
-    BloomIndex.buildSidecars(spark, tablePath, log.hadoopConf,
-      snap0.configuration, schema, partCols, adds)
-    adds
-  }
-
   private[graft] def commitStreamedFiles(raw: Seq[AddFile], txn: Option[Txn],
                                          overwrite: Boolean = false,
                                          // constraint set the WRITER enforced
@@ -906,14 +884,13 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
                                          // re-validates at commit
                                          enforcedConstraints: Map[String, String] = Map.empty,
                                          // specs identity values were
-                                         // allocated from (the V1 direct
-                                         // batch seam) — mark re-checked
+                                         // allocated from — mark re-checked
                                          // and advanced in the OCC loop
                                          idAlloc: Seq[IdentityColumns.Spec] = Nil): Long = {
     val snap0 = if (overwrite) snapshot() else metaSnapshot()
     ProtocolSupport.assertWritable(snap0, path)
     if (overwrite) DeltaTable.assertNotAppendOnly(snap0, "STREAMING-OVERWRITE")
-    val adds = prepareStreamedAdds(raw, snap0)
+    val adds = prepareAdds(raw, snap0.schema, snap0.partitionColumns, snap0.configuration)
     case class TxnApplied(existing: Long) extends Exception
     val v = try Retry.withRetry() {
       val snap = if (overwrite) snapshot() else metaSnapshot()
@@ -936,8 +913,8 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       val now = System.currentTimeMillis()
       val removes: Seq[Action] =
         if (overwrite) snap.activeFiles.map(f => RemoveFile(f.path, now)) else Nil
-      // Operation naming matches the staged batch path so graft_history
-      // reads the same for the same statement regardless of write path:
+      // Operation naming matches DeltaTable.write so graft_history reads
+      // the same for the same statement regardless of the route it took:
       // batch INSERT OVERWRITE (txn=None, overwrite) is WRITE-OVERWRITE.
       log.writeCommit(v, (catchUp.toSeq: Seq[Action]) ++
         (txn.toSeq: Seq[Action]) ++ removes ++
@@ -1029,151 +1006,26 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** Write `df` as new data files in the table layout; returns add actions
-    * with stats attached. Enforces the table's row-level write contracts
-    * in ONE pass riding the write job itself (an `Observation` — zero
-    * extra scans): CHECK constraints (NULL passes, SQL semantics), legacy
-    * column invariants (NULL fails — Delta's stricter pre-CHECK rule),
-    * and generated-column consistency (a PROVIDED generated column must
-    * null-safe-equal its expression). Generated columns the frame OMITS
-    * are computed here from the generation expression — so every write
-    * path (append, CoW rewrite, merge, maintenance) materializes them.
-    * On any violation the staged files are deleted and the write fails
-    * BEFORE anything commits. */
+  /** Write `df` as new data files in the table layout under `schema`
+    * (logical names; files store physical ones) and return their add
+    * actions with stats attached. The task writer enforces the table's
+    * row contracts on every written row: CHECK constraints (NULL passes,
+    * SQL semantics), legacy column invariants (NULL fails — Delta's
+    * stricter pre-CHECK rule), generated-column consistency (a PROVIDED
+    * generated column must null-safe-equal its expression) and, with
+    * `region`, replaceWhere membership. Generated columns the frame omits
+    * or leaves NULL are computed from their expressions, so every write
+    * path (append, CoW rewrite, merge, maintenance) materializes them. A
+    * violation fails the write before anything commits and leaves no
+    * files behind. */
   private[delta] def writeDataFiles(df: DataFrame, partCols: Seq[String],
-                                    schema: StructType): Seq[AddFile] = {
-    // Contracts evaluate over LOGICAL names — observe before any
-    // physical-name conversion below.
+                                    schema: StructType,
+                                    region: Option[Column] = None): Seq[AddFile] = {
     val preSnap = metaSnapshot()
-    val constraints = checkConstraints(preSnap)
-    val gens = GeneratedColumns.exprs(schema)
-    val invs = GeneratedColumns.invariants(schema)
-
-    // Compute OMITTED generated columns. Expressions referencing columns
-    // the frame omits see NULL (the value those rows read back) via a
-    // widen-for-evaluation that is dropped after.
-    val present0 = df.columns.toSet
-    val toCompute = gens.filterNot { case (n, _) => present0(n) }
-    val dfG =
-      if (toCompute.isEmpty) df
-      else {
-        val computeNames = toCompute.map(_._1).toSet
-        val missingRefs = schema.fields.filter(f =>
-          !present0(f.name) && !computeNames(f.name))
-        val widened = missingRefs.foldLeft(df)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        toCompute.foldLeft(widened) { case (acc, (n, e)) =>
-          acc.withColumn(n, expr(e).cast(schema(n).dataType))
-        }.drop(missingRefs.map(_.name).toIndexedSeq: _*)
-      }
-
-    // Observation counters, namespaced so a constraint name can never
-    // collide with an invariant/generated counter (':' is not legal in
-    // constraint names).
-    val providedGens = gens.filter { case (n, _) => present0(n) }
-    val checks: Seq[(String, Column, String)] =
-      constraints.toSeq.map { case (n, e) =>
-        (s"c:$n", !expr(e),
-          s"CHECK constraint '$n' ($e)") } ++
-      invs.map { case (n, e) =>
-        // legacy invariant: NULL result VIOLATES (stricter than CHECK)
-        (s"i:$n", !coalesce(expr(e), lit(false)),
-          s"column invariant on '$n' ($e)") } ++
-      providedGens.map { case (n, e) =>
-        // NULL-provided means "compute" (Spark's analyzer null-pads columns
-        // an INSERT omits, so a provided NULL is indistinguishable from an
-        // omitted column); only NON-NULL provided values are validated.
-        (s"g:$n", col(n).isNotNull &&
-            !(col(n) <=> expr(e).cast(schema(n).dataType)),
-          s"generated column '$n' ($e): provided values must equal the " +
-            "generation expression") }
-    val (readerOpt, dfC) =
-      if (checks.isEmpty) (None, dfG)
-      else {
-        // Sparse appends legally omit evolved columns (they read back as
-        // null), so a contract referencing an omitted column must
-        // evaluate over NULL instead of failing analysis. Backfill for
-        // the observation only, then drop: the written frame stays sparse.
-        val present = dfG.columns.toSet
-        val missing = schema.fields.filter(f => !present(f.name))
-        val widened = missing.foldLeft(dfG)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        val counters = checks.map { case (key, viol, _) =>
-          sum(when(viol, 1L).otherwise(0L)).as(key)
-        }
-        // the fill runs downstream of the observe node, so the validation
-        // counters above see the ORIGINAL provided values
-        val (instrumented, reader) = observeForWrite(widened, counters)
-        val filled = providedGens.foldLeft(instrumented) {
-          case (acc, (n, e)) =>
-            acc.withColumn(n, coalesce(col(n), expr(e).cast(schema(n).dataType)))
-        }
-        (Some(reader), filled.drop(missing.map(_.name).toIndexedSeq: _*))
-      }
-    val adds = writeDataFilesRaw(dfC, partCols, schema)
-    readerOpt.foreach { counts =>
-      checks.find { case (key, _, _) =>
-        counts(key) > 0L }.foreach { case (key, _, what) =>
-        adds.foreach(a => deleteDataFile(a.path))
-        throw new ValidationException(
-          s"$what violated by ${counts(key)} written row(s)")
-      }
-    }
-    // Bloom sidecars for every transactional write path (append, CoW
-    // rewrites, merge, compact) — after the constraint gate so doomed
-    // files never get indexed.
-    BloomIndex.buildSidecars(spark, tablePath, log.hadoopConf,
-      preSnap.configuration, schema, partCols, adds)
-    adds
+    val plan = new WritePlan(this, schema, partCols, df.schema,
+      checkConstraints(preSnap), region)
+    prepareAdds(TaskWriter.run(this, df, plan), schema, partCols, preSnap.configuration)
   }
-
-  /** Observed metrics of the LAST data-file write executed on this thread
-    * (the direct write path reads them off the executed plan's
-    * CollectMetrics accumulators — see [[observeForWrite]]). Thread-local:
-    * engine write passes are sequential per operation, and concurrent
-    * streaming/batch writers each see their own. */
-  private val lastWriteMetrics =
-    new ThreadLocal[Map[String, Row]] {
-      override def initialValue(): Map[String, Row] = Map.empty
-    }
-
-  /** Attach validation counters to a frame that [[writeDataFilesRaw]] will
-    * execute, in a way that can be read back under EITHER write mode.
-    *
-    * The direct path ([[DirectWriteProtocol]] + FileFormatWriter) executes
-    * the physical plan without a Dataset action, so the listener-based
-    * `Observation` API never completes there (its QueryExecutionListener
-    * only fires for Dataset actions — `obs.get` would block forever, which
-    * is exactly what the first direct-write test run did on
-    * d18_check_constraint). Instead the counters ride a NAMED
-    * CollectMetrics node and are read from the executed plan's
-    * accumulators (`QueryExecution.observedMetrics`), which are final once
-    * the synchronous write returns. The staged fallback keeps the
-    * Observation mechanism (its `df.write` action fires the listener).
-    *
-    * Returns the instrumented frame and a reader `key => count` valid
-    * AFTER the write; a null counter cell (sum over zero written rows)
-    * reads as 0. */
-  private def observeForWrite(df: DataFrame,
-                              counters: Seq[Column]): (DataFrame, String => Long) =
-    if (DeltaTable.stagedWrites) {
-      val obs = org.apache.spark.sql.Observation()
-      (df.observe(obs, counters.head, counters.tail: _*),
-        key => obs.get(key) match {
-          case null => 0L
-          case v => v.asInstanceOf[Long]
-        })
-    } else {
-      val name = s"graft_wchk_${java.util.UUID.randomUUID().toString.take(12)}"
-      (df.observe(name, counters.head, counters.tail: _*),
-        key => {
-          val row = lastWriteMetrics.get().getOrElse(name,
-            throw new IllegalStateException(
-              s"observed metrics '$name' missing after direct write"))
-          val i = row.fieldIndex(key)
-          if (row.isNullAt(i)) 0L else row.getLong(i)
-        })
-    }
 
   private[graft] def checkConstraints(snap: Snapshot): Map[String, String] =
     snap.configuration.collect {
@@ -1254,138 +1106,6 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       }
     }
 
-  private def writeDataFilesRaw(df: DataFrame, partCols: Seq[String],
-                                schema: StructType): Seq[AddFile] = {
-    // Column mapping: data files always store PHYSICAL names. Incoming
-    // frames carry logical names (every caller reads through toDF's
-    // physical→logical rename), so convert here — by name, not position,
-    // so a column-order drift fails loudly instead of mislabeling data.
-    val physOpt = physicalSchema(schema)
-    val outDf = physOpt.fold(df) { ps =>
-      // only rename columns the frame actually has — sparse appends under
-      // an evolved schema legally omit trailing columns
-      val present = df.columns.toSet
-      df.select(schema.fields.zip(ps.fields).collect {
-        case (lf, pf) if present(lf.name) =>
-          col(s"`${lf.name.replace("`", "``")}`").as(pf.name)
-      }.toIndexedSeq: _*)
-    }
-    // Zoned-timestamp partition columns pre-render to UTC wall-clock
-    // strings: Spark's own partitionBy renders them in the SESSION time
-    // zone, but the engine's read side is canonically UTC
-    // (GraftBatchScan.partitionValueRow casts path values at "UTC", the
-    // streaming writer projects partitions through Cast(..., Some("UTC")),
-    // and the pruner/claimer compare literals rendered at UTC) — so a
-    // non-UTC session would lay out directories the whole read stack
-    // mis-parses. Rendering here makes the on-disk layout a function of
-    // the DATA alone, portable across writer sessions. Dates and NTZ
-    // timestamps render zone-independently; only zoned TS needs this.
-    val partDf = partCols.foldLeft(outDf) { (acc, c) =>
-      acc.schema.fields.find(_.name == c) match {
-        case Some(f) if f.dataType == TimestampType =>
-          acc.withColumn(c, org.apache.spark.sql.graftshim.ColumnShim.column(
-            org.apache.spark.sql.catalyst.expressions.Cast(
-              org.apache.spark.sql.graftshim.ColumnShim.expression(acc(c)),
-              StringType, Some("UTC"))))
-        case _ => acc
-      }
-    }
-    // DIRECT write (round 17, verdict item 4): tasks create the parquet
-    // files under their FINAL names in the table directory via
-    // [[DirectWriteProtocol]] — the log commit decides visibility, so the
-    // staging dir, the per-file rename+mkdirs, the recursive listing and
-    // the staging delete are all gone (2+ FS metadata ops per file; a full
-    // COPY per file on object stores). The file list and byte sizes come
-    // back through the task commit messages. SPARK_GRAFT_STAGED_WRITE=1
-    // restores the old staged path for A/B or as a kill switch.
-    val adds = Logging.withJobDesc(spark, "graft:write-data") {
-      if (DeltaTable.stagedWrites) {
-        lastWriteMetrics.set(Map.empty) // staged reads via Observation
-        writeViaStaging(partDf, partCols)
-      } else {
-        val classicSpark =
-          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        val qe = partDf.queryExecution
-          .asInstanceOf[org.apache.spark.sql.execution.QueryExecution]
-        val outputCols = qe.analyzed.output
-        val partAttrs = partCols.map(c => outputCols.find(_.name == c).getOrElse(
-          throw new IllegalStateException(s"partition column $c not in output")))
-        val protocol = new DirectWriteProtocol(tablePath.toString)
-        // withNewExecutionId: the raw FileFormatWriter call is not a
-        // Dataset action, so without this no SQLExecutionEnd event fires —
-        // QueryExecutionListeners (plan audits, UI) would never see the
-        // write's plan. Nesting under a caller's execution id is fine
-        // (the staged df.write did the same internally).
-        org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
-            qe, Some("graft:write-data")) {
-          org.apache.spark.sql.execution.datasources.FileFormatWriter.write(
-            sparkSession = classicSpark,
-            plan = qe.executedPlan,
-            fileFormat =
-              new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-            committer = protocol,
-            outputSpec =
-              org.apache.spark.sql.execution.datasources.FileFormatWriter.OutputSpec(
-                tablePath.toString, Map.empty, outputCols),
-            hadoopConf = classicSpark.sessionState.newHadoopConf(),
-            partitionColumns = partAttrs,
-            bucketSpec = None,
-            statsTrackers = Nil,
-            options = Map.empty)
-        }
-        // validation counters (CollectMetrics accumulators) are final now —
-        // publish them for observeForWrite's readers
-        lastWriteMetrics.set(qe.observedMetrics)
-        val now = System.currentTimeMillis()
-        protocol.committed.map { case (rel, len) =>
-          AddFile(rel, PartitionPaths.parse(rel), len, now)
-        }
-      }
-    }
-    // Stats collect against footer (= physical) names, then re-key to
-    // logical so FilePruner and readers keep one name space.
-    //
-    // (staged-path helper lives in writeViaStaging below)
-    val statsSchema = physOpt.getOrElse(schema)
-    val withStats = if (adds.isEmpty) Nil
-      else physOpt match {
-        case Some(ps) =>
-          val p2l = ps.fieldNames.zip(schema.fieldNames).toMap
-          remapStatKeys(attachStats(adds, partCols, statsSchema), p2l)
-        case None => attachStats(adds, partCols, schema)
-      }
-    // Zero-row parts carry no data; keeping them would grow the active set
-    // forever (e.g. a delete that empties a file re-adding an empty shell
-    // on every rewrite). Stats make them identifiable — drop add + file.
-    val (empty, keep) = withStats.partition(_.parsedStats.exists(_.numRecords == 0))
-    empty.foreach(f => deleteDataFile(f.path))
-    keep
-  }
-
-  /** The pre-r17 staged write: Spark writes to a `_staging_*` dir, the
-    * driver renames each part to its final name, lists and deletes the
-    * staging dir. Kept as the `SPARK_GRAFT_STAGED_WRITE=1` fallback and as
-    * the reference the direct path is property-tested against. */
-  private def writeViaStaging(partDf: DataFrame,
-                              partCols: Seq[String]): Seq[AddFile] = {
-    val staging = new Path(tablePath, s"_staging_${java.util.UUID.randomUUID()}")
-    val writer = partDf.write.mode("overwrite")
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .parquet(staging.toString)
-    val parts = listRecursive(staging).filter(_.getPath.getName.startsWith("part-"))
-    val now = System.currentTimeMillis()
-    val adds = parts.map { st =>
-      val rel = relativize(staging, st.getPath)
-      val dest = new Path(tablePath, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(st.getPath, dest))
-        throw new java.io.IOException(s"failed to move ${st.getPath} -> $dest")
-      AddFile(rel, PartitionPaths.parse(rel), st.getLen, now)
-    }
-    fs.delete(staging, true)
-    adds
-  }
-
   private def remapStatKeys(adds: Seq[AddFile],
                             p2l: Map[String, String]): Seq[AddFile] =
     adds.map { a =>
@@ -1445,7 +1165,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       .filterNot(f => partCols.contains(f.name))
       .filter(f => isStatable(f.dataType))
     val files = adds.map(f => new Path(tablePath, f.path).toString)
-    // timeZone=UTC: partition paths are UTC-canonical (writeDataFilesRaw)
+    // timeZone=UTC: partition paths are UTC-canonical (TaskWriter.dirOf)
     val reader = spark.read.option("timeZone", "UTC").option("basePath", path)
     val df = (if (schema.nonEmpty) reader.schema(schema) else reader).parquet(files: _*)
 
@@ -2490,7 +2210,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * recording a declaration the data already violates, the same rule as
     * ADD CONSTRAINT), then commits nullable=false TOGETHER with an
     * auto-managed CHECK constraint `<col> IS NOT NULL` — which every
-    * write path (staged AND task-side direct) already enforces, so the
+    * write path already enforces task-side, so the
     * declaration is TRUE from this commit on. Relaxing drops both in one
     * commit. Pre-existing nullable=false flags from inferred schemas
     * (Scala tuples mark primitives non-nullable) stay ADVISORY — the
@@ -2797,36 +2517,14 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     val oldest = cps.takeRight(keepCheckpoints).head
     log.listCommitVersions().filter(_ < oldest)
   }
-
-  // ---- fs helpers ----------------------------------------------------------
-
-  private def listRecursive(dir: Path): Seq[FileStatus] = {
-    val out = Seq.newBuilder[FileStatus]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) out += it.next()
-    out.result()
-  }
-
-  private def relativize(base: Path, p: Path): String = {
-    val baseUri = fs.makeQualified(base).toUri.getPath
-    val pUri = fs.makeQualified(p).toUri.getPath
-    require(pUri.startsWith(baseUri), s"$p not under $base")
-    pUri.stripPrefix(baseUri).stripPrefix("/")
-  }
 }
 
 object DeltaTable {
   def forPath(spark: SparkSession, path: String): DeltaTable =
     new DeltaTable(spark, path)
 
-  /** Kill switch for the r17 direct-final-name write path: set
-    * `SPARK_GRAFT_STAGED_WRITE=1` to restore the staged
-    * write+rename path (A/B reference; see writeDataFilesRaw). */
-  private[delta] val stagedWrites: Boolean =
-    sys.env.get("SPARK_GRAFT_STAGED_WRITE").contains("1")
-
   /** Fault-injection seam for crash tests: invoked after an append's data
-    * files are staged but BEFORE the commit is attempted. A forked test
+    * files are written but BEFORE the commit is attempted. A forked test
     * JVM replaces it with a park-and-await so the parent can kill -9 it
     * in the vulnerable window; production never touches it. */
   private[graft] var onDataFilesStaged: Seq[AddFile] => Unit = _ => ()

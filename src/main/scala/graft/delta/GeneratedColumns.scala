@@ -15,7 +15,7 @@ import org.json4s.jackson.JsonMethods
  *
  * Semantics (Delta parity):
  *  - a write that OMITS a generated column gets it computed from the
- *    generation expression over the written row ([[DeltaTable.writeDataFiles]]);
+ *    generation expression over the written row ([[WritePlan]]);
  *  - a write that PROVIDES one is validated row-by-row — provided value
  *    must null-safe-equal the expression, or the whole write refuses
  *    (Delta's GeneratedColumn invariant check);

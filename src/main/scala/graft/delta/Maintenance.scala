@@ -512,10 +512,10 @@ object Maintenance {
     while (it.hasNext) {
       val st = it.next()
       val rel = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-      // `_staging_<uuid>` files are writer-transient: a file still there
-      // past the retention cutoff belongs to a DEAD writer (crashed between
-      // staging and the rename-to-layout) and must be reclaimable — they
-      // are never in the active set, so the age check alone decides. The
+      // Files no commit references (a killed writer's parts, or the
+      // `_staging_<uuid>` leftovers of writers that staged before
+      // renaming) are never in the active set, so past the retention
+      // cutoff the age check alone decides and reclaims them. The
       // cutoff is also what protects live writers, same contract as Delta's
       // "don't vacuum below your longest-running writer".
       val isData = rel.endsWith(".parquet") &&

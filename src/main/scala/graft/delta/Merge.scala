@@ -50,11 +50,9 @@ object Merge {
     * for trivial sources still re-pays the dropDuplicates shuffle per pass,
     * and the shape test itself costs an optimizer run per statement). The
     * r16 "persist tax" reading was load contamination (that run started at
-    * loadavg 4.30). `SPARK_GRAFT_MERGE_PERSIST=never` remains as a
-    * measurement toggle; unpersist on a never-persisted frame is a no-op. */
-  private[delta] def maybePersistSource(user: DataFrame, deduped: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_MERGE_PERSIST").contains("never")) deduped
-    else deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    * loadavg 4.30). */
+  private[delta] def persistSource(deduped: DataFrame): DataFrame =
+    deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** One `WHEN MATCHED [AND condition] THEN action` clause. Conditions are
     * evaluated in the matched-row environment: target columns by name,
@@ -136,7 +134,7 @@ object Merge {
     // drop the blocks when the merge completes, so each pass reads the
     // materialized rows instead of re-evaluating the whole source plan
     // (Delta's own MERGE materializes the source for the same reason).
-    val src = maybePersistSource(source,
+    val src = persistSource(
       if (sqlSemantics) source else source.dropDuplicates(srcKeys))
     // Source rows carried as one struct column to dodge name collisions.
     val srcCols = src.columns.toSeq
@@ -794,7 +792,7 @@ object Merge {
     require(tgtKeys.forall(dataCols.contains), s"keys must exist in table: $tgtKeys")
     def keyEq(l: Column, r: Column): Column = if (sqlSemantics) l === r else l <=> r
     // persist across the census/image/insert/CDC passes — see the CoW twin
-    val src = maybePersistSource(source,
+    val src = persistSource(
       if (sqlSemantics) source else source.dropDuplicates(srcKeys))
     val srcCols = src.columns.toSeq
     val insertUnmatched = inserts.nonEmpty

@@ -264,9 +264,9 @@ object PartitionFilters {
         b <- litDate
       } yield a.compareTo(b).sign
     // Zoned-timestamp path values are UTC wall-clock BY CONSTRUCTION: every
-    // write path renders them with Cast(..., Some("UTC")) regardless of the
-    // session time zone (DeltaTable.writeDataFilesRaw, GraftStreamingWrite's
-    // partition projection), and the scan parses them back at UTC
+    // write renders them with Cast(..., Some("UTC")) regardless of the
+    // session time zone (the task writer's partition rendering,
+    // TaskWriter.dirOf), and the scan parses them back at UTC
     // (GraftBatchScan.partitionValueRow). Rendering the literal's instant at
     // UTC is therefore exact — not a session-TZ assumption.
     case TimestampType | TimestampNTZType =>

@@ -22,8 +22,8 @@ object ProtocolSupport {
     "vacuumProtocolCheck", "icebergCompatV1", "icebergCompatV2")
 
   /** Features whose WRITE obligations this engine honors. Generated
-    * columns and legacy invariants are enforced row-by-row on every write
-    * path ([[DeltaTable.writeDataFiles]]: omitted generated columns are
+    * columns and legacy invariants are enforced row-by-row by the task
+    * writer every write runs ([[WritePlan]]: omitted generated columns are
     * computed, provided ones validated, invariants checked with
     * NULL-fails strictness). */
   val supportedWriterFeatures: Set[String] = Set(
@@ -61,8 +61,7 @@ object ProtocolSupport {
             "this engine does not honor; writing would break the table's contract")
     }
     // No hazard-based schema refusals remain: generated columns are
-    // computed/validated and invariants enforced on every row-producing
-    // write path ([[DeltaTable.writeDataFiles]]); task-side direct writes
-    // refuse such tables at plan time and fall back to the staging path.
+    // computed/validated and invariants enforced by the one task writer
+    // every row-producing write runs ([[WritePlan]]).
   }
 }

@@ -179,7 +179,7 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
       }
     // Eligible appends / truncate-overwrites carry a GraftDirectWrite
     // (built by Spark's V2Writes rule through GraftWriteBuilder). The
-    // table keeps V1_BATCH_WRITE for the staging fallback, which makes
+    // table keeps V1_BATCH_WRITE for the table-API fallback, which makes
     // Spark's built-in strategy DEMAND a V1Write — so the direct write is
     // planned here, before the built-ins, onto Spark's own V2 write execs
     // (task-side parquet into the final layout, commit-coordinated tasks,
@@ -196,14 +196,14 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
     // Dynamic partition overwrite: when V2Writes built a DIRECT write
     // (round-12 — GraftDirectWrite.DynamicOverwrite), Spark's own exec
     // drives the task-side writers and our commit derives the replaced
-    // partitions from the written files — 1× bytes, no staging.
+    // partitions from the written files.
     case OverwritePartitionsDynamic(r: DataSourceV2Relation, query, _, _,
         Some(w: graft.streaming.GraftDirectWrite)) =>
       Seq(org.apache.spark.sql.execution.datasources.v2
         .OverwritePartitionsDynamicExec(
           planLater(query), () => Shims.recacheByPlan(spark, r), w))
-    // Staged fallback (generated columns, direct disabled): NO V1 fallback
-    // exec exists in Spark, so the logical plan is planned here directly
+    // Table-API fallback (identity tables, shapes the direct write
+    // refuses): NO V1 fallback exec exists in Spark, so the logical plan is planned here directly
     // onto the one-commit table primitive. `V2Writes` has already
     // validated the builder (GraftWriteBuilder declares
     // SupportsDynamicOverwrite); this strategy runs before the built-ins.

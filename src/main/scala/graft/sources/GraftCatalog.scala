@@ -427,9 +427,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
  * DSv2 table handle: reads through the native [[GraftBatchScan]] (file
  * pruning via partition values + zone-map stats BEFORE Spark plans, then
  * vectorized parquet with row-group pushdown inside surviving files, and
- * runtime file pruning from join predicates), writes through a [[V1Write]]
- * landing as transactional table writes plus the predicate-scoped
- * overwrite modes. `version`/`timestampMs` carry DSv2 time travel.
+ * runtime file pruning from join predicates), writes through the engine's
+ * task writer — as a DSv2 write, or via a [[V1Write]] into the table API
+ * (see [[GraftWriteBuilder]]) — with one transactional commit per
+ * statement. `version`/`timestampMs` carry DSv2 time travel.
  */
 final class GraftTable(val delta: DeltaTable, identName: String,
                        version: Option[Long], timestampMs: Option[Long])
@@ -465,8 +466,8 @@ final class GraftTable(val delta: DeltaTable, identName: String,
   // BATCH_WRITE rides along with V1_BATCH_WRITE only to satisfy
   // TableCapabilityCheck for dynamic partition overwrite (which has no V1
   // fallback and is planned by GraftDmlStrategy); actual write ROUTING is
-  // by the Write object's type (V1Write), so every other write still takes
-  // the V1 fallback execs.
+  // by the Write object's type: GraftDmlStrategy plans a GraftDirectWrite
+  // onto Spark's V2 write execs, a V1Write takes the V1 fallback execs.
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.BATCH_WRITE,
@@ -738,101 +739,40 @@ private final class GraftWriteBuilder(delta: DeltaTable, info: LogicalWriteInfo)
     mode = Dynamic; this
   }
 
-  /** Eligible appends / truncate-overwrites go DIRECT: executors write
-    * parquet straight into the table's final layout and the driver makes
-    * one metadata commit — each byte written exactly once, no staging
-    * directory, no per-file rename (a full copy on object stores). CHECK
-    * constraints and invariants are enforced task-side inside the direct
-    * writer; generated columns (incl. generated PARTITION columns) are
-    * computed task-side. Ineligible shapes (schema evolution, type casts,
-    * CTAS before the schema exists) throw [[ValidationException]] at
-    * construction and fall back to the V1 staging path, which handles
-    * all of them. `spark.graft.write.direct=false` forces the V1 path. */
-  private def directWrite(): Option[Write] = {
-    val spark = SparkSession.active
-    if (!spark.conf.get("spark.graft.write.direct", "true").toBoolean) None
-    // Identity tables route through the V1 fallback below: batch INSERTs
-    // take [[tryIdentityDirect]] (order-preserving pre-allocation, still
-    // task-direct), and toStreaming builds the direct writer whose
-    // PER-EPOCH factories allocate from the mark — a push-based BATCH
-    // plan, which can't count before it writes, must never reach
-    // createBatchWriterFactory on an identity table.
-    else if (graft.delta.IdentityColumns.hasAny(delta.metaSnapshot().schema)) None
+  /** Writes plan as a DSv2 [[graft.streaming.GraftDirectWrite]]: Spark's
+    * own write execs run the engine's task writers, which land parquet
+    * under final names in the table layout, and the driver makes one
+    * metadata commit. Shapes that write cannot take — identity tables,
+    * whose batch values come from the two-phase allocator in
+    * [[DeltaTable.write]], and queries the plan refuses (type casts,
+    * unknown columns) — take the [[V1Write]] below into the table API,
+    * which runs the same task writers. */
+  private def directWrite(): Option[Write] =
+    if (graft.delta.IdentityColumns.hasAny(delta.metaSnapshot().schema)) None
     else {
-      val directMode: Option[graft.streaming.GraftDirectWrite.Mode] = mode match {
-        case Append => Some(graft.streaming.GraftDirectWrite.Append)
-        case Truncate => Some(graft.streaming.GraftDirectWrite.Truncate)
-        case ReplaceWhere(cond) =>
-          Some(graft.streaming.GraftDirectWrite.ReplaceWhere(cond))
+      val m = mode match {
+        case Append => graft.streaming.GraftDirectWrite.Append
+        case Truncate => graft.streaming.GraftDirectWrite.Truncate
+        case ReplaceWhere(cond) => graft.streaming.GraftDirectWrite.ReplaceWhere(cond)
+        // dynamic mode on an UNPARTITIONED table degrades to a full
+        // overwrite (Spark's own semantics) — same shape as Truncate
         case Dynamic =>
-          // dynamic mode on an UNPARTITIONED table degrades to a full
-          // overwrite (Spark's own semantics) — same shape as Truncate
           if (delta.metaSnapshot().partitionColumns.isEmpty)
-            Some(graft.streaming.GraftDirectWrite.Truncate)
-          else Some(graft.streaming.GraftDirectWrite.DynamicOverwrite)
+            graft.streaming.GraftDirectWrite.Truncate
+          else graft.streaming.GraftDirectWrite.DynamicOverwrite
       }
-      directMode.flatMap { m =>
-        try Some(new graft.streaming.GraftDirectWrite(spark,
-          delta.path, info.queryId(), info.schema(), m))
-        catch { case _: ValidationException => None }
-      }
+      try Some(new graft.streaming.GraftDirectWrite(SparkSession.active,
+        delta.path, info.queryId(), info.schema(), m))
+      catch { case _: ValidationException => None }
     }
-  }
-
-  /** Identity tables through the DIRECT task-side writers, from the V1
-    * seam (which, unlike the push-based DSv2 plan, holds the whole
-    * DataFrame): the two-phase allocator runs first, then the ASSIGNED
-    * frame drives the same per-task parquet writers — each byte written
-    * once, no staging rename — with the high-water mark re-checked and
-    * advanced in the one metadata commit. Returns false (before any job
-    * or allocation) when the shape is ineligible for the direct writer —
-    * schema evolution, type casts — so the caller falls back to the
-    * staged write, which handles everything. */
-  private def tryIdentityDirect(data: org.apache.spark.sql.DataFrame,
-                                truncate: Boolean): Boolean = {
-    val spark = SparkSession.active
-    if (!spark.conf.get("spark.graft.write.direct", "true").toBoolean) return false
-    val snap = delta.metaSnapshot()
-    if (snap.metadata.isEmpty) return false
-    val specs = graft.delta.IdentityColumns.specs(snap.schema)
-    if (specs.isEmpty) return false
-    // the allocator appends OMITTED identity columns (BIGINT) at the end —
-    // plan the writer against exactly that shape
-    val assignedSchema = org.apache.spark.sql.types.StructType(
-      data.schema.fields ++ specs
-        .filterNot(s => data.schema.fieldNames.contains(s.name))
-        .map(s => org.apache.spark.sql.types.StructField(
-          s.name, org.apache.spark.sql.types.LongType, nullable = false)))
-    // eligibility gate: the constructor runs every plan-time validation
-    // BEFORE any job; an ineligible shape throws and we stage instead
-    val w =
-      try new graft.streaming.GraftDirectWrite(spark, delta.path,
-        java.util.UUID.randomUUID().toString, assignedSchema,
-        if (truncate) graft.streaming.GraftDirectWrite.Truncate
-        else graft.streaming.GraftDirectWrite.Append,
-        preAllocatedIdentity = true)
-      catch { case _: ValidationException => return false }
-    val (assigned, release) =
-      graft.delta.IdentityColumns.assign(spark, data, specs)
-    // runBatch executes the one write job over the allocator's pinned
-    // blocks; nothing re-evaluates the frame after it
-    try w.runBatch(assigned, specs) finally release()
-    true
-  }
 
   override def build(): Write = directWrite().getOrElse(new V1Write {
     override def toInsertableRelation: InsertableRelation =
       (data, overwriteFlag) => mode match {
         case ReplaceWhere(cond) => delta.replaceWhere(data, cond); ()
         case Dynamic => delta.overwritePartitionsDynamic(data); ()
-        case Truncate =>
-          if (!tryIdentityDirect(data, truncate = true))
-            delta.write(data, "overwrite")
-          ()
-        case Append =>
-          if (!tryIdentityDirect(data, truncate = overwriteFlag))
-            delta.write(data, if (overwriteFlag) "overwrite" else "append")
-          ()
+        case Truncate => delta.write(data, "overwrite"); ()
+        case Append => delta.write(data, if (overwriteFlag) "overwrite" else "append"); ()
       }
 
     /** `df.writeStream.toTable(...)` — Append appends per epoch, Complete

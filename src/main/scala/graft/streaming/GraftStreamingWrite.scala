@@ -1,37 +1,27 @@
 package graft.streaming
 
-import scala.collection.mutable
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriterCommitMessage}
+import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.graftshim.WriteShim
-import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.types.StructType
 
-import graft.delta.{AddFile, DeltaTable, PartitionPaths, Txn, ValidationException}
+import graft.delta.{AddFile, DeltaTable, IdentityColumns, Snapshot, TaskWriteMessage, TaskWriter, TaskWriterFactory, Txn, ValidationException, WritePlan}
 
 /**
- * Direct (task-side) write path behind BOTH `df.writeStream.toTable(t)`
- * and eligible batch `INSERT INTO` / `writeTo(t).append()`: EXECUTORS
- * write parquet straight into the table's final layout through Spark's
- * own parquet `OutputWriter` (per-partition-value writers, Hive-escaped
- * directories, physical column names under column mapping), and only
- * (path, size) metadata reaches the driver's ONE commit
- * ([[DeltaTable.commitStreamedFiles]]: footer stats, bloom sidecars,
- * zero-row drop, OCC, CDC capture, auto-compact policy). Versus the V1
- * staging path this writes each byte exactly once — no staging directory
- * and no per-file rename, which on object stores is a full copy.
+ * DSv2 `Write` behind `df.writeStream.toTable(t)` and eligible catalog
+ * writes (`INSERT INTO`, `INSERT OVERWRITE`, REPLACE WHERE, dynamic
+ * partition overwrite, `writeTo(t).append()`, CTAS): Spark's own write
+ * execs run the engine's task writers ([[graft.delta.WritePlan]]), which
+ * land parquet under final names in the table layout, and the driver
+ * makes ONE metadata commit per statement or epoch
+ * ([[DeltaTable.commitStreamedFiles]] and the overwrite commit cores).
  *
  * Streaming epochs carry `Txn(queryId, epochId)` for exactly-once (the
  * same mechanism as [[DeltaStreamSink]]; a replayed epoch deletes its
- * re-staged files and returns). Batch commits carry no txn. Complete
- * mode overwrite-commits the epoch.
+ * files and returns). Batch commits carry no txn. Complete mode
+ * overwrite-commits the epoch.
  *
  * [[RequiresDistributionAndOrdering]] expresses
  * `delta.autoOptimize.optimizeWrite` natively: when set on a partitioned
@@ -39,28 +29,19 @@ import graft.delta.{AddFile, DeltaTable, PartitionPaths, Txn, ValidationExceptio
  * so each partition directory receives few, full files instead of one
  * shard per input task.
  *
- * CHECK constraints and column invariants are enforced TASK-SIDE (see
- * [[violationChecks]]): a violating row fails its task before writing,
- * Spark aborts the write, and nothing commits — the same guarantee the
- * staging path's Observation gate gives, without the staging copy.
- * Refused up front (clear errors at plan time, never mid-write):
- * generated columns (computed only by the staging path), query columns
- * missing from the table, and type mismatches. Columns the query omits
- * land as sparse files (read back as NULL — the table's ordinary
- * sparse-append semantics).
+ * Row contracts (CHECK constraints, invariants, generated columns, the
+ * replaceWhere region) are enforced task-side by the plan: a violating
+ * row fails its task and nothing commits. Query columns missing from the
+ * table and type mismatches are refused at construction, before any job
+ * (the catalog then routes the statement through `DeltaTable.write`).
+ * Columns the query omits land as sparse files (read back as NULL).
  */
 final class GraftDirectWrite(
     spark: SparkSession,
     tablePath: String,
     queryId: String,
     querySchema: StructType,
-    mode: GraftDirectWrite.Mode,
-    // the caller ALREADY ran the two-phase identity allocator over the
-    // input (the V1 batch seam, which holds the whole DataFrame) — the
-    // identity column arrives as an ordinary provided column. The DSv2
-    // push-based planners must leave this false: their tasks receive rows
-    // with no pre-write count pass to allocate from.
-    preAllocatedIdentity: Boolean = false)
+    mode: GraftDirectWrite.Mode)
   extends StreamingWrite with BatchWrite with Write
   with RequiresDistributionAndOrdering {
 
@@ -79,168 +60,16 @@ final class GraftDirectWrite(
   private val snap = table.metaSnapshot()
   if (snap.metadata.isEmpty) throw new ValidationException(
     s"cannot stream into $tablePath before its schema exists")
-  private val tableSchema = snap.schema
-  // Identity specs at PLAN time. The catalog routes batch identity
-  // INSERTs to the V1 seam, which pre-allocates gap-free row-ordered
-  // values and drives runBatch (preAllocatedIdentity — specs empty here).
-  // Every OTHER push (streaming epochs, and since round 15 direct batch
-  // pushes like df.writeTo(t).append()) allocates task-side: the writer
-  // factory is created against a fresh snapshot's high-water mark and
-  // tasks fill an interleaved lattice slice
-  // ([[graft.functions.StreamIdentityAssign]]); the commit re-checks the
-  // mark in its OCC loop and advances it.
-  private val idSpecsPlan: Seq[graft.delta.IdentityColumns.Spec] =
-    if (preAllocatedIdentity) Nil
-    else graft.delta.IdentityColumns.specs(tableSchema)
   private val partCols: Seq[String] = snap.partitionColumns
-  private val genExprSql: Map[String, String] =
-    graft.delta.GeneratedColumns.exprs(tableSchema).toMap
-
-  /** Analyze a Column against (query columns ++ missing table columns as
-    * NULLs) and rebind the result to QUERY-ROW ordinals — the bridge that
-    * lets the driver build serializable, codegen-able expressions each
-    * task evaluates per InternalRow. Shared by the violation predicates
-    * and the generated-column value expressions. */
-  private def bindToQueryRow(
-      build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Literal}
-    import org.apache.spark.sql.functions.lit
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), querySchema)
-    val widened = tableSchema.fields
-      .filterNot(f => querySchema.fieldNames.contains(f.name))
-      .foldLeft(empty)((acc, f) =>
-        acc.withColumn(f.name, lit(null).cast(f.dataType)))
-    build(widened).transform {
-      case a: AttributeReference =>
-        querySchema.fields.indexWhere(_.name == a.name) match {
-          case -1 => Literal(null, a.dataType) // omitted column reads NULL
-          case i => BoundReference(i, querySchema.fields(i).dataType,
-            nullable = true)
-        }
-    }
-  }
-
-  private def bindPredicate(condition: org.apache.spark.sql.Column,
-      nullFails: Boolean): org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{Coalesce, EqualNullSafe, Literal, Not}
-    bindToQueryRow { widened =>
-      val cond = widened.filter(condition).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }.getOrElse(throw new ValidationException(
-        s"cannot analyze write-contract expression: $condition"))
-      if (nullFails) Not(Coalesce(Seq(cond, Literal(false))))
-      else EqualNullSafe(cond, Literal(false))
-    }
-  }
-
-  private def bindValue(value: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    bindToQueryRow { widened =>
-      widened.select(value).queryExecution.analyzed.collectFirst {
-        case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          p.projectList.head match {
-            case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child
-            case e => e
-          }
-      }.getOrElse(throw new ValidationException(
-        s"cannot analyze generation expression: $value"))
-    }
-
-  /** Per-table-column VALUE expression over the query row: a provided
-    * generated column computes when NULL and keeps non-null values (they
-    * validate below); an omitted one computes outright — so the direct
-    * path materializes generated columns task-side, including GENERATED
-    * partition columns the query never carries (the date-partitioned
-    * ingest shape). Plain provided columns bind by ordinal. */
-  private def valueExprOf(lf: org.apache.spark.sql.types.StructField)
-      : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce}
-    import org.apache.spark.sql.functions.expr
-    val qi = querySchema.fields.indexWhere(_.name == lf.name)
-    genExprSql.get(lf.name) match {
-      case Some(g) =>
-        val computed = bindValue(expr(g).cast(lf.dataType))
-        if (qi < 0) Some(computed)
-        else Some(Coalesce(Seq(
-          BoundReference(qi, querySchema.fields(qi).dataType, nullable = true),
-          computed)))
-      case None if qi >= 0 =>
-        Some(BoundReference(qi, querySchema.fields(qi).dataType, nullable = true))
-      case None => None // omitted plain column: stays sparse
-    }
-  }
-
-  /** CHECK constraints, column invariants, replaceWhere region membership,
-    * and provided-generated-column consistency, enforced TASK-SIDE: each
-    * is analyzed once on the driver (columns the query omits evaluate as
-    * NULL — they land sparse and read back NULL), then rebound to
-    * query-row ordinals as a serializable VIOLATION expression each task
-    * codegens into a predicate and evaluates per row BEFORE writing it.
-    * A violating row fails the task → Spark aborts the write → every
-    * staged file is deleted; nothing commits. CHECK follows SQL (NULL
-    * passes); invariants keep Delta's legacy NULL-fails rule. */
-  private val violationChecks: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualNullSafe, IsNotNull, Not}
-    import org.apache.spark.sql.functions.expr
-    table.checkConstraints(snap).toSeq.sortBy(_._1).map { case (n, sql) =>
-      s"CHECK constraint '$n' ($sql)" -> bindPredicate(expr(sql), nullFails = false)
-    } ++ graft.delta.GeneratedColumns.invariants(tableSchema).map { case (c, sql) =>
-      s"column invariant on '$c' ($sql)" -> bindPredicate(expr(sql), nullFails = true)
-    } ++ (mode match {
-      // every written row must fall INSIDE the replaced region (a NULL
-      // condition means "not matched" → outside → violation), the same
-      // rule the staged path proves with its Observation
-      case GraftDirectWrite.ReplaceWhere(cond) => Seq(
-        s"replaceWhere region ($cond): inserted rows must satisfy the " +
-          "replacement condition" -> bindPredicate(cond, nullFails = true))
-      case _ => Nil
-    }) ++ genExprSql.toSeq.sortBy(_._1).collect {
-      // NULL-provided means "compute"; non-null provided must equal the
-      // expression (the staged path's validation rule)
-      case (n, g) if querySchema.fieldNames.contains(n) =>
-        val qi = querySchema.fieldIndex(n)
-        val provided = BoundReference(qi, querySchema.fields(qi).dataType,
-          nullable = true)
-        val dt = tableSchema(n).dataType
-        s"generated column '$n' ($g): provided values must equal the " +
-          "generation expression" ->
-          And(IsNotNull(provided),
-            Not(EqualNullSafe(provided, bindValue(expr(g).cast(dt)))))
-    }
-  }
-
-  querySchema.fields.foreach { qf =>
-    tableSchema.fields.find(_.name == qf.name) match {
-      case None => throw new ValidationException(
-        s"write column '${qf.name}' does not exist in the table " +
-          "(direct writes do not evolve the schema)")
-      case Some(tf) if tf.dataType != qf.dataType =>
-        throw new ValidationException(
-          s"write column '${qf.name}' has type ${qf.dataType.sql}, " +
-            s"table expects ${tf.dataType.sql}")
-      case _ => ()
-    }
-  }
-  partCols.filterNot(p => querySchema.fieldNames.contains(p) ||
-      genExprSql.contains(p)).headOption.foreach(p =>
-    throw new ValidationException(
-      s"writing a partitioned table requires partition column '$p'"))
-
-  /** Physical file schema: table data columns (minus partition columns,
-    * physical names) the QUERY carries or the table GENERATES — plain
-    * omitted columns stay omitted (sparse files), matching the batch
-    * writer; generated columns always materialize. */
-  private val physical = table.physicalSchema(tableSchema).getOrElse(tableSchema)
-  private val filePlan: Array[(org.apache.spark.sql.types.StructField, org.apache.spark.sql.catalyst.expressions.Expression)] =
-    tableSchema.fields.zip(physical.fields).collect {
-      case (lf, pf) if !partCols.contains(lf.name) =>
-        valueExprOf(lf).map(e => (pf.copy(name = pf.name), e))
-    }.flatten
-  private val fileSchema = StructType(filePlan.map(_._1))
-  private val partExprs: Array[org.apache.spark.sql.catalyst.expressions.Expression] =
-    partCols.toArray.map(p => valueExprOf(tableSchema(p)).get)
+  // plan-time enforced set: a constraint added after this write was
+  // planned re-validates at commit (assertLateConstraints)
+  private val enforcedConstraints = table.checkConstraints(snap)
+  private val plan = new WritePlan(table, snap.schema, partCols, querySchema,
+    enforcedConstraints, mode match {
+      case GraftDirectWrite.ReplaceWhere(cond) => Some(cond)
+      case _ => None
+    })
+  private val hasIdentity = IdentityColumns.hasAny(snap.schema)
 
   override def toStreaming: StreamingWrite = this
   override def toBatch: BatchWrite = this
@@ -280,174 +109,97 @@ final class GraftDirectWrite(
         .getOrElse(128L * 1024 * 1024)
     else super.advisoryPartitionSizeInBytes()
 
-  override def requiredOrdering(): Array[SortOrder] = Array.empty
+  /** Batch tasks receive their rows sorted by partition, so each task
+    * writes one file at a time ([[WritePlan.sortColumns]]). */
+  override def requiredOrdering(): Array[SortOrder] =
+    plan.sortColumns.toArray.map(c =>
+      Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
 
   // ---- writer factory (shared by both personalities) ------------------------
 
-  private def writerFactory: GraftStreamWriterFactory = {
-    val (factory, conf) = WriteShim.parquetWriterFactory(spark, fileSchema)
-    GraftStreamWriterFactory(tablePath, fileSchema,
-      filePlan.map(_._2), partCols.toArray, partExprs,
-      factory, conf, violationChecks)
-  }
+  /** Identity tables allocate task-side: each factory reads a FRESH
+    * snapshot's high-water mark and tasks fill an interleaved lattice
+    * slice ([[graft.functions.StreamIdentityAssign]]); the commit
+    * re-checks the mark in its OCC loop and advances it. Values are
+    * unique and on-lattice but may carry gaps (a task that writes fewer
+    * rows than its slice leaves its tail unused) — the contract Delta
+    * documents for identity columns. */
+  private def factoryFor(numPartitions: Int, clustered: Boolean): TaskWriterFactory =
+    if (!hasIdentity) plan.factory(clustered = clustered)
+    else plan.factory(IdentityColumns.specs(table.metaSnapshot().schema), numPartitions, clustered)
 
-  /** Per-epoch factory for an identity table: the file plan gains the
-    * identity columns (filled task-side on an interleaved lattice from
-    * the mark a FRESH snapshot just read), so omitted identity columns
-    * never land sparse. `slots` = the write's partition count. */
-  private def identityEpochFactory(slots: Int): GraftStreamWriterFactory = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal}
-    val specs = graft.delta.IdentityColumns.specs(table.metaSnapshot().schema)
-    val byName = specs.map(s => s.name -> s).toMap
-    val plan: Array[(org.apache.spark.sql.types.StructField, org.apache.spark.sql.catalyst.expressions.Expression)] =
-      tableSchema.fields.zip(physical.fields).collect {
-        case (lf, pf) if !partCols.contains(lf.name) =>
-          byName.get(lf.name) match {
-            case Some(s) =>
-              val qi = querySchema.fieldNames.indexOf(lf.name)
-              val child: org.apache.spark.sql.catalyst.expressions.Expression =
-                if (qi < 0) Literal(null, org.apache.spark.sql.types.LongType)
-                else Cast(BoundReference(qi,
-                  querySchema.fields(qi).dataType, nullable = true),
-                  org.apache.spark.sql.types.LongType)
-              Some((pf.copy(name = pf.name),
-                graft.functions.StreamIdentityAssign(child, s.name,
-                  s.nextValue, s.step, math.max(slots, 1), s.allowExplicit)
-                  : org.apache.spark.sql.catalyst.expressions.Expression))
-            case None => valueExprOf(lf).map(e => (pf.copy(name = pf.name), e))
-          }
-      }.flatten
-    val schema = StructType(plan.map(_._1))
-    val (factory, conf) = WriteShim.parquetWriterFactory(spark, schema)
-    GraftStreamWriterFactory(tablePath, schema, plan.map(_._2),
-      partCols.toArray, partExprs, factory, conf, violationChecks, specs)
-  }
-
-  /** Factory selection shared by the streaming-epoch and batch-push
-    * personalities: identity tables get the allocating factory (fresh-mark
-    * lattice slices per task), everything else the plain one. */
-  private def factoryFor(numPartitions: Int): GraftStreamWriterFactory =
-    if (idSpecsPlan.isEmpty) writerFactory
-    else identityEpochFactory(numPartitions)
-
+  // streaming epochs keep one file per partition value open instead of
+  // relying on the requested ordering
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    factoryFor(info.numPartitions())
+    factoryFor(info.numPartitions(), clustered = false)
 
-  /** Push-based batch writes on an identity table allocate exactly like a
-    * streaming epoch (round 15; this used to refuse): each task fills its
-    * partition's interleaved lattice slice from the mark a fresh snapshot
-    * read at factory creation, and the commit re-checks that mark in its
-    * OCC loop before advancing it. Values are unique and on-lattice but
-    * may carry gaps (a task that writes fewer rows than its slice leaves
-    * its tail unused) — the same contract Delta documents; the catalog's
-    * V1 seam remains the gap-free, row-ordered allocator for routed
-    * INSERTs, so only a direct `df.writeTo(t).append()` takes this path. */
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    factoryFor(info.numPartitions())
+    factoryFor(info.numPartitions(), clustered = true)
 
   // ---- commits ---------------------------------------------------------------
 
-  private def rawAdds(messages: Array[WriterCommitMessage]): Seq[AddFile] = {
-    val now = System.currentTimeMillis()
-    messages.collect { case m: GraftStreamCommitMessage => m.files }
-      .flatten.map { case (rel, size) =>
-        AddFile(rel, PartitionPaths.parse(rel), size, now)
-      }.toIndexedSeq
-  }
+  private def rawAdds(messages: Array[WriterCommitMessage]): Seq[AddFile] =
+    TaskWriter.addsOf(messages.toSeq)
 
-  // plan-time enforced set: a constraint added after this write was
-  // planned re-validates at commit (assertLateConstraints)
-  private val enforcedConstraints = table.checkConstraints(snap)
+  private def prepared(messages: Array[WriterCommitMessage], snap0: Snapshot): Seq[AddFile] =
+    table.prepareAdds(rawAdds(messages), snap0.schema, snap0.partitionColumns, snap0.configuration)
+
+  // specs this write's tasks allocated identity values from, echoed in
+  // their commit messages (so the pairing is right even if factory
+  // creation and commits interleave); every commit core re-checks the
+  // mark in its OCC loop and advances it
+  private def idAllocOf(messages: Array[WriterCommitMessage]): Seq[IdentityColumns.Spec] =
+    messages.collectFirst {
+      case m: TaskWriteMessage if m.idAlloc.nonEmpty => m.idAlloc
+    }.getOrElse(Nil)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     require(mode == GraftDirectWrite.Append || mode == GraftDirectWrite.Truncate,
       s"streaming epochs support Append/Truncate only, got $mode")
-    // idAlloc: the specs THIS epoch's tasks allocated identity values from,
-    // echoed back in the epoch's own commit messages (so the pairing is
-    // correct even if factory creation and commits interleave) — the commit
-    // re-checks the mark inside its OCC loop (a racer advancing it fails
-    // the epoch; the engine replays it against a fresh factory) and
-    // advances it past the epoch's furthest value
-    val epochAlloc = messages.collectFirst {
-      case m: GraftStreamCommitMessage if m.idAlloc.nonEmpty => m.idAlloc
-    }.getOrElse(Nil)
+    // a racer advancing an identity mark fails the epoch; the engine
+    // replays it against a fresh factory
     table.commitStreamedFiles(rawAdds(messages),
       Some(Txn(queryId, epochId, System.currentTimeMillis())),
       overwrite = truncate, enforcedConstraints = enforcedConstraints,
-      idAlloc = epochAlloc)
+      idAlloc = idAllocOf(messages))
     ()
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // specs this batch's tasks allocated identity values from (echoed in
-    // the commit messages, same as the epoch path) — every commit core
-    // re-checks the mark in its OCC loop and advances it
-    val batchAlloc = messages.collectFirst {
-      case m: GraftStreamCommitMessage if m.idAlloc.nonEmpty => m.idAlloc
-    }.getOrElse(Nil)
+    val batchAlloc = idAllocOf(messages)
     mode match {
       case GraftDirectWrite.Append | GraftDirectWrite.Truncate =>
         table.commitStreamedFiles(rawAdds(messages), txn = None,
           overwrite = truncate, enforcedConstraints = enforcedConstraints,
           idAlloc = batchAlloc)
       case GraftDirectWrite.DynamicOverwrite =>
-        // tasks already proved nothing (partition replacement is derived
-        // from the written files); stats/bloom/zero-row prep then the same
-        // commit core as the staged path, incl. the region conflict
+        // partition replacement is derived from the written files; the
+        // same commit core as DeltaTable.overwritePartitionsDynamic
         val snap0 = table.metaSnapshot()
         table.commitDynamicOverwriteAdds(snap0,
-          table.prepareStreamedAdds(rawAdds(messages), snap0),
+          prepared(messages, snap0),
           enforcedConstraints = enforcedConstraints, idAlloc = batchAlloc)
       case GraftDirectWrite.ReplaceWhere(cond) =>
         // tasks proved every row satisfies the condition; the commit core
         // rewrites the kept remainder of matched files and applies the
-        // region conflict. The snapshot is REGION-PRUNED like the staged
-        // path's, so only candidate files reach the matched-file scan.
+        // region conflict. The snapshot is REGION-PRUNED like
+        // DeltaTable.replaceWhere's, so only candidate files reach the
+        // matched-file scan.
         val snap0 = table.scanState(None,
           graft.sources.ExprFilters.pruneJson(cond))
         table.commitReplaceWhereAdds(snap0, cond,
-          table.prepareStreamedAdds(rawAdds(messages), snap0),
+          prepared(messages, snap0),
           enforcedConstraints = enforcedConstraints, idAlloc = batchAlloc)
     }
     GraftDirectWrite.batchCommits.incrementAndGet()
     ()
   }
 
-  /** V1 batch seam: run the write job OURSELVES over `assigned` (already
-    * aligned to `querySchema` — for identity tables, the output of the
-    * two-phase allocator) and make the one metadata commit. Same task-side
-    * writers, contracts, and orphan-on-zombie-task semantics as the DSv2
-    * path; `idAlloc` carries the allocation-time specs so the commit
-    * re-checks the high-water mark in its OCC loop and advances it. */
-  private[graft] def runBatch(assigned: org.apache.spark.sql.DataFrame,
-                              idAlloc: Seq[graft.delta.IdentityColumns.Spec]): Long = {
-    require(assigned.schema.map(f => (f.name, f.dataType)) ==
-      querySchema.map(f => (f.name, f.dataType)),
-      "runBatch frame must match the planned query schema")
-    val f = writerFactory
-    val messages: Array[WriterCommitMessage] =
-      assigned.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        val w = f.createWriter(pid,
-          org.apache.spark.TaskContext.get().taskAttemptId())
-        try {
-          it.foreach(w.write)
-          Iterator.single(w.commit(): WriterCommitMessage)
-        } catch {
-          case e: Throwable => w.abort(); throw e
-        }
-      }.collect()
-    val v = table.commitStreamedFiles(rawAdds(messages), txn = None,
-      overwrite = truncate, enforcedConstraints = enforcedConstraints,
-      idAlloc = idAlloc)
-    GraftDirectWrite.batchCommits.incrementAndGet()
-    v
-  }
-
   private def deleteStaged(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case m: GraftStreamCommitMessage =>
+      case m: TaskWriteMessage =>
         m.files.foreach { case (rel, _) => table.deleteDataFile(rel) }
       case _ => ()
     }
@@ -480,143 +232,4 @@ object GraftDirectWrite {
     * it — enforced task-side like a CHECK constraint (a row outside the
     * region aborts the write before anything commits). */
   final case class ReplaceWhere(cond: org.apache.spark.sql.Column) extends Mode
-}
-
-/** Per-(file-relative-path, bytes) written by one task. */
-final case class GraftStreamCommitMessage(
-    files: Seq[(String, Long)],
-    // Identity specs the writing epoch allocated from, echoed back by each
-    // task so the driver's commit(epochId) pairs marks with the RIGHT
-    // epoch even if factory creation and commits ever interleave
-    // (pipelined micro-batches) — no shared driver field to race on.
-    idAlloc: Seq[graft.delta.IdentityColumns.Spec] = Nil)
-  extends WriterCommitMessage
-
-/** Serializable task-writer factory: everything a task needs to route
-  * rows to per-partition parquet writers in the table's final layout.
-  * Serves batch and streaming tasks alike. */
-final case class GraftStreamWriterFactory(
-    tablePath: String,
-    fileSchema: StructType,
-    dataExprs: Array[org.apache.spark.sql.catalyst.expressions.Expression],
-    partCols: Array[String],
-    partExprs: Array[org.apache.spark.sql.catalyst.expressions.Expression],
-    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: SerializableConfiguration,
-    violationChecks: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-    idAlloc: Seq[graft.delta.IdentityColumns.Spec] = Nil)
-  extends StreamingDataWriterFactory with DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new GraftStreamDataWriter(this, partitionId, taskId, epochId)
-
-  override def createWriter(partitionId: Int,
-                            taskId: Long): DataWriter[InternalRow] =
-    new GraftStreamDataWriter(this, partitionId, taskId, 0L)
-}
-
-/**
- * Task-side writer: projects each row to the file schema (by the
- * driver-computed ordinals), renders its partition directory
- * (Hive-escaped, `__HIVE_DEFAULT_PARTITION__` for null), and appends to
- * that partition's open parquet writer — one writer per partition value
- * per task, the same shape Spark's own dynamic-partition writer produces.
- * File names carry a per-writer UUID: task IDs restart across
- * applications, so a deterministic name could collide with (and clobber)
- * a COMMITTED file from an earlier run — e.g. an epoch replayed after a
- * restart, whose cleanup would then delete live data.
- */
-private final class GraftStreamDataWriter(
-    f: GraftStreamWriterFactory,
-    partitionId: Int, taskId: Long, epochId: Long)
-  extends DataWriter[InternalRow] {
-
-  // per-file-column value expressions, pre-bound by the driver to query
-  // ordinals (BoundReferences for plain columns, generation expressions
-  // for generated ones; StreamIdentityAssign — Nondeterministic — for
-  // identity columns in streaming epochs, hence the initialize call)
-  private val dataProj = UnsafeProjection.create(f.dataExprs.toIndexedSeq)
-  dataProj.initialize(partitionId)
-  // partition values render through Cast-to-string (UTC) — the same
-  // rendering Spark's writer uses, so paths parse back identically
-  private val partProj =
-    if (f.partExprs.isEmpty) null
-    else UnsafeProjection.create(f.partExprs.toIndexedSeq.map(e =>
-      Cast(e, StringType, Some("UTC"))))
-
-  // task-side row contracts (CHECK constraints + invariants): codegen'd
-  // predicates over the driver-bound violation expressions; a hit fails
-  // the task, Spark aborts the write, staged files are deleted
-  private val violations: Seq[(String, org.apache.spark.sql.catalyst.expressions.BasePredicate)] =
-    f.violationChecks.map { case (what, e) =>
-      val p = org.apache.spark.sql.catalyst.expressions.Predicate.create(e)
-      p.initialize(partitionId)
-      (what, p)
-    }
-
-  private val ext = WriteShim.fileExtension(f.factory, f.conf.value, taskId)
-  private val uuid = java.util.UUID.randomUUID().toString
-  private val writers = mutable.LinkedHashMap.empty[
-    String, (org.apache.spark.sql.execution.datasources.OutputWriter, String)]
-  private var fileNo = 0
-
-  private def dirFor(row: InternalRow): String = {
-    if (f.partExprs.isEmpty) return ""
-    val rendered = partProj(row)
-    f.partCols.zipWithIndex.map { case (c, i) =>
-      // Hive/Spark convention: an EMPTY-string partition value folds into
-      // the null marker too (ExternalCatalogUtils.getPartitionPathString)
-      // and reads back as null — the staged path does this through
-      // Spark's own writer, so the direct path must match it exactly.
-      val v =
-        if (rendered.isNullAt(i)) PartitionPaths.NullMarker
-        else {
-          val s = rendered.getUTF8String(i).toString
-          if (s.isEmpty) PartitionPaths.NullMarker
-          else WriteShim.escapePathName(s)
-        }
-      s"${WriteShim.escapePathName(c)}=$v"
-    }.mkString("", "/", "/")
-  }
-
-  override def write(row: InternalRow): Unit = {
-    violations.foreach { case (what, p) =>
-      if (p.eval(row)) throw new graft.delta.ValidationException(
-        s"$what violated by a written row; direct write aborted, " +
-          "nothing committed")
-    }
-    val dir = dirFor(row)
-    val (w, _) = writers.getOrElseUpdate(dir, {
-      val rel = f"${dir}part-$epochId%05d-$partitionId%05d-$uuid-$fileNo$ext"
-      fileNo += 1
-      val abs = new Path(f.tablePath, rel).toString
-      (WriteShim.newWriter(f.factory, abs, f.fileSchema, f.conf.value, taskId), rel)
-    })
-    w.write(dataProj(row))
-  }
-
-  override def commit(): WriterCommitMessage = {
-    val fs = new Path(f.tablePath).getFileSystem(f.conf.value)
-    val files = writers.values.toSeq.map { case (w, rel) =>
-      w.close()
-      rel -> fs.getFileStatus(new Path(f.tablePath, rel)).getLen
-    }
-    writers.clear()
-    GraftStreamCommitMessage(files, f.idAlloc)
-  }
-
-  override def abort(): Unit = {
-    val fs = new Path(f.tablePath).getFileSystem(f.conf.value)
-    writers.values.foreach { case (w, rel) =>
-      try w.close() catch { case _: Throwable => () }
-      try fs.delete(new Path(f.tablePath, rel), false) catch { case _: Throwable => () }
-    }
-    writers.clear()
-  }
-
-  override def close(): Unit =
-    writers.values.foreach { case (w, _) =>
-      try w.close() catch { case _: Throwable => () }
-    }
 }

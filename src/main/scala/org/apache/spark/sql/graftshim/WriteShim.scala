@@ -1,20 +1,20 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /**
- * Bridge to Spark's internal file-WRITE machinery for task-side parquet
- * writing (the DSv2 streaming sink needs a per-task writer; Spark's own
- * `FileFormatWriter` is driver-orchestrated). Same access-qualifier story
- * as [[ScanShim]].
+ * Bridge to Spark's internal parquet `OutputWriter`s for the engine's
+ * task writer (graft.delta.TaskWriter), which opens one writer per
+ * partition directory inside each task. Same access-qualifier story as
+ * [[ScanShim]].
  */
 object WriteShim {
 
@@ -30,16 +30,9 @@ object WriteShim {
     (factory, new SerializableConfiguration(job.getConfiguration))
   }
 
-  def fileExtension(factory: OutputWriterFactory, conf: Configuration,
-                    taskId: Long): String =
-    factory.getFileExtension(taskContext(conf, taskId))
-
-  def newWriter(factory: OutputWriterFactory, path: String,
-                dataSchema: StructType, conf: Configuration,
-                taskId: Long): OutputWriter =
-    factory.newInstance(path, dataSchema, taskContext(conf, taskId))
-
-  private def taskContext(conf: Configuration, taskId: Long) =
+  /** The task attempt context a task's output writers are created with;
+    * one per task, shared by all its files. */
+  def taskContext(conf: Configuration, taskId: Long): TaskAttemptContext =
     new TaskAttemptContextImpl(conf,
       new TaskAttemptID(new TaskID(new JobID("graft-stream", 0),
         TaskType.MAP, (taskId % Int.MaxValue).toInt), 0))

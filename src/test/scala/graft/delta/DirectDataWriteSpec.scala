@@ -1,14 +1,16 @@
 package graft.delta
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
-/** Contract of the r17 DIRECT data-file write path
-  * ([[DirectWriteProtocol]] under `DeltaTable.writeDataFilesRaw`): files
-  * land under their FINAL names in the table directory, no `_staging_*`
-  * dir is ever created, adds carry real byte sizes, and repeated writes
-  * can never collide on a name. Log-gated visibility (readers never list
-  * the directory) is exercised by every existing concurrency/crash suite,
-  * which now runs through this path. */
+/** Contract of the engine's data-file writer ([[TaskWriter]] under
+  * `DeltaTable.writeDataFiles`): files land under their FINAL names in
+  * the table directory, no `_staging_*` dir is ever created, adds carry
+  * real byte sizes, repeated writes can never collide on a name, and a
+  * failed write leaves no files behind. Log-gated visibility (readers
+  * never list the directory) is exercised by every existing
+  * concurrency/crash suite, which runs through this path. */
 class DirectDataWriteSpec extends graft.SparkTestBase {
   import spark.implicits._
 
@@ -59,5 +61,33 @@ class DirectDataWriteSpec extends graft.SparkTestBase {
     assert(snap.activeFiles.forall(
       _.parsedStats.exists(_.numRecords > 0)))
     assert(t.toDF().count() == 25)
+  }
+
+  test("a CHECK violation in one task leaves no files behind") {
+    val dir = newDir()
+    val t = DeltaTable.forPath(spark, dir)
+    t.write((1 to 40).map(i => (i.toLong, i % 3, i.toDouble)).toDF("id", "k", "price"),
+      partitionBy = Seq("k"))
+    t.addCheckConstraint("price_pos", "price > 0")
+    def dataFiles(): Set[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(root.relativize(_).toString)
+        .filterNot(_.startsWith("_delta_log")).toSet
+      finally s.close()
+    }
+    val before = dataFiles()
+    val v = t.version
+    // eight tasks over every partition directory; the one bad row sits
+    // in the last task, so the others finish and write their files
+    val df = spark.range(0, 8000, 1, 8).select(col("id"), (col("id") % 3).cast("int").as("k"),
+      when(col("id") === 7999, -1.0).otherwise(1.0).as("price"))
+    assert(df.rdd.getNumPartitions >= 4)
+    val e = intercept[ValidationException](t.write(df))
+    assert(e.getMessage.contains("price_pos"))
+    assert(t.version == v, "a violating write must not commit")
+    assert(dataFiles() == before, "a violating write must leave no files behind")
+    assert(t.toDF().count() == 40)
   }
 }

@@ -144,20 +144,19 @@ class IdentityColumnsSpec extends SparkTestBase {
     val t = freshTable()
     sql(s"CREATE TABLE $t (rid BIGINT GENERATED ALWAYS AS IDENTITY " +
       "(START WITH 7 INCREMENT BY 2), s STRING)")
-    val before = graft.streaming.GraftDirectWrite.batchCommits.get()
+    val before = deltaOf(t).version
     sql(s"INSERT INTO $t (s) VALUES ('a'), ('b'), ('c')")
-    assert(graft.streaming.GraftDirectWrite.batchCommits.get() == before + 1,
-      "the V1 seam must pre-allocate and drive the direct task-side writers")
+    assert(deltaOf(t).version == before + 1,
+      "one INSERT pre-allocates, writes task-side and commits once")
     val rids = sql(s"SELECT rid FROM $t ORDER BY rid").collect().map(_.getLong(0))
     assert(rids.toSeq == Seq(7L, 9L, 11L), rids.toSeq)
-    // the mark advanced in the same (direct) commit
+    // the mark advanced in the same commit
     assert(deltaOf(t).metaSnapshot().schema("rid").metadata
       .getLong(IdentityColumns.HighWaterMarkKey) == 11L)
     // a second append continues the lattice through the same arm
     sql(s"INSERT INTO $t (s) VALUES ('d')")
-    assert(graft.streaming.GraftDirectWrite.batchCommits.get() == before + 2)
+    assert(deltaOf(t).version == before + 2)
     assert(sql(s"SELECT rid FROM $t WHERE s = 'd'").head().getLong(0) == 13L)
-    // schema-evolving inserts still fall back to the staged write
     sql(s"INSERT INTO $t (s) VALUES ('e')")
     assert(sql(s"SELECT count(DISTINCT rid) FROM $t").head().getLong(0) == 5)
   }

@@ -7,11 +7,11 @@ import graft.plans.GraftSql
 import graft.streaming.GraftDirectWrite
 
 /**
- * Eligible batch appends through the catalog take the DIRECT write path:
- * executors write parquet straight into the table's final layout and the
- * driver makes one metadata commit — no staging directory, no per-file
- * rename. Ineligible shapes (CHECK constraints, disabled by conf) fall
- * back to the V1 staging path, which enforces them.
+ * Catalog batch writes plan as a DSv2 direct write: Spark's own write
+ * execs run the engine's task writers, which land parquet under final
+ * names in the table layout, and the driver makes one metadata commit.
+ * Row contracts (CHECK constraints, the REPLACE WHERE region) are
+ * enforced task-side.
  */
 class DirectBatchWriteSpec extends SparkTestBase {
 
@@ -54,7 +54,7 @@ class DirectBatchWriteSpec extends SparkTestBase {
     // pre-overwrite state stays time-travelable
     val dt = graft.delta.DeltaTable.forPath(spark, tablePath(t))
     assert(dt.toDF(dt.snapshot(Some(dt.version - 1))).count() == 50)
-    // history names the operation like the staged path would — the audit
+    // history names the operation like DeltaTable.write would — the audit
     // trail must not differ by write path for the same statement
     val op = dt.log.readCommit(dt.version).collectFirst {
       case c: graft.delta.CommitInfo => c.operation
@@ -159,18 +159,6 @@ class DirectBatchWriteSpec extends SparkTestBase {
     assert(sql(s"SELECT id, p FROM $t ORDER BY id").collect().map(_.toSeq).toSeq ==
       Seq(Seq(1L, "a"), Seq(20L, "b"), Seq(21L, "b")),
       "partition a untouched, partition b fully replaced")
-  }
-
-  test("spark.graft.write.direct=false forces the V1 staging path") {
-    setup()
-    val t = freshTable()
-    sql(s"CREATE TABLE $t (id BIGINT)")
-    val before = GraftDirectWrite.batchCommits.get()
-    spark.conf.set("spark.graft.write.direct", "false")
-    try sql(s"INSERT INTO $t SELECT id FROM range(10)")
-    finally spark.conf.unset("spark.graft.write.direct")
-    assert(GraftDirectWrite.batchCommits.get() == before)
-    assert(sql(s"SELECT count(*) FROM $t").head().getLong(0) == 10)
   }
 
   test("CDC capture rides the direct batch commit") {

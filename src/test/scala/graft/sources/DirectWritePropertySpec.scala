@@ -1,17 +1,17 @@
 package graft.sources
 
 import graft.SparkTestBase
+import graft.delta.DeltaTable
 import graft.plans.GraftSql
 
 /**
  * Property check: for ANY row set, null pattern, and partitioning choice,
- * the DIRECT batch write (task-side parquet into the final layout, one
- * metadata commit) and the V1 STAGING path are observationally
- * IDENTICAL — same rows back, same partition-pruned counts. The two
- * paths share a commit core but diverge in the entire file-producing
- * machinery, so this pins the seam the round-11 rewiring moved. Cases
- * come from a fixed-seed RNG (reproducible), with Hive-escaping-hostile
- * partition values (spaces, '=', empty string) always in the pool.
+ * the two routes into the one task writer — a catalog `INSERT INTO`
+ * (Spark's DSv2 write execs) and `DeltaTable.write` (the table API's own
+ * job) — both read back exactly what plain Spark holds: same rows, same
+ * partition-pruned counts. Cases come from a fixed-seed RNG
+ * (reproducible), with Hive-escaping-hostile partition values (spaces,
+ * '=', empty string) always in the pool.
  */
 case class DwRec(id: Long, s: Option[String], v: Option[Double], p: String)
 
@@ -20,7 +20,7 @@ class DirectWritePropertySpec extends SparkTestBase {
   private lazy val cat: String = GraftSql.ensure(spark)
   private def sql(q: String) = spark.sql(q)
 
-  test("property: direct and staged writes are observationally identical (12 seeded cases)") {
+  test("property: both write routes match a plain-Spark oracle") {
     sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.dwprop")
     import spark.implicits._
     val rnd = new scala.util.Random(4242)
@@ -42,9 +42,13 @@ class DirectWritePropertySpec extends SparkTestBase {
       sql(s"CREATE TABLE $st $ddl$part")
       rows.toDF().createOrReplaceTempView("dw_src")
       sql(s"INSERT INTO $dt SELECT id, s, v, p FROM dw_src")
-      spark.conf.set("spark.graft.write.direct", "false")
-      try sql(s"INSERT INTO $st SELECT id, s, v, p FROM dw_src")
-      finally spark.conf.unset("spark.graft.write.direct")
+      DeltaTable.forPath(spark, GraftSql.warehousePath(spark).get + s"/dwprop/s$caseNo")
+        .write(rows.toDF())
+      // plain Spark over the same rows; a partition directory stores an
+      // empty string as the Hive null marker, so it reads back NULL
+      sql("SELECT id, s, v, " +
+        (if (partitioned) "CASE WHEN p = '' THEN NULL ELSE p END" else "p") +
+        " AS p FROM dw_src").createOrReplaceTempView("dw_oracle")
 
       def canon(t: String): Seq[Seq[Any]] =
         sql(s"SELECT id, s, v, p FROM $t ORDER BY id, s, v, p")
@@ -52,15 +56,18 @@ class DirectWritePropertySpec extends SparkTestBase {
             case d: Double => d.toString
             case x => x
           })
-      assert(canon(dt) == canon(st),
-        s"case $caseNo (partitioned=$partitioned): direct != staged")
+      val oracle = canon("dw_oracle")
+      assert(canon(dt) == oracle,
+        s"case $caseNo (partitioned=$partitioned): catalog INSERT != oracle")
+      assert(canon(st) == oracle,
+        s"case $caseNo (partitioned=$partitioned): DeltaTable.write != oracle")
       if (partitioned) {
         for (pv <- parts) {
           val q = s"WHERE p = '${pv.replace("'", "''")}'"
-          assert(
-            sql(s"SELECT count(*) FROM $dt $q").head().getLong(0) ==
-              sql(s"SELECT count(*) FROM $st $q").head().getLong(0),
-            s"case $caseNo: pruned count differs for partition value '$pv'")
+          val expected = sql(s"SELECT count(*) FROM dw_oracle $q").head().getLong(0)
+          for (t <- Seq(dt, st)) assert(
+            sql(s"SELECT count(*) FROM $t $q").head().getLong(0) == expected,
+            s"case $caseNo: $t pruned count differs for partition value '$pv'")
         }
       }
     }

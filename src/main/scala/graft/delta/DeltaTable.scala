@@ -172,7 +172,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     // TaskWriter.dirOf) — pin the file source's partition-value PARSING
     // to UTC too, or a non-UTC session would shift every zoned-timestamp
     // partition value by its offset (the DSv2 path already parses at UTC
-    // in GraftBatchScan.partitionValueRow).
+    // in PartitionPaths.decoder).
     val reader0 = spark.read.option("timeZone", "UTC")
     val reader = if (allRelative) reader0.option("basePath", path) else reader0
     // Column mapping (reference: src/delta/snapshot.ts:29-83, applied at

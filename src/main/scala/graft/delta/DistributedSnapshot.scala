@@ -206,17 +206,6 @@ object DistributedSnapshot {
       Nil, raw.txns)
   }
 
-  /** Distributed CLAIMABILITY check (round 15 — the driver claim switches
-    * off above the snapshot threshold, exactly where the metadata-fold
-    * payoff is largest): which of `candidates` are exactly decidable
-    * ([[PartitionFilters.eval]] defined) on EVERY active file at `target`.
-    * One narrow job over the checkpoint's add rows — each partition folds
-    * an undecided-bitmask, the driver ORs the per-partition masks and the
-    * tail files — nothing per-file ever materializes on the driver. The
-    * kept set is NOT returned: a claimed filter's verdict is a pure
-    * function of (file, filter, schema), so downstream consumers re-run
-    * the tri-state eval over their (pruned) survivors instead of holding
-    * a 10⁷-path set. */
   /** NEVER-MATERIALIZING metadata fold (round 16): COUNT/MIN/MAX over the
     * active files at `target` that every CLAIMED filter decides True on,
     * computed as per-file contributions merged ASSOCIATIVELY on executors
@@ -243,10 +232,8 @@ object DistributedSnapshot {
         aggs.exists(StatsAggregates.staticallyRefused(_, partCols, schema)))
       return None
     val aggsIdx = aggs.toIndexedSeq
-    val claimedIdx = claimed.toIndexedSeq
-    def keep(f: AddFile): Boolean = claimedIdx.forall(flt =>
-      PartitionFilters.eval(f, flt, partCols, schema)
-        .contains(PartitionFilters.True))
+    val selects = PartitionFilters.selects(claimed, partCols, schema)
+    def keep(f: AddFile): Boolean = selects(f.partitionValues)
     val zero = StatsAggregates.identityPartial(aggsIdx)
     val partials: Array[StatsAggregates.Partial] =
       raw.baseAddJson.rdd.mapPartitions { it =>
@@ -284,11 +271,9 @@ object DistributedSnapshot {
         aggs.exists(StatsAggregates.staticallyRefused(_, partCols, schema)))
       return None
     val aggsIdx = aggs.toIndexedSeq
-    val claimedIdx = claimed.toIndexedSeq
     val groupColsIdx = groupCols.toIndexedSeq
-    def keep(f: AddFile): Boolean = claimedIdx.forall(flt =>
-      PartitionFilters.eval(f, flt, partCols, schema)
-        .contains(PartitionFilters.True))
+    val selects = PartitionFilters.selects(claimed, partCols, schema)
+    def keep(f: AddFile): Boolean = selects(f.partitionValues)
     val partials: Array[StatsAggregates.GroupedPartial] =
       raw.baseAddJson.rdd.mapPartitions { it =>
         var acc = StatsAggregates.identityGrouped
@@ -314,6 +299,18 @@ object DistributedSnapshot {
     out
   }
 
+  /** Distributed CLAIMABILITY check (round 15 — the driver claim switches
+    * off above the snapshot threshold, exactly where the metadata-fold
+    * payoff is largest): which of `candidates` are exactly decidable
+    * ([[PartitionFilters.Bound.eval]] defined) on EVERY active file at
+    * `target`.
+    * One narrow job over the checkpoint's add rows — each partition folds
+    * an undecided-bitmask, the driver ORs the per-partition masks and the
+    * tail files — nothing per-file ever materializes on the driver. The
+    * kept set is NOT returned: a claimed filter's verdict is a pure
+    * function of (file, filter, schema), so downstream consumers re-run
+    * the tri-state eval over their (pruned) survivors instead of holding
+    * a 10⁷-path set. */
   def claimDecided(spark: SparkSession, log: DeltaLog, cpVersion: Long,
                    parts: Option[Int], target: Long,
                    candidates: Seq[org.apache.spark.sql.sources.Filter],
@@ -322,13 +319,14 @@ object DistributedSnapshot {
     val raw = rawState(spark, log, cpVersion, parts, target)
     val partCols = raw.metadata.map(_.partitionColumns).getOrElse(Nil).toSet
     if (partCols.isEmpty || candidates.isEmpty) return Nil
-    val cands = candidates.toIndexedSeq
-    val nC = cands.length
+    // Bound once here; executors only evaluate. A candidate that does not
+    // bind starts out undecided.
+    val bound = PartitionFilters.bind(candidates, partCols, schema).toArray
+    val nC = bound.length
     def undecidedOn(pv: Map[String, String], und: Array[Boolean]): Unit = {
       var i = 0
       while (i < nC) {
-        if (!und(i) &&
-            PartitionFilters.evalPv(pv, cands(i), partCols, schema).isEmpty)
+        if (!und(i) && bound(i).forall(_.eval(pv).isEmpty))
           und(i) = true
         i += 1
       }
@@ -352,9 +350,9 @@ object DistributedSnapshot {
             undecidedOn(if (pv == null) Map.empty[String, String] else pv, und))
           Iterator.single(und)
         }.collect()
-    val und = new Array[Boolean](nC)
+    val und = bound.map(_.isEmpty)
     perPartition.foreach(p => (0 until nC).foreach(i => und(i) |= p(i)))
     raw.tailFiles.foreach(f => undecidedOn(f.partitionValues, und))
-    cands.zipWithIndex.collect { case (c, i) if !und(i) => c }
+    candidates.zipWithIndex.collect { case (c, i) if !und(i) => c }
   }
 }

@@ -386,20 +386,3 @@ object FilePruner {
     a.length - b.length
   }
 }
-
-/** Hive-style partition path conventions, as Spark writes them
-  * (reference: src/delta/table.ts:946,967-982 uses the identical layout). */
-object PartitionPaths {
-  val NullMarker = "__HIVE_DEFAULT_PARTITION__"
-
-  /** Parse `k=v/k2=v2/part-....parquet` into partition values. */
-  def parse(relativePath: String): Map[String, String] = {
-    val dirs = relativePath.split('/').dropRight(1)
-    dirs.iterator.flatMap { seg =>
-      seg.split("=", 2) match {
-        case Array(k, v) => Some(k -> java.net.URLDecoder.decode(v, "UTF-8"))
-        case _ => None
-      }
-    }.toMap
-  }
-}

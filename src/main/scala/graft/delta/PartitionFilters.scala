@@ -1,7 +1,13 @@
 package graft.delta
 
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{expressions => cx}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.plans.{logical => lp}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+
+import scala.util.control.NonFatal
 
 /**
  * EXACT (tri-state) evaluation of pushed `sources.Filter`s against a
@@ -12,9 +18,14 @@ import org.apache.spark.sql.types._
  * (sound to skip files with, never to claim a filter): here every atom
  * must decide, for EVERY row of the file, whether the predicate is
  * TRUE / FALSE / NULL — possible exactly when the atom references only
- * partition columns (all rows share the value) and the path string parses
- * under the column's type. Anything else is `None` (undecidable) and the
- * filter stays a residual.
+ * partition columns (all rows share the value). Anything else is `None`
+ * (undecidable) and the filter stays a residual.
+ *
+ * The decision is Spark's own: each candidate is translated with
+ * [[graft.sources.DeltaRelation.toColumn]], resolved and bound once on the
+ * driver against the partition columns, and evaluated by Catalyst over
+ * the row [[PartitionPaths.decoder]] decodes — the same values the scan
+ * materializes, so a claimed filter agrees with the residual it replaces.
  *
  * Claiming pays twice at scale: Spark stops re-evaluating the predicate
  * per row, and — because aggregate pushdown requires an empty post-scan
@@ -46,93 +57,100 @@ object PartitionFilters {
     case _ => false
   }
 
-  /** Per-file truth value of `filter`, or None when not provable. */
+  /** One partition column the bound predicate reads: its ordinal in the
+    * bound row, its decoder, and whether the predicate reads its value or
+    * only tests it for NULL. */
+  private final case class Col(ordinal: Int, name: String,
+                               decode: String => Any, valueRead: Boolean,
+                               placeholder: Any)
+
+  /** A filter resolved and bound once, on the driver, against the
+    * partition columns. Serializable: the distributed claim ships it to
+    * executors, which only evaluate it. */
+  final class Bound private[PartitionFilters] (
+      val filter: Filter, predicate: Expression, width: Int, cols: Array[Col])
+    extends Serializable {
+
+    /** The file's verdict from its partition values. None when a
+      * referenced value is missing or JSON-null in the log, or when its
+      * ANSI cast throws. A value that does not cast is still known
+      * non-null (only the marker decodes to NULL), so a column the
+      * predicate only tests for NULL still decides. */
+    def eval(pv: Map[String, String]): Option[TV] = {
+      val row = new GenericInternalRow(width)
+      var i = 0
+      while (i < cols.length) {
+        val c = cols(i)
+        pv.get(c.name) match {
+          case None | Some(null) => return None
+          case Some(PartitionPaths.NullMarker) => ()
+          case Some(s) =>
+            val v = try c.decode(s) catch {
+              case NonFatal(_) if !c.valueRead => c.placeholder
+              case NonFatal(_) => return None
+            }
+            row.update(c.ordinal, v)
+        }
+        i += 1
+      }
+      try predicate.eval(row) match {
+        case null => Some(Unknown)
+        case b: Boolean => Some(if (b) True else False)
+      } catch { case NonFatal(_) => None }
+    }
+  }
+
+  /** Resolve and bind each filter against the partition columns of
+    * `schema`; None where it references a data column or does not
+    * translate or resolve (it stays a residual). */
+  def bind(filters: Seq[Filter], partCols: Set[String],
+           schema: StructType): Seq[Option[Bound]] = {
+    val fields = schema.fields.filter(f => partCols.contains(f.name))
+    lazy val empty = SparkSession.active.createDataFrame(
+      java.util.Collections.emptyList[Row](), StructType(fields))
+    filters.map { f =>
+      if (f.references.isEmpty || !f.references.forall(partCols.contains)) None
+      else graft.sources.DeltaRelation.toColumn(f).flatMap { c =>
+        try empty.filter(c).queryExecution.analyzed match {
+          case lp.Filter(cond, child) =>
+            Some(boundOf(f, BindReferences.bindReference(cond, child.output), fields))
+          case _ => None
+        } catch { case NonFatal(_) => None }
+      }
+    }
+  }
+
+  private def boundOf(f: Filter, predicate: Expression,
+                      fields: Array[StructField]): Bound = {
+    val read = predicate.transformDown {
+      case cx.IsNull(_: BoundReference) | cx.IsNotNull(_: BoundReference) =>
+        Literal(true)
+    }.collect { case b: BoundReference => b.ordinal }.toSet
+    val cols = predicate.collect { case b: BoundReference => b.ordinal }
+      .distinct.map { i =>
+        val dt = fields(i).dataType
+        Col(i, fields(i).name, PartitionPaths.decoder(dt), read.contains(i),
+          Literal.default(dt).value)
+      }
+    new Bound(f, predicate, fields.length, cols.toArray)
+  }
+
+  /** Per-file truth value of one filter, or None when not provable — a
+    * one-off: it binds `filter` on every call, so loops use [[bind]]. */
   def eval(f: AddFile, filter: Filter, partCols: Set[String],
            schema: StructType): Option[TV] =
-    evalPv(f.partitionValues, filter, partCols, schema)
+    bind(Seq(filter), partCols, schema).head.flatMap(_.eval(f.partitionValues))
 
-  /** [[eval]] on the bare partitionValues map — the distributed
-    * claimability check ([[DistributedSnapshot.claimDecided]]) projects
-    * ONLY this field out of the checkpoint's add JSON (codegen'd
-    * from_json), never constructing an [[AddFile]] per row. */
-  def evalPv(f: Map[String, String], filter: Filter, partCols: Set[String],
-             schema: StructType): Option[TV] = filter match {
-    case And(l, r) => (evalPv(f, l, partCols, schema), evalPv(f, r, partCols, schema)) match {
-      case (Some(False), _) | (_, Some(False)) => Some(False)
-      case (Some(True), x) => x
-      case (x, Some(True)) => x
-      case (Some(Unknown), Some(Unknown)) => Some(Unknown)
-      case _ => None
+  /** The partition-value predicate that keeps a file iff every CLAIMED
+    * filter decides True on it. Claimed filters bound when they were
+    * claimed, so one that no longer binds is a broken invariant. */
+  def selects(claimed: Seq[Filter], partCols: Set[String],
+              schema: StructType): Map[String, String] => Boolean = {
+    val bound = bind(claimed, partCols, schema).zip(claimed).map {
+      case (b, f) => b.getOrElse(throw new IllegalStateException(
+        s"claimed filter $f does not bind against the partition columns"))
     }
-    case Or(l, r) => (evalPv(f, l, partCols, schema), evalPv(f, r, partCols, schema)) match {
-      case (Some(True), _) | (_, Some(True)) => Some(True)
-      case (Some(False), x) => x
-      case (x, Some(False)) => x
-      case (Some(Unknown), Some(Unknown)) => Some(Unknown)
-      case _ => None
-    }
-    case Not(c) => evalPv(f, c, partCols, schema).map {
-      case True => False
-      case False => True
-      case Unknown => Unknown
-    }
-    case _: AlwaysTrue => Some(True)
-    case _: AlwaysFalse => Some(False)
-    case EqualTo(a, v) => partVal(f, a, partCols) match {
-      case None => None
-      case Some(None) => Some(Unknown) // null = v → NULL
-      case Some(Some(s)) =>
-        if (v == null) Some(Unknown)
-        else cmpTyped(s, v, dtOf(a, schema)).map(c => if (c == 0) True else False)
-    }
-    case EqualNullSafe(a, v) => partVal(f, a, partCols) match {
-      case None => None
-      case Some(None) => Some(if (v == null) True else False)
-      case Some(Some(s)) =>
-        if (v == null) Some(False)
-        else cmpTyped(s, v, dtOf(a, schema)).map(c => if (c == 0) True else False)
-    }
-    case GreaterThan(a, v) => ordered(f, a, v, partCols, schema)(_ > 0)
-    case GreaterThanOrEqual(a, v) => ordered(f, a, v, partCols, schema)(_ >= 0)
-    case LessThan(a, v) => ordered(f, a, v, partCols, schema)(_ < 0)
-    case LessThanOrEqual(a, v) => ordered(f, a, v, partCols, schema)(_ <= 0)
-    case In(a, vs) => partVal(f, a, partCols) match {
-      case None => None
-      case Some(None) =>
-        // null IN (...) is NULL (never TRUE); an empty list is FALSE
-        Some(if (vs.isEmpty) False else Unknown)
-      case Some(Some(s)) =>
-        val dt = dtOf(a, schema)
-        var sawNull = false
-        var undecided = false
-        var hit = false
-        vs.foreach { v =>
-          if (v == null) sawNull = true
-          else cmpTyped(s, v, dt) match {
-            case Some(0) => hit = true
-            case Some(_) => ()
-            case None => undecided = true
-          }
-        }
-        if (hit) Some(True)
-        else if (undecided) None
-        else if (sawNull) Some(Unknown)
-        else Some(False)
-    }
-    case IsNull(a) => partVal(f, a, partCols).map {
-      case None => True
-      case Some(_) => False
-    }
-    case IsNotNull(a) => partVal(f, a, partCols).map {
-      case None => False
-      case Some(_) => True
-    }
-    case StringStartsWith(a, p) => (dtOf(a, schema), partVal(f, a, partCols)) match {
-      case (StringType, Some(None)) => Some(Unknown)
-      case (StringType, Some(Some(s))) => Some(if (s.startsWith(p)) True else False)
-      case _ => None
-    }
-    case _ => None
+    pv => bound.forall(_.eval(pv).contains(True))
   }
 
   /** ONE-PASS claim over a pinned snapshot: evaluate every candidate on
@@ -143,138 +161,14 @@ object PartitionFilters {
     * tri-state evaluation runs once per query, not once per consumer. */
   def claim(files: Seq[AddFile], candidates: Seq[Filter],
             partCols: Set[String], schema: StructType): (Seq[Filter], Set[String]) = {
-    val perFilter: Seq[(Filter, IndexedSeq[Option[TV]])] = candidates.map { f =>
-      f -> files.map(af => eval(af, f, partCols, schema)).toIndexedSeq
+    val perFilter = bind(candidates, partCols, schema).flatten.map { b =>
+      b -> files.map(af => b.eval(af.partitionValues)).toIndexedSeq
     }
-    val claimable = perFilter.collect {
-      case (f, evs) if evs.forall(_.isDefined) => (f, evs)
-    }
+    val claimable = perFilter.filter(_._2.forall(_.isDefined))
     if (claimable.isEmpty) return (Nil, Set.empty)
     val keep = files.iterator.zipWithIndex.collect {
       case (af, i) if claimable.forall(_._2(i).contains(True)) => af.path
     }.toSet
-    (claimable.map(_._1), keep)
-  }
-
-  // ---- helpers ---------------------------------------------------------------
-
-  /** None = value unknowable (missing key / not a partition column);
-    * Some(None) = null partition; Some(Some(s)) = the raw path value.
-    * A JSON-null VALUE (a foreign writer's null partition, which
-    * Actions.strMap drops but from_json keeps as a null map value) is
-    * unknowable too — identical tri-state semantics on both parse paths. */
-  private def partVal(f: Map[String, String], a: String,
-                      partCols: Set[String]): Option[Option[String]] =
-    if (!partCols.contains(a)) None
-    else f.get(a) match {
-      case None | Some(null) => None
-      case Some(PartitionPaths.NullMarker) => Some(None)
-      case Some(s) => Some(Some(s))
-    }
-
-  private def dtOf(a: String, schema: StructType): DataType =
-    schema.fields.find(_.name == a).map(_.dataType).getOrElse(NullType)
-
-  private def ordered(f: Map[String, String], a: String, v: Any, partCols: Set[String],
-                      schema: StructType)(sel: Int => Boolean): Option[TV] =
-    partVal(f, a, partCols) match {
-      case None => None
-      case Some(None) => Some(Unknown)
-      case Some(Some(s)) =>
-        if (v == null) Some(Unknown)
-        else cmpTyped(s, v, dtOf(a, schema)).map(c => if (sel(c)) True else False)
-    }
-
-  private def numOf(v: Any): Option[BigDecimal] = v match {
-    case i: Int => Some(BigDecimal(i))
-    case l: Long => Some(BigDecimal(l))
-    case s: Short => Some(BigDecimal(s.toInt))
-    case b: Byte => Some(BigDecimal(b.toInt))
-    // Double/Float literals go through their shortest decimal rendering —
-    // the SAME string Spark's Cast writes into the partition path — so the
-    // decimal compare is exact. (`BigDecimal(f.toDouble)` would compare the
-    // path's BigDecimal("0.1") against 0.10000000149011612 and silently
-    // decide False for a filter every row satisfies; scala.BigDecimal(d:
-    // Double) is already Double.toString-based.) Non-finite values have no
-    // decimal form → None → the filter stays a residual.
-    case d: Double if java.lang.Double.isFinite(d) => Some(BigDecimal(d))
-    case f: Float if java.lang.Float.isFinite(f) => Some(BigDecimal(f.toString))
-    case _: Double | _: Float => None
-    case d: BigDecimal => Some(d)
-    case d: java.math.BigDecimal => Some(BigDecimal(d))
-    case _ => None
-  }
-
-  private def tsLocal(v: Any): Option[java.time.LocalDateTime] = v match {
-    case t: java.sql.Timestamp =>
-      Some(java.time.LocalDateTime.ofInstant(t.toInstant, java.time.ZoneOffset.UTC))
-    case i: java.time.Instant =>
-      Some(java.time.LocalDateTime.ofInstant(i, java.time.ZoneOffset.UTC))
-    case l: java.time.LocalDateTime => Some(l)
-    case _ => None
-  }
-
-  /** Typed compare of a partition-path string against a pushed-filter
-    * literal under the column's type; None when unparseable/mismatched. */
-  private[delta] def cmpTyped(actual: String, lit: Any, dt: DataType): Option[Int] = dt match {
-    // Float/Double parse the PATH under the column type first (then widen)
-    // instead of comparing decimal strings: a foreign writer may render a
-    // float-exact but non-shortest value ("0.100000001490116" for 0.1f),
-    // which the read side casts back to the same float — a decimal-string
-    // compare would decide False on an equality every row satisfies, and a
-    // CLAIMED False is silent row loss. Same treatment FilePruner's
-    // partition comparator takes. Non-finite parses/literals refuse (no
-    // decimal identity; the filter stays a residual). IEEE `==` handles
-    // -0.0 = 0.0 before the total-order compare.
-    case FloatType | DoubleType =>
-      val a: Option[Double] = dt match {
-        case FloatType => scala.util.Try(actual.toFloat).toOption
-          .filter(java.lang.Float.isFinite(_)).map(_.toDouble)
-        case _ => scala.util.Try(actual.toDouble).toOption
-          .filter(java.lang.Double.isFinite(_))
-      }
-      val b: Option[Double] = lit match {
-        case f: java.lang.Float if java.lang.Float.isFinite(f) => Some(f.toDouble)
-        case d: java.lang.Double if java.lang.Double.isFinite(d) => Some(d.toDouble)
-        case _ => None
-      }
-      for (x <- a; y <- b)
-        yield if (x == y) 0 else java.lang.Double.compare(x, y)
-    case _: NumericType =>
-      for (a <- scala.util.Try(BigDecimal(actual)).toOption; b <- numOf(lit))
-        yield a.compare(b)
-    case StringType => lit match {
-      case s: String => Some(FilePruner.utf8Compare(actual, s).sign)
-      case u: org.apache.spark.unsafe.types.UTF8String =>
-        Some(FilePruner.utf8Compare(actual, u.toString).sign)
-      case _ => None
-    }
-    case BooleanType => (scala.util.Try(actual.toBoolean).toOption, lit) match {
-      case (Some(a), b: java.lang.Boolean) => Some(a.compareTo(b))
-      case _ => None
-    }
-    case DateType =>
-      val litDate: Option[java.time.LocalDate] = lit match {
-        case d: java.sql.Date => Some(d.toLocalDate)
-        case d: java.time.LocalDate => Some(d)
-        case _ => None
-      }
-      for {
-        a <- scala.util.Try(java.time.LocalDate.parse(actual.take(10))).toOption
-        b <- litDate
-      } yield a.compareTo(b).sign
-    // Zoned-timestamp path values are UTC wall-clock BY CONSTRUCTION: every
-    // write renders them with Cast(..., Some("UTC")) regardless of the
-    // session time zone (the task writer's partition rendering,
-    // TaskWriter.dirOf), and the scan parses them back at UTC
-    // (GraftBatchScan.partitionValueRow). Rendering the literal's instant at
-    // UTC is therefore exact — not a session-TZ assumption.
-    case TimestampType | TimestampNTZType =>
-      for {
-        a <- FilePruner.canonTs(actual)
-        bl <- tsLocal(lit)
-        b <- Some(FilePruner.CanonFormat.format(bl))
-      } yield a.compareTo(b).sign
-    case _ => None
+    (claimable.map(_._1.filter), keep)
   }
 }

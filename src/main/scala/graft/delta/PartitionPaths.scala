@@ -1,0 +1,52 @@
+package graft.delta
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
+import org.apache.spark.sql.types.{DataType, StringType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Hive-style partition path conventions, as Spark writes them
+  * (reference: src/delta/table.ts:946,967-982 uses the identical layout). */
+object PartitionPaths {
+  val NullMarker = "__HIVE_DEFAULT_PARTITION__"
+
+  /** Parse `k=v/k2=v2/part-....parquet` into partition values. */
+  def parse(relativePath: String): Map[String, String] = {
+    val dirs = relativePath.split('/').dropRight(1)
+    dirs.iterator.flatMap { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) => Some(k -> java.net.URLDecoder.decode(v, "UTF-8"))
+        case _ => None
+      }
+    }.toMap
+  }
+
+  /** The engine's one partition-value decoder: a path string (never null,
+    * never [[NullMarker]]) → the Catalyst internal value of type `dt` that
+    * the scan materializes. The cast runs at UTC, the zone every write
+    * renders zoned timestamps in (`TaskWriter.dirOf`), and in ANSI mode,
+    * so a string the type cannot hold throws instead of reading NULL.
+    * The scan, the claim evaluator and the stats fold all decode through
+    * here. One decoder per type, memoized; it is serializable. */
+  def decoder(dt: DataType): String => Any =
+    decoders.computeIfAbsent(dt, { (t: DataType) =>
+      val cast = Cast(BoundReference(0, StringType, nullable = false), t,
+        Some("UTC"), EvalMode.ANSI)
+      (s: String) => cast.eval(InternalRow(UTF8String.fromString(s)))
+    })
+
+  private val decoders =
+    new java.util.concurrent.ConcurrentHashMap[DataType, String => Any]()
+
+  /** The scan's partition row for `fields`: a missing value or the null
+    * marker reads NULL. */
+  def rowDecoder(fields: Seq[StructField]): Map[String, String] => InternalRow = {
+    val cols = fields.map(f => (f.name, decoder(f.dataType)))
+    pv => InternalRow.fromSeq(cols.map { case (name, decode) =>
+      pv.get(name) match {
+        case Some(v) if v != null && v != NullMarker => decode(v)
+        case _ => null
+      }
+    })
+  }
+}

@@ -1,7 +1,11 @@
 package graft.delta
 
+import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
 import org.json4s._
+
+import scala.util.control.NonFatal
 
 /**
  * Metadata-only aggregate evaluation from the transaction log's per-file
@@ -31,10 +35,10 @@ import org.json4s._
  *    `partitionValues`, one per file — and since EVERY row of a file
  *    shares that value, partition-column `COUNT(col)`/`MIN`/`MAX` stay
  *    exact even under DVs (any file with a surviving row still exhibits
- *    its value; counts subtract DV cardinalities). Decoding is
- *    type-gated: integral and date partition values fold; strings fold
- *    only when all-ASCII (Java string order and Spark's UTF-8 binary
- *    order agree there); anything else refuses.
+ *    its value; counts subtract DV cardinalities). Values decode through
+ *    [[PartitionPaths.decoder]] (the scan's own decoder) and order by
+ *    Spark's ordering for the type; integral, date and string partition
+ *    columns fold, anything else refuses.
  *
  * The reference engine has no metadata-only aggregate path (every query
  * plans a scan, src/delta/table.ts:694); this is a Spark-side scale
@@ -112,15 +116,9 @@ object StatsAggregates {
       schema.fields.find(_.name == n).getOrElse(return None))
     val stats = parseAll(files).getOrElse(return None)
     val grouped = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[Option[String]], scala.collection.mutable.Buffer[(AddFile, FileStats)]]
+      .empty[Seq[Any], scala.collection.mutable.Buffer[(AddFile, FileStats)]]
     stats.foreach { case (f, st) =>
-      val key: Seq[Option[String]] = groupCols.map { c =>
-        f.partitionValues.get(c) match {
-          case None => return None // foreign writer omitted the value
-          case Some(PartitionPaths.NullMarker) => None
-          case Some(v) => Some(v)
-        }
-      }
+      val key = gFields.map(fld => partValue(f, fld).getOrElse(return None))
       grouped.getOrElseUpdate(key,
         scala.collection.mutable.Buffer.empty[(AddFile, FileStats)]) += ((f, st))
     }
@@ -131,10 +129,8 @@ object StatsAggregates {
       }
       if (survivors == 0) None
       else {
-        val keyVals: Seq[Any] = key.zip(gFields).map {
-          case (None, _) => null
-          case (Some(s), fld) => decodePartition(s, fld.dataType).getOrElse(return None)
-        }
+        val keyVals = key.zip(gFields)
+          .map { case (k, fld) => convertToScala(k, fld.dataType) }
         val aggVals = fold(fs.toSeq, partCols, schema, aggs).getOrElse(return None)
         Some(keyVals ++ aggVals)
       }
@@ -199,26 +195,20 @@ object StatsAggregates {
 
     def partExtremum(name: String, wantMax: Boolean): Option[Any] = {
       val f = schemaField(name).getOrElse(return None)
-      var best: Option[String] = None
+      var best: Any = null // null: zero non-null rows table-wide, SQL NULL
       stats.foreach { case (file, st) =>
         val surviving = dvCardinality(file) match {
           case Some(c) => st.numRecords - c
           case None => return None
         }
-        if (surviving > 0) file.partitionValues.get(name) match {
+        if (surviving > 0) partValue(file, f) match {
           case None => return None
-          case Some(PartitionPaths.NullMarker) => ()
-          case Some(v) => best = best match {
-            case None => Some(v)
-            case Some(b) =>
-              Some(betterPart(v, b, f.dataType, wantMax).getOrElse(return None))
-          }
+          case Some(null) => ()
+          case Some(v) =>
+            best = if (best == null) v else pick(v, best, f.dataType, wantMax)
         }
       }
-      best match {
-        case None => Some(null) // zero non-null rows table-wide: SQL NULL
-        case Some(s) => decodePartition(s, f.dataType)
-      }
+      Some(convertToScala(best, f.dataType))
     }
 
     def extremum(name: String, wantMax: Boolean): Option[Any] = {
@@ -377,27 +367,29 @@ object StatsAggregates {
     } catch { case Refuse => None }
   }
 
-  /** Typed pick between two partition-value strings under `dt`/`wantMax`;
-    * None refuses (unparseable, or a non-ASCII string — Java string order
-    * agrees with Spark's UTF-8 binary order only there). Shared by the
-    * driver fold and the distributed combine, so both paths decide
-    * identically. */
-  private def betterPart(a: String, b: String, dt: DataType,
-                         wantMax: Boolean): Option[String] = dt match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      for (x <- scala.util.Try(BigInt(a)).toOption;
-           y <- scala.util.Try(BigInt(b)).toOption)
-        yield if ((x > y) == wantMax) a else b
-    case DateType =>
-      for (x <- scala.util.Try(java.time.LocalDate.parse(a)).toOption;
-           y <- scala.util.Try(java.time.LocalDate.parse(b)).toOption)
-        yield if ((x.isAfter(y)) == wantMax) a else b
-    case StringType =>
-      if (a.forall(_ < 128) && b.forall(_ < 128))
-        Some(if ((a > b) == wantMax) a else b)
-      else None
-    case _ => None // other partition types: refuse
-  }
+  /** A file's decoded partition value for `f` — Some(null) for a NULL
+    * partition; None refuses: the value is missing, the type does not
+    * fold, or the decode throws. Float and double do not fold: -0.0 and
+    * 0.0 are distinct path values that Spark orders and groups as equal.
+    * Shared by the driver fold and the distributed combine, so both paths
+    * decide identically. */
+  private def partValue(file: AddFile, f: StructField): Option[Any] =
+    file.partitionValues.get(f.name) match {
+      case None | Some(null) => None // foreign writer omitted the value
+      case Some(PartitionPaths.NullMarker) => Some(null)
+      case Some(v) => f.dataType match {
+        case ByteType | ShortType | IntegerType | LongType | DateType |
+             StringType =>
+          try Some(PartitionPaths.decoder(f.dataType)(v))
+          catch { case NonFatal(_) => None }
+        case _ => None
+      }
+    }
+
+  /** The MIN (or MAX) of two decoded values under Spark's ordering. */
+  private def pick(a: Any, b: Any, dt: DataType, wantMax: Boolean): Any =
+    if ((TypeUtils.getInterpretedOrdering(dt).compare(a, b) > 0) == wantMax) a
+    else b
 
   // ---- distributed combine form (round 16) ---------------------------------
   //
@@ -415,9 +407,9 @@ object StatsAggregates {
   final case class CountP(n: Long) extends AggPartial
   /** Data-column extremum: best stat bound seen (None = no contribution). */
   final case class ExtP(best: Option[JValue]) extends AggPartial
-  /** Partition-column extremum: best raw path value among files with
+  /** Partition-column extremum: best decoded value among files with
     * surviving rows. */
-  final case class PartExtP(best: Option[String]) extends AggPartial
+  final case class PartExtP(best: Option[Any]) extends AggPartial
 
   /** Subset-level state: `anyDv` poisons data-column COUNT(col)/MIN/MAX at
     * finish time (deleted rows could hold the extremum / be the non-null
@@ -492,10 +484,9 @@ object StatsAggregates {
       case None => RefusedP
       case Some(c) =>
         if (st.numRecords - c <= 0) PartExtP(None)
-        else f.partitionValues.get(name) match {
+        else schema.fields.find(_.name == name).flatMap(partValue(f, _)) match {
           case None => RefusedP
-          case Some(PartitionPaths.NullMarker) => PartExtP(None)
-          case Some(v) => PartExtP(Some(v))
+          case Some(v) => PartExtP(Option(v))
         }
     }
     def dataExt(name: String, bound: Option[JValue]): AggPartial = bound match {
@@ -536,10 +527,7 @@ object StatsAggregates {
           case MaxCol(n, _) => (dtOf(n), true)
           case _ => return RefusedP
         }
-        betterPart(v, w, dt, wantMax) match {
-          case Some(best) => PartExtP(Some(best))
-          case None => RefusedP
-        }
+        PartExtP(Some(pick(v, w, dt, wantMax)))
       case _ => RefusedP // mixed kinds: impossible by construction
     }
     Partial(a.anyDv || b.anyDv,
@@ -564,10 +552,8 @@ object StatsAggregates {
       case (MaxCol(nm, _), ExtP(best)) =>
         if (p.anyDv) return None
         best.fold(null: Any)(j => decode(j, dtOf(nm)).getOrElse(return None))
-      case (MinCol(nm, _), PartExtP(best)) =>
-        best.fold(null: Any)(s => decodePartition(s, dtOf(nm)).getOrElse(return None))
-      case (MaxCol(nm, _), PartExtP(best)) =>
-        best.fold(null: Any)(s => decodePartition(s, dtOf(nm)).getOrElse(return None))
+      case (MinCol(nm, _), PartExtP(best)) => convertToScala(best.orNull, dtOf(nm))
+      case (MaxCol(nm, _), PartExtP(best)) => convertToScala(best.orNull, dtOf(nm))
       case _ => return None
     })
   }
@@ -594,7 +580,7 @@ object StatsAggregates {
     * as [[answerGroupedFiles]]'s early returns do. */
   final case class GroupedPartial(
       refused: Boolean,
-      groups: Map[Seq[Option[String]], GroupState]) extends Serializable
+      groups: Map[Seq[Any], GroupState]) extends Serializable
 
   def identityGrouped: GroupedPartial = GroupedPartial(refused = false, Map.empty)
 
@@ -606,12 +592,9 @@ object StatsAggregates {
     val refusedAll = GroupedPartial(refused = true, Map.empty)
     val st = f.parsedStats.getOrElse(return refusedAll)
     val dvc = dvCardinality(f).getOrElse(return refusedAll)
-    val key: Seq[Option[String]] = groupCols.map { c =>
-      f.partitionValues.get(c) match {
-        case None => return refusedAll // foreign writer omitted the value
-        case Some(PartitionPaths.NullMarker) => None
-        case Some(v) => Some(v)
-      }
+    val key = groupCols.map { c =>
+      schema.fields.find(_.name == c).flatMap(partValue(f, _))
+        .getOrElse(return refusedAll)
     }
     GroupedPartial(refused = false, Map(key -> GroupState(
       st.numRecords - dvc, contribute(f, partCols, schema, aggs))))
@@ -642,35 +625,18 @@ object StatsAggregates {
     if (groupCols.isEmpty || !groupCols.forall(partCols.contains)) return None
     val gFields = groupCols.map(n =>
       schema.fields.find(_.name == n).getOrElse(return None))
-    val ordered = p.groups.toSeq.sortBy(_._1.map(_.getOrElse(" ")).mkString(""))
-    val rows = ordered.flatMap { case (key, gs) =>
+    val rows = p.groups.toSeq.flatMap { case (key, gs) =>
       if (gs.survivors == 0) None
       else {
-        val keyVals: Seq[Any] = key.zip(gFields).map {
-          case (None, _) => null
-          case (Some(s), fld) =>
-            decodePartition(s, fld.dataType).getOrElse(return None)
-        }
+        val keyVals = key.zip(gFields)
+          .map { case (k, fld) => convertToScala(k, fld.dataType) }
         val aggVals = finish(gs.partial, partCols, schema, aggs)
           .getOrElse(return None)
         Some(keyVals ++ aggVals)
       }
     }
-    Some(rows)
-  }
-
-  /** Hive partition-value string → Spark EXTERNAL value for `dt`; None
-    * refuses (unparseable for the declared type). Must mirror the
-    * writer's [[PartitionPaths]] encoding. */
-  private[delta] def decodePartition(s: String, dt: DataType): Option[Any] = dt match {
-    case ByteType => scala.util.Try(s.toByte: Any).toOption
-    case ShortType => scala.util.Try(s.toShort: Any).toOption
-    case IntegerType => scala.util.Try(s.toInt: Any).toOption
-    case LongType => scala.util.Try(s.toLong: Any).toOption
-    case StringType => Some(s)
-    case DateType =>
-      scala.util.Try(java.sql.Date.valueOf(java.time.LocalDate.parse(s)): Any).toOption
-    case _ => None
+    Some(rows.sortBy(_.take(gFields.length)
+      .map(k => if (k == null) "\u0000" else k.toString).mkString("\u0001")))
   }
 
   /** Log-canonical stat JSON → Spark EXTERNAL value for `dt`; None refuses

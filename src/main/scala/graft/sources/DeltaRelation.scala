@@ -96,10 +96,9 @@ final class DeltaRelation(
     claimedPaths match {
       case Some(paths) => snap.activeFiles.filter(f => paths.contains(f.path))
       case None =>
-        val pc = snap.partitionColumns.toSet
-        snap.activeFiles.filter(f => claimed.forall(flt =>
-          graft.delta.PartitionFilters.eval(f, flt, pc, schema)
-            .contains(graft.delta.PartitionFilters.True)))
+        val keep = graft.delta.PartitionFilters.selects(claimed.toSeq,
+          snap.partitionColumns.toSet, schema)
+        snap.activeFiles.filter(f => keep(f.partitionValues))
     }
 
   /** The exactly-matching file subset for CLAIMED partition filters over
@@ -191,23 +190,8 @@ final class DeltaRelation(
       .map { case (bytes, _) => DeltaRelation.scaleBytes(sqlContext, bytes) }
       .getOrElse(super.sizeInBytes)
 
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] =
-    buildScanLimited(requiredColumns, filters, None)
-
-  /** [[buildScan]] with an optional pushed LIMIT: when no predicate exists
-    * (Spark only pushes a limit past an empty filter set, and ours stays
-    * conservative with the same guard), the file list is TRIMMED to the
-    * log-order prefix whose exact survivor counts (`numRecords` − DV
-    * cardinality) cover the limit — `SELECT * FROM t LIMIT 10` on a
-    * million-file table plans a scan over one file instead of building a
-    * parquet relation across all of them. Files without provable counts
-    * are kept and count as zero, so the prefix never under-covers; Spark's
-    * own Limit still executes on top (isPartiallyPushed). */
-  private[sources] def buildScanLimited(requiredColumns: Array[String],
-                                        filters: Array[Filter],
-                                        limit: Option[Int],
-                                        topN: Option[DeltaRelation.TopN] = None): RDD[Row] = {
-    val snap = plannedSnapshot(filters, limit, topN)
+  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
+    val snap = plannedSnapshot(filters, None, None)
     var df = table.toDF(snap)
     filters.flatMap(DeltaRelation.toColumn).foreach(c => df = df.filter(c))
     // an empty projection (COUNT(*)) still needs the row stream
@@ -345,6 +329,8 @@ object DeltaRelation {
     case Or(l, r) =>
       for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
     case Not(c) => toColumn(c).map(not)
+    case _: AlwaysTrue => Some(lit(true))
+    case _: AlwaysFalse => Some(lit(false))
     case _ => None
   }
 

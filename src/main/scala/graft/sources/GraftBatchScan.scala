@@ -3,15 +3,13 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.graftshim.ScanShim
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import java.util.OptionalLong
 
@@ -233,7 +231,8 @@ private[graft] object GraftBatchScan {
                 files: Seq[AddFile], partFields: Seq[StructField])
       : (Array[InputPartition], Boolean) = {
     val (dvFiles, cleanFiles) = files.partition(_.deletionVector.isDefined)
-    def partRow(f: AddFile): InternalRow = partitionValueRow(f, partFields)
+    val partRows = graft.delta.PartitionPaths.rowDecoder(partFields)
+    def partRow(f: AddFile): InternalRow = partRows(f.partitionValues)
     val tableRoot = table.tablePath
     val splitBytes = ScanShim.maxSplitBytes(spark, cleanFiles.map(_.size))
     val slices = cleanFiles.flatMap { f =>
@@ -313,18 +312,6 @@ private[graft] object GraftBatchScan {
 
   /** Test/inspection hook: the last runtime-filter set a scan received. */
   val lastRuntime = new java.util.concurrent.atomic.AtomicReference[String]("")
-
-  /** Hive-layout partition value string → typed internal value row
-    * (UTC — the engine's canonical zone — for date/timestamp casts). */
-  def partitionValueRow(f: AddFile, fields: Seq[StructField]): InternalRow =
-    InternalRow.fromSeq(fields.map { sf =>
-      f.partitionValues.get(sf.name) match {
-        case Some(v) if v != null && v != graft.delta.PartitionPaths.NullMarker =>
-          Cast(Literal(UTF8String.fromString(v), StringType), sf.dataType,
-            Some("UTC")).eval(null)
-        case _ => null
-      }
-    })
 
   /** Rewrite a pushed filter's field names for column-mapped reads; None
     * drops the filter from parquet pushdown (Spark still re-evaluates it

@@ -288,9 +288,13 @@ object DeltaStreamSource {
   }
 
   /** Stream schema: table columns, plus Delta's three CDF columns in
-    * change-feed mode. */
+    * change-feed mode. Read from the log's metadata alone, as the batches'
+    * parquet scans report it: every field nullable, metadata (column
+    * defaults included) kept. */
   def schemaFor(table: DeltaTable, readChangeFeed: Boolean): StructType = {
-    val base = table.toDF(table.snapshot()).schema
+    val meta = table.metaSnapshot()
+    graft.delta.ProtocolSupport.assertReadable(meta.protocol, table.path)
+    val base = org.apache.spark.sql.graft.Shims.asNullable(meta.schema)
     if (!readChangeFeed) base
     else StructType(base.fields ++ Seq(
       StructField(Cdc.ChangeType, StringType),

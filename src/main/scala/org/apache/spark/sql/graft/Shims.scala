@@ -22,6 +22,11 @@ object Shims {
   def expression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
 
+  /** `schema` with every field, at every nesting level, nullable —
+    * metadata kept (`asNullable` is `private[spark]`). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 

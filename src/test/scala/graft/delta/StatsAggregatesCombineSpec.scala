@@ -22,7 +22,7 @@ class StatsAggregatesCombineSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
     StructField("pk", LongType),      // partition: integral
-    StructField("ps", StringType),    // partition: string (ASCII-only rule)
+    StructField("ps", StringType),    // partition: string
     StructField("v", LongType),       // data
     StructField("s", StringType),     // data
     StructField("f", DoubleType)))    // data: extremum statically refused

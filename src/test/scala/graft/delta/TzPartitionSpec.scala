@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
  * The engine's partition-path time-zone contract (round 15): zoned
  * TIMESTAMP partition directories are laid out in UTC wall-clock
  * REGARDLESS of `spark.sql.session.timeZone` — so the UTC read side
- * (GraftBatchScan.partitionValueRow), the pruner, and the claimer all
+ * (PartitionPaths.decoder), the pruner, and the claimer all
  * parse back the exact instants that were written. Before the fix,
  * Spark's partitionBy rendered the path in the session zone and a
  * non-UTC writer produced values the reader shifted by the zone offset

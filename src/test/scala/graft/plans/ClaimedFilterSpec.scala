@@ -251,4 +251,85 @@ class ClaimedFilterSpec extends SparkTestBase {
       assert(h3 == 0, "residual-filtered aggregate must not be metadata-answered")
     } finally spark.conf.unset("spark.graft.distributedSnapshotThreshold")
   }
+
+  test("foreign partition renderings: claims match plain Spark, string MIN/MAX from metadata") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val t = freshTable()
+    spark.sql(s"CREATE TABLE $t (id BIGINT, f FLOAT, s STRING) PARTITIONED BY (f, s)")
+    spark.sql(s"""INSERT INTO $t VALUES (1, CAST(0.1 AS FLOAT), 'a'),
+      (2, CAST(2.5 AS FLOAT), 'b'), (3, NULL, 'a'), (4, CAST(0.3 AS FLOAT), NULL)""")
+    // Files as another writer records them: a float-exact but non-shortest
+    // rendering of 0.1f, NaN, and non-ASCII strings. "\uFF76" sorts above
+    // "\uD834\uDD1E" in Java's UTF-16 order but below it in Spark's UTF-8
+    // byte order. Delta paths need not be Hive directories; the log's
+    // partitionValues are what the engine reads.
+    val foreign = Seq(
+      (10L, "0.100000001490116", "\u00fcber"),
+      (11L, "NaN", "\uFF76"),
+      (12L, "2.5", "\uD834\uDD1E"))
+    val delta = graft.delta.DeltaTable.forPath(spark, tableDir(t).toString)
+    val adds = foreign.map { case (id, f, str) =>
+      val tmp = Files.createTempDirectory("graft-foreign").toString
+      Seq(id).toDF("id").coalesce(1).write.mode("overwrite").parquet(tmp)
+      val src = Files.list(Paths.get(tmp)).iterator().asScala
+        .find(_.toString.endsWith(".parquet")).get
+      val name = s"foreign-$id.parquet"
+      Files.copy(src, tableDir(t).resolve(name))
+      graft.delta.AddFile(name, Map("f" -> f, "s" -> str), Files.size(src), 0L,
+        stats = Some(graft.delta.FileStats(1L, Map("id" -> org.json4s.JInt(id)),
+          Map("id" -> org.json4s.JInt(id)), Map("id" -> 0L)).toJsonString))
+    }
+    delta.log.writeCommit(delta.version + 1, adds)
+
+    val truthRows = Seq[(Long, Any, String)](
+      (1L, 0.1f, "a"), (2L, 2.5f, "b"), (3L, null, "a"), (4L, 0.3f, null),
+      (10L, 0.1f, "\u00fcber"), (11L, Float.NaN, "\uFF76"), (12L, 2.5f, "\uD834\uDD1E"))
+      .map { case (id, f, str) => Row(id, f, str) }
+    // not cached: the in-memory relation's batch pruning drops NaN rows
+    // for `f = NaN`, which Spark's row evaluation keeps
+    val truth = spark.createDataFrame(spark.sparkContext.parallelize(truthRows, 1),
+      StructType(Seq(StructField("id", LongType), StructField("f", FloatType),
+        StructField("s", StringType))))
+    def check(cond: String): Unit = {
+      val df = spark.sql(s"SELECT id FROM $t WHERE $cond")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("ClaimedFilters"), s"cond=$cond not claimed: $plan")
+      val got = df.as[Long].collect().sorted.toSeq
+      val want = truth.where(cond).select("id").as[Long].collect().sorted.toSeq
+      assert(got == want, s"cond=$cond got=$got want=$want")
+    }
+    def checkAll(): Unit = {
+      check("f = CAST(0.1 AS FLOAT)")
+      check("f = CAST('NaN' AS FLOAT)")
+      check("f > CAST(0.2 AS FLOAT)")
+      check("f IN (CAST(0.1 AS FLOAT), CAST(2.5 AS FLOAT))")
+      check("f IS NULL")
+      check("s = '\u00fcber'")
+      check("s > '\uFF00'")
+      check("s LIKE '\u00fc%'")
+      check("s IS NOT NULL AND f < CAST(1 AS FLOAT)")
+    }
+    checkAll()
+
+    // partition MIN/MAX: the string column answers from metadata and
+    // equals the forced scan; float extremums keep refusing
+    val forced = spark.sql(
+      s"SELECT MIN(s), MAX(s), MIN(f), MAX(f) FROM $t WHERE id > -1000").head()
+    val (strs, h1) = answered { spark.sql(s"SELECT MIN(s), MAX(s) FROM $t").head() }
+    assert(h1 == 1, "string partition MIN/MAX was not metadata-answered")
+    assert(strs.getString(0) == forced.getString(0) &&
+      strs.getString(1) == forced.getString(1), s"metadata $strs vs scan $forced")
+    assert(strs.getString(1) == "\uD834\uDD1E")
+    val (flts, h2) = answered { spark.sql(s"SELECT MIN(f), MAX(f) FROM $t").head() }
+    assert(h2 == 0, "float partition MIN/MAX must not be metadata-answered")
+    assert(flts == Row(forced.get(2), forced.get(3)))
+
+    // the same claims through the distributed path
+    spark.conf.set("spark.graft.distributedSnapshotThreshold", "1")
+    try {
+      delta.checkpoint()
+      checkAll()
+    } finally spark.conf.unset("spark.graft.distributedSnapshotThreshold")
+  }
 }

@@ -295,4 +295,30 @@ class DeltaSourceSpec extends SparkTestBase {
     assert(streamed.orderBy("grp").collect().toSeq ==
       batch.orderBy("grp").collect().toSeq)
   }
+
+  test("stream schema from metadata equals the old full-snapshot read schema") {
+    def oldSchema(t: DeltaTable) = t.toDF(t.snapshot()).schema
+    // column-mapped: a renamed column reads through its physical name
+    val mapped = DeltaTable.forPath(spark,
+      Files.createTempDirectory("graft-src-cm").toString)
+    mapped.write(Seq((1, "a", "x"), (2, "b", "y")).toDF("id", "s", "p"),
+      partitionBy = Seq("p"))
+    mapped.renameColumn("s", "label")
+    assert(mapped.metaSnapshot().schema("id").nullable == false)
+    assert(DeltaStreamSource.schemaFor(mapped, readChangeFeed = false) ==
+      oldSchema(mapped))
+    // column defaults: the catalog-facing schema keeps the default keys
+    val cat = graft.plans.GraftSql.ensure(spark)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.srcschema")
+    spark.sql(s"CREATE TABLE $cat.srcschema.d (id BIGINT NOT NULL, " +
+      "v INT DEFAULT 7, p STRING) PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $cat.srcschema.d (id, p) VALUES (1, 'x'), (2, 'y')")
+    val dflt = DeltaTable.forPath(spark,
+      graft.plans.GraftSql.warehousePath(spark).get + "/srcschema/d")
+    val got = DeltaStreamSource.schemaFor(dflt, readChangeFeed = false)
+    assert(got("v").metadata.contains("CURRENT_DEFAULT"))
+    assert(got == oldSchema(dflt))
+    assert(DeltaStreamSource.schemaFor(dflt, readChangeFeed = true).fields
+      .take(got.length).toSeq == got.fields.toSeq)
+  }
 }

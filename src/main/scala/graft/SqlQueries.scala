@@ -170,9 +170,8 @@ object SqlQueries {
     * canonical daily-table query shape at 100 TB: a table partitioned by
     * `event_date DATE` scanned with `event_date >= DATE'…'`. The scan
     * prunes out-of-range partitions at PLAN time from the log's partition
-    * values (FilePruner's typed partition-range comparison, added this
-    * round — equality-only before), so a year's backfill reads only the
-    * requested days' files. The oracle re-derives the aggregate from the
+    * values (file skipping decides partition ranges exactly), so a year's
+    * backfill reads only the requested days' files. The oracle re-derives the aggregate from the
     * raw events. */
   def sqlDatePartitionRange(s: SparkSession, dir: String): DataFrame = {
     val t = fresh(s, "dpr")

@@ -29,8 +29,8 @@ import org.json4s._
  * Write: one distributed job per transactional write (map-side bloom
  * build combined per file, sidecars written from executors) — scales with
  * executor count like the footer-stats job. Read: consulted AFTER
- * partition + zone-map pruning, only for `$eq`/`$in` conjuncts on indexed
- * columns; at most `DriverFileLimit` sidecars are read on the driver
+ * partition + zone-map pruning, only for `=`/`<=>`/`IN` conjuncts on
+ * indexed columns; at most `DriverFileLimit` sidecars are read on the driver
  * (LRU-cached, immutable so no invalidation), larger candidate sets fan
  * out as one Spark job.
  *
@@ -193,48 +193,23 @@ object BloomIndex {
     * (an `$in` list; `$eq` is the 1-element case). AND across probes. */
   private final case class Probe(phys: String, longs: Seq[Long], strings: Seq[String])
 
-  /** `$eq` / `$in` conjuncts over indexed columns → probes. Mirrors
-    * [[FilePruner.compile]]'s conjunct walk; anything else contributes no
-    * probe (conservative). */
-  private def probes(filter: JValue, cols: Seq[(String, String, DataType)]): Seq[Probe] = {
+  /** Probes from the predicate's `=`, `<=>`, `IN` and `InSet` conjuncts
+    * over indexed columns ([[DataSkipping.Predicate.points]]); anything
+    * else contributes no probe (conservative). */
+  private def probes(predicate: DataSkipping.Predicate,
+                     cols: Seq[(String, String, DataType)]): Seq[Probe] = {
     val byLogical = cols.map(c => c._1 -> c).toMap
-    def lits(dt: DataType, vs: Seq[JValue]): Option[(Seq[Long], Seq[String])] = {
-      val longs = Seq.newBuilder[Long]
-      val strings = Seq.newBuilder[String]
-      vs.foreach { v =>
-        (dt, v) match {
-          case (_, JNull) => return None // null probes: blooms hold no nulls
-          case (ByteType | ShortType | IntegerType | LongType, JInt(n)) => longs += n.toLong
-          case (ByteType | ShortType | IntegerType | LongType, JLong(n)) => longs += n
-          case (StringType, JString(s)) => strings += s
-          case _ => return None // type mismatch: no bloom claim
-        }
-      }
-      Some((longs.result(), strings.result()))
-    }
-    filter match {
-      case JObject(entries) =>
-        val conj: Seq[(String, JValue)] = entries.flatMap {
-          case ("$and", JArray(subs)) => subs.collect { case JObject(fs) => fs }.flatten
-          case other => Seq(other)
-        }
-        conj.flatMap { case (field, cond) =>
-          byLogical.get(field).toSeq.flatMap { case (_, phys, dt) =>
-            cond match {
-              case JObject(ops) if ops.nonEmpty && ops.forall(_._1.startsWith("$")) =>
-                ops.flatMap {
-                  case ("$eq", v) => lits(dt, Seq(v)).map { case (l, s) => Probe(phys, l, s) }
-                  case ("$in", JArray(items)) if items.nonEmpty =>
-                    lits(dt, items).map { case (l, s) => Probe(phys, l, s) }
-                  case _ => None
-                }
-              case JNull => Nil
-              case literal => lits(dt, Seq(literal)).map { case (l, s) => Probe(phys, l, s) }.toSeq
-            }
+    predicate.points
+      .flatMap { case (name, vs) =>
+        byLogical.get(name).flatMap { case (_, phys, dt) =>
+          dt match {
+            case ByteType | ShortType | IntegerType | LongType =>
+              Some(Probe(phys, vs.map(v => v.asInstanceOf[Number].longValue()), Nil))
+            case StringType => Some(Probe(phys, Nil, vs.map(_.toString)))
+            case _ => None
           }
         }
-      case _ => Nil
-    }
+      }
   }
 
   /** Load a sidecar's blooms; None = absent/unreadable (keep file). */
@@ -297,12 +272,12 @@ object BloomIndex {
   /** Bloom pass over already zone-map-pruned `files`. Conservative: no
     * config, no probe-able conjunct, or no sidecar → unchanged. */
   def prune(spark: SparkSession, tablePath: Path, hadoopConf: Configuration,
-            snap: Snapshot, filter: JValue): Seq[AddFile] = {
+            snap: Snapshot, predicate: DataSkipping.Predicate): Seq[AddFile] = {
     val files = snap.activeFiles
     if (files.isEmpty) return files
     val cols = resolve(snap.configuration, snap.schema, snap.partitionColumns)
     if (cols.isEmpty) return files
-    val ps = probes(filter, cols)
+    val ps = probes(predicate, cols)
     if (ps.isEmpty) return files
     val kept =
       if (files.size <= DriverFileLimit) {

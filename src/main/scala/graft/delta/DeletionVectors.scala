@@ -158,6 +158,14 @@ object DeletionVectors {
       "cardinality" -> JInt(BigInt(cardinality(m)))))
   }
 
+  /** The deleted-row count a descriptor records; None when the field is
+    * absent or unreadable (each caller decides what unknown means). */
+  def descriptorCardinality(dv: JObject): Option[Long] =
+    dv.obj.collectFirst {
+      case ("cardinality", JInt(n)) => n.toLong
+      case ("cardinality", JLong(n)) => n
+    }
+
   // ---- descriptor parsing + application ------------------------------------
 
   /** Load the bitmap for an add-action's `deletionVector` descriptor:

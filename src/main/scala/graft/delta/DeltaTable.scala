@@ -257,37 +257,46 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
   /** Which path the last `query(...)` snapshot took (plan-audit hook). */
   private[delta] var lastQueryDistributed: Boolean = false
 
+  /** The size routing every read-state entry point shares: the
+    * `_last_checkpoint` pointer's checkpoint as (cpVersion, parts) when it
+    * is at or below `target`, lists at least `distributedSnapshotThreshold`
+    * actions, and is complete on disk. None takes the driver path, whose
+    * own fallback walks back to the newest complete checkpoint or a full
+    * replay — so a dangling or torn pointer (crash or cleanup race)
+    * degrades instead of reading a missing file. */
+  private def distributedCheckpoint(target: Long): Option[(Long, Option[Int])] =
+    log.readLastCheckpoint()
+      .filter { case (v, size, _) => v <= target && size >= distributedSnapshotThreshold }
+      .flatMap { case (v, _, _) => Checkpoints.completeParts(log, v).map(v -> _) }
+
   /** Pruned scan state at `versionOpt` via the size-appropriate path: a
-    * SCAN-ONLY snapshot whose `activeFiles` already passed `filter` (and
-    * whose tombstones are empty on the distributed path). */
+    * SCAN-ONLY snapshot whose `activeFiles` may hold a row satisfying the
+    * predicate `predicateOf` builds from the schema at that version
+    * ([[DataSkipping]]; tombstones are empty on the distributed path). */
   private[graft] def scanState(versionOpt: Option[Long],
-                               filter: org.json4s.JValue): Snapshot = {
+                               predicateOf: StructType => Column): Snapshot = {
     val target = versionOpt.getOrElse(log.latestVersion())
-    // The distributed fast-path trusts the pointer only when the pointed-at
-    // checkpoint is complete on disk (crash/cleanup races can tear it);
-    // otherwise degrade to the driver path, whose own fallback walks back
-    // to the newest complete checkpoint or a full replay.
-    log.readLastCheckpoint().filter(_._1 <= target)
-      .flatMap { case (v, size, _) =>
-        Checkpoints.completeParts(log, v).map(parts => (v, size, parts))
-      } match {
-      case Some((cv, size, parts)) if size >= distributedSnapshotThreshold =>
+    val (s, p) = distributedCheckpoint(target) match {
+      case Some((cv, parts)) =>
         // Large table: never materialize the full add set on the driver.
         lastQueryDistributed = true
-        DistributedSnapshot.prunedState(spark, log, cv, parts, target, filter)
-      case _ =>
+        DistributedSnapshot.prunedState(spark, log, cv, parts, target, predicateOf)
+      case None =>
         lastQueryDistributed = false
         val snap = snapshot(Some(target))
-        snap.copy(activeFiles = FilePruner.prune(snap, filter))
+        val p = DataSkipping.bind(predicateOf(snap.schema), snap.schema,
+          snap.partitionColumns)
+        (if (p.prunes) snap.copy(activeFiles = snap.activeFiles.filter(p)) else snap, p)
     }
-  } match {
     // bloom sidecar pass AFTER partition/zone-map pruning (either path):
     // point predicates on indexed high-cardinality keys skip the files
     // min/max cannot (see BloomIndex) — conservative no-op otherwise
-    case s if s.activeFiles.nonEmpty =>
-      s.copy(activeFiles = BloomIndex.prune(spark, tablePath, log.hadoopConf, s, filter))
-    case s => s
+    if (s.activeFiles.isEmpty) s
+    else s.copy(activeFiles = BloomIndex.prune(spark, tablePath, log.hadoopConf, s, p))
   }
+
+  private[graft] def scanState(versionOpt: Option[Long], predicate: Column): Snapshot =
+    scanState(versionOpt, (_: StructType) => predicate)
 
   /** Planner dimensions — (onDiskBytes, exactRows) of the state at
     * `versionOpt` after pruning `filter` ([[StatsAggregates.dimensions]]).
@@ -297,12 +306,10 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * O(1)-driver contract large tables get — the caller keeps Spark's
     * assume-huge default, which is also the right planning answer. */
   private[graft] def tableDimensions(versionOpt: Option[Long],
-                                     filter: org.json4s.JValue): Option[(Long, Option[Long])] = {
+                                     predicate: Column): Option[(Long, Option[Long])] = {
     val target = versionOpt.getOrElse(log.latestVersion())
-    val big = log.readLastCheckpoint().filter(_._1 <= target)
-      .exists(_._2 >= distributedSnapshotThreshold)
-    if (big) None
-    else Some(StatsAggregates.dimensions(scanState(Some(target), filter)))
+    if (distributedCheckpoint(target).isDefined) None
+    else Some(StatsAggregates.dimensions(scanState(Some(target), predicate)))
   }
 
   /** Driver-materialized scan state pinned at an EXPLICIT version, for
@@ -312,10 +319,8 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * (claiming needs per-file evaluation on the driver). */
   private[graft] def pinnedScanState(versionOpt: Option[Long]): Option[(Long, Snapshot)] = {
     val target = versionOpt.getOrElse(log.latestVersion())
-    val big = log.readLastCheckpoint().filter(_._1 <= target)
-      .exists(_._2 >= distributedSnapshotThreshold)
-    if (big) None
-    else Some((target, scanState(Some(target), org.json4s.JNothing)))
+    if (distributedCheckpoint(target).isDefined) None
+    else Some((target, scanState(Some(target), lit(true))))
   }
 
   /** Distributed twin of the claim evaluation for tables ABOVE the
@@ -329,15 +334,10 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       candidates: Seq[org.apache.spark.sql.sources.Filter],
       schema: StructType): Option[(Long, Seq[org.apache.spark.sql.sources.Filter])] = {
     val target = versionOpt.getOrElse(log.latestVersion())
-    log.readLastCheckpoint().filter(_._1 <= target)
-      .flatMap { case (v, size, _) =>
-        Checkpoints.completeParts(log, v).map(parts => (v, size, parts))
-      }
-      .filter { case (_, size, _) => size >= distributedSnapshotThreshold }
-      .map { case (cv, _, parts) =>
-        (target, DistributedSnapshot.claimDecided(spark, log, cv, parts,
-          target, candidates, schema))
-      }
+    distributedCheckpoint(target).map { case (cv, parts) =>
+      (target, DistributedSnapshot.claimDecided(spark, log, cv, parts,
+        target, candidates, schema))
+    }
   }
 
   /** Never-materializing metadata-aggregate fold for tables ABOVE the
@@ -348,15 +348,10 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       claimed: Seq[org.apache.spark.sql.sources.Filter], schema: StructType,
       aggs: Seq[StatsAggregates.StatAgg]): Option[Option[Seq[Any]]] = {
     val target = versionOpt.getOrElse(log.latestVersion())
-    log.readLastCheckpoint().filter(_._1 <= target)
-      .flatMap { case (v, size, _) =>
-        Checkpoints.completeParts(log, v).map(parts => (v, size, parts))
-      }
-      .filter { case (_, size, _) => size >= distributedSnapshotThreshold }
-      .map { case (cv, _, parts) =>
-        DistributedSnapshot.foldAggregates(spark, log, cv, parts, target,
-          claimed, schema, aggs)
-      }
+    distributedCheckpoint(target).map { case (cv, parts) =>
+      DistributedSnapshot.foldAggregates(spark, log, cv, parts, target,
+        claimed, schema, aggs)
+    }
   }
 
   /** Grouped twin of [[distributedAggregates]]. */
@@ -365,15 +360,10 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       groupCols: Seq[String],
       aggs: Seq[StatsAggregates.StatAgg]): Option[Option[Seq[Seq[Any]]]] = {
     val target = versionOpt.getOrElse(log.latestVersion())
-    log.readLastCheckpoint().filter(_._1 <= target)
-      .flatMap { case (v, size, _) =>
-        Checkpoints.completeParts(log, v).map(parts => (v, size, parts))
-      }
-      .filter { case (_, size, _) => size >= distributedSnapshotThreshold }
-      .map { case (cv, _, parts) =>
-        DistributedSnapshot.foldGroupedAggregates(spark, log, cv, parts,
-          target, claimed, schema, groupCols, aggs)
-      }
+    distributedCheckpoint(target).map { case (cv, parts) =>
+      DistributedSnapshot.foldGroupedAggregates(spark, log, cv, parts,
+        target, claimed, schema, groupCols, aggs)
+    }
   }
 
   /** Metadata/protocol/txn-only snapshot (empty file list): cheap at any
@@ -381,13 +371,10 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * this instead of a full [[snapshot]]. */
   private[graft] def metaSnapshot(versionOpt: Option[Long] = None): Snapshot = {
     val target = versionOpt.getOrElse(log.latestVersion())
-    log.readLastCheckpoint().filter(_._1 <= target)
-      .flatMap { case (v, size, _) =>
-        Checkpoints.completeParts(log, v).map(parts => (v, size, parts))
-      } match {
-      case Some((cv, size, parts)) if size >= distributedSnapshotThreshold =>
+    distributedCheckpoint(target) match {
+      case Some((cv, parts)) =>
         DistributedSnapshot.metaState(spark, log, cv, parts, target)
-      case _ =>
+      case None =>
         val snap = snapshot(Some(target))
         snap.copy(activeFiles = Nil, tombstones = Nil)
     }
@@ -395,26 +382,25 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
 
   def query(filterJson: String = "{}",
             projectionJson: Option[String] = None,
-            version: Option[Long] = None): DataFrame = {
-    val filter = JsonMethods.parse(filterJson)
-    MongoFilter.validate(filter)
-    val snap = scanState(version, filter)
-    val df0 = toDF(snap) // activeFiles already pruned
-    val df1 = df0.filter(MongoFilter.translate(filter, df0.schema))
-    projectionJson.fold(df1)(p => Projection(df1, p))
-  }
+            version: Option[Long] = None): DataFrame =
+    queryOver(filterJson, projectionJson, scanState(version, _))
 
   /** Query against a pre-fetched snapshot — consistent reads across several
     * queries while concurrent writers advance the table (the reference's
     * `QueryOptions.snapshot`, src/delta/types.ts:184-188). */
   def query(filterJson: String, projectionJson: Option[String],
-            snap: Snapshot): DataFrame = {
+            snap: Snapshot): DataFrame =
+    queryOver(filterJson, projectionJson,
+      of => snap.copy(activeFiles = DataSkipping.prune(snap, of(snap.schema))))
+
+  /** The Mongo filter's Column skips files (`state`) and filters rows. */
+  private def queryOver(filterJson: String, projectionJson: Option[String],
+                        state: (StructType => Column) => Snapshot): DataFrame = {
     val filter = JsonMethods.parse(filterJson)
     MongoFilter.validate(filter)
-    val pruned = FilePruner.prune(snap, filter)
-    val df0 = toDF(snap.copy(activeFiles = pruned))
-    val df1 = df0.filter(MongoFilter.translate(filter, df0.schema))
-    projectionJson.fold(df1)(p => Projection(df1, p))
+    val snap = state(MongoFilter.translate(filter, _))
+    val df = toDF(snap).filter(MongoFilter.translate(filter, snap.schema))
+    projectionJson.fold(df)(p => Projection(df, p))
   }
 
   // ---- write path ----------------------------------------------------------
@@ -680,8 +666,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
    * omitted columns read back NULL and evaluate as NULL in the guard).
    */
   def replaceWhere(data: DataFrame, condition: Column): DmlResult = {
-    val pruneFilter = graft.sources.ExprFilters.pruneJson(condition)
-    val snap = scanState(None, pruneFilter)
+    val snap = scanState(None, condition)
     ProtocolSupport.assertWritable(snap, path)
     DeltaTable.assertNotAppendOnly(snap, "WRITE-REPLACE-WHERE")
     if (snap.metadata.isEmpty) throw new ValidationException(
@@ -733,7 +718,6 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       // allocator, or the task-side lattice)
       idAlloc: Seq[IdentityColumns.Spec] = Nil): DmlResult = {
     val pred = coalesce(condition, lit(false))
-    val pruneFilter = graft.sources.ExprFilters.pruneJson(condition)
     val candidates = snap.activeFiles
     val (matchedFiles, nMatched) = matchingFilesBy(snap, candidates, pred)
     val keepAdds =
@@ -742,7 +726,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
         matchedFilesDF(snap, candidates, matchedFiles).filter(!pred).drop("__file"),
         snap.partitionColumns, snap.schema)
     val regionKeep =
-      FilePruner.compile(pruneFilter, snap.partitionColumns.toSet, snap.schema)
+      DataSkipping.bind(condition, snap.schema, snap.partitionColumns)
     val v = commitRewrite(snap, matchedFiles.toSet, keepAdds ++ newAdds,
       "WRITE-REPLACE-WHERE",
       tailAddConflict = Some(a => a.dataChange && regionKeep(a)),
@@ -849,7 +833,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
                                  configuration: Map[String, String]): Seq[AddFile] = {
     if (raw.isEmpty) return Nil
     // Stats collect against footer (= physical) names, then re-key to
-    // logical so FilePruner and readers keep one name space.
+    // logical so file skipping and readers keep one name space.
     val withStats = physicalSchema(schema) match {
       case Some(ps) => remapStatKeys(attachStats(raw, partCols, ps),
         ps.fieldNames.zip(schema.fieldNames).toMap)
@@ -1221,17 +1205,16 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     case d: Double => Some(JDouble(d))
     case f: Float => Some(JDouble(f.toDouble))
     case b: Boolean => Some(JBool(b))
-    // Timestamps serialize as fixed-precision UTC ISO-8601 (FilePruner's
+    // Timestamps serialize as fixed-precision UTC ISO-8601 (FooterStats'
     // canonical form): Timestamp.toLocalDateTime would use the JVM-default
-    // zone and LocalDateTime.toString drops trailing ':00' seconds — both
-    // break the pruner's ordered compare against filter literals.
+    // zone, and LocalDateTime.toString drops trailing ':00' seconds.
     case t: java.sql.Timestamp =>
-      Some(JString(FilePruner.CanonFormat.format(
+      Some(JString(FooterStats.CanonFormat.format(
         java.time.LocalDateTime.ofInstant(t.toInstant, java.time.ZoneOffset.UTC))))
     case ldt: java.time.LocalDateTime =>
-      Some(JString(FilePruner.CanonFormat.format(ldt)))
+      Some(JString(FooterStats.CanonFormat.format(ldt)))
     case inst: java.time.Instant =>
-      Some(JString(FilePruner.CanonFormat.format(
+      Some(JString(FooterStats.CanonFormat.format(
         java.time.LocalDateTime.ofInstant(inst, java.time.ZoneOffset.UTC))))
     case d: java.sql.Date => Some(JString(d.toString))
     case ld: java.time.LocalDate => Some(JString(ld.toString))
@@ -1251,29 +1234,30 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
    */
   def delete(filterJson: String): DmlResult = {
     val filter = JsonMethods.parse(filterJson)
-    deleteCore(filter, schema => MongoFilter.translate(filter, schema))
+    deleteCore(MongoFilter.translate(filter, _))
   }
 
   /** Copy-on-write delete under an arbitrary Spark predicate — the SQL
     * `DELETE FROM t WHERE cond` entry ([[graft.plans.GraftDmlStrategy]]).
-    * Same machinery as [[delete(filterJson:String)*]]; file pruning uses
-    * the conservative Mongo translation of `condition`'s translatable
-    * conjuncts ([[graft.sources.ExprFilters.pruneJson]] — untranslatable
-    * parts prune nothing and stay exact). SQL three-valued semantics:
+    * Same machinery as [[delete(filterJson:String)*]]; `condition` itself
+    * skips files ([[DataSkipping]]). SQL three-valued semantics:
     * NULL-valued conditions keep the row. */
-  def delete(condition: org.apache.spark.sql.Column): DmlResult = {
-    val pred = coalesce(condition, lit(false)) // null ⇒ not matched (SQL)
-    deleteCore(graft.sources.ExprFilters.pruneJson(condition), _ => pred)
+  def delete(condition: org.apache.spark.sql.Column): DmlResult =
+    deleteCore(_ => condition)
+
+  /** Pruned read state for a DML condition built against the table's
+    * schema, and the condition's row predicate (a NULL condition does not
+    * match). Above the distributed threshold only candidate files ever
+    * reach the driver. */
+  private def dmlState(conditionOf: StructType => Column): (Snapshot, Column) = {
+    val snap = scanState(None, conditionOf)
+    (snap, coalesce(conditionOf(snap.schema), lit(false)))
   }
 
-  private def deleteCore(pruneFilter: JValue,
-                         predOf: StructType => Column): DmlResult = {
-    // Pruned read state via the size-appropriate path: above the
-    // distributed threshold only candidate files ever reach the driver.
-    val snap = scanState(None, pruneFilter)
+  private def deleteCore(conditionOf: StructType => Column): DmlResult = {
+    val (snap, pred) = dmlState(conditionOf)
     ProtocolSupport.assertWritable(snap, path)
     val candidates = snap.activeFiles
-    val pred = predOf(snap.schema)
     val (matchedFiles, nMatched) = matchingFilesBy(snap, candidates, pred)
     if (nMatched == 0)
       throw new NoMatchedRowsException("delete")
@@ -1308,23 +1292,19 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
    */
   def deleteWithDV(filterJson: String): DmlResult = {
     val filter = JsonMethods.parse(filterJson)
-    deleteWithDVCore(filter, schema => MongoFilter.translate(filter, schema))
+    deleteWithDVCore(MongoFilter.translate(filter, _))
   }
 
   /** Merge-on-read delete under an arbitrary Spark predicate — the DV twin
     * of [[delete(condition:*]] (enable via `spark.graft.sql.dml.mor` for
     * the SQL route). NULL-valued conditions keep the row (SQL). */
-  def deleteWithDV(condition: org.apache.spark.sql.Column): DmlResult = {
-    val pred = coalesce(condition, lit(false))
-    deleteWithDVCore(graft.sources.ExprFilters.pruneJson(condition), _ => pred)
-  }
+  def deleteWithDV(condition: org.apache.spark.sql.Column): DmlResult =
+    deleteWithDVCore(_ => condition)
 
-  private def deleteWithDVCore(pruneFilter: JValue,
-                               predOf: StructType => Column): DmlResult = {
-    val snap = scanState(None, pruneFilter)
+  private def deleteWithDVCore(conditionOf: StructType => Column): DmlResult = {
+    val (snap, pred) = dmlState(conditionOf)
     ProtocolSupport.assertWritable(snap, path)
     val candidates = snap.activeFiles
-    val pred = predOf(snap.schema)
     val (matchedFiles, nMatched) = matchingFilesBy(snap, candidates, pred)
     if (nMatched == 0)
       throw new NoMatchedRowsException("delete")
@@ -1425,8 +1405,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       case JObject(fs) => fs
       case other => throw new IllegalArgumentException(s"updates must be an object: $other")
     }
-    updateWithDVCore(filter,
-      schema => MongoFilter.translate(filter, schema),
+    updateWithDVCore(MongoFilter.translate(filter, _),
       schema => updates.map { case (f, v) => f -> jvalueLiteral(v, schema, f) })
   }
 
@@ -1435,9 +1414,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * RHS sees the OLD row (single-projection patch). */
   def updateWithDV(condition: org.apache.spark.sql.Column,
                    set: Seq[(String, org.apache.spark.sql.Column)]): DmlResult = {
-    val pred = coalesce(condition, lit(false))
-    updateWithDVCore(graft.sources.ExprFilters.pruneJson(condition),
-      _ => pred,
+    updateWithDVCore(_ => condition,
       schema => set.map { case (f, v) =>
         val dt = schema.fields.find(_.name == f).map(_.dataType).getOrElse(
           throw new IllegalArgumentException(s"update of unknown column: $f"))
@@ -1445,13 +1422,11 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       })
   }
 
-  private def updateWithDVCore(pruneFilter: JValue,
-                               predOf: StructType => Column,
+  private def updateWithDVCore(conditionOf: StructType => Column,
                                setOf: StructType => Seq[(String, Column)]): DmlResult = {
-    val snap = scanState(None, pruneFilter)
+    val (snap, pred) = dmlState(conditionOf)
     ProtocolSupport.assertWritable(snap, path)
     val candidates = snap.activeFiles
-    val pred = predOf(snap.schema)
     val updates = setOf(snap.schema)
     val (matchedFiles, nMatched) = matchingFilesBy(snap, candidates, pred)
     if (nMatched == 0)
@@ -1497,8 +1472,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       case JObject(fs) => fs
       case other => throw new IllegalArgumentException(s"updates must be an object: $other")
     }
-    updateCore(filter,
-      schema => MongoFilter.translate(filter, schema),
+    updateCore(MongoFilter.translate(filter, _),
       schema => updates.map { case (f, v) => f -> jvalueLiteral(v, schema, f) })
   }
 
@@ -1511,9 +1485,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * NULL-valued conditions leave the row unmodified. */
   def update(condition: org.apache.spark.sql.Column,
              set: Seq[(String, org.apache.spark.sql.Column)]): DmlResult = {
-    val pred = coalesce(condition, lit(false))
-    updateCore(graft.sources.ExprFilters.pruneJson(condition),
-      _ => pred,
+    updateCore(_ => condition,
       schema => set.map { case (f, v) =>
         val dt = schema.fields.find(_.name == f).map(_.dataType).getOrElse(
           throw new IllegalArgumentException(s"update of unknown column: $f"))
@@ -1521,13 +1493,11 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       })
   }
 
-  private def updateCore(pruneFilter: JValue,
-                         predOf: StructType => Column,
+  private def updateCore(conditionOf: StructType => Column,
                          setOf: StructType => Seq[(String, Column)]): DmlResult = {
-    val snap = scanState(None, pruneFilter)
+    val (snap, pred) = dmlState(conditionOf)
     ProtocolSupport.assertWritable(snap, path)
     val candidates = snap.activeFiles
-    val pred = predOf(snap.schema)
     val updates = setOf(snap.schema)
     val (matchedFiles, nMatched) = matchingFilesBy(snap, candidates, pred)
     if (nMatched == 0)
@@ -1616,10 +1586,6 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
 
   /** Which candidate files actually contain matching rows, and how many rows
     * match — one distributed aggregation. */
-  private def matchingFiles(snap: Snapshot, candidates: Seq[AddFile],
-                            filter: JValue): (Seq[String], Long) =
-    matchingFilesBy(snap, candidates, MongoFilter.translate(filter, snap.schema))
-
   private def matchingFilesBy(snap: Snapshot, candidates: Seq[AddFile],
                               pred: Column): (Seq[String], Long) = {
     if (candidates.isEmpty) return (Nil, 0L)
@@ -1736,15 +1702,16 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * above the distributed threshold only files SATISFYING `pred` reach the
     * driver (e.g. compaction's below-target-size candidates); below it the
     * cached driver snapshot filters in memory. */
-  private[delta] def scanStateWhere(pred: AddFile => Boolean): Snapshot =
-    log.readLastCheckpoint() match {
-      case Some((cv, size, parts)) if size >= distributedSnapshotThreshold =>
-        DistributedSnapshot.stateWhere(spark, log, cv, parts,
-          log.latestVersion(), pred)
-      case _ =>
-        val snap = snapshot()
+  private[delta] def scanStateWhere(pred: AddFile => Boolean): Snapshot = {
+    val target = log.latestVersion()
+    distributedCheckpoint(target) match {
+      case Some((cv, parts)) =>
+        DistributedSnapshot.stateWhere(spark, log, cv, parts, target, pred)
+      case None =>
+        val snap = snapshot(Some(target))
         snap.copy(activeFiles = snap.activeFiles.filter(pred))
     }
+  }
 
   /** Commit a rewrite: removes for the rewritten files, adds for their
     * replacements. `rewrittenAbs` holds absolute `file:` URIs from

@@ -1,8 +1,8 @@
 package graft.delta
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, get_json_object}
-import org.apache.spark.sql.types.{DataType, MapType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -15,8 +15,9 @@ import org.json4s.jackson.JsonMethods
  * DataFrame ([[Checkpoints.readStateDf]]); the commit tail since the
  * checkpoint (bounded by the checkpoint interval) is replayed driver-side
  * and reconciled against the checkpoint via a broadcast anti-join on path;
- * [[FilePruner.compile]]'s per-file predicate — the exact driver pruning
- * semantics — runs in executors; and only the files that SURVIVE pruning
+ * the [[DataSkipping]] predicate — bound once on the driver, the same
+ * expression the driver path evaluates — runs in executors; and only the
+ * files that SURVIVE pruning
  * are collected. Driver memory is O(tail actions + surviving files), the
  * same order as the file list Spark's own scan needs anyway.
  *
@@ -38,12 +39,16 @@ object DistributedSnapshot {
     * file list is irrelevant. `activeFiles`/`tombstones` are empty. */
   def metaState(spark: SparkSession, log: DeltaLog, cpVersion: Long,
                 parts: Option[Int], target: Long): Snapshot =
-    prunedState(spark, log, cpVersion, parts, target, JNothing,
-      skipFiles = true)
+    metaOf(rawState(spark, log, cpVersion, parts, target), target)
+
+  private def metaOf(raw: RawState, target: Long): Snapshot =
+    Snapshot(target, raw.metadata, raw.protocol, Nil, Nil, raw.txns)
 
   /**
-   * State at `target` with `filter` pre-applied to the file set, replayed
-   * from the checkpoint at `cpVersion` without collecting it.
+   * State at `target` with file skipping pre-applied, replayed from the
+   * checkpoint at `cpVersion` without collecting it, and the skipping
+   * predicate: `predicateOf` builds the query's predicate from the schema
+   * at `target`, which binds once on the driver.
    *
    * SCAN-ONLY snapshot: `tombstones` is intentionally empty (vacuum and
    * checkpoint writing must use the full driver path), and `activeFiles`
@@ -51,25 +56,23 @@ object DistributedSnapshot {
    * as the complete active set.
    */
   def prunedState(spark: SparkSession, log: DeltaLog, cpVersion: Long,
-                  parts: Option[Int], target: Long, filter: JValue,
-                  skipFiles: Boolean = false): Snapshot =
-    reconstruct(spark, log, cpVersion, parts, target, skipFiles,
-      meta => {
-        val schema = meta
-          .map(m => DataType.fromJson(m.schemaString).asInstanceOf[StructType])
-          .getOrElse(StructType(Nil))
-        val partCols = meta.map(_.partitionColumns).getOrElse(Nil).toSet
-        FilePruner.compile(filter, partCols, schema)
-      })
+                  parts: Option[Int], target: Long,
+                  predicateOf: StructType => Column): (Snapshot, DataSkipping.Predicate) = {
+    val raw = rawState(spark, log, cpVersion, parts, target)
+    val meta = metaOf(raw, target)
+    val p = DataSkipping.bind(predicateOf(meta.schema), meta.schema, meta.partitionColumns)
+    (survivors(raw, meta, p), p)
+  }
 
   /** State at `target` with an arbitrary serializable file predicate
     * pre-applied — the maintenance selection path (e.g. compaction's
     * below-target-size files). Same scan-only contract as [[prunedState]]. */
   def stateWhere(spark: SparkSession, log: DeltaLog, cpVersion: Long,
                  parts: Option[Int], target: Long,
-                 pred: AddFile => Boolean): Snapshot =
-    reconstruct(spark, log, cpVersion, parts, target, skipFiles = false,
-      _ => pred)
+                 pred: AddFile => Boolean): Snapshot = {
+    val raw = rawState(spark, log, cpVersion, parts, target)
+    survivors(raw, metaOf(raw, target), pred)
+  }
 
   /** Intermediate reconstruction state shared by the snapshot and the
     * claimability paths: non-file actions + driver-replayed tail, with the
@@ -187,30 +190,22 @@ object DistributedSnapshot {
     RawState(metadata, protocol, txns.toMap, tailFiles.values.toSeq, base)
   }
 
-  private def reconstruct(spark: SparkSession, log: DeltaLog, cpVersion: Long,
-                          parts: Option[Int], target: Long, skipFiles: Boolean,
-                          keepFor: Option[TableMetadata] => AddFile => Boolean): Snapshot = {
-    val raw = rawState(spark, log, cpVersion, parts, target)
-    if (skipFiles)
-      return Snapshot(target, raw.metadata, raw.protocol, Nil, Nil, raw.txns)
-
-    val keep = keepFor(raw.metadata)
+  /** `meta` with the active files of `raw` that `keep` admits. */
+  private def survivors(raw: RawState, meta: Snapshot,
+                        keep: AddFile => Boolean): Snapshot = {
     val cpSurvivors = raw.baseAddJson
       .filter { js: String => keep(Actions.parseAdd(JsonMethods.parse(js))) }
       .collect()
       .map(js => Actions.parseAdd(JsonMethods.parse(js)))
       .toSeq
-
-    val tailSurvivors = raw.tailFiles.filter(keep)
-    Snapshot(target, raw.metadata, raw.protocol, cpSurvivors ++ tailSurvivors,
-      Nil, raw.txns)
+    meta.copy(activeFiles = cpSurvivors ++ raw.tailFiles.filter(keep))
   }
 
   /** NEVER-MATERIALIZING metadata fold (round 16): COUNT/MIN/MAX over the
     * active files at `target` that every CLAIMED filter decides True on,
     * computed as per-file contributions merged ASSOCIATIVELY on executors
     * ([[StatsAggregates.contribute]]/[[StatsAggregates.merge]]) — driver
-    * traffic is ONE [[StatsAggregates.Partial]] (a few JValues) per RDD
+    * traffic is ONE [[StatsAggregates.Partial]] (a few values) per RDD
     * partition plus the commit tail, at ANY file count. This beats the
     * prior floor (collect the post-prune survivors, fold driver-side,
     * bounded by Spark's own scan planning) because a metadata-answered

@@ -19,7 +19,7 @@ import org.json4s._
  * count, not driver throughput.
  *
  * Conservative by construction — a stat that cannot be trusted is OMITTED,
- * and [[FilePruner]] treats missing stats as "keep the file":
+ * and [[DataSkipping]] treats missing stats as "keep the file":
  *  - strings over 256 chars are dropped (same rule as the aggregation path:
  *    a truncated bound would break skipping correctness);
  *  - float/double min/max containing NaN are dropped (parquet NaN ordering
@@ -32,6 +32,11 @@ import org.json4s._
  * aggregation produced.
  */
 object FooterStats {
+
+  /** Fixed-precision (micros) ISO-8601 at UTC — the canonical timestamp
+    * stat form every writer renders ([[DataSkipping.statValue]] reads it). */
+  val CanonFormat: java.time.format.DateTimeFormatter =
+    java.time.format.DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS")
 
   /** Read per-file stats for `files` (absolute path strings) as one Spark
     * job. Returns map keyed by the input path string. */
@@ -124,7 +129,7 @@ object FooterStats {
         Math.floorDiv(micros, 1000000L),
         (Math.floorMod(micros, 1000000L) * 1000L).toInt,
         java.time.ZoneOffset.UTC)
-      Some(JString(FilePruner.CanonFormat.format(ldt)))
+      Some(JString(CanonFormat.format(ldt)))
     case (f: java.lang.Float, FloatType) =>
       if (f.isNaN) None else Some(JDouble(f.toDouble))
     case (d: java.lang.Double, DoubleType) =>

@@ -1,9 +1,8 @@
 package graft.delta
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.{expressions => cx}
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression, GenericInternalRow, Literal}
-import org.apache.spark.sql.catalyst.plans.{logical => lp}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -14,8 +13,8 @@ import scala.util.control.NonFatal
  * file's partition values — the basis for CLAIMING a filter in DSv2
  * pushdown instead of leaving it as a post-scan residual.
  *
- * Contrast with [[FilePruner]], which is a may-keep over-approximation
- * (sound to skip files with, never to claim a filter): here every atom
+ * Contrast with [[DataSkipping]], a may-keep over-approximation (sound to
+ * skip files with, never to claim a filter): here every atom
  * must decide, for EVERY row of the file, whether the predicate is
  * TRUE / FALSE / NULL — possible exactly when the atom references only
  * partition columns (all rows share the value). Anything else is `None`
@@ -57,42 +56,43 @@ object PartitionFilters {
     case _ => false
   }
 
-  /** One partition column the bound predicate reads: its ordinal in the
-    * bound row, its decoder, and whether the predicate reads its value or
-    * only tests it for NULL. */
-  private final case class Col(ordinal: Int, name: String,
-                               decode: String => Any, valueRead: Boolean,
-                               placeholder: Any)
+  /** One partition column a bound predicate reads: its ordinal in the row
+    * [[fill]] writes, and whether the predicate reads its value or only
+    * tests it for NULL. */
+  final case class PartValue(ordinal: Int, name: String, dt: DataType,
+                             valueRead: Boolean) {
+
+    /** Decode the file's value into `row`. False when undecidable: the
+      * value is missing or JSON-null in the log, or its ANSI cast throws. A
+      * value that does not cast is still known non-null (only the marker
+      * decodes to NULL), so a column the predicate only tests for NULL
+      * still decides. */
+    def fill(row: InternalRow, pv: Map[String, String]): Boolean =
+      pv.get(name) match {
+        case None | Some(null) => false
+        case Some(PartitionPaths.NullMarker) => row.setNullAt(ordinal); true
+        case Some(s) =>
+          try { row.update(ordinal, PartitionPaths.decoder(dt)(s)); true }
+          catch {
+            case NonFatal(_) if !valueRead =>
+              row.update(ordinal, Literal.default(dt).value); true
+            case NonFatal(_) => false
+          }
+      }
+  }
 
   /** A filter resolved and bound once, on the driver, against the
     * partition columns. Serializable: the distributed claim ships it to
     * executors, which only evaluate it. */
   final class Bound private[PartitionFilters] (
-      val filter: Filter, predicate: Expression, width: Int, cols: Array[Col])
+      val filter: Filter, predicate: Expression, width: Int, cols: Array[PartValue])
     extends Serializable {
 
-    /** The file's verdict from its partition values. None when a
-      * referenced value is missing or JSON-null in the log, or when its
-      * ANSI cast throws. A value that does not cast is still known
-      * non-null (only the marker decodes to NULL), so a column the
-      * predicate only tests for NULL still decides. */
+    /** The file's verdict from its partition values; None when a value it
+      * reads is undecidable ([[PartValue.fill]]). */
     def eval(pv: Map[String, String]): Option[TV] = {
       val row = new GenericInternalRow(width)
-      var i = 0
-      while (i < cols.length) {
-        val c = cols(i)
-        pv.get(c.name) match {
-          case None | Some(null) => return None
-          case Some(PartitionPaths.NullMarker) => ()
-          case Some(s) =>
-            val v = try c.decode(s) catch {
-              case NonFatal(_) if !c.valueRead => c.placeholder
-              case NonFatal(_) => return None
-            }
-            row.update(c.ordinal, v)
-        }
-        i += 1
-      }
+      if (!cols.forall(_.fill(row, pv))) return None
       try predicate.eval(row) match {
         case null => Some(Unknown)
         case b: Boolean => Some(if (b) True else False)
@@ -106,17 +106,12 @@ object PartitionFilters {
   def bind(filters: Seq[Filter], partCols: Set[String],
            schema: StructType): Seq[Option[Bound]] = {
     val fields = schema.fields.filter(f => partCols.contains(f.name))
-    lazy val empty = SparkSession.active.createDataFrame(
-      java.util.Collections.emptyList[Row](), StructType(fields))
+    val resolve = DataSkipping.resolver(StructType(fields))
     filters.map { f =>
       if (f.references.isEmpty || !f.references.forall(partCols.contains)) None
-      else graft.sources.DeltaRelation.toColumn(f).flatMap { c =>
-        try empty.filter(c).queryExecution.analyzed match {
-          case lp.Filter(cond, child) =>
-            Some(boundOf(f, BindReferences.bindReference(cond, child.output), fields))
-          case _ => None
-        } catch { case NonFatal(_) => None }
-      }
+      else graft.sources.DeltaRelation.toColumn(f)
+        .flatMap(c => resolve(org.apache.spark.sql.graft.Shims.expression(c)))
+        .map(boundOf(f, _, fields))
     }
   }
 
@@ -127,11 +122,8 @@ object PartitionFilters {
         Literal(true)
     }.collect { case b: BoundReference => b.ordinal }.toSet
     val cols = predicate.collect { case b: BoundReference => b.ordinal }
-      .distinct.map { i =>
-        val dt = fields(i).dataType
-        Col(i, fields(i).name, PartitionPaths.decoder(dt), read.contains(i),
-          Literal.default(dt).value)
-      }
+      .distinct.map(i =>
+        PartValue(i, fields(i).name, fields(i).dataType, read.contains(i)))
     new Bound(f, predicate, fields.length, cols.toArray)
   }
 

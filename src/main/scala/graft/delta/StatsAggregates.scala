@@ -59,13 +59,8 @@ object StatsAggregates {
     * not per aggregate). */
   val answered = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def dvCardinality(f: AddFile): Option[Long] = f.deletionVector match {
-    case None => Some(0L)
-    case Some(dv) => dv.obj.toMap.get("cardinality").collect {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-    }
-  }
+  private def dvCardinality(f: AddFile): Option[Long] =
+    f.deletionVector.fold(Option(0L))(DeletionVectors.descriptorCardinality)
 
   /** Stats must exist for every file — one statless file (foreign writer,
     * pre-stats history) poisons exactness for every aggregate kind. */
@@ -219,29 +214,16 @@ object StatsAggregates {
         case FloatType | DoubleType => return None // NaN ordering
         case _ => ()
       }
-      var best: Option[JValue] = None
+      var best: Any = null // null: zero non-null rows table-wide, SQL NULL
       stats.foreach { case (_, st) =>
-        val bound = (if (wantMax) st.maxValues else st.minValues).get(name)
-        bound match {
+        statBound(st, name, f.dataType, wantMax) match {
+          case None => return None
+          case Some(null) => ()
           case Some(v) =>
-            best = best match {
-              case None => Some(v)
-              case Some(b) => FilePruner.compare(v, b, f.dataType) match {
-                case Some(c) => if ((wantMax && c > 0) || (!wantMax && c < 0)) Some(v) else Some(b)
-                case None => return None // incomparable stat forms
-              }
-            }
-          case None =>
-            // acceptable only when the file is PROVABLY all-null for the
-            // column (contributes nothing to min/max)
-            val allNull = st.nullCount.get(name).contains(st.numRecords)
-            if (!allNull) return None
+            best = if (best == null) v else pick(v, best, f.dataType, wantMax)
         }
       }
-      best match {
-        case None => Some(null) // zero non-null rows table-wide: SQL NULL
-        case Some(j) => decode(j, f.dataType) // None = undecodable, refuse
-      }
+      Some(convertToScala(best, f.dataType))
     }
 
     Some(aggs.map {
@@ -267,21 +249,15 @@ object StatsAggregates {
       bytes += f.size
       if (exact) f.parsedStats match {
         case Some(st) =>
-          f.deletionVector.flatMap(_.obj.toMap.get("cardinality")) match {
-            case Some(JInt(n)) => rows += st.numRecords - n.toLong
-            case Some(JLong(n)) => rows += st.numRecords - n
-            case Some(_) => exact = false // DV present, cardinality unreadable
-            case None =>
-              if (f.deletionVector.isEmpty) rows += st.numRecords
-              else exact = false // DV object without a cardinality field
+          dvCardinality(f) match {
+            case Some(c) => rows += st.numRecords - c
+            case None => exact = false // DV without a readable cardinality
           }
         case None => exact = false
       }
     }
     (bytes, if (exact) Some(rows) else None)
   }
-
-  private object Refuse extends scala.util.control.ControlThrowable
 
   /**
    * TOP-N file cover: the subset of `files` that can contain the first
@@ -311,60 +287,60 @@ object StatsAggregates {
     }
     if (files.exists(_.deletionVector.nonEmpty)) return None
     final case class Info(f: AddFile, nonNull: Long, nulls: Long,
-                          lo: Option[JValue], hi: Option[JValue])
+                          lo: Option[Any], hi: Option[Any])
+    def decoded(j: Option[JValue]): Option[Any] =
+      j.map(v => Option(DataSkipping.statValue(v, field.dataType)).getOrElse(return None))
     val infos = files.map { f =>
       val st = f.parsedStats.getOrElse(return None)
       val nulls = st.nullCount.getOrElse(field.name, return None)
       val nonNull = st.numRecords - nulls
-      val lo = st.minValues.get(field.name)
-      val hi = st.maxValues.get(field.name)
+      val lo = decoded(st.minValues.get(field.name))
+      val hi = decoded(st.maxValues.get(field.name))
       if (nonNull > 0 && (lo.isEmpty || hi.isEmpty)) return None
       Info(f, nonNull, nulls, lo, hi)
     }
     val nullsTotal = infos.iterator.map(_.nulls).sum
     val nonNullTotal = infos.iterator.map(_.nonNull).sum
-    def cmp(a: JValue, b: JValue): Int =
-      FilePruner.compare(a, b, field.dataType).getOrElse(throw Refuse)
-    try {
-      val needNonNull =
-        if (nullsFirst) math.max(0L, limit.toLong - nullsTotal)
-        else math.min(limit.toLong, nonNullTotal)
-      val needNulls =
-        if (nullsFirst) math.min(limit.toLong, nullsTotal)
-        else math.max(0L, limit.toLong - nonNullTotal)
-      val keep = scala.collection.mutable.LinkedHashSet.empty[String]
-      if (needNulls > 0) {
-        // any `needNulls` null rows are a correct LIMIT prefix among
-        // themselves — a log-order cover suffices
-        var acc = 0L
-        infos.iterator.filter(_.nulls > 0).foreach { i =>
-          if (acc < needNulls) { keep += i.f.path; acc += i.nulls }
+    val ordering = TypeUtils.getInterpretedOrdering(field.dataType)
+    def cmp(a: Any, b: Any): Int = ordering.compare(a, b)
+    val needNonNull =
+      if (nullsFirst) math.max(0L, limit.toLong - nullsTotal)
+      else math.min(limit.toLong, nonNullTotal)
+    val needNulls =
+      if (nullsFirst) math.min(limit.toLong, nullsTotal)
+      else math.max(0L, limit.toLong - nonNullTotal)
+    val keep = scala.collection.mutable.LinkedHashSet.empty[String]
+    if (needNulls > 0) {
+      // any `needNulls` null rows are a correct LIMIT prefix among
+      // themselves — a log-order cover suffices
+      var acc = 0L
+      infos.iterator.filter(_.nulls > 0).foreach { i =>
+        if (acc < needNulls) { keep += i.f.path; acc += i.nulls }
+      }
+    }
+    if (needNonNull > 0) {
+      val sortable = infos.filter(_.nonNull > 0)
+      val sorted =
+        if (asc) sortable.sortWith((x, y) => cmp(x.hi.get, y.hi.get) < 0)
+        else sortable.sortWith((x, y) => cmp(x.lo.get, y.lo.get) > 0)
+      var acc = 0L
+      var bound: Option[Any] = None
+      val it = sorted.iterator
+      while (acc < needNonNull && it.hasNext) {
+        val i = it.next()
+        acc += i.nonNull
+        bound = Some(if (asc) i.hi.get else i.lo.get)
+      }
+      if (acc < needNonNull) sortable.foreach(i => keep += i.f.path)
+      else {
+        val b = bound.get
+        sortable.foreach { i =>
+          if (if (asc) cmp(i.lo.get, b) <= 0 else cmp(i.hi.get, b) >= 0)
+            keep += i.f.path
         }
       }
-      if (needNonNull > 0) {
-        val sortable = infos.filter(_.nonNull > 0)
-        val sorted =
-          if (asc) sortable.sortWith((x, y) => cmp(x.hi.get, y.hi.get) < 0)
-          else sortable.sortWith((x, y) => cmp(x.lo.get, y.lo.get) > 0)
-        var acc = 0L
-        var bound: Option[JValue] = None
-        val it = sorted.iterator
-        while (acc < needNonNull && it.hasNext) {
-          val i = it.next()
-          acc += i.nonNull
-          bound = Some(if (asc) i.hi.get else i.lo.get)
-        }
-        if (acc < needNonNull) sortable.foreach(i => keep += i.f.path)
-        else {
-          val b = bound.get
-          sortable.foreach { i =>
-            if (if (asc) cmp(i.lo.get, b) <= 0 else cmp(i.hi.get, b) >= 0)
-              keep += i.f.path
-          }
-        }
-      }
-      Some(files.filter(f => keep.contains(f.path)))
-    } catch { case Refuse => None }
+    }
+    Some(files.filter(f => keep.contains(f.path)))
   }
 
   /** A file's decoded partition value for `f` — Some(null) for a NULL
@@ -386,7 +362,20 @@ object StatsAggregates {
       }
     }
 
-  /** The MIN (or MAX) of two decoded values under Spark's ordering. */
+  /** A file's data-column MIN (or MAX) stat, decoded: Some(null) when the
+    * file is PROVABLY all-null for the column (it contributes nothing);
+    * None refuses — the bound is missing on a file with non-null rows, or
+    * its form does not decode for the type. */
+  private def statBound(st: FileStats, name: String, dt: DataType,
+                        wantMax: Boolean): Option[Any] =
+    (if (wantMax) st.maxValues else st.minValues).get(name) match {
+      case Some(j) => Option(DataSkipping.statValue(j, dt))
+      case None =>
+        if (st.nullCount.get(name).contains(st.numRecords)) Some(null) else None
+    }
+
+  /** The MIN (or MAX) of two decoded values under Spark's ordering — the
+    * only comparator the folds and Top-N use. */
   private def pick(a: Any, b: Any, dt: DataType, wantMax: Boolean): Any =
     if ((TypeUtils.getInterpretedOrdering(dt).compare(a, b) > 0) == wantMax) a
     else b
@@ -396,7 +385,7 @@ object StatsAggregates {
   // The same exactness contract as [[fold]], restructured as per-file
   // contribution + ASSOCIATIVE merge + driver finish, so the claimed
   // metadata fold on a 10⁷-file table runs as one narrow executor job whose
-  // driver traffic is ONE Partial per RDD partition (a few JValues) — the
+  // driver traffic is ONE Partial per RDD partition (a few values) — the
   // claimed file list never materializes anywhere.
   // StatsAggregatesCombineSpec property-checks bit-equivalence with [[fold]]
   // over random file sets and arbitrary groupings.
@@ -405,11 +394,10 @@ object StatsAggregates {
   sealed trait AggPartial extends Serializable
   case object RefusedP extends AggPartial
   final case class CountP(n: Long) extends AggPartial
-  /** Data-column extremum: best stat bound seen (None = no contribution). */
-  final case class ExtP(best: Option[JValue]) extends AggPartial
-  /** Partition-column extremum: best decoded value among files with
-    * surviving rows. */
-  final case class PartExtP(best: Option[Any]) extends AggPartial
+  /** Extremum: the best decoded value seen — a data column's stat bound,
+    * or a partition column's value among files with surviving rows
+    * (None = no contribution). */
+  final case class ExtP(best: Option[Any]) extends AggPartial
 
   /** Subset-level state: `anyDv` poisons data-column COUNT(col)/MIN/MAX at
     * finish time (deleted rows could hold the extremum / be the non-null
@@ -417,9 +405,7 @@ object StatsAggregates {
   final case class Partial(anyDv: Boolean, aggs: IndexedSeq[AggPartial])
     extends Serializable
 
-  /** Merge identity: the Partial of an EMPTY file subset. `ExtP(None)` is
-    * the universal extremum identity — merge resolves it to whichever
-    * concrete kind (data or partition extremum) the other side carries. */
+  /** Merge identity: the Partial of an EMPTY file subset. */
   def identityPartial(aggs: Seq[StatAgg]): Partial =
     Partial(anyDv = false, aggs.toIndexedSeq.map {
       case CountStar | _: CountCol => CountP(0L)
@@ -477,24 +463,22 @@ object StatsAggregates {
         }
       case MinCol(n, _) if partCols.contains(n) => partExt(n)
       case MaxCol(n, _) if partCols.contains(n) => partExt(n)
-      case MinCol(n, _) => dataExt(n, st.minValues.get(n))
-      case MaxCol(n, _) => dataExt(n, st.maxValues.get(n))
+      case MinCol(n, _) => dataExt(n, wantMax = false)
+      case MaxCol(n, _) => dataExt(n, wantMax = true)
     }
     def partExt(name: String): AggPartial = dvc match {
       case None => RefusedP
       case Some(c) =>
-        if (st.numRecords - c <= 0) PartExtP(None)
+        if (st.numRecords - c <= 0) ExtP(None)
         else schema.fields.find(_.name == name).flatMap(partValue(f, _)) match {
           case None => RefusedP
-          case Some(v) => PartExtP(Option(v))
+          case Some(v) => ExtP(Option(v))
         }
     }
-    def dataExt(name: String, bound: Option[JValue]): AggPartial = bound match {
-      case Some(v) => ExtP(Some(v))
-      case None =>
-        if (st.nullCount.get(name).contains(st.numRecords)) ExtP(None)
-        else RefusedP
-    }
+    def dataExt(name: String, wantMax: Boolean): AggPartial =
+      schema.fields.find(_.name == name)
+        .flatMap(fd => statBound(st, name, fd.dataType, wantMax))
+        .fold(RefusedP: AggPartial)(v => ExtP(Option(v)))
     Partial(anyDv, aggs.map(perAgg))
   }
 
@@ -508,26 +492,11 @@ object StatsAggregates {
       case (CountP(m), CountP(n)) => CountP(m + n)
       case (ExtP(None), e) => e
       case (e, ExtP(None)) => e
-      case (ExtP(Some(v)), ExtP(Some(w))) =>
-        val (dt, wantMax) = agg match {
-          case MinCol(n, _) => (dtOf(n), false)
-          case MaxCol(n, _) => (dtOf(n), true)
-          case _ => return RefusedP
-        }
-        FilePruner.compare(v, w, dt) match {
-          case Some(c) =>
-            ExtP(Some(if ((wantMax && c > 0) || (!wantMax && c < 0)) v else w))
-          case None => RefusedP
-        }
-      case (PartExtP(None), e) => e
-      case (e, PartExtP(None)) => e
-      case (PartExtP(Some(v)), PartExtP(Some(w))) =>
-        val (dt, wantMax) = agg match {
-          case MinCol(n, _) => (dtOf(n), false)
-          case MaxCol(n, _) => (dtOf(n), true)
-          case _ => return RefusedP
-        }
-        PartExtP(Some(pick(v, w, dt, wantMax)))
+      case (ExtP(Some(v)), ExtP(Some(w))) => agg match {
+        case MinCol(n, _) => ExtP(Some(pick(v, w, dtOf(n), wantMax = false)))
+        case MaxCol(n, _) => ExtP(Some(pick(v, w, dtOf(n), wantMax = true)))
+        case _ => RefusedP
+      }
       case _ => RefusedP // mixed kinds: impossible by construction
     }
     Partial(a.anyDv || b.anyDv,
@@ -541,19 +510,17 @@ object StatsAggregates {
              aggs: IndexedSeq[StatAgg]): Option[Seq[Any]] = {
     def dtOf(n: String): DataType =
       schema.fields.find(_.name == n).map(_.dataType).getOrElse(NullType)
+    // deleted rows could hold a data column's extremum
+    def extremum(n: String, best: Option[Any]): Option[Any] =
+      if (!partCols.contains(n) && p.anyDv) None
+      else Some(convertToScala(best.orNull, dtOf(n)))
     Some(aggs.zip(p.aggs).map {
       case (_, RefusedP) => return None
       case (CountStar, CountP(n)) => n
       case (CountCol(nm), CountP(n)) =>
         if (!partCols.contains(nm) && p.anyDv) return None else n
-      case (MinCol(nm, _), ExtP(best)) =>
-        if (p.anyDv) return None
-        best.fold(null: Any)(j => decode(j, dtOf(nm)).getOrElse(return None))
-      case (MaxCol(nm, _), ExtP(best)) =>
-        if (p.anyDv) return None
-        best.fold(null: Any)(j => decode(j, dtOf(nm)).getOrElse(return None))
-      case (MinCol(nm, _), PartExtP(best)) => convertToScala(best.orNull, dtOf(nm))
-      case (MaxCol(nm, _), PartExtP(best)) => convertToScala(best.orNull, dtOf(nm))
+      case (MinCol(nm, _), ExtP(best)) => extremum(nm, best).getOrElse(return None)
+      case (MaxCol(nm, _), ExtP(best)) => extremum(nm, best).getOrElse(return None)
       case _ => return None
     })
   }
@@ -637,27 +604,5 @@ object StatsAggregates {
     }
     Some(rows.sortBy(_.take(gFields.length)
       .map(k => if (k == null) "\u0000" else k.toString).mkString("\u0001")))
-  }
-
-  /** Log-canonical stat JSON → Spark EXTERNAL value for `dt`; None refuses
-    * (wrong stat form for the type). Forms must mirror
-    * `DeltaTable.statJValue` / `FooterStats.toJValue` exactly. */
-  private[delta] def decode(j: JValue, dt: DataType): Option[Any] = (dt, j) match {
-    case (ByteType, JInt(n)) => Some(n.toByte)
-    case (ShortType, JInt(n)) => Some(n.toShort)
-    case (IntegerType, JInt(n)) => Some(n.toInt)
-    case (LongType, JInt(n)) => Some(n.toLong)
-    case (StringType, JString(s)) => Some(s)
-    case (BooleanType, JBool(b)) => Some(b)
-    case (DateType, JString(s)) =>
-      scala.util.Try(java.sql.Date.valueOf(java.time.LocalDate.parse(s))).toOption
-    case (TimestampNTZType, JString(s)) =>
-      FilePruner.canonTs(s).map(java.time.LocalDateTime.parse(_, FilePruner.CanonFormat))
-    case (TimestampType, JString(s)) =>
-      FilePruner.canonTs(s).map { c =>
-        val ldt = java.time.LocalDateTime.parse(c, FilePruner.CanonFormat)
-        java.sql.Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
-      }
-    case _ => None
   }
 }

@@ -2,11 +2,11 @@ package graft.sources
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.catalyst.{expressions => catalyst}
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources._
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types.StructType
-
-import org.json4s.{JArray, JBool, JDouble, JLong, JNothing, JNull, JObject, JString, JValue}
 
 import graft.delta.{DeltaTable, Snapshot, Txn, ValidationException}
 
@@ -115,7 +115,7 @@ final class DeltaRelation(
                            claimed: Array[Filter],
                            claimedPaths: Option[Set[String]]): (Snapshot, Seq[graft.delta.AddFile]) = {
     val snap = table.scanState(pinnedVersion.orElse(resolvedVersion()),
-      DeltaRelation.pruneJson(claimed))
+      DeltaRelation.conjunction(claimed.toSeq))
     if (claimed.isEmpty) (snap, snap.activeFiles)
     else (snap, exactClaimKeep(snap, claimed, claimedPaths))
   }
@@ -173,7 +173,7 @@ final class DeltaRelation(
   private[sources] def scanDimensions(filters: Array[Filter],
                                       pinnedVersion: Option[Long] = None): Option[(Long, Option[Long])] =
     table.tableDimensions(pinnedVersion.orElse(resolvedVersion()),
-      DeltaRelation.pruneJson(filters))
+      DeltaRelation.conjunction(filters.toSeq))
       .map { case (bytes, rows) => (DeltaRelation.scaleBytes(sqlContext, bytes), rows) }
 
   /** Log-derived relation size: Spark's join planner consults
@@ -186,7 +186,7 @@ final class DeltaRelation(
     * (above the distributed-snapshot threshold) deliberately keep the
     * huge default — see [[graft.delta.DeltaTable.tableDimensions]]. */
   override lazy val sizeInBytes: Long =
-    table.tableDimensions(resolvedVersion(), JNothing)
+    table.tableDimensions(resolvedVersion(), lit(true))
       .map { case (bytes, _) => DeltaRelation.scaleBytes(sqlContext, bytes) }
       .getOrElse(super.sizeInBytes)
 
@@ -199,7 +199,7 @@ final class DeltaRelation(
   }
 
   /** The planned file set for a scan: FILE pruning first (partition values
-    * + zone-map stats via FilePruner, distributed above the table's
+    * + zone-map stats via DataSkipping, distributed above the table's
     * snapshot threshold — whole files skipped before Spark plans the
     * scan); an optional pushed LIMIT / ORDER-BY-LIMIT then trims the list
     * to a survivor-covering prefix / zone-map cover. Untranslatable
@@ -213,7 +213,7 @@ final class DeltaRelation(
                                        claimed: Array[Filter] = Array.empty,
                                        claimedPaths: Option[Set[String]] = None): Snapshot = {
     val snapRaw = table.scanState(pinnedVersion.orElse(resolvedVersion()),
-      DeltaRelation.pruneJson(filters ++ claimed))
+      DeltaRelation.conjunction((filters ++ claimed).toSeq))
     // CLAIMED filters were removed from Spark's post-scan residuals, so
     // the scan itself must enforce them — exactly: via the memoized
     // pushFilters-time path set (driver claim) or by re-running the
@@ -241,19 +241,6 @@ final class DeltaRelation(
 }
 
 object DeltaRelation {
-
-  /** Branch-wise disjunction encoding, shared by the sources.Filter and
-    * Catalyst-expression translators: each branch's translation is
-    * weaker-or-equal than the branch (conv drops what it can't express),
-    * so L∨R ⇒ L'∨R' and a file is kept if ANY branch keeps it. A branch
-    * that translates to NOTHING makes the whole Or vacuous
-    * (true ∨ R' = true) — emit nothing and prune nothing. This is the
-    * `date = X OR date = Y` backfill shape on a partitioned table. */
-  private[sources] def orJson(lc: Seq[JObject], rc: Seq[JObject]): Seq[JObject] =
-    if (lc.isEmpty || rc.isEmpty) Nil
-    else Seq(JObject(List("$or" -> JArray(List(
-      JObject(List("$and" -> JArray(lc.toList))),
-      JObject(List("$and" -> JArray(rc.toList))))))))
 
   /** On-disk → planner bytes: scaled by the session's
     * `spark.sql.sources.fileCompressionFactor` (default 1.0), floored at
@@ -292,13 +279,10 @@ object DeltaRelation {
       kept += 1
       val surv: Long = f.parsedStats.map(_.numRecords) match {
         case Some(n) =>
-          f.deletionVector match {
-            case None => n
-            case Some(dv) => dv.obj.toMap.get("cardinality") match {
-              case Some(org.json4s.JInt(c)) => n - c.toLong
-              case Some(org.json4s.JLong(c)) => n - c
-              case _ => 0L // unknown deletions: claim nothing
-            }
+          f.deletionVector.fold(Option(0L))(
+            graft.delta.DeletionVectors.descriptorCardinality) match {
+            case Some(c) => n - c
+            case None => 0L // unknown deletions: claim nothing
           }
         case None => 0L
       }
@@ -318,7 +302,10 @@ object DeltaRelation {
     case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
     case LessThan(a, v) => Some(col(a) < lit(v))
     case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
+    // Catalyst literals directly: `isin` builds every value through the
+    // Column API, which dominates a runtime filter's thousands-key list
+    case In(a, vs) => scala.util.Try(Shims.column(catalyst.In(
+      Shims.expression(col(a)), vs.toSeq.map(catalyst.Literal(_))))).toOption
     case IsNull(a) => Some(col(a).isNull)
     case IsNotNull(a) => Some(col(a).isNotNull)
     case StringStartsWith(a, v) => Some(col(a).startsWith(v))
@@ -334,83 +321,11 @@ object DeltaRelation {
     case _ => None
   }
 
-  /** Conjunctive Mongo-style prune filter from translatable source
-    * predicates — ONLY used for conservative file skipping
-    * ([[FilePruner]] keeps files on any operator/value it can't reason
-    * about), never for row filtering. Timestamps/decimals are skipped:
-    * their stats forms are the pruner's untrusted cases anyway. */
-  def pruneJson(filters: Array[Filter]): JValue = {
-    def jlit(v: Any): Option[JValue] = v match {
-      case i: Int => Some(JLong(i.toLong))
-      case l: Long => Some(JLong(l))
-      case s: Short => Some(JLong(s.toLong))
-      case b: Byte => Some(JLong(b.toLong))
-      case d: Double => Some(JDouble(d))
-      // Floats stay EXACT-widened (not toString-rounded): footer stats carry
-      // the same widening (FooterStats.toJValue), so stats compares are
-      // bit-exact, while the decimal-rendered partition path side is
-      // reconciled in FilePruner (parse path as float, then widen) — fixing
-      // the literal here instead would un-fix stats pruning.
-      case f: Float => Some(JDouble(f.toDouble))
-      case s: String => Some(JString(s))
-      case b: Boolean => Some(JBool(b))
-      // Date/timestamp literals reach V1 Filters as external Java types
-      // (either legacy java.sql or java8 java.time, per
-      // spark.sql.datetime.java8API.enabled). Encode them in the log's
-      // canonical string forms — ISO date / micros-precision UTC
-      // timestamp — which FilePruner.compare parses for DateType and
-      // TimestampType columns. Without this, a date-range filter on a
-      // 100-TB date-partitioned table prunes NOTHING at the file level.
-      case d: java.sql.Date => Some(JString(d.toLocalDate.toString))
-      case d: java.time.LocalDate => Some(JString(d.toString))
-      case t: java.sql.Timestamp =>
-        Some(JString(java.time.LocalDateTime.ofInstant(
-          t.toInstant, java.time.ZoneOffset.UTC)
-          .format(graft.delta.FilePruner.CanonFormat)))
-      case i: java.time.Instant =>
-        Some(JString(java.time.LocalDateTime.ofInstant(
-          i, java.time.ZoneOffset.UTC)
-          .format(graft.delta.FilePruner.CanonFormat)))
-      case t: java.time.LocalDateTime =>
-        Some(JString(t.format(graft.delta.FilePruner.CanonFormat)))
-      case _ => None
-    }
-    def op(field: String, o: String, v: Any): Seq[JObject] =
-      jlit(v).map(jv => JObject(List(field -> JObject(List(o -> jv))))).toSeq
-    def conv(f: Filter): Seq[JObject] = f match {
-      case EqualTo(a, v) => op(a, "$eq", v)
-      // `<=>` IS Mongo $eq (null-safe equality), including the null literal
-      case EqualNullSafe(a, null) =>
-        Seq(JObject(List(a -> JObject(List("$eq" -> JNull)))))
-      case EqualNullSafe(a, v) => op(a, "$eq", v)
-      case GreaterThan(a, v) => op(a, "$gt", v)
-      case GreaterThanOrEqual(a, v) => op(a, "$gte", v)
-      case LessThan(a, v) => op(a, "$lt", v)
-      case LessThanOrEqual(a, v) => op(a, "$lte", v)
-      case In(a, vs) =>
-        val lits = vs.toSeq.map(jlit)
-        if (lits.nonEmpty && lits.forall(_.isDefined))
-          Seq(JObject(List(a -> JObject(List("$in" -> JArray(lits.flatten.toList))))))
-        else Nil
-      // Null checks prune directly: `IS NULL` keeps only files that may
-      // hold null rows (null partitions / nonzero-or-unknown null count);
-      // `IS NOT NULL` drops null partitions and all-null files — the
-      // shape every join key filter takes after Spark's null-safety
-      // rewrites, so it matters at scale.
-      case IsNull(a) => Seq(JObject(List(a -> JObject(List("$eq" -> JNull)))))
-      case IsNotNull(a) => Seq(JObject(List(a -> JObject(List("$ne" -> JNull)))))
-      // LIKE 'p%' prunes on untruncated string stats and partition values.
-      case StringStartsWith(a, p) =>
-        Seq(JObject(List(a -> JObject(List("$startsWith" -> JString(p))))))
-      case And(l, r) => conv(l) ++ conv(r)
-      // Disjunctions prune soundly branch-wise — see [[DeltaRelation.orJson]].
-      case Or(l, r) => orJson(conv(l), conv(r))
-      case _ => Nil // Not/null/string ops: no file skipping, still exact
-    }
-    val conjuncts = filters.toSeq.flatMap(conv)
-    if (conjuncts.isEmpty) JNothing
-    else JObject(List("$and" -> JArray(conjuncts.toList)))
-  }
+  /** The conjunction of the translatable `filters` — a file-skipping
+    * predicate ([[graft.delta.DataSkipping]]); a filter that does not
+    * translate only weakens it. */
+  def conjunction(filters: Seq[Filter]): Column =
+    filters.flatMap(toColumn).reduceOption(_ && _).getOrElse(lit(true))
 
   def forParameters(sqlContext: SQLContext,
                     parameters: Map[String, String]): BaseRelation = {

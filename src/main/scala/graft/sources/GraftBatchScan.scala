@@ -145,8 +145,8 @@ private[sources] final class GraftBatchScan(
       // files: the columnar/row decision and the skipped-file metric both
       // assume the refiltered set is a subset of the base plan's.
       val snap = basePlan.snapshot
-      val pruned = graft.delta.FilePruner.prune(
-        snap, DeltaRelation.pruneJson(runtimeFilters))
+      val pruned = graft.delta.DataSkipping.prune(
+        snap, DeltaRelation.conjunction(runtimeFilters.toSeq))
       val (parts, _) = GraftBatchScan.planFiles(
         spark, table, pruned, requiredPart.toIndexedSeq)
       GraftBatchScan.runtimeSkippedFiles.addAndGet(

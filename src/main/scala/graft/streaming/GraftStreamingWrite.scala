@@ -187,8 +187,7 @@ final class GraftDirectWrite(
         // region conflict. The snapshot is REGION-PRUNED like
         // DeltaTable.replaceWhere's, so only candidate files reach the
         // matched-file scan.
-        val snap0 = table.scanState(None,
-          graft.sources.ExprFilters.pruneJson(cond))
+        val snap0 = table.scanState(None, cond)
         table.commitReplaceWhereAdds(snap0, cond,
           prepared(messages, snap0),
           enforcedConstraints = enforcedConstraints, idAlloc = batchAlloc)

@@ -22,6 +22,16 @@ object Shims {
   def expression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
 
+  /** `condition` analyzed as a filter over `child` — the analysis a
+    * DataFrame `filter` runs, without building a DataFrame or its row
+    * encoder (the analyzer is `private[sql]`). */
+  def analyzeFilter(spark: SparkSession, condition: Expression,
+                    child: LogicalPlan): LogicalPlan =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+      .analyzer.executeAndCheck(
+        org.apache.spark.sql.catalyst.plans.logical.Filter(condition, child),
+        new org.apache.spark.sql.catalyst.QueryPlanningTracker)
+
   /** `schema` with every field, at every nesting level, nullable —
     * metadata kept (`asNullable` is `private[spark]`). */
   def asNullable(schema: org.apache.spark.sql.types.StructType)

@@ -42,8 +42,8 @@ class BloomIndexSpec extends SparkTestBase {
       active.map(f => s"${f.path}.bloom").toSet)
     val skippedBefore = BloomIndex.skipped.get()
     val probe = keys(123)
-    val pruned = t.scanState(None, org.json4s.jackson.JsonMethods.parse(
-      s"""{"k":{"$$eq":"$probe"}}"""))
+    val pruned = t.scanState(None, graft.query.MongoFilter.column(
+      s"""{"k":{"$$eq":"$probe"}}""", t.snapshot().schema))
     assert(pruned.activeFiles.size < 4,
       s"bloom should skip files for a point key (kept ${pruned.activeFiles.size})")
     assert(BloomIndex.skipped.get() > skippedBefore)
@@ -76,8 +76,8 @@ class BloomIndexSpec extends SparkTestBase {
     val (t2, keys) = uuidTable()
     // range predicates contribute no probe: all files kept (zone maps
     // overlap by construction), result exact
-    val all = t2.scanState(None, org.json4s.jackson.JsonMethods.parse(
-      """{"k":{"$gte":"0"}}"""))
+    val all = t2.scanState(None, graft.query.MongoFilter.column(
+      """{"k":{"$gte":"0"}}""", t2.snapshot().schema))
     assert(all.activeFiles.size == 4)
     assert(t2.query(s"""{"k":{"$$gte":"${keys.min}"}}""").count() == 2000)
   }
@@ -98,8 +98,8 @@ class BloomIndexSpec extends SparkTestBase {
     val (t, keys) = uuidTable()
     t.renameColumn("k", "key")
     // old sidecars still prune through the new logical name
-    val pruned = t.scanState(None, org.json4s.jackson.JsonMethods.parse(
-      s"""{"key":{"$$eq":"${keys(5)}"}}"""))
+    val pruned = t.scanState(None, graft.query.MongoFilter.column(
+      s"""{"key":{"$$eq":"${keys(5)}"}}""", t.snapshot().schema))
     assert(pruned.activeFiles.size < 4)
     assert(t.query(s"""{"key":"${keys(5)}"}""").count() == 1)
     // delete → CoW rewrite; vacuum with zero retention reclaims the old

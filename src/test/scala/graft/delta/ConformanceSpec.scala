@@ -326,8 +326,8 @@ class ConformanceSpec extends SparkTestBase {
     assert(t.version == 0)
     assert(t.toDF().count() == 11)
     // stats survived the checkpoint: zone-map pruning keeps only hi.parquet
-    val pruned = FilePruner.prune(t.snapshot(),
-      JsonMethods.parse("""{"id":{"$gte":100}}"""))
+    val pruned = DataSkipping.prune(t.snapshot(),
+      graft.query.MongoFilter.column("""{"id":{"$gte":100}}""", t.snapshot().schema))
     assert(pruned.map(_.path) == Seq("hi.parquet"))
     assert(t.query("""{"id":{"$gte":100}}""").count() == 6)
   }
@@ -508,8 +508,8 @@ class ConformanceSpec extends SparkTestBase {
     assert(t.toDF().count() == 4)
     // zone-map skipping from the foreign stats: only hi.parquet survives
     val snap = t.snapshot()
-    val pruned = FilePruner.prune(snap,
-      JsonMethods.parse("""{"id":{"$gte":50}}"""))
+    val pruned = DataSkipping.prune(snap,
+      graft.query.MongoFilter.column("""{"id":{"$gte":50}}""", snap.schema))
     assert(pruned.map(_.path) == Seq("hi.parquet"))
     assert(t.query("""{"id":{"$gte":50}}""").as[Int].collect().toSet ==
       Set(100, 200))

@@ -58,6 +58,32 @@ class CrashRecoverySpec extends SparkTestBase {
     assert(reopen(t).toDF().count() == 200)
   }
 
+  test("dangling _last_checkpoint above the distributed threshold: compaction and dynamic overwrite fall back") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-crash-big").toString
+    def big(): DeltaTable = {
+      val t = DeltaTable.forPath(spark, dir)
+      t.distributedSnapshotThreshold = 1 // every checkpoint routes distributed
+      t
+    }
+    val t = big()
+    t.checkpointInterval = 0 // manual
+    (0 until 4).foreach { k =>
+      t.write((k * 10 until (k + 1) * 10).map(i => (i.toLong, s"g${k % 2}"))
+        .toDF("id", "g"), partitionBy = Seq("g"))
+    }
+    t.checkpoint()
+    assert(t.log.fs.delete(t.log.checkpointFile(3), false))
+    // the pointer still claims version 3 and a size above the threshold
+    assert(t.log.readLastCheckpoint().exists(_._1 == 3))
+    val r = Maintenance.compact(big())
+    assert(r.filesCompacted >= 4)
+    assert(big().toDF().as[(Long, String)].collect().toSet ==
+      (0L until 40L).map(i => (i, s"g${(i / 10) % 2}")).toSet)
+    big().overwritePartitionsDynamic(Seq((100L, "g1")).toDF("id", "g"))
+    assert(big().toDF().as[(Long, String)].collect().toSet ==
+      (0L until 40L).filter(i => (i / 10) % 2 == 0).map(i => (i, "g0")).toSet + ((100L, "g1")))
+  }
+
   test("torn checkpoint falls back to an EARLIER complete checkpoint") {
     val t = freshTable()
     t.checkpoint() // complete at v2

@@ -91,8 +91,8 @@ class DeltaTableSpec extends SparkTestBase {
     assert(snap.activeFiles.forall(_.path.contains("country=")))
     assert(snap.activeFiles.exists(_.partitionValues.get("country").contains("US")))
     // partition pruning: only US files survive
-    val pruned = FilePruner.prune(snap,
-      org.json4s.jackson.JsonMethods.parse("""{"country":"US"}"""))
+    val pruned = DataSkipping.prune(snap,
+      graft.query.MongoFilter.column("""{"country":"US"}""", snap.schema))
     assert(pruned.nonEmpty && pruned.forall(_.partitionValues("country") == "US"))
     // query returns correct rows incl. partition column
     val got = t.query("""{"country":"US"}""").orderBy("id")
@@ -100,8 +100,8 @@ class DeltaTableSpec extends SparkTestBase {
       .as[(Int, String, Double)].collect().toSeq
     assert(got == Seq((1, "US", 10.0), (2, "US", 20.0)))
     // stats pruning on the data column
-    val pruned2 = FilePruner.prune(snap,
-      org.json4s.jackson.JsonMethods.parse("""{"amount":{"$gt":1000}}"""))
+    val pruned2 = DataSkipping.prune(snap,
+      graft.query.MongoFilter.column("""{"amount":{"$gt":1000}}""", snap.schema))
     assert(pruned2.isEmpty)
   }
 
@@ -111,8 +111,8 @@ class DeltaTableSpec extends SparkTestBase {
     t.write(Seq((1, Some("a")), (2, None), (3, Some("c"))).toDF("id", "s"))
     t.write(Seq((4, Some("d")), (5, Some("e"))).toDF("id", "s"))
     val snap = t.snapshot()
-    val f = org.json4s.jackson.JsonMethods.parse("""{"s":{"$eq":null}}""")
-    val pruned = FilePruner.prune(snap, f)
+    val f = graft.query.MongoFilter.column("""{"s":{"$eq":null}}""", snap.schema)
+    val pruned = DataSkipping.prune(snap, f)
     // The mixed file (nullCount=1) must survive; the null-free file may prune.
     assert(pruned.size == 1)
     assert(pruned.head.parsedStats.exists(_.nullCount.get("s").contains(1L)))
@@ -137,19 +137,14 @@ class DeltaTableSpec extends SparkTestBase {
       raw"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{6}")))
     // A $lte at EXACTLY the max bound must keep the file (old lexicographic
     // compare of '…T13:00' vs '…T13:00:00' pruned it).
-    val keep = FilePruner.prune(snap, org.json4s.jackson.JsonMethods.parse(
-      """{"ts":{"$gte":"2024-01-01T13:00:00"}}"""))
+    val keep = DataSkipping.prune(snap, graft.query.MongoFilter.column(
+      """{"ts":{"$gte":"2024-01-01T13:00:00"}}""", snap.schema))
     assert(keep.size == 1)
     assert(t.query("""{"ts":{"$gte":"2024-01-01T13:00:00"}}""")
       .selectExpr("id").as[Int].collect().toSeq == Seq(2))
-    // Mixed-precision literals canonicalize the same way.
-    assert(FilePruner.canonTs("2024-01-01T13:00") ==
-      FilePruner.canonTs("2024-01-01 13:00:00.000000"))
-    assert(FilePruner.canonTs("2024-01-01T13:00:00Z") ==
-      FilePruner.canonTs("2024-01-01T13:00"))
     // Out-of-range predicate still prunes everything.
-    assert(FilePruner.prune(snap, org.json4s.jackson.JsonMethods.parse(
-      """{"ts":{"$gt":"2024-01-01T13:00:00"}}""")).isEmpty)
+    assert(DataSkipping.prune(snap, graft.query.MongoFilter.column(
+      """{"ts":{"$gt":"2024-01-01T13:00:00"}}""", snap.schema)).isEmpty)
   }
 
   test("fallback checkpoint discovery recovers multi-part layout without the pointer") {
@@ -178,6 +173,16 @@ class DeltaTableSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { t.delete("""{"g":99}""") }
     // old version intact
     assert(t.asOf(r.version - 1).count() == 100)
+  }
+
+  test("Mongo delete keeps the rows its filter evaluates to NULL on") {
+    val t = tmpTable()
+    // one file holding a match, a non-match and a NULL the filter cannot
+    // decide: only the match may go
+    t.write(Seq((1, Some(10)), (2, Some(1)), (3, None)).toDF("id", "a").coalesce(1))
+    val r = t.delete("""{"a":{"$gt":5}}""")
+    assert(r.rowsAffected == 1)
+    assert(t.toDF().select("id").as[Int].collect().toSet == Set(2, 3))
   }
 
   test("update patches matching rows in place") {
@@ -280,8 +285,8 @@ class DeltaTableSpec extends SparkTestBase {
     }
     // pruning still works off the footer stats: selective range query reads
     // a strict subset of files
-    val pruned = FilePruner.prune(snap,
-      org.json4s.jackson.JsonMethods.parse("""{"id":{"$lte":3}}"""))
+    val pruned = DataSkipping.prune(snap,
+      graft.query.MongoFilter.column("""{"id":{"$lte":3}}""", snap.schema))
     assert(pruned.size < snap.activeFiles.size)
   }
 }

@@ -7,23 +7,27 @@ import java.nio.file.Files
 
 /**
  * The distributed snapshot path: checkpoint stays a DataFrame, the commit
- * tail reconciles via anti-join, FilePruner's exact predicate runs on
+ * tail reconciles via anti-join, the DataSkipping predicate runs on
  * executors, and only pruning survivors reach the driver. Equivalence is
  * asserted against the driver fast-path (Checkpoints.read + Snapshot.replay
- * + FilePruner.prune) on a synthetic 100k-file log — the scale shape the
+ * + DataSkipping.prune) on a synthetic 100k-file log — the scale shape the
  * round-6 verdict flagged as the last O(files) driver ceiling.
  */
 class DistributedSnapshotSpec extends SparkTestBase {
   import spark.implicits._
 
+  private val schema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("k",
+      org.apache.spark.sql.types.IntegerType),
+    org.apache.spark.sql.types.StructField("v",
+      org.apache.spark.sql.types.LongType)))
+
+  private def pred(filterJson: String) =
+    graft.query.MongoFilter.column(filterJson, schema)
+
   private def syntheticLog(nFiles: Int): DeltaLog = {
     val dir = Files.createTempDirectory("graft-distsnap").toString
     val log = new DeltaLog(new Path(dir), spark.sessionState.newHadoopConf())
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType)))
     val meta = TableMetadata("tid", schemaString = schema.json,
       partitionColumns = Seq("k"))
     val adds = (0 until nFiles).map { i =>
@@ -56,14 +60,14 @@ class DistributedSnapshotSpec extends SparkTestBase {
     val full = Snapshot.replay(base.copy(version = 1L),
       Iterator(1L -> log.readCommit(1)))
     full.copy(activeFiles =
-      FilePruner.prune(full, JsonMethods.parse(filterJson)))
+      DataSkipping.prune(full, pred(filterJson)))
   }
 
   test("100k-file log: distributed prune equals driver replay (partition filter)") {
     val log = syntheticLog(100000)
     val filter = """{"k":{"$eq":3}}"""
     val dist = DistributedSnapshot.prunedState(spark, log, 0L, None, 1L,
-      JsonMethods.parse(filter))
+      _ => pred(filter))._1
     val oracle = driverOracle(log, filter)
     assert(dist.activeFiles.map(f => (f.path, f.size)).sorted ==
       oracle.activeFiles.map(f => (f.path, f.size)).sorted)
@@ -83,7 +87,7 @@ class DistributedSnapshotSpec extends SparkTestBase {
     val log = syntheticLog(100000)
     val filter = """{"v":{"$lt":100}}"""
     val dist = DistributedSnapshot.prunedState(spark, log, 0L, None, 1L,
-      JsonMethods.parse(filter))
+      _ => pred(filter))._1
     val oracle = driverOracle(log, filter)
     assert(dist.activeFiles.map(_.path).sorted ==
       oracle.activeFiles.map(_.path).sorted)
@@ -98,7 +102,7 @@ class DistributedSnapshotSpec extends SparkTestBase {
   test("tail re-add overrides the checkpoint version of the file") {
     val log = syntheticLog(1000)
     val dist = DistributedSnapshot.prunedState(spark, log, 0L, None, 1L,
-      JsonMethods.parse("""{"k":{"$eq":7}}"""))
+      _ => pred("""{"k":{"$eq":7}}"""))._1
     val readd = dist.activeFiles.find(_.path == "k=7/part-7.parquet")
     assert(readd.map(_.size).contains(9999L))
   }

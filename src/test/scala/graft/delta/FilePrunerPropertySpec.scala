@@ -9,7 +9,7 @@ import org.scalacheck.Gen
  * Pruning-soundness property: for ANY filter the grammar can produce —
  * equality/ranges/$in/$nin/$ne over string partitions (incl. the null
  * marker), date partitions, and int zone-map stats, combined with
- * $and/$or/$not — [[FilePruner]] must never drop a file containing a row
+ * $and/$or/$not — [[DataSkipping]] must never drop a file containing a row
  * the query would return. Ground truth is the UNPRUNED scan filtered by
  * the Column translation (the engine's own row semantics), compared to the
  * union of rows in the kept files.
@@ -97,7 +97,8 @@ class FilePrunerPropertySpec extends SparkTestBase {
         org.scalacheck.rng.Seed(1000L + i)).getOrElse(JObject(Nil))
       val expected = full.filter(MongoFilter.translate(filter, schema))
         .select("id").as[Int].collect().toSet
-      val kept = FilePruner.prune(snap, filter).map(_.path).toSet
+      val kept = DataSkipping.prune(snap, MongoFilter.translate(filter, schema))
+        .map(_.path).toSet
       if (kept.size < rowsByFile.size) pruned += 1
       val keptIds = kept.flatMap(rowsByFile)
       val lost = expected -- keptIds
@@ -122,9 +123,9 @@ class FilePrunerPropertySpec extends SparkTestBase {
         org.apache.spark.sql.types.DoubleType)))
     val file = AddFile("x=0.10000000000000001/p.parquet",
       Map("x" -> "0.10000000000000001"), 1L, 1L)
-    def keeps(op: String, lit: JValue): Boolean =
-      FilePruner.compile(
-        JObject(List("x" -> JObject(List(op -> lit)))), Set("x"), schema)(file)
+    def keeps(op: String, lit: JValue, f: AddFile = file): Boolean =
+      DataSkipping.bind(MongoFilter.translate(
+        JObject(List("x" -> JObject(List(op -> lit)))), schema), schema, Seq("x"))(f)
     assert(keeps("$eq", JDouble(0.1)))   // value IS 0.1 → keep
     assert(keeps("$lte", JDouble(0.1)))  // boundary: 0.1 <= 0.1
     assert(keeps("$gte", JDouble(0.1)))
@@ -134,32 +135,33 @@ class FilePrunerPropertySpec extends SparkTestBase {
     assert(keeps("$in", JArray(List(JDouble(0.3), JDouble(0.1)))))
     // unparseable path stays a conservative keep
     val bad = AddFile("x=oops/p.parquet", Map("x" -> "oops"), 1L, 1L)
-    assert(FilePruner.compile(
-      JObject(List("x" -> JObject(List("$lte" -> JDouble(0.1))))),
-      Set("x"), schema)(bad))
+    assert(keeps("$lte", JDouble(0.1), bad))
+    assert(keeps("$gt", JDouble(0.1), bad))
+    assert(keeps("$gte", JDouble(0.1), bad))
+    assert(keeps("$eq", JDouble(0.1), bad))
   }
 
   test("regexLiteralPrefix extracts only safe anchored prefixes") {
-    assert(FilePruner.regexLiteralPrefix("^abc") == Some("abc"))
-    assert(FilePruner.regexLiteralPrefix("^abc.*def") == Some("abc"))
-    assert(FilePruner.regexLiteralPrefix("^ab(c|d)") == Some("ab"))
-    assert(FilePruner.regexLiteralPrefix("^ab[0-9]+") == Some("ab"))
-    assert(FilePruner.regexLiteralPrefix("^ab\\d") == Some("ab"))
+    assert(DataSkipping.regexLiteralPrefix("^abc") == Some("abc"))
+    assert(DataSkipping.regexLiteralPrefix("^abc.*def") == Some("abc"))
+    assert(DataSkipping.regexLiteralPrefix("^ab(c|d)") == Some("ab"))
+    assert(DataSkipping.regexLiteralPrefix("^ab[0-9]+") == Some("ab"))
+    assert(DataSkipping.regexLiteralPrefix("^ab\\d") == Some("ab"))
     // quantifier makes the last literal char optional
-    assert(FilePruner.regexLiteralPrefix("^abc?") == Some("ab"))
-    assert(FilePruner.regexLiteralPrefix("^abc*") == Some("ab"))
-    assert(FilePruner.regexLiteralPrefix("^abc{0,2}") == Some("ab"))
-    assert(FilePruner.regexLiteralPrefix("^abc+") == Some("abc"))
+    assert(DataSkipping.regexLiteralPrefix("^abc?") == Some("ab"))
+    assert(DataSkipping.regexLiteralPrefix("^abc*") == Some("ab"))
+    assert(DataSkipping.regexLiteralPrefix("^abc{0,2}") == Some("ab"))
+    assert(DataSkipping.regexLiteralPrefix("^abc+") == Some("abc"))
     // no pruning: unanchored, empty prefix, top-level alternation
-    assert(FilePruner.regexLiteralPrefix("abc") == None)
-    assert(FilePruner.regexLiteralPrefix("^.*abc") == None)
-    assert(FilePruner.regexLiteralPrefix("^a|b") == None)
-    assert(FilePruner.regexLiteralPrefix("^ab|cd") == None)
-    assert(FilePruner.regexLiteralPrefix("^a?") == None)
-    assert(FilePruner.regexLiteralPrefix("^") == None)
+    assert(DataSkipping.regexLiteralPrefix("abc") == None)
+    assert(DataSkipping.regexLiteralPrefix("^.*abc") == None)
+    assert(DataSkipping.regexLiteralPrefix("^a|b") == None)
+    assert(DataSkipping.regexLiteralPrefix("^ab|cd") == None)
+    assert(DataSkipping.regexLiteralPrefix("^a?") == None)
+    assert(DataSkipping.regexLiteralPrefix("^") == None)
     // class/escape containing | or ) stays prunable
-    assert(FilePruner.regexLiteralPrefix("^ab[|)]c") == Some("ab"))
-    assert(FilePruner.regexLiteralPrefix("^ab\\|c") == Some("ab"))
+    assert(DataSkipping.regexLiteralPrefix("^ab[|)]c") == Some("ab"))
+    assert(DataSkipping.regexLiteralPrefix("^ab\\|c") == Some("ab"))
   }
 
   test("prefix pruning ($startsWith) is sound on UTF-8 edge values") {
@@ -184,9 +186,8 @@ class FilePrunerPropertySpec extends SparkTestBase {
     for (p <- Seq("", "a", "ab", "abc", "ab", "b", "zz")) {
       val expected = vals.zipWithIndex
         .collect { case (Some(s), i) if s.startsWith(p) => i }.toSet
-      val filter = JObject(List("s" -> JObject(List(
-        "$startsWith" -> JString(p)))))
-      val kept = FilePruner.prune(snap, filter).map(_.path).toSet
+      val kept = DataSkipping.prune(snap,
+        org.apache.spark.sql.functions.col("s").startsWith(p)).map(_.path).toSet
       if (kept.size < rowsByFile.size) prunedSomething = true
       val lost = expected -- kept.flatMap(rowsByFile)
       assert(lost.isEmpty, s"prefix '$p' over-pruned: lost $lost")

@@ -123,7 +123,7 @@ class ReplaceWhereSpec extends SparkTestBase {
     // Read the region snapshot, then a racer appends rows INTO the region
     // before our commit — the tail scan must refuse, or the racer's rows
     // would silently survive a region this commit declares replaced.
-    val snap = t.scanState(None, org.json4s.JNothing)
+    val snap = t.scanState(None, org.apache.spark.sql.functions.lit(true))
     DeltaTable.forPath(spark, dir)
       .write(Seq((5, 1, "racer")).toDF("id", "g", "s"))
     intercept[WriteConflictException] {
@@ -131,7 +131,7 @@ class ReplaceWhereSpec extends SparkTestBase {
         tailAddConflict = Some(_.dataChange))
     }
     // A racer OUTSIDE the region (predicate says no overlap) commits fine.
-    val snap2 = t.scanState(None, org.json4s.JNothing)
+    val snap2 = t.scanState(None, org.apache.spark.sql.functions.lit(true))
     DeltaTable.forPath(spark, dir)
       .write(Seq((6, 9, "other")).toDF("id", "g", "s"))
     t.commitFileRewrite(snap2, Set.empty, Nil, "TEST-REPLACE",

@@ -204,7 +204,7 @@ class SqlDmlSpec extends SparkTestBase {
     // the pruner keeps file-count pressure off the scan: one partition dir read
     val dt = graft.delta.DeltaTable.forPath(spark, path)
     val pruned = dt.scanState(None,
-      org.json4s.jackson.JsonMethods.parse("""{"grp":"g1"}"""))
+      graft.query.MongoFilter.column("""{"grp":"g1"}""", dt.snapshot().schema))
     assert(pruned.activeFiles.nonEmpty &&
       pruned.activeFiles.forall(_.partitionValues.get("grp").contains("g1")))
   }

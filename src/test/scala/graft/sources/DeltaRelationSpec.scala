@@ -108,38 +108,38 @@ class DeltaRelationSpec extends SparkTestBase {
     val evens = spark.read.format("graft-delta").load(dir)
       .filter(col("par") === "even")
     assert(evens.count() == 20)
-    // the relation's source filters become a conservative FilePruner query:
+    // the relation's source filters become a conservative skipping predicate:
     // the par=odd files are skipped BEFORE Spark plans the scan
-    import graft.delta.FilePruner
+    import graft.delta.DataSkipping
     import org.apache.spark.sql.sources.{And => SAnd, EqualTo => SEq, GreaterThan => SGt}
     val snap = t.snapshot()
-    val prunedEq = FilePruner.prune(snap,
-      DeltaRelation.pruneJson(Array(SEq("par", "even"))))
+    val prunedEq = DataSkipping.prune(snap,
+      DeltaRelation.conjunction(Array(SEq("par", "even"))))
     assert(prunedEq.nonEmpty && prunedEq.forall(_.path.contains("par=even")))
     // zone maps prune on stats too: id > 1000 matches nothing
-    val prunedZone = FilePruner.prune(snap,
-      DeltaRelation.pruneJson(Array(SAnd(SEq("par", "even"), SGt("id", 1000)))))
+    val prunedZone = DataSkipping.prune(snap,
+      DeltaRelation.conjunction(Array(SAnd(SEq("par", "even"), SGt("id", 1000)))))
     assert(prunedZone.isEmpty)
     // prefix filters prune partitions (round 14): par LIKE 'e%' keeps
     // only the even partition
-    val prefix = FilePruner.prune(snap, DeltaRelation.pruneJson(
+    val prefix = DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(org.apache.spark.sql.sources.StringStartsWith("par", "e"))))
     assert(prefix.nonEmpty && prefix.forall(_.path.contains("par=even")))
     // null checks prune: no partition is null, so IS NULL keeps nothing
     // and IS NOT NULL keeps everything
-    assert(FilePruner.prune(snap, DeltaRelation.pruneJson(
+    assert(DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(org.apache.spark.sql.sources.IsNull("par")))).isEmpty)
-    assert(FilePruner.prune(snap, DeltaRelation.pruneJson(
+    assert(DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(org.apache.spark.sql.sources.IsNotNull("par")))).size ==
       snap.activeFiles.size)
     // untranslatable filters still prune nothing (conservative)
-    assert(FilePruner.prune(snap, DeltaRelation.pruneJson(
+    assert(DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(org.apache.spark.sql.sources.StringContains("par", "e")))).size ==
       snap.activeFiles.size)
   }
 
   test("date-partitioned ranges prune partitions; date/timestamp zone maps prune files") {
-    import graft.delta.FilePruner
+    import graft.delta.DataSkipping
     import org.apache.spark.sql.sources.{EqualTo => SEq, GreaterThanOrEqual => SGte, LessThan => SLt, Not => SNot}
     val dir = Files.createTempDirectory("graft-rel-dt").toString
     val days = Seq("2026-01-01", "2026-01-02", "2026-01-03")
@@ -155,34 +155,35 @@ class DeltaRelationSpec extends SparkTestBase {
     // PARTITION range pruning (round-13): `event_date >= DATE'2026-01-02'`
     // drops the 01-01 partition at plan time — the canonical daily-table
     // filter shape at 100 TB
-    val gte = FilePruner.prune(snap, DeltaRelation.pruneJson(
+    val gte = DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(SGte("event_date", java.sql.Date.valueOf("2026-01-02")))))
     assert(gte.nonEmpty && gte.forall(f =>
       f.path.contains("event_date=2026-01-02") ||
         f.path.contains("event_date=2026-01-03")), gte.map(_.path))
-    val lt = FilePruner.prune(snap, DeltaRelation.pruneJson(
+    val lt = DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(SLt("event_date", java.sql.Date.valueOf("2026-01-02")))))
     assert(lt.nonEmpty && lt.forall(_.path.contains("event_date=2026-01-01")))
     // $ne drops exactly the proven-equal partition
-    val ne = FilePruner.prune(snap, DeltaRelation.pruneJson(
+    val ne = DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(SNot(SEq("event_date", java.sql.Date.valueOf("2026-01-02"))))))
-    // Not(EqualTo) doesn't translate through pruneJson (conv drops Not) —
-    // drive the $ne form directly to pin partitionKeeps' behavior
+    // the Mongo $ne form prunes the same partition
     val neJson = org.json4s.JObject(List("$and" -> org.json4s.JArray(List(
       org.json4s.JObject(List("event_date" -> org.json4s.JObject(List(
         "$ne" -> org.json4s.JString("2026-01-02")))))))))
-    val neDirect = FilePruner.prune(snap, neJson)
-    assert(ne.size == snap.activeFiles.size, "Not() stays conservative in pruneJson")
+    val neDirect = DataSkipping.prune(snap,
+      graft.query.MongoFilter.translate(neJson, snap.schema))
+    assert(ne.nonEmpty && ne.forall(f => !f.path.contains("event_date=2026-01-02")),
+      "Not(EqualTo) drops the proven-equal partition")
     assert(neDirect.nonEmpty && neDirect.forall(f => !f.path.contains("event_date=2026-01-02")))
 
     // TIMESTAMP zone-map pruning: ts >= 03:00 on 01-03 keeps only the
     // third day's files (each partition's files carry ts footer stats)
-    val tsGte = FilePruner.prune(snap, DeltaRelation.pruneJson(
+    val tsGte = DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(SGte("ts", java.sql.Timestamp.valueOf("2026-01-03 03:00:00")))))
     assert(tsGte.nonEmpty && tsGte.forall(_.path.contains("event_date=2026-01-03")),
       tsGte.map(_.path))
     // and the whole-range filter keeps everything (no over-pruning)
-    assert(FilePruner.prune(snap, DeltaRelation.pruneJson(
+    assert(DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(SGte("ts", java.sql.Timestamp.valueOf("2025-12-31 00:00:00"))))).size ==
       snap.activeFiles.size)
   }
@@ -193,7 +194,7 @@ class DeltaRelationSpec extends SparkTestBase {
     // partition path value ('2026-01-03 03:00:00'), so $eq pruned EVERY
     // file and the query silently returned zero rows. Equality now routes
     // through the same typed comparator as the ranges.
-    import graft.delta.FilePruner
+    import graft.delta.DataSkipping
     import org.apache.spark.sql.sources.{EqualTo => SEq, In => SIn}
     val dir = Files.createTempDirectory("graft-rel-tseq").toString
     def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
@@ -206,20 +207,20 @@ class DeltaRelationSpec extends SparkTestBase {
     assert(snap.activeFiles.size >= 3)
 
     // $eq keeps exactly the matching timestamp partition
-    val eq = FilePruner.prune(snap, DeltaRelation.pruneJson(
+    val eq = DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(SEq("ts_part", ts("2026-01-03T03:00:00Z")))))
     assert(eq.nonEmpty, "timestamp $eq over-pruned to zero files")
     assert(eq.forall(_.partitionValues("ts_part").startsWith("2026-01-03 03")),
       eq.map(_.path))
     // $in keeps the union of matching partitions
-    val in = FilePruner.prune(snap, DeltaRelation.pruneJson(Array(SIn("ts_part",
+    val in = DataSkipping.prune(snap, DeltaRelation.conjunction(Array(SIn("ts_part",
       Array(ts("2026-01-03T01:00:00Z"), ts("2026-01-03T05:00:00Z"))))))
     assert(in.nonEmpty && in.forall { f =>
       val v = f.partitionValues("ts_part")
       v.startsWith("2026-01-03 01") || v.startsWith("2026-01-03 05")
     }, in.map(_.path))
     // date partition equality prunes to one day
-    val deq = FilePruner.prune(snap, DeltaRelation.pruneJson(
+    val deq = DataSkipping.prune(snap, DeltaRelation.conjunction(
       Array(SEq("d_part", java.sql.Date.valueOf("2026-01-02")))))
     assert(deq.nonEmpty && deq.forall(_.partitionValues("d_part") == "2026-01-02"),
       deq.map(_.path))
@@ -251,7 +252,7 @@ class DeltaRelationSpec extends SparkTestBase {
   }
 
   test("OR of partition predicates prunes disjunctively (round 14)") {
-    import graft.delta.FilePruner
+    import graft.delta.DataSkipping
     import org.apache.spark.sql.sources.{EqualTo => SEq, GreaterThan => SGt, Or => SOr, StringStartsWith}
     val dir = Files.createTempDirectory("graft-rel-or").toString
     (1 to 30).map(i => (i, s"2026-01-0${(i - 1) / 10 + 1}", i * 10))
@@ -261,7 +262,7 @@ class DeltaRelationSpec extends SparkTestBase {
     val snap = DeltaTable.forPath(spark, dir).snapshot()
 
     // date = X OR date = Y keeps exactly those two partitions
-    val or2 = FilePruner.prune(snap, DeltaRelation.pruneJson(Array(SOr(
+    val or2 = DataSkipping.prune(snap, DeltaRelation.conjunction(Array(SOr(
       SEq("event_date", java.sql.Date.valueOf("2026-01-01")),
       SEq("event_date", java.sql.Date.valueOf("2026-01-03"))))))
     assert(or2.nonEmpty && or2.forall(f =>
@@ -271,7 +272,7 @@ class DeltaRelationSpec extends SparkTestBase {
 
     // a partition branch OR a zone-map branch: files survive if EITHER
     // side may match (date partition 01-01, or v stats admitting > 250)
-    val mixed = FilePruner.prune(snap, DeltaRelation.pruneJson(Array(SOr(
+    val mixed = DataSkipping.prune(snap, DeltaRelation.conjunction(Array(SOr(
       SEq("event_date", java.sql.Date.valueOf("2026-01-01")),
       SGt("v", 250)))))
     assert(mixed.nonEmpty && mixed.forall(f =>
@@ -279,7 +280,7 @@ class DeltaRelationSpec extends SparkTestBase {
         f.path.contains("event_date=2026-01-03")), mixed.map(_.path))
 
     // an untranslatable branch makes the whole OR vacuous: prune nothing
-    assert(FilePruner.prune(snap, DeltaRelation.pruneJson(Array(SOr(
+    assert(DataSkipping.prune(snap, DeltaRelation.conjunction(Array(SOr(
       SEq("event_date", java.sql.Date.valueOf("2026-01-01")),
       StringStartsWith("event_date", "2026"))))).size == snap.activeFiles.size)
 
@@ -287,7 +288,7 @@ class DeltaRelationSpec extends SparkTestBase {
     val mongoOr = org.json4s.JObject(List("$or" -> org.json4s.JArray(List(
       org.json4s.JObject(List("event_date" -> org.json4s.JString("2026-01-01"))),
       org.json4s.JObject(List("event_date" -> org.json4s.JString("2026-01-03")))))))
-    val m = FilePruner.prune(snap, mongoOr)
+    val m = DataSkipping.prune(snap, graft.query.MongoFilter.translate(mongoOr, snap.schema))
     assert(m.nonEmpty && m.forall(f =>
       f.path.contains("event_date=2026-01-01") ||
         f.path.contains("event_date=2026-01-03")), m.map(_.path))

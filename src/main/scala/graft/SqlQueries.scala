@@ -349,7 +349,7 @@ object SqlQueries {
   /** Distributed metadata fold (round 16, the threshold=1 twin of s43):
     * with `spark.graft.distributedSnapshotThreshold=1` and a checkpoint
     * base, the aggregate-under-claimed-WHERE answers through the
-    * COMBINE-FORM fold ([[graft.delta.DistributedSnapshot.foldAggregates]])
+    * distributed fold ([[graft.delta.DistributedSnapshot.foldAggregates]])
     * — per-file contributions merged on executors, no claimed file list on
     * the driver. The result is materialized INSIDE the threshold window
     * (the driver contract re-executes returned plans later, when the
@@ -771,7 +771,7 @@ object SqlQueries {
 
   /** GROUP-BY-partition aggregate pushdown (round 10): one row per
     * partition group, COUNT/MIN/MAX folded from the log's per-file stats
-    * and `partitionValues` ([[graft.delta.StatsAggregates.answerGrouped]]),
+    * and `partitionValues` ([[graft.delta.StatsAggregates.Fold]]),
     * after a deletion-vector DELETE empties one partition entirely — that
     * group must VANISH (SQL emits no empty groups) and the surviving
     * counts must subtract DV cardinalities exactly. DuckDB computes the

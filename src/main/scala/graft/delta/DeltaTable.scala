@@ -342,27 +342,16 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
 
   /** Never-materializing metadata-aggregate fold for tables ABOVE the
     * snapshot threshold ([[DistributedSnapshot.foldAggregates]]): outer
-    * None = table is small / no complete checkpoint (caller takes the
-    * driver fold); inner Option is the fold's own exactness verdict. */
+    * None = table is small / no complete checkpoint (caller folds on the
+    * driver); inner Option is the fold's own exactness verdict. */
   private[graft] def distributedAggregates(versionOpt: Option[Long],
-      claimed: Seq[org.apache.spark.sql.sources.Filter], schema: StructType,
-      aggs: Seq[StatsAggregates.StatAgg]): Option[Option[Seq[Any]]] = {
-    val target = versionOpt.getOrElse(log.latestVersion())
-    distributedCheckpoint(target).map { case (cv, parts) =>
-      DistributedSnapshot.foldAggregates(spark, log, cv, parts, target,
-        claimed, schema, aggs)
-    }
-  }
-
-  /** Grouped twin of [[distributedAggregates]]. */
-  private[graft] def distributedGroupedAggregates(versionOpt: Option[Long],
       claimed: Seq[org.apache.spark.sql.sources.Filter], schema: StructType,
       groupCols: Seq[String],
       aggs: Seq[StatsAggregates.StatAgg]): Option[Option[Seq[Seq[Any]]]] = {
     val target = versionOpt.getOrElse(log.latestVersion())
     distributedCheckpoint(target).map { case (cv, parts) =>
-      DistributedSnapshot.foldGroupedAggregates(spark, log, cv, parts,
-        target, claimed, schema, groupCols, aggs)
+      DistributedSnapshot.foldAggregates(spark, log, cv, parts, target,
+        claimed, schema, groupCols, aggs)
     }
   }
 

@@ -201,97 +201,36 @@ object DistributedSnapshot {
     meta.copy(activeFiles = cpSurvivors ++ raw.tailFiles.filter(keep))
   }
 
-  /** NEVER-MATERIALIZING metadata fold (round 16): COUNT/MIN/MAX over the
-    * active files at `target` that every CLAIMED filter decides True on,
-    * computed as per-file contributions merged ASSOCIATIVELY on executors
-    * ([[StatsAggregates.contribute]]/[[StatsAggregates.merge]]) — driver
-    * traffic is ONE [[StatsAggregates.Partial]] (a few values) per RDD
-    * partition plus the commit tail, at ANY file count. This beats the
-    * prior floor (collect the post-prune survivors, fold driver-side,
-    * bounded by Spark's own scan planning) because a metadata-answered
-    * aggregate never plans a scan at all: nothing justified an O(matching
-    * files) driver list except the fold's old shape.
+  /** NEVER-MATERIALIZING metadata fold (round 16): COUNT/MIN/MAX, global
+    * or GROUP BY partition columns, over the active files at `target` that
+    * every CLAIMED filter decides True on. The bound
+    * [[StatsAggregates.Fold]] runs on executors, one `over` per RDD
+    * partition, and its states merge on the driver with the commit tail's:
+    * driver traffic is one state per partition (a few values per group),
+    * never O(files). A metadata-answered aggregate never plans a scan, so
+    * nothing justifies an O(matching files) driver list.
     *
     * `claimed` filters are exact-decidable by contract (claimDecided
     * verified them); a file keeps iff every one evaluates True. None =
-    * refused (same exactness rules as the driver fold — the caller falls
-    * back to the scan). */
+    * refused (the caller falls back to the scan). */
   def foldAggregates(spark: SparkSession, log: DeltaLog, cpVersion: Long,
                      parts: Option[Int], target: Long,
                      claimed: Seq[org.apache.spark.sql.sources.Filter],
-                     schema: StructType,
-                     aggs: Seq[StatsAggregates.StatAgg]): Option[Seq[Any]] = {
+                     schema: StructType, groupCols: Seq[String],
+                     aggs: Seq[StatsAggregates.StatAgg]): Option[Seq[Seq[Any]]] = {
     val raw = rawState(spark, log, cpVersion, parts, target)
     val partCols = raw.metadata.map(_.partitionColumns).getOrElse(Nil).toSet
-    if (aggs.isEmpty ||
-        aggs.exists(StatsAggregates.staticallyRefused(_, partCols, schema)))
-      return None
-    val aggsIdx = aggs.toIndexedSeq
+    val fold = StatsAggregates.bind(schema, partCols, groupCols, aggs)
+      .getOrElse(return None)
     val selects = PartitionFilters.selects(claimed, partCols, schema)
     def keep(f: AddFile): Boolean = selects(f.partitionValues)
-    val zero = StatsAggregates.identityPartial(aggsIdx)
-    val partials: Array[StatsAggregates.Partial] =
-      raw.baseAddJson.rdd.mapPartitions { it =>
-        var acc = zero
-        it.foreach { js =>
-          val f = Actions.parseAdd(JsonMethods.parse(js))
-          if (keep(f)) acc = StatsAggregates.merge(acc,
-            StatsAggregates.contribute(f, partCols, schema, aggsIdx),
-            aggsIdx, schema)
-        }
-        Iterator.single(acc)
-      }.collect()
-    var acc = zero
-    partials.foreach(p => acc = StatsAggregates.merge(acc, p, aggsIdx, schema))
-    raw.tailFiles.filter(keep).foreach(f => acc = StatsAggregates.merge(acc,
-      StatsAggregates.contribute(f, partCols, schema, aggsIdx), aggsIdx, schema))
-    val out = StatsAggregates.finish(acc, partCols, schema, aggsIdx)
+    val states = raw.baseAddJson.rdd.mapPartitions { it =>
+      Iterator.single(fold.over(
+        it.map(js => Actions.parseAdd(JsonMethods.parse(js))).filter(keep)))
+    }.collect()
+    val tail = fold.over(raw.tailFiles.filter(keep))
     StatsAggregates.distributedFolds.incrementAndGet()
-    if (out.isDefined) StatsAggregates.answered.incrementAndGet()
-    out
-  }
-
-  /** Grouped twin of [[foldAggregates]]: GROUP BY partition columns as
-    * per-group Partials merged on executors — driver traffic is O(groups)
-    * per RDD partition (partition-value cardinality), never O(files). */
-  def foldGroupedAggregates(spark: SparkSession, log: DeltaLog,
-                            cpVersion: Long, parts: Option[Int], target: Long,
-                            claimed: Seq[org.apache.spark.sql.sources.Filter],
-                            schema: StructType, groupCols: Seq[String],
-                            aggs: Seq[StatsAggregates.StatAgg]): Option[Seq[Seq[Any]]] = {
-    val raw = rawState(spark, log, cpVersion, parts, target)
-    val partCols = raw.metadata.map(_.partitionColumns).getOrElse(Nil).toSet
-    if (aggs.isEmpty || groupCols.isEmpty ||
-        !groupCols.forall(partCols.contains) ||
-        aggs.exists(StatsAggregates.staticallyRefused(_, partCols, schema)))
-      return None
-    val aggsIdx = aggs.toIndexedSeq
-    val groupColsIdx = groupCols.toIndexedSeq
-    val selects = PartitionFilters.selects(claimed, partCols, schema)
-    def keep(f: AddFile): Boolean = selects(f.partitionValues)
-    val partials: Array[StatsAggregates.GroupedPartial] =
-      raw.baseAddJson.rdd.mapPartitions { it =>
-        var acc = StatsAggregates.identityGrouped
-        it.foreach { js =>
-          val f = Actions.parseAdd(JsonMethods.parse(js))
-          if (keep(f)) acc = StatsAggregates.mergeGrouped(acc,
-            StatsAggregates.contributeGrouped(f, groupColsIdx, partCols,
-              schema, aggsIdx), aggsIdx, schema)
-        }
-        Iterator.single(acc)
-      }.collect()
-    var acc = StatsAggregates.identityGrouped
-    partials.foreach(p =>
-      acc = StatsAggregates.mergeGrouped(acc, p, aggsIdx, schema))
-    raw.tailFiles.filter(keep).foreach(f =>
-      acc = StatsAggregates.mergeGrouped(acc,
-        StatsAggregates.contributeGrouped(f, groupColsIdx, partCols,
-          schema, aggsIdx), aggsIdx, schema))
-    val out = StatsAggregates.finishGrouped(acc, partCols, schema,
-      groupColsIdx, aggsIdx)
-    StatsAggregates.distributedFolds.incrementAndGet()
-    if (out.isDefined) StatsAggregates.answered.incrementAndGet()
-    out
+    fold.finish(states.foldLeft(tail)(fold.merge))
   }
 
   /** Distributed CLAIMABILITY check (round 15 — the driver claim switches

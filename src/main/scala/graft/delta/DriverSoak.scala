@@ -109,26 +109,37 @@ object DriverSoak {
       require(big.lastQueryDistributed, "scan did not take the distributed path")
     }
 
-    // ---- metadata fold: combine-form aggregates over 10⁶ files -----------
-    // The round-16 never-materializing path: COUNT(*) claimed to one
-    // partition and over the whole table, folded as per-RDD-partition
-    // Partials. Under the 1 GB cap a driver-side file list (10⁶ AddFiles)
-    // would OOM here — completing is the heap audit.
+    // ---- metadata fold: distributed aggregates over 10⁶ files ------------
+    // The never-materializing path: COUNT(*) claimed to one partition, over
+    // the whole table and GROUP BY k, folded as per-RDD-partition states.
+    // Under the 1 GB cap a driver-side file list (10⁶ AddFiles) would OOM
+    // here — completing is the heap audit.
     phase("metadata-fold") {
       val schema = org.apache.spark.sql.types.DataType
         .fromJson(realSnap.metadata.get.schemaString)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val claimed = DistributedSnapshot.foldAggregates(spark, big.log,
-        realSnap.version, None, big.version,
-        Seq(org.apache.spark.sql.sources.EqualTo("k", 999)), schema,
-        Seq(StatsAggregates.CountStar))
-      require(claimed.contains(Seq(realRows)),
+      def countStar(claimed: Seq[org.apache.spark.sql.sources.Filter],
+                    groupCols: Seq[String]) =
+        DistributedSnapshot.foldAggregates(spark, big.log, realSnap.version,
+          None, big.version, claimed, schema, groupCols,
+          Seq(StatsAggregates.CountStar))
+      val claimed = countStar(Seq(org.apache.spark.sql.sources.EqualTo("k", 999)), Nil)
+      require(claimed.contains(Seq(Seq(realRows))),
         s"claimed metadata fold returned $claimed, expected $realRows")
-      val total = DistributedSnapshot.foldAggregates(spark, big.log,
-        realSnap.version, None, big.version, Nil, schema,
-        Seq(StatsAggregates.CountStar))
-      require(total.contains(Seq(nSynthetic.toLong * 10 + realRows)),
+      val total = countStar(Nil, Nil)
+      require(total.contains(Seq(Seq(nSynthetic.toLong * 10 + realRows))),
         s"whole-table metadata fold returned $total")
+      // synthetic files spread over k = 0..49, the real ones sit in k=999
+      val grouped = countStar(Nil, Seq("k")).getOrElse(
+        sys.error("grouped metadata fold refused"))
+      val groups = math.min(nSynthetic, 50) + 1
+      require(grouped.size == groups,
+        s"grouped metadata fold returned ${grouped.size} groups, expected $groups")
+      val rows = grouped.map(_(1).asInstanceOf[Long]).sum
+      require(rows == nSynthetic.toLong * 10 + realRows,
+        s"grouped metadata fold counted $rows rows")
+      require(grouped.exists(r => r == Seq(999, realRows)),
+        s"grouped metadata fold lost the real partition: ${grouped.takeRight(3)}")
     }
 
     // ---- DML: CoW delete restricted to the real partition ----------------

@@ -9,36 +9,49 @@ import scala.util.control.NonFatal
 
 /**
  * Metadata-only aggregate evaluation from the transaction log's per-file
- * stats: `COUNT(*)` / `COUNT(col)` / `MIN(col)` / `MAX(col)` over a whole
- * table answered without touching a single data file.
+ * stats: `COUNT(*)` / `COUNT(col)` / `MIN(col)` / `MAX(col)`, globally or
+ * `GROUP BY` partition columns, answered without touching a single data
+ * file.
  *
  * At 100 TB this is structural, not incremental: `SELECT COUNT(*) FROM t`
  * otherwise schedules a scan over every file (Spark's parquet count still
  * opens each footer), while the log already carries exact `numRecords` per
- * file. The fold here is O(active files) on the driver — the same order of
- * work as planning the scan it replaces (Spark's own FileIndex enumerates
- * the file list on the driver too).
+ * file.
+ *
+ * One algebra serves every route. [[bind]] resolves the group columns and
+ * aggregates against the schema once on the driver and returns a
+ * serializable [[Fold]]: a per-file `contribute`, an associative `merge`
+ * and a `finish` that yields the rows. Below the distributed-snapshot
+ * threshold the driver folds the claimed files locally; above it
+ * [[DistributedSnapshot.foldAggregates]] folds each RDD partition on an
+ * executor and merges the partials on the driver, so the file list never
+ * materializes.
  *
  * Conservative by construction — `None` (refuse, fall back to the scan)
  * unless EXACTNESS is provable:
- *  - every active file must carry parseable stats with `numRecords`;
- *  - `COUNT(*)` under deletion vectors subtracts the DV's exact
- *    `cardinality`; a DV without a parseable cardinality refuses;
- *  - `COUNT(col)` / `MIN` / `MAX` refuse when ANY file has a DV (deleted
- *    rows could hold the extremum / be the non-null rows);
- *  - `MIN`/`MAX` refuse float/double columns (file stats exclude NaN, but
- *    Spark's `max` orders NaN above every value — a NaN row would make the
- *    stats answer wrong), and need min+max present for every file that is
- *    not provably all-null for the column (so dropped stats — long
+ *  - every file must carry parseable stats with `numRecords`, and a DV
+ *    must carry a parseable `cardinality` (its surviving rows are
+ *    `numRecords` − cardinality);
+ *  - `COUNT(col)` / `MIN` / `MAX` of a data column refuse when any file of
+ *    the group has a DV (deleted rows could hold the extremum / be the
+ *    non-null rows);
+ *  - `MIN`/`MAX` refuse float/double data columns (file stats exclude NaN,
+ *    but Spark's `max` orders NaN above every value — a NaN row would make
+ *    the stats answer wrong), and need min+max present for every file that
+ *    is not provably all-null for the column (so dropped stats — long
  *    strings, decimals, renamed-away columns in old files — refuse);
  *  - partition columns carry no min/max stats but their values live in
  *    `partitionValues`, one per file — and since EVERY row of a file
  *    shares that value, partition-column `COUNT(col)`/`MIN`/`MAX` stay
  *    exact even under DVs (any file with a surviving row still exhibits
- *    its value; counts subtract DV cardinalities). Values decode through
- *    [[PartitionPaths.decoder]] (the scan's own decoder) and order by
- *    Spark's ordering for the type; integral, date and string partition
- *    columns fold, anything else refuses.
+ *    its value). Values decode through [[PartitionPaths.decoder]] (the
+ *    scan's own decoder) and order by Spark's ordering for the type;
+ *    integral, date and string partition columns fold, anything else
+ *    refuses;
+ *  - `GROUP BY` only over such partition columns. A group with no
+ *    surviving row vanishes (SQL emits no empty groups) without its
+ *    aggregates being checked; any other group that cannot be answered
+ *    refuses the whole query.
  *
  * The reference engine has no metadata-only aggregate path (every query
  * plans a scan, src/delta/table.ts:694); this is a Spark-side scale
@@ -59,205 +72,160 @@ object StatsAggregates {
     * not per aggregate). */
   val answered = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Test/inspection hook: distributed folds since JVM start — the
+    * never-materializing path's run counter. */
+  val distributedFolds = new java.util.concurrent.atomic.AtomicLong(0)
+
   private def dvCardinality(f: AddFile): Option[Long] =
     f.deletionVector.fold(Option(0L))(DeletionVectors.descriptorCardinality)
 
-  /** Stats must exist for every file — one statless file (foreign writer,
-    * pre-stats history) poisons exactness for every aggregate kind. */
-  private def parseAll(files: Seq[AddFile]): Option[Seq[(AddFile, FileStats)]] =
-    Some(files.map { f =>
-      f.parsedStats match {
-        case Some(st) => (f, st)
-        case None => return None
-      }
-    })
-
-  /** External-type result values for `aggs` over the snapshot's active
-    * files, or None when any aggregate cannot be answered exactly.
-    * Values use Spark's external row types (java.sql.Timestamp /
-    * java.sql.Date / LocalDateTime), matching what a V1 relation's
-    * Row-encoder conversion expects. */
-  def answer(snap: Snapshot, schema: StructType,
-             aggs: Seq[StatAgg]): Option[Seq[Any]] =
-    answerFiles(snap.activeFiles, snap.partitionColumns.toSet, schema, aggs)
-
-  /** [[answer]] over an explicit file subset — the claimed-partition-filter
-    * path: `SELECT count(*) WHERE <exact partition predicate>` folds the
-    * matching files' stats without a scan. */
-  def answerFiles(files: Seq[AddFile], partCols: Set[String],
-                  schema: StructType, aggs: Seq[StatAgg]): Option[Seq[Any]] = {
-    val stats = parseAll(files).getOrElse(return None)
-    val out = fold(stats, partCols, schema, aggs)
-    if (out.isDefined) answered.incrementAndGet()
-    out
+  /** Partition types whose decoded values fold into MIN/MAX results and
+    * GROUP BY keys. Float and double do not fold: -0.0 and 0.0 are
+    * distinct path values that Spark orders and groups as equal. */
+  private def foldablePartition(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType | StringType => true
+    case _ => false
   }
 
-  /** GROUP BY over PARTITION columns, answered per partition-value group:
-    * one output row per group with a surviving row (SQL emits no empty
-    * groups — a fully-DV-deleted partition must disappear), values
-    * `groupCols ++ aggs` in order. Same exactness contract as [[answer]],
-    * applied per group; any unprovable group refuses the whole query. */
-  def answerGrouped(snap: Snapshot, schema: StructType, groupCols: Seq[String],
-                    aggs: Seq[StatAgg]): Option[Seq[Seq[Any]]] =
-    answerGroupedFiles(snap.activeFiles, snap.partitionColumns.toSet,
-      schema, groupCols, aggs)
-
-  /** [[answerGrouped]] over an explicit file subset (claimed filters). */
-  def answerGroupedFiles(files: Seq[AddFile], partCols: Set[String],
-                         schema: StructType, groupCols: Seq[String],
-                         aggs: Seq[StatAgg]): Option[Seq[Seq[Any]]] = {
-    if (groupCols.isEmpty || !groupCols.forall(partCols.contains)) return None
-    val gFields = groupCols.map(n =>
-      schema.fields.find(_.name == n).getOrElse(return None))
-    val stats = parseAll(files).getOrElse(return None)
-    val grouped = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[Any], scala.collection.mutable.Buffer[(AddFile, FileStats)]]
-    stats.foreach { case (f, st) =>
-      val key = gFields.map(fld => partValue(f, fld).getOrElse(return None))
-      grouped.getOrElseUpdate(key,
-        scala.collection.mutable.Buffer.empty[(AddFile, FileStats)]) += ((f, st))
+  /** The fold of `aggs` grouped by `groupCols` (empty: one global row),
+    * or None when the query is refused before any file is read: a group
+    * column that is not a foldable partition column, an aggregate over a
+    * missing column, a data-column MIN/MAX over float/double, a partition
+    * MIN/MAX of a type that does not fold. */
+  def bind(schema: StructType, partCols: Set[String], groupCols: Seq[String],
+           aggs: Seq[StatAgg]): Option[Fold] = {
+    def field(n: String): Option[StructField] = schema.fields.find(_.name == n)
+    def extremum(agg: StatAgg, n: String): Option[Bound] =
+      field(n).filter { f =>
+        if (partCols(n)) foldablePartition(f.dataType)
+        else f.dataType != FloatType && f.dataType != DoubleType
+      }.map(Bound(agg, _, partCols(n)))
+    val groupFields = groupCols.map(n => field(n)
+      .filter(f => partCols(n) && foldablePartition(f.dataType))
+      .getOrElse(return None))
+    val bound = aggs.map {
+      case CountStar => Bound(CountStar, null, part = false)
+      case a @ CountCol(n) => field(n).map(Bound(a, _, partCols(n))).getOrElse(return None)
+      case a @ MinCol(n, _) => extremum(a, n).getOrElse(return None)
+      case a @ MaxCol(n, _) => extremum(a, n).getOrElse(return None)
     }
-    val rows = grouped.toSeq.flatMap { case (key, fs) =>
-      var survivors = 0L
-      fs.foreach { case (f, st) =>
-        survivors += st.numRecords - dvCardinality(f).getOrElse(return None)
-      }
-      if (survivors == 0) None
-      else {
-        val keyVals = key.zip(gFields)
-          .map { case (k, fld) => convertToScala(k, fld.dataType) }
-        val aggVals = fold(fs.toSeq, partCols, schema, aggs).getOrElse(return None)
-        Some(keyVals ++ aggVals)
-      }
-    }
-    answered.incrementAndGet()
-    Some(rows)
+    Some(new Fold(groupFields.toIndexedSeq, bound.toIndexedSeq))
   }
 
-  /** The exact-fold core over one file subset; see [[answer]] for the
-    * refusal rules. */
-  private def fold(stats: Seq[(AddFile, FileStats)], partCols: Set[String],
-                   schema: StructType, aggs: Seq[StatAgg]): Option[Seq[Any]] = {
-    val anyDv = stats.exists(_._1.deletionVector.nonEmpty)
+  /** One aggregate bound to its column (`field` is null for COUNT(*));
+    * `part` tells whether the column is a partition column. */
+  private final case class Bound(agg: StatAgg, field: StructField, part: Boolean) {
+    @transient private lazy val ordering = TypeUtils.getInterpretedOrdering(field.dataType)
+    private val isCount = agg match {
+      case CountStar | _: CountCol => true
+      case _ => false
+    }
+    private val wantMax = agg.isInstanceOf[MaxCol]
 
-    def schemaField(name: String): Option[StructField] =
-      schema.fields.find(_.name == name)
+    /** Reads data-column stats, which still count the rows a DV deleted. */
+    def readsDataStats: Boolean = agg != CountStar && !part
 
-    def field(name: String): Option[StructField] =
-      schemaField(name).filterNot(f => partCols.contains(f.name))
+    def identity: Any = if (isCount) 0L else null
 
-    def countStar(): Option[Any] = {
-      var total = 0L
-      stats.foreach { case (f, st) =>
-        dvCardinality(f) match {
-          case Some(c) => total += st.numRecords - c
-          case None => return None
-        }
-      }
-      Some(total)
+    /** One file's contribution: a count, or the file's best decoded value
+      * (null: none). None refuses. */
+    def of(f: AddFile, st: FileStats, survivors: Long): Option[Any] = agg match {
+      case CountStar => Some(survivors)
+      case CountCol(n) if part => f.partitionValues.get(n)
+        .map(v => if (v == PartitionPaths.NullMarker) 0L else survivors)
+      case CountCol(n) => st.nullCount.get(n).map(st.numRecords - _)
+      case _ if part => if (survivors <= 0) Some(null) else partValue(f, field)
+      case _ => statBound(st, field.name, field.dataType, wantMax)
     }
 
-    def countCol(name: String): Option[Any] = {
-      if (partCols.contains(name)) return partCount(name)
-      if (anyDv || field(name).isEmpty) return None
-      var total = 0L
-      stats.foreach { case (_, st) =>
-        st.nullCount.get(name) match {
-          case Some(nc) => total += st.numRecords - nc
-          case None => return None
-        }
-      }
-      Some(total)
-    }
+    def combine(a: Any, b: Any): Any =
+      if (isCount) a.asInstanceOf[Long] + b.asInstanceOf[Long]
+      else if (a == null) b
+      else if (b == null) a
+      else if ((ordering.compare(a, b) > 0) == wantMax) a
+      else b
 
-    // ---- partition-column aggregates (exact even under DVs) ----------------
-
-    def partCount(name: String): Option[Any] = {
-      if (schemaField(name).isEmpty) return None
-      var total = 0L
-      stats.foreach { case (f, st) =>
-        f.partitionValues.get(name) match {
-          case None => return None // foreign writer omitted the value
-          case Some(PartitionPaths.NullMarker) => ()
-          case Some(_) => dvCardinality(f) match {
-            case Some(c) => total += st.numRecords - c
-            case None => return None
-          }
-        }
-      }
-      Some(total)
-    }
-
-    def partExtremum(name: String, wantMax: Boolean): Option[Any] = {
-      val f = schemaField(name).getOrElse(return None)
-      var best: Any = null // null: zero non-null rows table-wide, SQL NULL
-      stats.foreach { case (file, st) =>
-        val surviving = dvCardinality(file) match {
-          case Some(c) => st.numRecords - c
-          case None => return None
-        }
-        if (surviving > 0) partValue(file, f) match {
-          case None => return None
-          case Some(null) => ()
-          case Some(v) =>
-            best = if (best == null) v else pick(v, best, f.dataType, wantMax)
-        }
-      }
-      Some(convertToScala(best, f.dataType))
-    }
-
-    def extremum(name: String, wantMax: Boolean): Option[Any] = {
-      if (partCols.contains(name)) return partExtremum(name, wantMax)
-      if (anyDv) return None
-      val f = field(name).getOrElse(return None)
-      f.dataType match {
-        case FloatType | DoubleType => return None // NaN ordering
-        case _ => ()
-      }
-      var best: Any = null // null: zero non-null rows table-wide, SQL NULL
-      stats.foreach { case (_, st) =>
-        statBound(st, name, f.dataType, wantMax) match {
-          case None => return None
-          case Some(null) => ()
-          case Some(v) =>
-            best = if (best == null) v else pick(v, best, f.dataType, wantMax)
-        }
-      }
-      Some(convertToScala(best, f.dataType))
-    }
-
-    Some(aggs.map {
-      case CountStar => countStar().getOrElse(return None)
-      case CountCol(n) => countCol(n).getOrElse(return None)
-      case MinCol(n, _) => extremum(n, wantMax = false).getOrElse(return None)
-      case MaxCol(n, _) => extremum(n, wantMax = true).getOrElse(return None)
-    })
+    /** The external value Spark's row conversion expects. */
+    def result(v: Any): Any = if (isCount) v else convertToScala(v, field.dataType)
   }
+
+  /** One group's state: its surviving rows, whether one of its files
+    * refused an aggregate (which refuses the query only if the group
+    * survives), and one slot per aggregate. */
+  final case class Group(survivors: Long, refused: Boolean, slots: IndexedSeq[Any])
+
+  /** A fold's state: the groups by decoded key, or None once a file
+    * refused the whole query — no parseable stats, a DV without a
+    * readable cardinality, a group key that is missing or does not
+    * decode. Refusal is absorbing. */
+  type State = Option[Map[Seq[Any], Group]]
+
+  /** A bound aggregate query (see [[bind]]). Serializable: the distributed
+    * route ships it to the executors. */
+  final class Fold private[StatsAggregates] (groupFields: IndexedSeq[StructField],
+                                             aggs: IndexedSeq[Bound]) extends Serializable {
+    private val dvRefuses = aggs.exists(_.readsDataStats)
+
+    /** The state of an empty file set: the identity of [[merge]]. */
+    def zero: State = Some(Map.empty)
+
+    def contribute(f: AddFile): State = {
+      val st = f.parsedStats.getOrElse(return None)
+      val survivors = st.numRecords - dvCardinality(f).getOrElse(return None)
+      val key = groupFields.map(partValue(f, _).getOrElse(return None))
+      var refused = dvRefuses && f.deletionVector.nonEmpty
+      val slots = aggs.map(b => b.of(f, st, survivors).getOrElse {
+        refused = true
+        b.identity
+      })
+      Some(Map(key -> Group(survivors, refused, slots)))
+    }
+
+    /** Associative and commutative up to [[finish]]'s output. */
+    def merge(a: State, b: State): State =
+      for (x <- a; y <- b) yield y.foldLeft(x) { case (acc, (k, g)) =>
+        acc.updated(k, acc.get(k).fold(g)(h => Group(h.survivors + g.survivors,
+          h.refused || g.refused,
+          aggs.indices.map(i => aggs(i).combine(h.slots(i), g.slots(i))))))
+      }
+
+    /** `files` folded in order, stopping at the first refusal. */
+    def over(files: IterableOnce[AddFile]): State = {
+      val it = files.iterator
+      var s = zero
+      while (s.isDefined && it.hasNext) s = merge(s, contribute(it.next()))
+      s
+    }
+
+    /** The rows, group columns first, sorted by key; None refuses. A
+      * global fold emits exactly one row, even over no surviving rows
+      * (COUNT 0, MIN/MAX NULL); a grouped fold emits one row per group
+      * with a surviving row. */
+    def finish(s: State): Option[Seq[Seq[Any]]] = s.flatMap { groups =>
+      val live =
+        if (groupFields.isEmpty)
+          Seq(Nil -> groups.getOrElse(Nil, Group(0L, refused = false, aggs.map(_.identity))))
+        else groups.toSeq.filter(_._2.survivors != 0)
+      if (live.exists(_._2.refused)) None
+      else Some(live.map { case (key, g) =>
+        key.lazyZip(groupFields).map((k, fld) => convertToScala(k, fld.dataType)) ++
+          aggs.lazyZip(g.slots).map(_.result(_))
+      }.sortBy(_.take(groupFields.length)
+        .map(k => if (k == null) "\u0000" else k.toString).mkString("\u0001")))
+    }
+  }
+
+  private lazy val rowCount = bind(new StructType, Set.empty, Nil, Seq(CountStar)).get
 
   /** Metadata fold of a snapshot's active files into planner dimensions:
     * (onDiskBytes, exactRowCount). Bytes is always exact — `add.size` is
-    * mandatory in the log. Rows is None when any file lacks parseable
-    * `numRecords` or carries a DV without a parseable `cardinality`
-    * (estimates must not claim exactness they don't have; the caller
-    * reports "unknown" instead). O(active files) driver arithmetic — the
-    * same order as the file list scan planning enumerates anyway. */
-  def dimensions(snap: Snapshot): (Long, Option[Long]) = {
-    var bytes = 0L
-    var rows = 0L
-    var exact = true
-    snap.activeFiles.foreach { f =>
-      bytes += f.size
-      if (exact) f.parsedStats match {
-        case Some(st) =>
-          dvCardinality(f) match {
-            case Some(c) => rows += st.numRecords - c
-            case None => exact = false // DV without a readable cardinality
-          }
-        case None => exact = false
-      }
-    }
-    (bytes, if (exact) Some(rows) else None)
-  }
+    * mandatory in the log. Rows is the fold's `COUNT(*)`, None when it
+    * refuses (estimates must not claim exactness they don't have; the
+    * caller reports "unknown" instead). O(active files) driver arithmetic —
+    * the same order as the file list scan planning enumerates anyway. */
+  def dimensions(snap: Snapshot): (Long, Option[Long]) =
+    (snap.activeFiles.iterator.map(_.size).sum,
+      rowCount.finish(rowCount.over(snap.activeFiles)).map(_.head.head.asInstanceOf[Long]))
 
   /**
    * TOP-N file cover: the subset of `files` that can contain the first
@@ -343,23 +311,16 @@ object StatsAggregates {
     Some(files.filter(f => keep.contains(f.path)))
   }
 
-  /** A file's decoded partition value for `f` — Some(null) for a NULL
-    * partition; None refuses: the value is missing, the type does not
-    * fold, or the decode throws. Float and double do not fold: -0.0 and
-    * 0.0 are distinct path values that Spark orders and groups as equal.
-    * Shared by the driver fold and the distributed combine, so both paths
-    * decide identically. */
+  /** A file's decoded partition value for `f`, a column of a foldable
+    * type — Some(null) for a NULL partition; None refuses: the value is
+    * missing or its decode throws. */
   private def partValue(file: AddFile, f: StructField): Option[Any] =
     file.partitionValues.get(f.name) match {
       case None | Some(null) => None // foreign writer omitted the value
       case Some(PartitionPaths.NullMarker) => Some(null)
-      case Some(v) => f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType | DateType |
-             StringType =>
-          try Some(PartitionPaths.decoder(f.dataType)(v))
-          catch { case NonFatal(_) => None }
-        case _ => None
-      }
+      case Some(v) =>
+        try Some(PartitionPaths.decoder(f.dataType)(v))
+        catch { case NonFatal(_) => None }
     }
 
   /** A file's data-column MIN (or MAX) stat, decoded: Some(null) when the
@@ -374,235 +335,4 @@ object StatsAggregates {
         if (st.nullCount.get(name).contains(st.numRecords)) Some(null) else None
     }
 
-  /** The MIN (or MAX) of two decoded values under Spark's ordering — the
-    * only comparator the folds and Top-N use. */
-  private def pick(a: Any, b: Any, dt: DataType, wantMax: Boolean): Any =
-    if ((TypeUtils.getInterpretedOrdering(dt).compare(a, b) > 0) == wantMax) a
-    else b
-
-  // ---- distributed combine form (round 16) ---------------------------------
-  //
-  // The same exactness contract as [[fold]], restructured as per-file
-  // contribution + ASSOCIATIVE merge + driver finish, so the claimed
-  // metadata fold on a 10⁷-file table runs as one narrow executor job whose
-  // driver traffic is ONE Partial per RDD partition (a few values) — the
-  // claimed file list never materializes anywhere.
-  // StatsAggregatesCombineSpec property-checks bit-equivalence with [[fold]]
-  // over random file sets and arbitrary groupings.
-
-  /** Per-aggregate partial state. Refusal is absorbing. */
-  sealed trait AggPartial extends Serializable
-  case object RefusedP extends AggPartial
-  final case class CountP(n: Long) extends AggPartial
-  /** Extremum: the best decoded value seen — a data column's stat bound,
-    * or a partition column's value among files with surviving rows
-    * (None = no contribution). */
-  final case class ExtP(best: Option[Any]) extends AggPartial
-
-  /** Subset-level state: `anyDv` poisons data-column COUNT(col)/MIN/MAX at
-    * finish time (deleted rows could hold the extremum / be the non-null
-    * rows) exactly as [[fold]]'s subset-wide check does. */
-  final case class Partial(anyDv: Boolean, aggs: IndexedSeq[AggPartial])
-    extends Serializable
-
-  /** Merge identity: the Partial of an EMPTY file subset. */
-  def identityPartial(aggs: Seq[StatAgg]): Partial =
-    Partial(anyDv = false, aggs.toIndexedSeq.map {
-      case CountStar | _: CountCol => CountP(0L)
-      case _: MinCol | _: MaxCol => ExtP(None)
-    })
-
-  /** Schema-only refusals, decidable before any file is read: a missing
-    * column, a float/double data-column extremum (NaN ordering), an
-    * unfoldable partition type. One statically-refused aggregate refuses
-    * the whole query — same contract as [[fold]]. */
-  def staticallyRefused(agg: StatAgg, partCols: Set[String],
-                        schema: StructType): Boolean = {
-    def fieldOf(n: String) = schema.fields.find(_.name == n)
-    def extRefused(n: String): Boolean = fieldOf(n) match {
-      case None => true
-      case Some(f) if !partCols.contains(n) =>
-        f.dataType == FloatType || f.dataType == DoubleType
-      case Some(_) => false
-    }
-    agg match {
-      case CountStar => false
-      case CountCol(n) => fieldOf(n).isEmpty
-      case MinCol(n, _) => extRefused(n)
-      case MaxCol(n, _) => extRefused(n)
-    }
-  }
-
-  /** One file's contribution — branch-for-branch the per-file body of
-    * [[fold]]. A file without parseable stats refuses every aggregate
-    * (the parseAll gate). */
-  def contribute(f: AddFile, partCols: Set[String], schema: StructType,
-                 aggs: IndexedSeq[StatAgg]): Partial = {
-    val anyDv = f.deletionVector.nonEmpty
-    val st = f.parsedStats.getOrElse(
-      return Partial(anyDv, aggs.map(_ => RefusedP)))
-    val dvc = dvCardinality(f)
-    def perAgg(agg: StatAgg): AggPartial = agg match {
-      case CountStar => dvc match {
-        case Some(c) => CountP(st.numRecords - c)
-        case None => RefusedP
-      }
-      case CountCol(name) if partCols.contains(name) =>
-        f.partitionValues.get(name) match {
-          case None => RefusedP
-          case Some(PartitionPaths.NullMarker) => CountP(0L)
-          case Some(_) => dvc match {
-            case Some(c) => CountP(st.numRecords - c)
-            case None => RefusedP
-          }
-        }
-      case CountCol(name) =>
-        st.nullCount.get(name) match {
-          case Some(nc) => CountP(st.numRecords - nc)
-          case None => RefusedP
-        }
-      case MinCol(n, _) if partCols.contains(n) => partExt(n)
-      case MaxCol(n, _) if partCols.contains(n) => partExt(n)
-      case MinCol(n, _) => dataExt(n, wantMax = false)
-      case MaxCol(n, _) => dataExt(n, wantMax = true)
-    }
-    def partExt(name: String): AggPartial = dvc match {
-      case None => RefusedP
-      case Some(c) =>
-        if (st.numRecords - c <= 0) ExtP(None)
-        else schema.fields.find(_.name == name).flatMap(partValue(f, _)) match {
-          case None => RefusedP
-          case Some(v) => ExtP(Option(v))
-        }
-    }
-    def dataExt(name: String, wantMax: Boolean): AggPartial =
-      schema.fields.find(_.name == name)
-        .flatMap(fd => statBound(st, name, fd.dataType, wantMax))
-        .fold(RefusedP: AggPartial)(v => ExtP(Option(v)))
-    Partial(anyDv, aggs.map(perAgg))
-  }
-
-  /** Associative merge. Needs the agg list for extremum direction/type. */
-  def merge(a: Partial, b: Partial, aggs: IndexedSeq[StatAgg],
-            schema: StructType): Partial = {
-    def dtOf(n: String): DataType =
-      schema.fields.find(_.name == n).map(_.dataType).getOrElse(NullType)
-    def one(x: AggPartial, y: AggPartial, agg: StatAgg): AggPartial = (x, y) match {
-      case (RefusedP, _) | (_, RefusedP) => RefusedP
-      case (CountP(m), CountP(n)) => CountP(m + n)
-      case (ExtP(None), e) => e
-      case (e, ExtP(None)) => e
-      case (ExtP(Some(v)), ExtP(Some(w))) => agg match {
-        case MinCol(n, _) => ExtP(Some(pick(v, w, dtOf(n), wantMax = false)))
-        case MaxCol(n, _) => ExtP(Some(pick(v, w, dtOf(n), wantMax = true)))
-        case _ => RefusedP
-      }
-      case _ => RefusedP // mixed kinds: impossible by construction
-    }
-    Partial(a.anyDv || b.anyDv,
-      a.aggs.lazyZip(b.aggs).lazyZip(aggs).map(one))
-  }
-
-  /** Driver finish: apply the subset-wide DV refusal and decode — the
-    * final steps of [[fold]]. None refuses (caller falls back or errors
-    * exactly as the driver path would). */
-  def finish(p: Partial, partCols: Set[String], schema: StructType,
-             aggs: IndexedSeq[StatAgg]): Option[Seq[Any]] = {
-    def dtOf(n: String): DataType =
-      schema.fields.find(_.name == n).map(_.dataType).getOrElse(NullType)
-    // deleted rows could hold a data column's extremum
-    def extremum(n: String, best: Option[Any]): Option[Any] =
-      if (!partCols.contains(n) && p.anyDv) None
-      else Some(convertToScala(best.orNull, dtOf(n)))
-    Some(aggs.zip(p.aggs).map {
-      case (_, RefusedP) => return None
-      case (CountStar, CountP(n)) => n
-      case (CountCol(nm), CountP(n)) =>
-        if (!partCols.contains(nm) && p.anyDv) return None else n
-      case (MinCol(nm, _), ExtP(best)) => extremum(nm, best).getOrElse(return None)
-      case (MaxCol(nm, _), ExtP(best)) => extremum(nm, best).getOrElse(return None)
-      case _ => return None
-    })
-  }
-
-  /** Test/inspection hook: distributed (combine-form) folds since JVM
-    * start — the never-materializing path's run counter. */
-  val distributedFolds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  // ---- grouped combine form -------------------------------------------------
-  //
-  // GROUP BY partition columns in the same shape: per-group Partials keyed
-  // by the decoded-later group key, merged associatively. Driver traffic is
-  // O(groups) per RDD partition — the partition-value cardinality, orders
-  // of magnitude below the file count this path exists for.
-
-  /** Per-group state: the agg Partial plus the group's surviving-row count
-    * (SQL emits no empty groups — a fully-DV-deleted partition must
-    * disappear, [[answerGroupedFiles]]'s survivors gate). */
-  final case class GroupState(survivors: Long, partial: Partial)
-    extends Serializable
-
-  /** `refused` is query-wide and absorbing: a file with a missing group
-    * value or an unreadable DV cardinality poisons the whole query, exactly
-    * as [[answerGroupedFiles]]'s early returns do. */
-  final case class GroupedPartial(
-      refused: Boolean,
-      groups: Map[Seq[Any], GroupState]) extends Serializable
-
-  def identityGrouped: GroupedPartial = GroupedPartial(refused = false, Map.empty)
-
-  /** One file's contribution to its group — mirrors the per-file body of
-    * [[answerGroupedFiles]]. */
-  def contributeGrouped(f: AddFile, groupCols: Seq[String],
-                        partCols: Set[String], schema: StructType,
-                        aggs: IndexedSeq[StatAgg]): GroupedPartial = {
-    val refusedAll = GroupedPartial(refused = true, Map.empty)
-    val st = f.parsedStats.getOrElse(return refusedAll)
-    val dvc = dvCardinality(f).getOrElse(return refusedAll)
-    val key = groupCols.map { c =>
-      schema.fields.find(_.name == c).flatMap(partValue(f, _))
-        .getOrElse(return refusedAll)
-    }
-    GroupedPartial(refused = false, Map(key -> GroupState(
-      st.numRecords - dvc, contribute(f, partCols, schema, aggs))))
-  }
-
-  def mergeGrouped(a: GroupedPartial, b: GroupedPartial,
-                   aggs: IndexedSeq[StatAgg],
-                   schema: StructType): GroupedPartial =
-    if (a.refused || b.refused) GroupedPartial(refused = true, Map.empty)
-    else GroupedPartial(refused = false,
-      b.groups.foldLeft(a.groups) { case (acc, (k, gs)) =>
-        acc.get(k) match {
-          case Some(prev) => acc.updated(k, GroupState(
-            prev.survivors + gs.survivors,
-            merge(prev.partial, gs.partial, aggs, schema)))
-          case None => acc.updated(k, gs)
-        }
-      })
-
-  /** Driver finish: drop empty groups, decode keys, finish each group's
-    * Partial. Group order is canonicalized (sorted key strings) — the
-    * driver fold's file-insertion order is not reconstructible from a
-    * distributed merge, and every SQL consumer orders explicitly. */
-  def finishGrouped(p: GroupedPartial, partCols: Set[String],
-                    schema: StructType, groupCols: Seq[String],
-                    aggs: IndexedSeq[StatAgg]): Option[Seq[Seq[Any]]] = {
-    if (p.refused) return None
-    if (groupCols.isEmpty || !groupCols.forall(partCols.contains)) return None
-    val gFields = groupCols.map(n =>
-      schema.fields.find(_.name == n).getOrElse(return None))
-    val rows = p.groups.toSeq.flatMap { case (key, gs) =>
-      if (gs.survivors == 0) None
-      else {
-        val keyVals = key.zip(gFields)
-          .map { case (k, fld) => convertToScala(k, fld.dataType) }
-        val aggVals = finish(gs.partial, partCols, schema, aggs)
-          .getOrElse(return None)
-        Some(keyVals ++ aggVals)
-      }
-    }
-    Some(rows.sortBy(_.take(gFields.length)
-      .map(k => if (k == null) "\u0000" else k.toString).mkString("\u0001")))
-  }
 }

@@ -105,12 +105,11 @@ final class DeltaRelation(
     * the pinned snapshot.
     *
     * Scale bound: the survivors materialize on the driver here — bounded
-    * by Spark's own scan planning for the same predicate. The UNGROUPED
-    * aggregate path no longer comes through here at all above the
-    * snapshot threshold ([[answerAggregates]] routes to the distributed
-    * combine-form fold, whose driver traffic is one Partial per RDD
-    * partition); what remains on this floor is the GROUPED fold and the
-    * row scan itself, both of which genuinely need the per-file list. */
+    * by Spark's own scan planning for the same predicate. Metadata
+    * aggregates come through here only below the snapshot threshold
+    * ([[answerAggregates]] routes larger tables to the distributed fold,
+    * whose driver traffic is one state per RDD partition); above it what
+    * remains on this floor is the row scan itself. */
   private def claimedFiles(pinnedVersion: Option[Long],
                            claimed: Array[Filter],
                            claimedPaths: Option[Set[String]]): (Snapshot, Seq[graft.delta.AddFile]) = {
@@ -120,49 +119,30 @@ final class DeltaRelation(
     else (snap, exactClaimKeep(snap, claimed, claimedPaths))
   }
 
-  /** Metadata-only aggregate answer over this relation's (possibly
+  /** Metadata-only aggregate answer, grouped by `groupCols` (partition
+    * columns; empty for one global row), over this relation's (possibly
     * time-traveled) snapshot, optionally restricted to the exact subset a
     * set of CLAIMED partition filters selects — see
     * [[graft.delta.StatsAggregates]]. None refuses (caller falls back to
     * the ordinary scan). */
-  private[sources] def answerAggregates(
+  private[sources] def answerAggregates(groupCols: Seq[String],
       aggs: Seq[graft.delta.StatsAggregates.StatAgg],
-      pinnedVersion: Option[Long] = None,
-      claimed: Array[Filter] = Array.empty,
-      claimedPaths: Option[Set[String]] = None): Option[Seq[Any]] = {
-    // Above the snapshot threshold: the combine-form fold — per-file
-    // contributions merged on executors, one Partial per partition on the
-    // driver, no file list anywhere (round 16). Below it, the memoized
-    // driver fold is strictly cheaper than a Spark job.
-    table.distributedAggregates(
-        pinnedVersion.orElse(resolvedVersion()), claimed.toSeq, schema, aggs) match {
+      pinnedVersion: Option[Long], claimed: Array[Filter],
+      claimedPaths: Option[Set[String]]): Option[Seq[Seq[Any]]] = {
+    import graft.delta.StatsAggregates
+    // Above the snapshot threshold the fold runs on executors and no file
+    // list exists anywhere (round 16). Below it, folding the memoized
+    // claimed files on the driver is strictly cheaper than a Spark job.
+    val out = table.distributedAggregates(pinnedVersion.orElse(resolvedVersion()),
+        claimed.toSeq, schema, groupCols, aggs) match {
       case Some(folded) => folded
       case None =>
         val (snap, files) = claimedFiles(pinnedVersion, claimed, claimedPaths)
-        graft.delta.StatsAggregates.answerFiles(files,
-          snap.partitionColumns.toSet, schema, aggs)
+        StatsAggregates.bind(schema, snap.partitionColumns.toSet, groupCols, aggs)
+          .flatMap(fold => fold.finish(fold.over(files)))
     }
-  }
-
-  /** GROUP-BY-partition-columns twin of [[answerAggregates]] — one row per
-    * surviving partition group. */
-  private[sources] def answerGroupedAggregates(groupCols: Seq[String],
-      aggs: Seq[graft.delta.StatsAggregates.StatAgg],
-      pinnedVersion: Option[Long] = None,
-      claimed: Array[Filter] = Array.empty,
-      claimedPaths: Option[Set[String]] = None): Option[Seq[Seq[Any]]] = {
-    // Same routing as [[answerAggregates]]: above the snapshot threshold
-    // the grouped combine fold keeps the driver at O(groups), never
-    // O(files) (round 16).
-    table.distributedGroupedAggregates(
-        pinnedVersion.orElse(resolvedVersion()), claimed.toSeq, schema,
-        groupCols, aggs) match {
-      case Some(folded) => folded
-      case None =>
-        val (snap, files) = claimedFiles(pinnedVersion, claimed, claimedPaths)
-        graft.delta.StatsAggregates.answerGroupedFiles(files,
-          snap.partitionColumns.toSet, schema, groupCols, aggs)
-    }
+    if (out.isDefined) StatsAggregates.answered.incrementAndGet()
+    out
   }
 
   /** (estimatedBytes, exactRows) of this scan AFTER file pruning by

@@ -626,7 +626,7 @@ private final class GraftScanBuilder(relation: DeltaRelation,
         case _ => None
       }
     // GROUP BY is answerable only over partition columns (one value per
-    // file in the log) — StatsAggregates.answerGrouped enforces that.
+    // file in the log) — StatsAggregates.bind enforces that.
     val groupCols: Seq[String] = aggregation.groupByExpressions.toSeq
       .map(e => fieldName(e).getOrElse(return None))
     val specs = aggregation.aggregateExpressions.toSeq.map {
@@ -653,13 +653,8 @@ private final class GraftScanBuilder(relation: DeltaRelation,
       case (StatsAggregates.MaxCol(_, dt), i) => StructField(s"agg_$i", dt, nullable = true)
     }
     val schema = StructType(groupFields ++ aggFields)
-    if (groupCols.isEmpty)
-      relation.answerAggregates(specs, claimedVersion, claimed, claimedPaths)
-        .map(vs => (schema, Seq(vs)))
-    else
-      relation.answerGroupedAggregates(groupCols, specs,
-        claimedVersion, claimed, claimedPaths)
-        .map(rows => (schema, rows))
+    relation.answerAggregates(groupCols, specs, claimedVersion, claimed, claimedPaths)
+      .map(rows => (schema, rows))
   }
 
   override def build(): Scan = agg match {

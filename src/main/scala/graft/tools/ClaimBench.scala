@@ -6,11 +6,13 @@ import org.apache.spark.sql.SparkSession
  * A/B demonstrator for the claimed-partition-filter aggregate path
  * (round 14): builds an `event_type`-partitioned table from a testdata
  * `events.parquet` (optionally replicated `rep`× to scale the row count),
- * then times `COUNT/MIN/MAX ... WHERE event_type = 'click'` twice —
- * metadata-answered (the partition predicate is CLAIMED, the aggregate
- * folds log stats) vs forced-scan (an always-true residual on a data
- * column blocks the metadata path). The metadata time is O(files) and
- * stays flat as rows grow; the scan is O(rows).
+ * then times two shapes — global `COUNT/MIN/MAX ... WHERE event_type =
+ * 'click'` and `SELECT event_type, COUNT/MIN/MAX ... GROUP BY event_type`
+ * — each twice: metadata-answered (the partition predicate is CLAIMED, the
+ * aggregate folds log stats) vs forced-scan (an always-true residual on a
+ * data column blocks the metadata path). The metadata time is O(files)
+ * and stays flat as rows grow; the scan is O(rows). One
+ * `CLAIMBENCH ... shape=global|grouped` line per shape.
  *
  * Usage: `runMain graft.tools.ClaimBench <sfDir> [replication] [threshold]`
  * Measured (sf1 events, local[32]): 1M rows 0.113s vs 0.235s (2.1×),
@@ -66,15 +68,21 @@ object ClaimBench {
       }
       ts.sorted.apply(n / 2)
     }
-    val meta = time(
-      s"SELECT count(*), min(event_id), max(event_id) FROM $t " +
-        "WHERE event_type = 'click'", 5)
-    val scan = time(
-      s"SELECT count(*), min(event_id), max(event_id) FROM $t " +
-        "WHERE event_type = 'click' AND value >= -1e18", 5)
-    println(f"CLAIMBENCH rep=$rep mode=${
-      threshold.fold("driver")(th => s"distributed(th=$th)")
-    } meta=$meta%.4fs scan=$scan%.4fs speedup=${scan / meta}%.1fx")
+    val mode = threshold.fold("driver")(th => s"distributed(th=$th)")
+    val aggs = "count(*), min(event_id), max(event_id)"
+    // always true, but a data-column residual: the rows must be scanned
+    val forceScan = "value >= -1e18"
+    Seq[(String, Option[String] => String)](
+      "global" -> (w => s"SELECT $aggs FROM $t WHERE event_type = 'click'" +
+        w.fold("")(" AND " + _)),
+      "grouped" -> (w => s"SELECT event_type, $aggs FROM $t" +
+        w.fold("")(" WHERE " + _) + " GROUP BY event_type")
+    ).foreach { case (shape, q) =>
+      val meta = time(q(None), 5)
+      val scan = time(q(Some(forceScan)), 5)
+      println(f"CLAIMBENCH rep=$rep mode=$mode shape=$shape " +
+        f"meta=$meta%.4fs scan=$scan%.4fs speedup=${scan / meta}%.1fx")
+    }
     spark.stop()
   }
 }

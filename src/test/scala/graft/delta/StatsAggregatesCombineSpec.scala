@@ -7,15 +7,16 @@ import org.json4s._
 import org.json4s.JsonDSL._
 
 /**
- * Equivalence property for the distributed combine form (round 16): for ANY
- * file set the generator can produce — stats present/absent, all-null
- * columns, DVs with/without cardinality, partition values present/marker/
- * absent/non-ASCII — and ANY split of that set into partitions merged in
- * ANY tree order, `contribute → merge → finish` must produce EXACTLY the
- * driver fold's answer (including its refusals). This is what licenses
- * [[DistributedSnapshot.foldAggregates]] to run the fold as per-partition
- * partials: associativity + per-file parity ⇒ the distributed answer IS
- * the sequential answer.
+ * The metadata-aggregate fold's algebra. Every route runs one bound
+ * [[StatsAggregates.Fold]]: the driver folds the claimed files in order,
+ * [[DistributedSnapshot.foldAggregates]] folds each RDD partition on an
+ * executor and merges the states in whatever order they arrive. So for
+ * ANY file set the generator can produce — stats present/absent, all-null
+ * columns, DVs with/without cardinality, partition values
+ * present/marker/absent/undecodable/non-ASCII — and ANY split of it merged
+ * in ANY order, the answer must equal the sequential `foldLeft`. The
+ * values themselves are pinned by the targeted edges here and, against
+ * Spark's own aggregate, by `AggPushdownPropertySpec`.
  */
 class StatsAggregatesCombineSpec extends AnyFunSuite {
   import StatsAggregates._
@@ -86,104 +87,142 @@ class StatsAggregatesCombineSpec extends AnyFunSuite {
   private val genAggs: Gen[Seq[StatAgg]] =
     Gen.nonEmptyListOf(Gen.oneOf(allAggs)).map(_.distinct)
 
-  /** Combine-form answer over an arbitrary grouping of `files`. */
-  private def combined(files: Seq[AddFile], aggs: Seq[StatAgg],
-                       splitAt: Seq[Int]): Option[Seq[Any]] = {
-    if (aggs.exists(staticallyRefused(_, partCols, schema))) return None
-    val idx = aggs.toIndexedSeq
-    val groups: Seq[Seq[AddFile]] = {
-      val cuts = (0 +: splitAt.map(_ % (files.size + 1)).sorted :+ files.size).distinct
-      cuts.sliding(2).collect { case Seq(a, b) => files.slice(a, b) }.toSeq
-    }
-    val partials = groups.map(_.foldLeft(identityPartial(idx)) { (acc, f) =>
-      merge(acc, contribute(f, partCols, schema, idx), idx, schema)
-    })
-    val acc = partials.foldLeft(identityPartial(idx))(merge(_, _, idx, schema))
-    finish(acc, partCols, schema, idx)
-  }
+  private def run(files: Seq[AddFile], groupCols: Seq[String],
+                  aggs: Seq[StatAgg]): Option[Seq[Seq[Any]]] =
+    bind(schema, partCols, groupCols, aggs).flatMap(f => f.finish(f.over(files)))
 
-  test("combine form ≡ driver fold for random files, aggs, and groupings") {
+  /** The answer over `files` cut at `splitAt`, each piece folded on its
+    * own and the states merged pairwise in a random order. */
+  private def split(files: Seq[AddFile], groupCols: Seq[String], aggs: Seq[StatAgg],
+                    splitAt: Seq[Int], seed: Long): Option[Seq[Seq[Any]]] =
+    bind(schema, partCols, groupCols, aggs).flatMap { fold =>
+      val cuts = (0 +: splitAt.map(_ % (files.size + 1)).sorted :+ files.size).distinct
+      val states = scala.collection.mutable.ArrayBuffer.from(
+        cuts.sliding(2).collect { case Seq(a, b) => fold.over(files.slice(a, b)) })
+      val rnd = new scala.util.Random(seed)
+      while (states.size > 1) {
+        val x = states.remove(rnd.nextInt(states.size))
+        val y = states.remove(rnd.nextInt(states.size))
+        states += fold.merge(x, y)
+      }
+      fold.finish(states.headOption.getOrElse(fold.zero))
+    }
+
+  private def invariant(groupCols: Gen[Seq[String]], seed0: Long): Unit = {
     val genCase = for {
       files <- Gen.listOfN(14, genFile)
       aggs <- genAggs
+      g <- groupCols
       splits <- Gen.listOf(Gen.choose(0, 14))
-    } yield (files, aggs, splits)
-    var checked = 0
+    } yield (files, aggs, g, splits)
     (0 until 600).foreach { i =>
-      val (files, aggs, splits) = genCase(
-        Gen.Parameters.default, org.scalacheck.rng.Seed(1000L + i)).get
-      val viaFold = answerFiles(files, partCols, schema, aggs)
-      val viaCombine = combined(files, aggs, splits)
-      assert(viaFold == viaCombine,
-        s"divergence at seed ${1000 + i}:\nfold=$viaFold\ncombine=$viaCombine\n" +
-          s"aggs=$aggs\nfiles=${files.mkString("\n")}")
-      checked += 1
-    }
-    assert(checked == 600)
-  }
-
-  /** Grouped combine over an arbitrary grouping — the production gating
-    * of foldGroupedAggregates (static refusal pre-check included). */
-  private def combinedGrouped(files: Seq[AddFile], groupCols: Seq[String],
-                              aggs: Seq[StatAgg],
-                              splitAt: Seq[Int]): Option[Seq[Seq[Any]]] = {
-    if (aggs.isEmpty || groupCols.isEmpty ||
-        !groupCols.forall(partCols.contains) ||
-        aggs.exists(staticallyRefused(_, partCols, schema))) return None
-    val idx = aggs.toIndexedSeq
-    val gIdx = groupCols.toIndexedSeq
-    val groups: Seq[Seq[AddFile]] = {
-      val cuts = (0 +: splitAt.map(_ % (files.size + 1)).sorted :+ files.size).distinct
-      cuts.sliding(2).collect { case Seq(a, b) => files.slice(a, b) }.toSeq
-    }
-    val partials = groups.map(_.foldLeft(identityGrouped) { (acc, f) =>
-      mergeGrouped(acc, contributeGrouped(f, gIdx, partCols, schema, idx),
-        idx, schema)
-    })
-    val acc = partials.foldLeft(identityGrouped)(mergeGrouped(_, _, idx, schema))
-    finishGrouped(acc, partCols, schema, gIdx, idx)
-  }
-
-  private def canon(rows: Option[Seq[Seq[Any]]]): Option[Seq[String]] =
-    rows.map(_.map(_.map(String.valueOf).mkString("|")).sorted)
-
-  test("grouped combine form ≡ driver grouped fold (order-insensitive)") {
-    val genCase = for {
-      files <- Gen.listOfN(14, genFile)
-      aggs <- genAggs
-      groupCols <- Gen.oneOf(Seq("pk"), Seq("ps"), Seq("pk", "ps"), Seq("v"))
-      splits <- Gen.listOf(Gen.choose(0, 14))
-    } yield (files, aggs, groupCols, splits)
-    (0 until 600).foreach { i =>
-      val (files, aggs, groupCols, splits) = genCase(
-        Gen.Parameters.default, org.scalacheck.rng.Seed(9000L + i)).get
-      val viaFold = canon(
-        answerGroupedFiles(files, partCols, schema, groupCols, aggs))
-      val viaCombine = canon(combinedGrouped(files, groupCols, aggs, splits))
-      // the combine path refuses STATICALLY-refused aggregates up front;
-      // the driver fold only hits them per surviving group, so it can
-      // return the empty row set where the combine refuses — refusal is
-      // the safe direction (the consumer falls back to the scan)
-      val benignExtraRefusal = viaCombine.isEmpty &&
-        viaFold.exists(_.isEmpty) &&
-        aggs.exists(staticallyRefused(_, partCols, schema))
-      assert(viaFold == viaCombine || benignExtraRefusal,
-        s"divergence at seed ${9000 + i}:\nfold=$viaFold\ncombine=$viaCombine\n" +
-          s"groupCols=$groupCols aggs=$aggs\nfiles=${files.mkString("\n")}")
+      val seed = seed0 + i
+      val (files, aggs, g, splits) =
+        genCase(Gen.Parameters.default, org.scalacheck.rng.Seed(seed)).get
+      val sequential = run(files, g, aggs)
+      val merged = split(files, g, aggs, splits, seed)
+      assert(sequential == merged,
+        s"divergence at seed $seed:\nsequential=$sequential\nmerged=$merged\n" +
+          s"groupCols=$g aggs=$aggs\nfiles=${files.mkString("\n")}")
     }
   }
 
-  test("combine form refuses exactly when fold refuses (targeted edges)") {
-    val idx = IndexedSeq[StatAgg](CountStar, MinCol("pk", LongType))
-    // statless file poisons everything
-    val statless = AddFile("a.parquet", Map("pk" -> "1", "ps" -> "a"), 1L, 1L)
-    val good = AddFile("b.parquet", Map("pk" -> "2", "ps" -> "b"), 1L, 1L,
-      stats = Some(FileStats(5, Map("v" -> JInt(1)), Map("v" -> JInt(3)),
-        Map("v" -> 0L)).toJsonString))
-    assert(answerFiles(Seq(statless, good), partCols, schema, idx).isEmpty)
-    assert(combined(Seq(statless, good), idx, Seq(1)).isEmpty)
-    // empty subset: COUNT 0, extremum NULL — both paths
-    assert(answerFiles(Nil, partCols, schema, idx) == Some(Seq(0L, null)))
-    assert(combined(Nil, idx, Nil) == Some(Seq(0L, null)))
+  test("global fold: any split and merge order equals the foldLeft") {
+    invariant(Gen.const(Nil), 1000L)
+  }
+
+  test("grouped fold: any split and merge order equals the foldLeft") {
+    invariant(Gen.oneOf(Seq("pk"), Seq("ps"), Seq("pk", "ps"), Seq("v")), 9000L)
+  }
+
+  private def file(pv: Map[String, String], stats: Option[FileStats],
+                   dv: Option[JObject] = None): AddFile =
+    AddFile(s"part-${pv.hashCode}-${stats.hashCode}.parquet", pv, 1L, 1L,
+      stats = stats.map(_.toJsonString), deletionVector = dv)
+
+  /** `n` rows, `v` spanning [lo, hi] with `vNulls` nulls. */
+  private def stats(n: Long, lo: Long, hi: Long, vNulls: Long = 0L): Option[FileStats] =
+    Some(FileStats(n, Map("v" -> JInt(lo)), Map("v" -> JInt(hi)), Map("v" -> vNulls)))
+
+  private def dv(cardinality: Long): Option[JObject] =
+    Some(("storageType" -> "u") ~ ("cardinality" -> cardinality))
+
+  test("targeted edges answer their written-out values") {
+    val pv = Map("pk" -> "1", "ps" -> "a")
+    val good = file(pv, stats(5, 1, 3))
+    val counts = Seq(CountStar, CountCol("v"), MinCol("v", LongType), MaxCol("v", LongType))
+    assert(run(Seq(good), Nil, counts) == Some(Seq(Seq(5L, 5L, 1L, 3L))))
+
+    // a statless file refuses every aggregate, grouped or not
+    val statless = file(Map("pk" -> "2", "ps" -> "b"), None)
+    assert(run(Seq(statless, good), Nil, Seq(CountStar)).isEmpty)
+    assert(run(Seq(statless, good), Seq("ps"), Seq(CountStar)).isEmpty)
+
+    // a DV without a cardinality leaves the surviving rows unknown
+    val noCard = file(pv, stats(5, 1, 3), Some(JObject(List("storageType" -> JString("u")))))
+    assert(run(Seq(noCard, good), Nil, Seq(CountStar)).isEmpty)
+    assert(run(Seq(noCard, good), Nil, Seq(CountCol("pk"))).isEmpty)
+    // ...while a readable one is subtracted, and data-column stats refuse
+    val thinned = file(pv, stats(5, 1, 3), dv(2))
+    assert(run(Seq(thinned, good), Nil, Seq(CountStar, CountCol("pk"), MaxCol("pk", LongType))) ==
+      Some(Seq(Seq(8L, 8L, 1L))))
+    assert(run(Seq(thinned, good), Nil, Seq(MinCol("v", LongType))).isEmpty)
+    assert(run(Seq(thinned, good), Nil, Seq(CountCol("v"))).isEmpty)
+
+    // an all-null column: no bounds, nullCount = numRecords
+    val allNull = file(pv, Some(FileStats(4, Map.empty, Map.empty, Map("v" -> 4L))))
+    assert(run(Seq(allNull), Nil, counts) == Some(Seq(Seq(4L, 0L, null, null))))
+    assert(run(Seq(allNull, good), Nil, counts) == Some(Seq(Seq(9L, 5L, 1L, 3L))))
+    // a missing bound on a file with non-null rows refuses
+    val noBounds = file(pv, Some(FileStats(4, Map.empty, Map.empty, Map("v" -> 1L))))
+    assert(run(Seq(noBounds, good), Nil, Seq(MaxCol("v", LongType))).isEmpty)
+
+    // NullMarker: a NULL partition value, not counted, not an extremum, a key
+    val nullPk = file(Map("pk" -> PartitionPaths.NullMarker, "ps" -> "a"), stats(7, 0, 9))
+    assert(run(Seq(nullPk, good), Nil,
+      Seq(CountCol("pk"), MinCol("pk", LongType), MaxCol("pk", LongType))) ==
+      Some(Seq(Seq(5L, 1L, 1L))))
+    assert(run(Seq(nullPk), Nil, Seq(CountCol("pk"), MinCol("pk", LongType))) ==
+      Some(Seq(Seq(0L, null))))
+    assert(run(Seq(good, nullPk), Seq("pk"), Seq(CountStar)) ==
+      Some(Seq(Seq(null, 7L), Seq(1L, 5L))))
+
+    // a missing partition value refuses what reads it, not COUNT(*)
+    val noPk = file(Map("ps" -> "a"), stats(3, 0, 1))
+    assert(run(Seq(noPk, good), Nil, Seq(CountStar)) == Some(Seq(Seq(8L))))
+    assert(run(Seq(noPk, good), Nil, Seq(CountCol("pk"))).isEmpty)
+    assert(run(Seq(noPk, good), Nil, Seq(MinCol("pk", LongType))).isEmpty)
+    assert(run(Seq(noPk, good), Seq("pk"), Seq(CountStar)).isEmpty)
+
+    // a partition value that does not decode refuses its extremum and key
+    val bogus = file(Map("pk" -> "bogus", "ps" -> "a"), stats(3, 0, 1))
+    assert(run(Seq(bogus, good), Nil, Seq(MaxCol("pk", LongType))).isEmpty)
+    assert(run(Seq(bogus, good), Seq("pk"), Seq(CountStar)).isEmpty)
+
+    // non-ASCII strings order by UTF-8 bytes, as Spark does: "\uFF76"
+    // sorts above "\uD834\uDD1E" in Java's UTF-16 order, below it here
+    val strs = Seq("Zz", "caf\u00e9", "\uFF76", "\uD834\uDD1E", "a")
+      .map(s => file(Map("pk" -> "1", "ps" -> s), stats(1, 0, 0)))
+    assert(run(strs, Nil, Seq(MinCol("ps", StringType), MaxCol("ps", StringType))) ==
+      Some(Seq(Seq("Zz", "\uD834\uDD1E"))))
+    assert(run(strs, Seq("ps"), Nil).map(_.map(_.head)) ==
+      Some(Seq("Zz", "a", "caf\u00e9", "\uD834\uDD1E", "\uFF76")))
+
+    // a group emptied by DVs vanishes, and its DV does not refuse MIN(v)
+    val emptied = file(Map("pk" -> "1", "ps" -> "gone"), stats(4, 0, 100), dv(4))
+    assert(run(Seq(emptied, good), Seq("ps"), Seq(CountStar, MinCol("v", LongType))) ==
+      Some(Seq(Seq("a", 5L, 1L))))
+    // DISTINCT: a grouped fold with zero aggregates
+    assert(run(Seq(emptied, good, nullPk), Seq("pk"), Nil) == Some(Seq(Seq(null), Seq(1L))))
+
+    // an empty file set: one global row, no groups
+    assert(run(Nil, Nil, Seq(CountStar, MinCol("pk", LongType))) == Some(Seq(Seq(0L, null))))
+    assert(run(Nil, Seq("ps"), Seq(CountStar)) == Some(Nil))
+
+    // static refusals, before any file is read
+    assert(bind(schema, partCols, Nil, Seq(MinCol("f", DoubleType))).isEmpty)
+    assert(bind(schema, partCols, Nil, Seq(CountCol("missing"))).isEmpty)
+    assert(bind(schema, partCols, Seq("v"), Seq(CountStar)).isEmpty)
+    assert(bind(schema, partCols, Nil, Seq(CountCol("f"))).isDefined)
   }
 }

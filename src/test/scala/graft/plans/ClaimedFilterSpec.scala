@@ -228,10 +228,10 @@ class ClaimedFilterSpec extends SparkTestBase {
       }
       assert(h1 == 1, "distributed-claimed aggregate was not metadata-answered")
       assert(r1.getLong(0) == 300 && r1.getLong(1) == 0 && r1.getLong(2) == 897)
-      // round 16: above the threshold the UNGROUPED fold is the COMBINE
-      // form — per-partition partials, no claimed file list on the driver
+      // round 16: above the threshold the fold runs on executors —
+      // per-partition states, no claimed file list on the driver
       assert(StatsAggregates.distributedFolds.get() > foldsBefore,
-        "big-table aggregate took the driver fold instead of the combine form")
+        "big-table aggregate took the driver route instead of the distributed fold")
       val foldsBeforeG = StatsAggregates.distributedFolds.get()
       val (rows, h2) = answered {
         spark.sql(s"SELECT g, COUNT(*) AS c FROM $t WHERE g IS NOT NULL GROUP BY g ORDER BY g")
@@ -240,9 +240,16 @@ class ClaimedFilterSpec extends SparkTestBase {
       assert(h2 == 1)
       assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq ==
         Seq(("a", 300L), ("b", 300L)))
-      // the grouped fold takes the combine form too (O(groups) driver)
+      // the grouped fold takes the distributed route too (O(groups) driver)
       assert(StatsAggregates.distributedFolds.get() > foldsBeforeG,
         "big-table GROUPED aggregate took the driver fold")
+      // DISTINCT over a partition column is a grouped fold with zero
+      // aggregates: answered from metadata above the threshold as below it
+      val (keys, h4) = answered {
+        spark.sql(s"SELECT DISTINCT g FROM $t WHERE g IS NOT NULL ORDER BY g").collect()
+      }
+      assert(h4 == 1, "partition-column DISTINCT was not metadata-answered")
+      assert(keys.map(_.getString(0)).toSeq == Seq("a", "b"))
       // a residual (data-column) predicate still needs the rows
       val (_, h3) = answered {
         intercept[Throwable](

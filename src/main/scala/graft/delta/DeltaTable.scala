@@ -1563,7 +1563,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * rewrite job reads only matched files, unmatched candidates are never
     * re-scanned, and no per-file expression enters the plan. A literal
     * `isin(matchedFiles)` here would build an unbounded In-expression at
-    * 10⁵–10⁶ matched files (the hazard [[Merge.semiJoinFiles]] documents);
+    * 10⁵–10⁶ matched files (the hazard DmlPlanAuditSpec pins);
     * file-list pruning is strictly stronger than the semi-join because it
     * also skips the unmatched files' IO. */
   private[delta] def matchedFilesDF(snap: Snapshot, candidates: Seq[AddFile],
@@ -1809,33 +1809,46 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     }
   }
 
-  /** MERGE / upsert — see [[Merge]] for semantics. */
+  /** MERGE / upsert by key equality, copy-on-write — see
+    * [[graft.delta.Merge]] for semantics. */
   def merge(source: DataFrame, keyColumns: Seq[String],
             matched: graft.delta.Merge.MergeAction = graft.delta.Merge.MergeAction.UpdateAll,
-            insertUnmatched: Boolean = true): graft.delta.Merge.MergeResult = {
-    ProtocolSupport.assertWritable(metaSnapshot(), path)
-    graft.delta.Merge.execute(this, source, keyColumns, matched, insertUnmatched)
-  }
+            insertUnmatched: Boolean = true): graft.delta.Merge.MergeResult =
+    mergeOne(source, graft.delta.Merge.Keys(keyColumns.map(k => (k, k))),
+      matched, insertUnmatched, mask = false)
 
-  /** Merge-on-read MERGE — DV-mask matched rows, append merged images and
-    * inserts in one commit; see [[Merge.executeMoR]]. */
+  /** Merge-on-read MERGE: the key merge materialized by deletion vectors —
+    * matched rows are masked in place and their merged images plus the
+    * inserts appended, one commit, zero target files rewritten. The right
+    * mode when a trickle of updates lands on huge files; mass merges should
+    * prefer [[merge]], which reclaims masked storage. */
   def mergeWithDV(source: DataFrame, keyColumns: Seq[String],
       matched: graft.delta.Merge.MergeAction = graft.delta.Merge.MergeAction.UpdateAll,
-      insertUnmatched: Boolean = true): graft.delta.Merge.MergeResult = {
-    ProtocolSupport.assertWritable(metaSnapshot(), path)
-    graft.delta.Merge.executeMoR(this, source, keyColumns, matched, insertUnmatched)
-  }
+      insertUnmatched: Boolean = true): graft.delta.Merge.MergeResult =
+    mergeOne(source, graft.delta.Merge.Keys(keyColumns.map(k => (k, k))),
+      matched, insertUnmatched, mask = true)
 
   /** MERGE under an arbitrary match condition over aliases `t` (target) and
-    * `s` (source) — see [[Merge.executeCondition]] for the deterministic
-    * first-match semantics and the scale caveat (theta join: broadcast the
-    * source side; key-equality conditions belong in [[merge]]). */
+    * `s` (source), copy-on-write — see [[graft.delta.Merge.Theta]] for the
+    * deterministic first-match semantics and the scale caveat (theta join:
+    * broadcast the source side; key-equality conditions belong in
+    * [[merge]]). */
   def mergeWithCondition(source: DataFrame,
       matchCondition: org.apache.spark.sql.Column,
       matched: graft.delta.Merge.MergeAction = graft.delta.Merge.MergeAction.UpdateAll,
-      insertUnmatched: Boolean = true): graft.delta.Merge.MergeResult = {
+      insertUnmatched: Boolean = true): graft.delta.Merge.MergeResult =
+    mergeOne(source, graft.delta.Merge.Theta(matchCondition), matched,
+      insertUnmatched, mask = false)
+
+  /** One unconditional matched clause and, optionally, `INSERT *`. */
+  private def mergeOne(source: DataFrame, on: graft.delta.Merge.Pairing,
+                       matched: graft.delta.Merge.MergeAction,
+                       insertUnmatched: Boolean,
+                       mask: Boolean): graft.delta.Merge.MergeResult = {
+    import graft.delta.Merge.{InsertClause, MergeClause, executeClauses}
     ProtocolSupport.assertWritable(metaSnapshot(), path)
-    graft.delta.Merge.executeCondition(this, source, matchCondition, matched, insertUnmatched)
+    executeClauses(this, source, on, Seq(MergeClause(None, matched)),
+      if (insertUnmatched) Seq(InsertClause(None)) else Nil, mask = mask)
   }
 
   // ---- CDC (change data feed) ----------------------------------------------

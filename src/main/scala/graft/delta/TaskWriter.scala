@@ -405,7 +405,11 @@ object TaskWriter {
     val qe = sorted.queryExecution.asInstanceOf[org.apache.spark.sql.execution.QueryExecution]
     def deleteAll(ms: Iterable[TaskWriteMessage]): Unit =
       ms.foreach(_.files.foreach { case (rel, _) => table.deleteDataFile(rel) })
-    val messages = Logging.withJobDesc(spark, "graft:write-data") {
+    // The job keeps an enclosing engine phase label (a MERGE's rewrite or
+    // insert pass); a write outside any phase is its own.
+    val phase = Option(spark.sparkContext.getLocalProperty("spark.job.description"))
+      .filter(_.startsWith("graft:")).getOrElse("graft:write-data")
+    val messages = Logging.withJobDesc(spark, phase) {
       org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("graft:write-data")) {
         val rdd = qe.toRdd
         val out = new Array[TaskWriteMessage](rdd.getNumPartitions)

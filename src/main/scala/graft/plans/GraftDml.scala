@@ -21,8 +21,12 @@ import graft.sources.GraftTable
  *  - `DELETE FROM t WHERE c`        → [[DeltaTable.delete(condition:*]]
  *    (or the DV path under `spark.graft.sql.dml.mor=true`)
  *  - `UPDATE t SET a=e WHERE c`     → [[DeltaTable.update(condition:*]]
- *  - `MERGE INTO t USING s ON cond` → [[Merge.executeClauses]]
- *    (key-equality `ON`) or [[Merge.executeCondition]] (theta)
+ *  - `MERGE INTO t USING s ON cond` → [[Merge.executeClauses]], paired
+ *    by [[Merge.Keys]] (key-equality `ON`) or [[Merge.Theta]] (any other)
+ *
+ * Every DML statement that lowers onto the merge core passes
+ * `spark.graft.sql.dml.mor` as its materialization: rewrite the touched
+ * files (default) or mask the affected rows with deletion vectors.
  *
  * Spark itself plans none of these for plain DSv2 tables (it requires the
  * row-level-operations API); `experimental.extraStrategies` run BEFORE the
@@ -45,13 +49,13 @@ import graft.sources.GraftTable
  * conjunct, an uncorrelated scalar (folded to a literal), or an
  * equality-correlated scalar (lowered to a clause-chain merge on the
  * correlation keys with a zero-tuple substitution for unmatched rows) —
- * all running the join-shaped merge cores. Every OTHER shape (multiple
+ * all running the merge core. Every OTHER shape (multiple
  * subquery conjuncts, subqueries under OR, correlated [NOT] IN,
  * non-equality correlation, aggregates under HAVING — in the WHERE *or*
  * in UPDATE assignment values) routes through the general fallback
  * ([[runGeneralFallback]]): Spark's own subquery planner evaluates the
  * whole predicate (and any assignment values) in one pre-state pass and
- * the admitted rows drive the merge cores by full-row matching. The
+ * the admitted rows drive the merge core by full-row matching. The
  * theta MERGE path carries one unconditional matched clause. The one
  * remaining refusal, with a clear error: the full-row fallback over a
  * map-typed column (maps cannot be join keys). Zero-match DELETE/UPDATE
@@ -245,7 +249,7 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
     * own subquery machinery (`Filter(cond, relation)` plans through the
     * standard decorrelation/rewrite rules, so its cost and plan shape are
     * exactly what the same predicate costs in a SELECT), and the DISTINCT
-    * full-row tuples it admits drive the same pruned merge cores as every
+    * full-row tuples it admits drive the same pruned merge core as every
     * other DML shape, matched by null-safe equality on EVERY column. A
     * tuple matches exactly the rows that satisfied the predicate:
     * duplicate rows agree on a deterministic predicate, so all-or-none of
@@ -341,12 +345,8 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
     val valueCols = valNames.map(n =>
       Shims.column(UnresolvedAttribute(Seq("__src", n))))
     val clause = Merge.MergeClause(None, action(valueCols))
-    if (morMode)
-      Merge.executeClausesMoR(t, affected, pairs, Seq(clause), Nil, Nil,
-        sqlSemantics = false, tgtKeyExpr = tgtKeyExpr)
-    else
-      Merge.executeClauses(t, affected, pairs, Seq(clause), Nil, Nil,
-        sqlSemantics = false, tgtKeyExpr = tgtKeyExpr)
+    Merge.executeClauses(t, affected, Merge.Keys(pairs, tgtKeyExpr), Seq(clause),
+      Nil, mask = morMode)
     ()
   }
 
@@ -521,7 +521,7 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
   /** Run a subquery-predicate DELETE/UPDATE as a single-clause merge
     * against the subquery side — the matched clause for IN/EXISTS, the
     * not-matched-by-source clause for NOT IN/NOT EXISTS (CoW, or the DV
-    * twin under `spark.graft.sql.dml.mor=true`). Zero matches is a SQL
+    * mask under `spark.graft.sql.dml.mor=true`). Zero matches is a SQL
     * no-op by construction — merge does not raise on an empty set. */
   private def runSubqueryDml(t: DeltaTable, out: AttributeSet,
                              sq: SubqueryPlan, action: Merge.MergeAction): Unit =
@@ -539,12 +539,8 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
         val clause = Merge.MergeClause(condCol, action)
         val (clauses, nms) =
           if (anti) (Nil, Seq(clause)) else (Seq(clause), Nil)
-        if (morMode)
-          Merge.executeClausesMoR(t, subDf, pairs, clauses, Nil, nms,
-            sqlSemantics = true)
-        else
-          Merge.executeClauses(t, subDf, pairs, clauses, Nil, nms,
-            sqlSemantics = true)
+        Merge.executeClauses(t, subDf, Merge.Keys(pairs), clauses, Nil, nms,
+          sqlSemantics = true, mask = morMode)
         ()
     }
 
@@ -674,12 +670,8 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
                                condition: Option[Expression]): Unit = {
     val m = Merge.MergeClause(condition.map(cs.matched), action(cs.matched))
     val n = Merge.MergeClause(condition.map(cs.unmatched), action(cs.unmatched))
-    if (morMode)
-      Merge.executeClausesMoR(t, cs.subDf, cs.pairs, Seq(m), Nil, Seq(n),
-        sqlSemantics = true)
-    else
-      Merge.executeClauses(t, cs.subDf, cs.pairs, Seq(m), Nil, Seq(n),
-        sqlSemantics = true)
+    Merge.executeClauses(t, cs.subDf, Merge.Keys(cs.pairs), Seq(m), Nil, Seq(n),
+      sqlSemantics = true, mask = morMode)
     ()
   }
 
@@ -757,7 +749,6 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
       case other => throw new ValidationException(
         s"unsupported NOT MATCHED action: $other")
     }
-    val insertUnmatched = inserts.nonEmpty
 
     // MATCHED side → MergeAction.
     def updateSet(assigns: Seq[Assignment]): Merge.MergeAction = {
@@ -805,34 +796,25 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
     val keys = equiKeys(cond, targetOut, sourceOut)
     if (nmsClauses.nonEmpty && keys.isEmpty) throw new ValidationException(
       "NOT MATCHED BY SOURCE requires an equality ON condition")
-    if (clauses.isEmpty && nmsClauses.isEmpty && !insertUnmatched)
+    if (clauses.isEmpty && nmsClauses.isEmpty && inserts.isEmpty)
       throw new ValidationException("MERGE with no actions is a no-op; refusing")
-    keys match {
-      case Some(ks) =>
-        // Full clause algebra on the key path, SQL semantics (cardinality
-        // violation on ambiguous matches, plain `=` key nulls, duplicate
-        // unmatched rows all insert). `spark.graft.sql.dml.mor=true`
-        // routes the SAME clause chain through the DV-mask twin — zero
-        // target files rewritten.
-        if (morMode)
-          Merge.executeClausesMoR(t, srcDf, ks, clauses, inserts, nmsClauses,
-            sqlSemantics = true)
-        else
-          Merge.executeClauses(t, srcDf, ks, clauses, inserts, nmsClauses,
-            sqlSemantics = true)
-        ()
-      case None =>
-        // theta path: single unconditional matched clause, star insert only
-        (clauses, inserts) match {
-          case (Seq(Merge.MergeClause(None, action)),
-                Seq() | Seq(Merge.InsertClause(None, None))) =>
-            Merge.executeCondition(t, srcDf,
-              aliasedCondition(cond, targetOut, sourceOut), action, insertUnmatched)
-            ()
-          case _ => throw new ValidationException(
-            "conditional/multiple clauses require an equality ON condition")
-        }
+    // Key path: the full clause algebra under SQL semantics (cardinality
+    // violation on ambiguous matches, plain `=` key nulls, duplicate
+    // unmatched rows all insert). Theta path: one unconditional matched
+    // clause and at most a star insert, resolved first-match.
+    val on = keys match {
+      case Some(ks) => Merge.Keys(ks)
+      case None => (clauses, inserts) match {
+        case (Seq(Merge.MergeClause(None, _)),
+              Seq() | Seq(Merge.InsertClause(None, None))) =>
+          Merge.Theta(aliasedCondition(cond, targetOut, sourceOut))
+        case _ => throw new ValidationException(
+          "conditional/multiple clauses require an equality ON condition")
+      }
     }
+    Merge.executeClauses(t, srcDf, on, clauses, inserts, nmsClauses,
+      sqlSemantics = true, mask = morMode)
+    ()
   }
 
   private def stripCast(e: Expression): Expression = e match {
@@ -870,7 +852,7 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
   }
 
   /** Rebind a theta `ON` condition to the `t`/`s` aliases
-    * [[Merge.executeCondition]] joins under. */
+    * [[Merge.Theta]] joins under. */
   private def aliasedCondition(e: Expression, targetOut: AttributeSet,
                                sourceOut: AttributeSet): Column =
     Shims.column(e.transform {
@@ -881,7 +863,7 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
     })
 
   /** Rebind a matched-UPDATE assignment value for
-    * [[Merge.resolveMatched]]'s environment: target columns by plain name,
+    * the merge core's matched-row environment: target columns by plain name,
     * source columns through the carried `__src` struct. */
   private def mergeValueColumn(e: Expression, targetOut: AttributeSet,
                                sourceOut: AttributeSet): Column = {

@@ -56,9 +56,9 @@ class QueriesSpec extends SparkTestBase {
 
   test("plan audit: MoR DV builds aggregate bitmaps on executors, never raw row indexes") {
     // Source tripwire: the three merge-on-read paths (deleteWithDV,
-    // updateWithDV, executeMoR) must keep the typed bitmap aggregator — a
-    // collect_list of row indexes is the driver-OOM shape (8 B/row on the
-    // driver vs KBs/file).
+    // updateWithDV, the merge core's mask) must keep the typed bitmap
+    // aggregator — a collect_list of row indexes is the driver-OOM shape
+    // (8 B/row on the driver vs KBs/file).
     Seq("src/main/scala/graft/delta/DeltaTable.scala",
         "src/main/scala/graft/delta/Merge.scala").foreach { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8").mkString

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
@@ -177,6 +178,69 @@ class DmlPlanAuditSpec extends SparkTestBase {
     assert(collectSets.isEmpty,
       s"merge aggregated the file set into one collect_set cell: $collectSets")
     assert(t.toDF().filter($"s" === "merged").count() == 200)
+  }
+
+  /** The distinct `graft:merge-*` job labels `body` runs, in first-run
+    * order. The listener bus is async — poll until the set is quiescent. */
+  private def mergeLabels(body: => Unit): Seq[String] = {
+    val labels = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("graft:merge-")).foreach(labels.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var last = -1
+      var stable = 0
+      val deadline = System.currentTimeMillis() + 30000
+      while (stable < 3 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(100)
+        val n = labels.size
+        if (n == last) stable += 1 else { stable = 0; last = n }
+      }
+      labels.asScala.toSeq.distinct
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("MERGE: each route runs exactly its pinned graft:merge-* passes") {
+    val cat = graft.plans.GraftSql.ensure(spark)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.audit")
+    def table(name: String): String = {
+      val t = s"$cat.audit.$name"
+      spark.sql(s"CREATE TABLE $t AS SELECT id, concat('v', id) AS v FROM range(1000)")
+      t
+    }
+    // the change-batch shape a CDC ingest runs: delete, upsert, insert
+    def keyMerge(t: String): Unit = spark.sql(
+      s"""MERGE INTO $t tgt
+         |USING (SELECT id, concat('u', id) AS v, IF(id % 2 = 0, 'D', 'U') AS op
+         |  FROM range(990, 1010)) src
+         |ON tgt.id = src.id
+         |WHEN MATCHED AND src.op = 'D' THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val fourPasses = Seq("graft:merge-cardcheck", "graft:merge-census",
+      "graft:merge-rewrite", "graft:merge-insert")
+    val cow = table("labcow")
+    assert(mergeLabels(keyMerge(cow)) == fourPasses)
+    val mask = table("labmask")
+    spark.conf.set("spark.graft.sql.dml.mor", "true")
+    try assert(mergeLabels(keyMerge(mask)) == fourPasses)
+    finally spark.conf.unset("spark.graft.sql.dml.mor")
+    val theta = table("labtheta")
+    assert(mergeLabels(spark.sql(
+      s"""MERGE INTO $theta tgt
+         |USING (SELECT id, concat('u', id) AS v FROM range(995, 1005)) src
+         |ON tgt.id > src.id AND tgt.id <= src.id + 1
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)) ==
+      Seq("graft:merge-census", "graft:merge-rewrite", "graft:merge-insert"))
+    Seq(cow, mask).foreach { t =>
+      assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0) == 1005)
+    }
+    assert(spark.sql(s"SELECT count(*) FROM $theta").head().getLong(0) == 1006)
   }
 
   test("correlated-subquery SQL DML: no file-path In, no nested-loop join") {

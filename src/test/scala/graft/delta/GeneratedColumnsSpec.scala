@@ -75,19 +75,19 @@ class GeneratedColumnsSpec extends SparkTestBase {
     // rewrites id, generated col must recompute; unmatched source inserts
     // compute it as well. Merge keys must exist on both sides; use id.
     val source = Seq(5L, 2L).toDF("id") // 2 matches, 5 inserts
-    Merge.execute(t, source, Seq("id"),
+    t.merge(source, Seq("id"),
       Merge.MergeAction.UpdateAll, insertUnmatched = true)
     assert(t.toDF().orderBy("id").collect().map(_.toSeq).toSeq ==
       Seq(Seq(1L, 2L), Seq(2L, 4L), Seq(5L, 10L)))
     // clause merge refusal: SET on a generated column
     val e = intercept[ValidationException] {
-      Merge.executeClauses(t, Seq(1L).toDF("id"), Seq(("id", "id")),
+      Merge.executeClauses(t, Seq(1L).toDF("id"), Merge.Keys(Seq(("id", "id"))),
         Seq(Merge.MergeClause(None,
           Merge.MergeAction.UpdateSet(Map("twice" -> lit(0L))))), Nil)
     }
     assert(e.getMessage.contains("generated"))
     // MoR twin recomputes
-    Merge.executeMoR(t, Seq((1L)).toDF("id").withColumn("id", $"id" + 9),
+    t.mergeWithDV(Seq((1L)).toDF("id").withColumn("id", $"id" + 9),
       Seq("id"), Merge.MergeAction.UpdateAll, insertUnmatched = true)
     assert(t.toDF().filter($"id" === 10).head().getLong(1) == 20L)
   }
@@ -115,7 +115,7 @@ class GeneratedColumnsSpec extends SparkTestBase {
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema2))
     t2.updateConfiguration(Map(Cdc.EnableKey -> "true"))
     t2.write(Seq((1L, 3L)).toDF("id", "base"))
-    Merge.executeClauses(t2, Seq(1L).toDF("id"), Seq(("id", "id")),
+    Merge.executeClauses(t2, Seq(1L).toDF("id"), Merge.Keys(Seq(("id", "id"))),
       Seq(Merge.MergeClause(None,
         Merge.MergeAction.UpdateSet(Map("base" -> lit(10L))))), Nil)
     val post = Cdc.readByVersion(t2, t2.version, t2.version)

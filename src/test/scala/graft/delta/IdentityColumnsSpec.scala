@@ -78,7 +78,7 @@ class IdentityColumnsSpec extends SparkTestBase {
     val dt = deltaOf(t)
     // a source omitting the identity column ALLOCATES from the mark
     // (Delta's MERGE INSERT behavior) instead of refusing
-    Merge.execute(dt, Seq(("zz")).toDF("s"), Seq("s"),
+    dt.merge(Seq(("zz")).toDF("s"), Seq("s"),
       Merge.MergeAction.UpdateAll, insertUnmatched = true)
     val afterAlloc = sql(s"SELECT rid, s FROM $t ORDER BY rid").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -88,7 +88,7 @@ class IdentityColumnsSpec extends SparkTestBase {
       .getLong(IdentityColumns.HighWaterMarkKey) == 2L)
     // explicit values still work (BY DEFAULT) — and the mark catches up
     // past them in the SAME merge commit, so later appends cannot collide
-    Merge.execute(dt, Seq((50L, "yy")).toDF("rid", "s"), Seq("s"),
+    dt.merge(Seq((50L, "yy")).toDF("rid", "s"), Seq("s"),
       Merge.MergeAction.UpdateAll, insertUnmatched = true)
     assert(deltaOf(t).metaSnapshot().schema("rid").metadata
       .getLong(IdentityColumns.HighWaterMarkKey) == 50L)

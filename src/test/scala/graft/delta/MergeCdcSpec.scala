@@ -319,6 +319,50 @@ class MergeCdcSpec extends SparkTestBase {
       .select("id").as[Int].collect().toSeq == Seq(2))
   }
 
+  test("MergeResult.version is the merge's own commit, not a later writer's") {
+    val t = tmpTable()
+    t.write(Seq((1, "a"), (2, "b")).toDF("id", "s"))
+    t.enableCDC()
+    val start = t.version
+    // The UPDATE SET value is a UDF. The CDC post-image re-evaluates it
+    // after the merge committed; on that evaluation it lands a
+    // commitInfo-only commit, as a concurrent writer would.
+    var landed = false
+    MergeCdcSpec.onEval = () => MergeCdcSpec.synchronized {
+      if (!landed && t.log.latestVersion() == start + 1) {
+        landed = true
+        t.log.writeCommit(start + 2,
+          Seq[Action](CommitInfo(System.currentTimeMillis(), "CONCURRENT")))
+      }
+    }
+    val probe = udf((s: String) => { MergeCdcSpec.onEval(); s + "!" })
+    val r = try t.merge(Seq((1, "x")).toDF("id", "s"), Seq("id"),
+        matched = Merge.MergeAction.UpdateSet(Map("s" -> probe(col("__src.s")))),
+        insertUnmatched = false)
+      finally MergeCdcSpec.onEval = () => ()
+    assert(landed && t.version == start + 2)
+    assert(r.updated == 1 && r.version == start + 1)
+    assert(t.changes(r.version, r.version).groupBy(Cdc.ChangeType).count()
+      .collect().map(x => x.getString(0) -> x.getLong(1)).toMap ==
+      Map("update_preimage" -> 1L, "update_postimage" -> 1L))
+  }
+
+  test("theta merge releases its persisted frames when the write throws") {
+    val t = tmpTable()
+    t.write(Seq((1, 10.0), (2, 50.0)).toDF("id", "x"))
+    t.addCheckConstraint("xpos", "x > 0")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[ValidationException] {
+      t.mergeWithCondition(Seq(20.0).toDF("cut"), col("t.x") < col("s.cut"),
+        matched = Merge.MergeAction.UpdateSet(Map("x" -> lit(-1.0))),
+        insertUnmatched = false)
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"merge left persisted RDDs $leaked")
+    assert(t.toDF().orderBy("id").select("x").as[Double].collect().toSeq ==
+      Seq(10.0, 50.0))
+  }
+
   test("foreign _cdc_config.json sidecar enables capture; table configuration wins when present") {
     val t = tmpTable()
     t.write(Seq((1, "a")).toDF("id", "s"))
@@ -350,4 +394,10 @@ class MergeCdcSpec extends SparkTestBase {
     assert(t.log.fs.exists(
       new org.apache.hadoop.fs.Path(t.log.logPath, "_cdc_properties.json")))
   }
+}
+
+object MergeCdcSpec {
+  /** Called by a test UDF on every evaluation (executors share the JVM in
+    * local mode). */
+  @volatile var onEval: () => Unit = () => ()
 }

@@ -13,7 +13,10 @@ import graft.SparkTestBase
  * Model-based property check for [[Merge.executeClauses]]: random clause
  * chains (conditional DELETE / two UPDATE SET shapes, in random order),
  * random conditional inserts, and random not-matched-by-source clauses
- * run against a driver-side first-true-wins model after every merge.
+ * run against a driver-side first-true-wins model after every merge —
+ * each step under both materializations (rewrite and deletion-vector
+ * mask, on two tables fed the same steps), checking the table contents
+ * and the merge's updated/deleted/inserted counts.
  * This is the adversarial companion to the behavioral SqlDmlSpec cases:
  * clause ordering, fall-through rows, condition overlap, and the
  * matched/NMS gating all get shuffled.
@@ -38,13 +41,17 @@ class MergeClausesModelSpec extends SparkTestBase {
   test("random clause chains match a first-true-wins model") {
     val rng = new Random(4242)
     (1 to 4).foreach { trial =>
-      val t = DeltaTable.forPath(spark,
-        Files.createTempDirectory(s"graft-clauses$trial").toString)
       // target: ids 1..30, k = id % 4, n = id
       var model: Map[Int, (Int, Long)] =
         (1 to 30).map(id => id -> ((id % 4, id.toLong))).toMap
-      t.write(model.toSeq.map { case (id, (k, n)) => (id, k, n) }
-        .toDF("id", "k", "n"))
+      // one table per materialization: mask = false rewrites, true masks
+      val tables = Seq(false, true).map { mask =>
+        val t = DeltaTable.forPath(spark,
+          Files.createTempDirectory(s"graft-clauses$trial-$mask").toString)
+        t.write(model.toSeq.map { case (id, (k, n)) => (id, k, n) }
+          .toDF("id", "k", "n"))
+        mask -> t
+      }
 
       (1 to 4).foreach { step =>
         val pre = model // state at merge start
@@ -78,23 +85,27 @@ class MergeClausesModelSpec extends SparkTestBase {
           if (!useNms) Nil
           else Seq(Merge.MergeClause(Some(col("k") === 0), Merge.MergeAction.Delete))
 
-        Merge.executeClauses(t, srcDf, Seq("id" -> "id"), mergeClauses,
-          insertCond.toSeq.map(c => Merge.InsertClause(c)), nms)
+        val results = tables.map { case (mask, t) =>
+          mask -> Merge.executeClauses(t, srcDf, Merge.Keys(Seq("id" -> "id")),
+            mergeClauses, insertCond.toSeq.map(c => Merge.InsertClause(c)), nms,
+            mask = mask)
+        }
 
         // ---- model: matched rows take their first-true clause ----
+        var (updated, deleted, inserted) = (0L, 0L, 0L)
         model = pre.flatMap { case (id, (k, n)) =>
           srcMap.get(id) match {
             case Some(sn) =>
               clauses.find(_.cond((k, n))) match {
                 case Some(c) => c.action match {
-                  case "delete" => None
-                  case "bump" => Some(id -> ((k, n + sn)))
-                  case "set" => Some(id -> ((9, sn)))
+                  case "delete" => deleted += 1; None
+                  case "bump" => updated += 1; Some(id -> ((k, n + sn)))
+                  case "set" => updated += 1; Some(id -> ((9, sn)))
                 }
                 case None => Some(id -> ((k, n))) // fell through every clause
               }
             case None => // not matched by source
-              if (useNms && k == 0) None else Some(id -> ((k, n)))
+              if (useNms && k == 0) { deleted += 1; None } else Some(id -> ((k, n)))
           }
         }
         // inserts: source ids absent from the PRE-merge target, cond-gated;
@@ -106,16 +117,23 @@ class MergeClausesModelSpec extends SparkTestBase {
             case None => _ => true
           }
           srcMap.foreach { case (id, sn) =>
-            if (!pre.contains(id) && pass(sn)) model += id -> ((Int.MinValue, sn))
+            if (!pre.contains(id) && pass(sn)) {
+              model += id -> ((Int.MinValue, sn))
+              inserted += 1
+            }
           }
         }
 
-        val got = t.toDF()
-          .select(col("id"),
-            coalesce(col("k"), lit(Int.MinValue)).as("k"), col("n"))
-          .as[(Int, Int, Long)]
-          .collect().map(r => r._1 -> ((r._2, r._3))).toMap
-        assert(got == model, s"trial $trial step $step diverged")
+        tables.zip(results).foreach { case ((mask, t), (_, r)) =>
+          val got = t.toDF()
+            .select(col("id"),
+              coalesce(col("k"), lit(Int.MinValue)).as("k"), col("n"))
+            .as[(Int, Int, Long)]
+            .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+          assert(got == model, s"trial $trial step $step mask=$mask diverged")
+          assert((r.updated, r.deleted, r.inserted) == ((updated, deleted, inserted)),
+            s"trial $trial step $step mask=$mask counts")
+        }
       }
     }
   }

@@ -641,6 +641,39 @@ class SqlDmlSpec extends SparkTestBase {
     assert(got == want)
   }
 
+  test("theta MERGE under MoR: DV-masked, zero files rewritten") {
+    setup()
+    val t = freshTable()
+    sql(s"CREATE TABLE $t (id BIGINT, v STRING)")
+    sql(s"INSERT INTO $t SELECT id, concat('v', id) FROM range(100)")
+    val path = GraftSql.warehousePath(spark).get + "/dml/" + t.split('.').last
+    val before = graft.delta.DeltaTable.forPath(spark, path).snapshot()
+      .activeFiles.map(_.path).toSet
+    spark.conf.set("spark.graft.sql.dml.mor", "true")
+    try {
+      // a non-equi ON: each source row matches exactly the target id + 1
+      sql(s"""MERGE INTO $t AS tgt
+             |USING (SELECT * FROM VALUES (10L, 'x'), (20L, 'y'), (500L, 'new')
+             |  AS s(id, v)) AS src
+             |ON tgt.id > src.id AND tgt.id <= src.id + 1
+             |WHEN MATCHED THEN UPDATE SET v = src.v
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    } finally spark.conf.unset("spark.graft.sql.dml.mor")
+    val snap = graft.delta.DeltaTable.forPath(spark, path).snapshot()
+    assert(before.subsetOf(snap.activeFiles.map(_.path).toSet),
+      "MoR theta merge must not rewrite existing files")
+    assert(snap.activeFiles.exists(_.deletionVector.nonEmpty),
+      "expected DV-masked files after MoR theta merge")
+    val got = sql(s"SELECT id, v FROM $t ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    val want = (0L until 100L).map(i => (i, i match {
+      case 11L => "x"
+      case 21L => "y"
+      case _ => s"v$i"
+    })) :+ ((500L, "new"))
+    assert(got == want)
+  }
+
   test("maintenance TVF side effects run at EXECUTION, not resolution (EXPLAIN is free)") {
     setup()
     val t = freshTable()

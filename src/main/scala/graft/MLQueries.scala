@@ -511,9 +511,10 @@ object MLQueries {
     }),
 
     // ---- incremental dedup: classify a NEW batch against the EXISTING
-    //      corpus (exact fingerprint semi-join + cross-side-only PPJoin
-    //      prefix filter with exact-Jaccard verify) — the every-refresh
-    //      step that avoids re-deduping the whole union from scratch ----
+    //      corpus (one map pass over the corpus probes the batch's
+    //      fingerprints and hash-ordered PPJoin prefixes, exact-Jaccard
+    //      verify) — the every-refresh step that avoids re-deduping the
+    //      whole union from scratch ----
     "t35_incremental_dedup" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val existing = d.filter(col("doc_id") < 200)

@@ -14,7 +14,13 @@ import org.apache.spark.sql.functions._
  *    exact Jaccard verifies candidates;
  *  - SimHash: 64-bit signatures, banded the same way for candidate pairs;
  *  - n-gram Jaccard: exact set similarity used as the verifier (and directly
- *    for small candidate sets).
+ *    for small candidate sets); a corpus self-join prunes candidates with
+ *    AllPairs prefixes under a rare-first df order;
+ *  - incremental dedup of a batch against a corpus: prefixes under a FIXED
+ *    hash order need no census, so the batch's fingerprints, prefix keys and
+ *    shingle sets are hash-joined by one streaming pass over the corpus —
+ *    broadcast while the batch side is within the broadcast threshold,
+ *    the same joins shuffled above it.
  *
  * All signature computation is per-row Column expressions (map-side, no
  * shuffle, codegen'd); only candidate generation shuffles, on keys whose
@@ -535,7 +541,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.1): DataFrame = {
     val sets = docs.select(col(idCol).as("__id"),
-      array_distinct(TextFunctions.ngrams(TextFunctions.tokens(col(textCol)), n)).as("__sh"))
+      NativeExpressions.shingleSet(col(textCol), n).as("__sh"))
     sets.as("a").join(sets.as("b"), col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
         jaccard(col("a.__sh"), col("b.__sh")).as("jaccard"))
@@ -552,60 +558,64 @@ object Dedup {
     * so recall is exactly 1.0 and the exact-Jaccard verification join makes
     * the result identical to [[ngramJaccardPairs]]. Rare-first ordering
     * keeps high-frequency shingles OUT of prefixes, which is what bounds
-    * the candidate blow-up (and the skew) at corpus scale. Every shuffle is
-    * keyed (shingle or id) — no CartesianProduct / BroadcastNestedLoopJoin
-    * node anywhere in the plan. */
+    * the candidate blow-up (and the skew) of a corpus SELF-join; a batch
+    * probing a corpus needs no census ([[incrementalDedup]]). Every shuffle
+    * is keyed (shingle or id) — no CartesianProduct / BroadcastNestedLoopJoin
+    * node anywhere in the plan.
+    *
+    * The verified pairs are materialized before returning, so the shingle-set
+    * cache is released here instead of leaking one cached frame per call. */
   def ngramJaccardNearDups(docs: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, threshold: Double = 0.1): DataFrame = {
     // Cache barrier for the same reason as minhashNearDups: the shingle
-    // subtree feeds prefix generation AND both sides of the verify join.
-    val sets = shingleSets(docs, idCol, textCol, n).cache()
-    val prefix = prefixEntries(sets, threshold, Seq("__id"))
-    val cand = prefix.as("pa").join(prefix.as("pb"),
-        col("pa.__g") === col("pb.__g") && col("pa.__id") < col("pb.__id"))
-      .select(col("pa.__id").as("id_a"), col("pb.__id").as("id_b"))
-      .distinct()
-    cand
-      .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
-      .join(sets.select(col("__id").as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("__sha"), col("__shb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** Distinct shingle sets with their size: `(…, __id, __sh, __sz)`, empty
-    * docs dropped, scan widened. The single source of the shingle
-    * expression for every PPJoin-family operator. */
-  private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int, extra: Seq[(String, Column)] = Nil): DataFrame =
-    // 16 KB/task: shingle explosion + md5 per shingle feed the minhash
-    // permutation kernel (r17 A/B: t4/t15/t30 want full fan-out)
-    graft.Tables.widen(docs, bytesPerTask = 16L << 10).select(
-        (col(idCol).as("__id") +: extra.map { case (nm, c) => c.as(nm) }) :+
-          array_distinct(TextFunctions.ngrams(
-            TextFunctions.tokens(col(textCol)), n)).as("__sh"): _*)
+    // sets feed the census, the prefix index AND both sides of the verify
+    // join. Widened to 16 KB/task so a gate-sized input still spreads its
+    // shingling, census and verify join over every core.
+    val sets = graft.Tables.widen(docs, bytesPerTask = 16L << 10)
+      .select(col(idCol).as("__id"), NativeExpressions.shingleSet(col(textCol), n).as("__sh"))
       .withColumn("__sz", size(col("__sh")))
       .filter(col("__sz") > 0)
-
-  /** AllPairs/PPJoin prefix index over shingle sets: for each document the
-    * first `|s| − ⌈t·|s|⌉ + 1` shingles under the canonical order
-    * (document frequency ascending over ALL input rows, then value). The
-    * prefix lemma guarantees any pair with Jaccard ≥ t shares an indexed
-    * shingle, so an equi-join of two prefix indexes built from the SAME
-    * census has recall exactly 1.0 — the single source of the prefix-cut
-    * arithmetic for both the self-join and cross-corpus operators.
-    * `keys` are the row-identity columns (e.g. `__id`, or `__side, __id`). */
-  private def prefixEntries(sets: DataFrame, threshold: Double,
-                            keys: Seq[String]): DataFrame = {
-    val tok = sets.select(
-      keys.map(col) :+ col("__sz") :+ explode(col("__sh")).as("__g"): _*)
-    val dfreq = tok.groupBy(col("__g")).agg(count(lit(1)).as("__df"))
-    tok.join(dfreq, Seq("__g"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(keys.map(col): _*).orderBy(col("__df"), col("__g"))))
-      .filter(col("__rk") <= col("__sz") - ceil(lit(threshold) * col("__sz")) + 1)
-      .select(col("__g") +: keys.map(col): _*)
+      .cache()
+    try {
+      val tok = sets.select(col("__id"), col("__sz"), explode(col("__sh")).as("__g"))
+      val dfreq = tok.groupBy(col("__g")).agg(count(lit(1)).as("__df"))
+      val prefix = tok.join(dfreq, Seq("__g"))
+        .withColumn("__rk", row_number().over(
+          Window.partitionBy(col("__id")).orderBy(col("__df"), col("__g"))))
+        .filter(col("__rk") <= prefixLength(col("__sz"), threshold))
+        .select(col("__g"), col("__id"))
+      val cand = prefix.as("pa").join(prefix.as("pb"),
+          col("pa.__g") === col("pb.__g") && col("pa.__id") < col("pb.__id"))
+        .select(col("pa.__id").as("id_a"), col("pb.__id").as("id_b"))
+        .distinct()
+      cand
+        .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
+        .join(sets.select(col("__id").as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
+        .select(col("id_a"), col("id_b"),
+          jaccard(col("__sha"), col("__shb")).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
+        .localCheckpoint(true)
+    } finally sets.unpersist(false)
   }
+
+  /** HOF composition (interpreted) the shingle kernel
+    * [[NativeExpressions.shingleSet]] — the single shingle expression of the
+    * PPJoin operators — must agree with. */
+  def shingleSetHof(text: Column, n: Int): Column =
+    array_distinct(TextFunctions.ngrams(TextFunctions.tokens(text), n))
+
+  /** AllPairs prefix length `|s| − ⌈t·|s|⌉ + 1` of a set of `size` elements;
+    * [[HashPrefix.length]] is the same arithmetic inside the kernel. */
+  private[functions] def prefixLength(size: Column, threshold: Double): Column =
+    size - ceil(lit(threshold) * size) + 1
+
+  /** HOF composition (interpreted) the prefix kernel
+    * [[NativeExpressions.hashPrefix]] must agree with. */
+  def hashPrefixHof(set: Column, threshold: Double): Column =
+    transform(
+      slice(array_sort(transform(set, g => struct(xxhash64(g).as("h"), g.as("g")))),
+        lit(1), prefixLength(size(set), threshold).cast("int")),
+      e => e.getField("g"))
 
   // ---- SimHash -------------------------------------------------------------
 
@@ -691,73 +701,63 @@ object Dedup {
    * ingested" step that runs on every refresh of a training corpus, where
    * re-deduping the full union from scratch would redo all prior work.
    *
-   * Returns one row per batch document: `(doc_id, status)` with status
-   * `exact_dup` (normalized fingerprint already in the corpus), `near_dup`
-   * (n-gram Jaccard ≥ `threshold` against some corpus doc), or `kept`.
-   * Exact wins over near when both apply.
+   * Returns one row per distinct batch `doc_id`: `(doc_id, status)` with
+   * status `exact_dup` (normalized fingerprint already in the corpus),
+   * `near_dup` (n-gram Jaccard ≥ `threshold` against some corpus doc), or
+   * `kept`. Exact wins over near when both apply; batch rows sharing an id
+   * share the most severe status among them. The verdicts are materialized
+   * before returning, so they stay those of the corpus as it was at the call.
    *
-   * Scale shape — nothing touches the existing corpus beyond two keyed
-   * passes, and nothing is all-pairs:
-   *  - the exact pass is a LEFT SEMI join of batch fingerprints against the
-   *    corpus fingerprint set (md5 keys, shuffle join — the corpus
-   *    fingerprint set is unbounded, broadcasting it would be the
-   *    driver-OOM shape);
-   *  - the near pass is [[ngramJaccardNearDups]]'s AllPairs/PPJoin prefix
-   *    filter with the canonical shingle order computed over the UNION (a
-   *    consistent global order is what makes the prefix lemma hold for
-   *    cross-side pairs), but candidates are only generated ACROSS sides —
-   *    corpus⋈corpus and batch⋈batch prefix collisions never materialize;
-   *  - verification is the exact-Jaccard equi-join; recall is exactly 1.0
-   *    (prefix lemma), so the result matches brute force.
+   * Scale shape — the corpus is read in ONE streaming map pass; nothing
+   * corpus-sized is shuffled, cached or ranked:
+   *  - batch side, O(batch), evaluated once: per row its fingerprint, its
+   *    shingle set and its AllPairs prefix under the FIXED order
+   *    `(xxhash64(g), g)` ([[HashPrefix]]). The prefix lemma holds under any
+   *    fixed order, so a pair with Jaccard ≥ t shares a prefix shingle
+   *    without a df census tying the batch to the corpus;
+   *  - corpus side, per row: the same fingerprint, shingle set and prefix;
+   *    its probe keys (fingerprint, then prefix shingles) hash-join the
+   *    batch's keys, then the batch's sets for the exact-Jaccard check;
+   *    recall is exactly 1.0 (prefix lemma), so the result matches brute
+   *    force;
+   *  - only verified (batch id, verdict) rows, plus the batch's own ids,
+   *    reach the final small aggregate.
+   * While the batch side's estimated size is within
+   * `spark.sql.autoBroadcastJoinThreshold`, both joins are broadcast hash
+   * joins and the corpus never leaves its scan tasks; above it, the planner
+   * runs the same joins as shuffle joins, with the same verdicts. No
+   * broadcast is forced: the batch is unbounded.
    */
   def incrementalDedup(existing: DataFrame, batch: DataFrame,
                        idCol: String, textCol: String,
                        n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    // exact pass: normalized-content fingerprints
-    val exFp = existing
-      .select(TextFunctions.fingerprint(col(textCol)).as("__fp")).distinct()
-    val exactIds = batch
-      .select(col(idCol).as("__id"), TextFunctions.fingerprint(col(textCol)).as("__fp"))
-      .join(exFp, Seq("__fp"), "left_semi")
-      .select(col("__id"))
-    // near pass: union census → per-side prefixes → cross-side candidates.
-    // The union-wide df census is what makes the prefix lemma hold for
-    // cross-side pairs (both prefixes derive from ONE canonical order).
-    val all = shingleSets(existing, idCol, textCol, n,
-        extra = Seq("__side" -> lit("A")))
-      .unionByName(shingleSets(batch, idCol, textCol, n,
-        extra = Seq("__side" -> lit("B"))))
-      .cache()
-    val prefix = prefixEntries(all, threshold, Seq("__side", "__id"))
-    val cand = prefix.filter(col("__side") === "A").as("pa")
-      .join(prefix.filter(col("__side") === "B").as("pb"),
-        col("pa.__g") === col("pb.__g"))
-      .select(col("pa.__id").as("id_a"), col("pb.__id").as("id_b"))
-      .distinct()
-    val aSets = all.filter(col("__side") === "A")
-      .select(col("__id").as("id_a"), col("__sh").as("__sha"))
-    val bSets = all.filter(col("__side") === "B")
-      .select(col("__id").as("id_b"), col("__sh").as("__shb"))
-    val nearIds = cand.join(aSets, Seq("id_a")).join(bSets, Seq("id_b"))
-      .filter(jaccard(col("__sha"), col("__shb")) >= threshold)
-      .select(col("id_b").as("__id")).distinct()
-    val exFlag = exactIds.select(col("__id").as("doc_id"), lit(1).as("__ex"))
-    val nrFlag = nearIds.select(col("__id").as("doc_id"), lit(1).as("__nr"))
-    val statuses = batch.select(col(idCol).as("doc_id"))
-      .join(exFlag, Seq("doc_id"), "left_outer")
-      .join(nrFlag, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        when(col("__ex") === 1, "exact_dup")
-          .when(col("__nr") === 1, "near_dup")
+    // Probe keys of one document: its fingerprint (`__exact`), then its
+    // prefix shingles — one explode, so one pass yields both joins' keys.
+    def probeKeys(df: DataFrame, keep: String, set: String): DataFrame =
+      df.select(col(keep), posexplode(concat(array(col("__fp")),
+          NativeExpressions.hashPrefix(col(set), threshold))).as(Seq("__pos", "__k")))
+        .select(col(keep), (col("__pos") === 0).as("__exact"), col("__k"))
+    val side = batch.select(col(idCol).as("__bid"),
+        TextFunctions.fingerprint(col(textCol)).as("__fp"),
+        NativeExpressions.shingleSet(col(textCol), n).as("__bsh"))
+      .localCheckpoint(true)
+    val keys = probeKeys(side, "__bid", "__bsh")
+    val sets = side.select(col("__bid"), col("__bsh"))
+    val corpus = existing.select(TextFunctions.fingerprint(col(textCol)).as("__fp"),
+      NativeExpressions.shingleSet(col(textCol), n).as("__sh"))
+    val verified = probeKeys(corpus, "__sh", "__sh")
+      .join(keys, Seq("__exact", "__k"))
+      .join(sets, Seq("__bid"))
+      .filter(col("__exact") || jaccard(col("__sh"), col("__bsh")) >= threshold)
+      .select(col("__bid"), when(col("__exact"), 2).otherwise(1).as("__v"))
+    side.select(col("__bid"), lit(0).as("__v"))
+      .unionByName(verified)
+      .groupBy(col("__bid"))
+      .agg(max(col("__v")).as("__v"))
+      .select(col("__bid").as("doc_id"),
+        when(col("__v") === 2, "exact_dup")
+          .when(col("__v") === 1, "near_dup")
           .otherwise("kept").as("status"))
-    // Eagerly materialize the (doc_id, status) verdicts — O(batch) rows —
-    // so the union shingle-set cache can be dropped HERE instead of leaking
-    // one cached corpus-sized DataFrame per invocation in long-lived
-    // sessions (bench loops, incremental-refresh drivers). The checkpoint
-    // RDD is context-cleaner-managed: it is reclaimed when the returned
-    // DataFrame is GC'd, unlike a CacheManager entry.
-    val out = statuses.localCheckpoint(true)
-    all.unpersist(false)
-    out
+      .localCheckpoint(true)
   }
 }

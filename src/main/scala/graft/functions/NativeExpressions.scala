@@ -513,6 +513,149 @@ case class TokenStats(child: Expression, markerLists: Array[Array[String]])
     copy(child = newChild)
 }
 
+/**
+ * Distinct word n-gram shingles of a text, in first-occurrence order — one
+ * pass over the text's bytes instead of the interpreted composition
+ * `array_distinct(ngrams(tokens(text), n))` ([[Dedup.shingleSetHof]], the
+ * semantic reference). Tokens are the pieces between single spaces exactly
+ * as `split(text, " ")` yields them (empty pieces included), so a shingle —
+ * `n` consecutive tokens joined by one space — is the text's own byte range
+ * from the first token's start to the last token's end, copied once. A null
+ * text, like one of fewer than `n` tokens, yields the empty array, as the
+ * composition does.
+ */
+case class ShingleSet(child: Expression, n: Int) extends UnaryExpression {
+
+  import org.apache.spark.unsafe.types.UTF8String
+
+  require(n >= 1, "shingle size n must be at least 1")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"shingle_set expects string, got ${other.simpleString}")
+  }
+
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  /** Called from generated code; public for codegen access. */
+  def shingles(text: UTF8String): ArrayData = {
+    if (text == null) return new GenericArrayData(Array.empty[Any])
+    // a private copy: the shingles are views into it, and `getBytes` may
+    // hand back the input's own (possibly reused) buffer
+    val bytes = text.copy().getBytes
+    // token j spans [starts(j), starts(j + 1) - 1); the text ends one byte
+    // after a virtual separator at bytes.length
+    val builder = new scala.collection.mutable.ArrayBuilder.ofInt
+    builder += 0
+    var i = 0
+    while (i < bytes.length) { if (bytes(i) == ' ') builder += i + 1; i += 1 }
+    builder += bytes.length + 1
+    val starts = builder.result()
+    val nTok = starts.length - 1
+    if (nTok < n) return new GenericArrayData(Array.empty[Any])
+    val seen = new java.util.LinkedHashSet[UTF8String](2 * (nTok - n + 1))
+    var j = 0
+    while (j <= nTok - n) {
+      val from = starts(j)
+      seen.add(UTF8String.fromBytes(bytes, from, starts(j + n) - 1 - from))
+      j += 1
+    }
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
+  }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    shingles(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("shingleSet", this, classOf[ShingleSet].getName)
+    val c = child.genCode(ctx)
+    ev.copy(
+      code = code"""
+        ${c.code}
+        ${classOf[ArrayData].getName} ${ev.value} = $ref.shingles(${c.isNull} ? null : ${c.value});
+      """,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleSet =
+    copy(child = newChild)
+}
+
+/**
+ * AllPairs/PPJoin prefix of a shingle set under the FIXED global order
+ * `(xxhash64(g), g)`: the first [[HashPrefix.length]] elements. The prefix
+ * lemma holds under any fixed order, so two sets with Jaccard ≥ t share a
+ * prefix element whichever documents, batches or corpora they come from —
+ * no census ties one side's prefix to the other's. Term-for-term
+ * `slice(array_sort(transform(s, g -> struct(xxhash64(g), g))), 1, len).g`
+ * ([[Dedup.hashPrefixHof]], the semantic reference): Spark's seed-42
+ * xxhash64 of the string's bytes (42 for a null element), signed ascending,
+ * ties broken by the binary string order with nulls first.
+ */
+case class HashPrefix(child: Expression, threshold: Double) extends UnaryExpression {
+
+  import org.apache.spark.unsafe.types.UTF8String
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"hash_prefix expects array<string>, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = child.dataType
+
+  /** Called from generated code; public for codegen access. */
+  def prefix(set: ArrayData): ArrayData = {
+    val m = set.numElements()
+    val k = math.max(0, math.min(m, HashPrefix.length(m, threshold)))
+    val elems = new Array[UTF8String](m)
+    val hashes = new Array[Long](m)
+    val order = new Array[Integer](m)
+    var i = 0
+    while (i < m) {
+      if (!set.isNullAt(i)) {
+        val g = set.getUTF8String(i)
+        elems(i) = g
+        hashes(i) = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+          g.getBaseObject, g.getBaseOffset, g.numBytes(), HashPrefix.Seed)
+      } else hashes(i) = HashPrefix.Seed
+      order(i) = i
+      i += 1
+    }
+    java.util.Arrays.sort(order, (a: Integer, b: Integer) => {
+      val c = java.lang.Long.compare(hashes(a), hashes(b))
+      if (c != 0) c
+      else if (elems(a) == null) (if (elems(b) == null) 0 else -1)
+      else if (elems(b) == null) 1
+      else elems(a).binaryCompare(elems(b))
+    })
+    new GenericArrayData(Array.tabulate[Any](k)(j => elems(order(j))))
+  }
+
+  override def nullSafeEval(input: Any): Any = prefix(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("hashPrefix", this, classOf[HashPrefix].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.prefix($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): HashPrefix =
+    copy(child = newChild)
+}
+
+object HashPrefix {
+  /** Spark's `xxhash64` seed. */
+  val Seed = 42L
+
+  /** The AllPairs prefix length `|s| − ⌈t·|s|⌉ + 1` of a set of `size`
+    * elements — the same double arithmetic as [[Dedup.prefixLength]]. */
+  def length(size: Int, threshold: Double): Int =
+    size - math.ceil(threshold * size).toInt + 1
+}
+
 object NativeExpressions {
 
   /** Codegen'd dot product of two float/double array columns. */
@@ -556,6 +699,14 @@ object NativeExpressions {
   def tokenStats(toks: Column, markerLists: Seq[Seq[String]]): Column =
     ColumnShim.column(TokenStats(
       ColumnShim.expression(toks), markerLists.map(_.toArray).toArray))
+
+  /** Distinct word n-gram shingles of a text (see [[ShingleSet]]). */
+  def shingleSet(text: Column, n: Int): Column =
+    ColumnShim.column(ShingleSet(ColumnShim.expression(text), n))
+
+  /** Prefix of a shingle set under the fixed hash order (see [[HashPrefix]]). */
+  def hashPrefix(set: Column, threshold: Double): Column =
+    ColumnShim.column(HashPrefix(ColumnShim.expression(set), threshold))
 
   /** True when the two band arrays agree at any index below `band`. */
   def sharesEarlierBand(a: Column, b: Column, band: Column): Column =

@@ -170,4 +170,60 @@ class NativeExpressionsSpec extends SparkTestBase {
       graft.Tables.cosine($"a", $"b").as("c"))
     assert(cmp.filter($"n" =!= $"c").count() == 0)
   }
+
+  /** Texts that exercise every split edge: empty pieces from leading,
+    * trailing and double spaces, non-ASCII tokens, and repeated shingles. */
+  private def shingleTexts: Seq[String] = {
+    val r = new scala.util.Random(29)
+    val words = Vector("a", "b", "the", "é", "日本", "naïve", "a b", "", "x")
+    val random = (0 until 300).map { _ =>
+      Seq.fill(r.nextInt(12))(words(r.nextInt(words.size))).mkString(" ")
+    }
+    Seq(null, "", " ", "  ", "a", " a", "a ", " a b ", "a  b", "a b a b a b",
+      "日本 語 日本 語", "x\ty z") ++ random
+  }
+
+  private def withCodegenModes(body: String => Unit): Unit =
+    Seq("CODEGEN_ONLY", "NO_CODEGEN").foreach { mode =>
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try body(mode) finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+
+  test("ShingleSet equals array_distinct(ngrams(tokens(text), n)) element for element") {
+    val df = shingleTexts.toDF("t")
+    withCodegenModes { mode =>
+      (1 to 4).foreach { n =>
+        val rows = df.select($"t", NativeExpressions.shingleSet($"t", n).as("k"),
+          Dedup.shingleSetHof($"t", n).as("h")).collect()
+        rows.foreach { r =>
+          assert(r.getSeq[String](1) == r.getSeq[String](2),
+            s"$mode n=$n text=[${r.getString(0)}]")
+        }
+      }
+    }
+  }
+
+  test("HashPrefix equals slice(array_sort(...)) under the (xxhash64, value) order") {
+    val sets = shingleTexts.toDF("t").select(Dedup.shingleSetHof($"t", 2).as("s"))
+      .union(Seq(Seq("b", "a", "b", "a"), Seq("z", null, "y"), null).toDF("s"))
+    withCodegenModes { mode =>
+      Seq(0.0, 0.3, 0.5, 0.8, 1.0).foreach { t =>
+        val rows = sets.select($"s", NativeExpressions.hashPrefix($"s", t).as("k"),
+          Dedup.hashPrefixHof($"s", t).as("h")).collect()
+        rows.foreach { r =>
+          assert(Option(r.getSeq[String](1)) == Option(r.getSeq[String](2)),
+            s"$mode t=$t set=${Option(r.getSeq[String](0))}")
+        }
+      }
+    }
+  }
+
+  test("shingle and prefix kernels run inside whole-stage codegen") {
+    val out = spark.range(50)
+      .select(concat(lit("w"), ($"id" % 7).cast("string"), lit(" a b c d")).as("t"))
+      .select(NativeExpressions.hashPrefix(NativeExpressions.shingleSet($"t", 2), 0.5).as("p"))
+    assert(out.head().getSeq[String](0).size == 3) // 4 bigrams: 4 - ⌈0.5·4⌉ + 1
+    assert(out.queryExecution.executedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]))
+  }
 }

@@ -78,20 +78,10 @@ object Checkpoints {
 
     val state = readStateDf(spark, log, cpVersion, parts)
 
-    // Non-file rows from the base checkpoint: a handful, collected.
-    var metadata: Option[TableMetadata] = None
-    var protocol: Option[Protocol] = None
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    state.where(col("add").isNull && col("remove").isNull).collect().foreach { r =>
-      if (r.getString(2) != null)
-        metadata = Some(Actions.parseMetadata(JsonMethods.parse(r.getString(2))))
-      else if (r.getString(3) != null)
-        protocol = Some(Actions.parseProtocol(JsonMethods.parse(r.getString(3))))
-      else if (r.getString(4) != null) {
-        val t = Actions.parseTxn(JsonMethods.parse(r.getString(4)))
-        txns.put(t.appId, t.version)
-      }
-    }
+    val base = metaState(state, cpVersion)
+    var metadata = base.metadata
+    var protocol = base.protocol
+    val txns = scala.collection.mutable.LinkedHashMap.from(base.transactions)
 
     // Tail replay: per-path final action (Left = active add, Right =
     // tombstone), plus metadata/protocol/txn overrides.
@@ -190,15 +180,40 @@ object Checkpoints {
     spark.read.schema(schema).parquet(files: _*)
   }
 
+  /** The non-file actions of `state` (the checkpoint at `version`, as
+    * [[readStateDf]] reads it) as a snapshot with no files: metadata,
+    * protocol and app transactions, a handful of rows, collected. Only
+    * their three columns are read, not the add and remove columns that make
+    * up nearly all of the checkpoint. */
+  private[delta] def metaState(state: org.apache.spark.sql.DataFrame,
+                               version: Long): Snapshot = {
+    import org.apache.spark.sql.functions.col
+    var metadata: Option[TableMetadata] = None
+    var protocol: Option[Protocol] = None
+    val txns = Map.newBuilder[String, Long]
+    state.where(col("metaData").isNotNull || col("protocol").isNotNull || col("txn").isNotNull)
+      .select(col("metaData"), col("protocol"), col("txn")).collect().foreach { r =>
+        if (!r.isNullAt(0))
+          metadata = Some(Actions.parseMetadata(JsonMethods.parse(r.getString(0))))
+        else if (!r.isNullAt(1))
+          protocol = Some(Actions.parseProtocol(JsonMethods.parse(r.getString(1))))
+        else {
+          val t = Actions.parseTxn(JsonMethods.parse(r.getString(2)))
+          txns += t.appId -> t.version
+        }
+      }
+    Snapshot(version, metadata, protocol, Nil, Nil, txns.result())
+  }
+
   /** Load the checkpointed snapshot at `version` — the DRIVER FAST-PATH.
     *
     * Driver-memory model: the full action list materializes on the driver,
     * ~200 bytes per action — appropriate below
     * [[DistributedSnapshot.DefaultThreshold]] actions, where a Spark job
     * per snapshot would cost more than it saves. Above the threshold the
-    * scan path goes through [[DistributedSnapshot]], which keeps the
-    * [[readStateDf]] DataFrame on executors and collects only the files
-    * that survive pruning. */
+    * scan path goes through [[DistributedSnapshot]], which decodes the
+    * [[readStateDf]] add rows once into executor storage and collects only
+    * the files that survive pruning. */
   def read(spark: SparkSession, log: DeltaLog, version: Long,
            parts: Option[Int]): Snapshot = {
     val rows = readStateDf(spark, log, version, parts).collect()

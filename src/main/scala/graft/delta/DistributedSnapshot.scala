@@ -1,25 +1,42 @@
 package graft.delta
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, get_json_object}
-import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
-import org.json4s._
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
+import org.json4s.JObject
 import org.json4s.jackson.JsonMethods
+import scala.util.control.NonFatal
 
 /**
  * Snapshot reconstruction for LARGE tables: the checkpoint's add-file set
  * never materializes on the driver. The reference (src/delta/table.ts:557-642)
  * and the [[Snapshot.replay]] fast-path hold every active file in driver
  * memory — correct up to ~10⁶ files, but the one remaining O(files) driver
- * structure at 100-TB scale (10⁶–10⁷ files). Here the checkpoint stays a
- * DataFrame ([[Checkpoints.readStateDf]]); the commit tail since the
- * checkpoint (bounded by the checkpoint interval) is replayed driver-side
- * and reconciled against the checkpoint via a broadcast anti-join on path;
- * the [[DataSkipping]] predicate — bound once on the driver, the same
- * expression the driver path evaluates — runs in executors; and only the
- * files that SURVIVE pruning
- * are collected. Driver memory is O(tail actions + surviving files), the
- * same order as the file list Spark's own scan needs anyway.
+ * structure at 100-TB scale (10⁶–10⁷ files).
+ *
+ * Decode once. A checkpoint's add rows are parsed ONCE per session, by
+ * [[Actions.parseAdd]] (the driver route's parser), into typed [[AddRow]]s
+ * spread over `defaultParallelism` partitions and persisted
+ * `MEMORY_AND_DISK`: compressed columnar batches in executor storage
+ * memory, spilled to executor-local disk past it, never driver heap. Every
+ * later call on that checkpoint, at any target version, filters the cached
+ * rows: the claim check reads only their `partitionValues` column, pruning
+ * and the metadata fold deserialize them. Per target version only the
+ * commit tail since the checkpoint (bounded by the checkpoint interval)
+ * replays on the driver; the paths it touched leave the cached rows by a
+ * broadcast anti-join on `path`. The [[DataSkipping]] predicate — bound
+ * once on the driver, the same expression the driver path evaluates — runs
+ * in executors, and only the files that SURVIVE pruning are collected.
+ * Driver memory is O(tail actions + surviving files), the same order as
+ * the file list Spark's own scan needs anyway.
+ *
+ * Lifecycle. A (table, session) pair holds at most one decoded checkpoint:
+ * a different one (the pointer moved on, or the table was dropped and
+ * recreated) replaces it and unpersists the old rows, and past
+ * [[MaxTables]] pairs the least recently used is dropped and unpersisted.
+ * Rows a user dropped (`spark.catalog.clearCache()`) are persisted again by
+ * the next call that reads them.
  *
  * [[DeltaTable.query]] routes here when the `_last_checkpoint` action count
  * is at or above the table's `distributedSnapshotThreshold`; below it the
@@ -28,21 +45,54 @@ import org.json4s.jackson.JsonMethods
 object DistributedSnapshot {
 
   /** Action-count threshold above which scans reconstruct state on
-    * executors. 100k actions ≈ 20 MB of driver JSON parse per snapshot —
-    * around where a metadata Spark job starts paying for itself. */
+    * executors. Below it the driver route is cheaper: it replays a version
+    * once, keeps the file list in its snapshot cache (~200 B of driver heap
+    * per action, ~20 MB at 10⁵) and prunes with no Spark job. Above it that
+    * copy grows without bound, while this route keeps the decoded state in
+    * executor storage and pays a few small jobs per query. */
   val DefaultThreshold = 100000L
+
+  /** Decoded checkpoints kept at once, over all (table, session) pairs. */
+  private val MaxTables = 4
+
+  /** Per-target tail states kept per decoded checkpoint. */
+  private val MaxTargets = 8
+
+  /** One checkpoint add action as the decoded state stores it: typed
+    * columns, with the stats and the deletion vector kept as their JSON
+    * text (null when absent). [[toAddFile]] of [[AddRow.decode]]`(json)`
+    * is exactly [[Actions.parseAdd]] of `json`. */
+  private[delta] final case class AddRow(
+      path: String,
+      partitionValues: Map[String, String],
+      size: Long,
+      modificationTime: Long,
+      dataChange: Boolean,
+      stats: String,
+      deletionVector: String) {
+    def toAddFile: AddFile = AddFile(path, partitionValues, size,
+      modificationTime, dataChange, Option(stats),
+      Option(deletionVector).map(JsonMethods.parse(_).asInstanceOf[JObject]))
+  }
+
+  private[delta] object AddRow {
+    def decode(json: String): AddRow = {
+      val a = Actions.parseAdd(JsonMethods.parse(json))
+      AddRow(a.path, a.partitionValues, a.size, a.modificationTime, a.dataChange,
+        a.stats.orNull,
+        a.deletionVector.map(dv => JsonMethods.compact(JsonMethods.render(dv))).orNull)
+    }
+  }
 
   /** Metadata/protocol/txn state at `target` WITHOUT touching the add set:
     * reads only the checkpoint's handful of non-file rows plus the commit
-    * tail. O(tail) driver memory regardless of table size — the right
-    * snapshot for schema resolution and txn-idempotence checks, where the
-    * file list is irrelevant. `activeFiles`/`tombstones` are empty. */
+    * tail, and decodes no add row. O(tail) driver memory regardless of
+    * table size — the right snapshot for schema resolution and
+    * txn-idempotence checks, where the file list is irrelevant.
+    * `activeFiles`/`tombstones` are empty. */
   def metaState(spark: SparkSession, log: DeltaLog, cpVersion: Long,
                 parts: Option[Int], target: Long): Snapshot =
-    metaOf(rawState(spark, log, cpVersion, parts, target), target)
-
-  private def metaOf(raw: RawState, target: Long): Snapshot =
-    Snapshot(target, raw.metadata, raw.protocol, Nil, Nil, raw.txns)
+    rawState(spark, log, cpVersion, parts, target, withFiles = false).meta
 
   /**
    * State at `target` with file skipping pre-applied, replayed from the
@@ -58,10 +108,10 @@ object DistributedSnapshot {
   def prunedState(spark: SparkSession, log: DeltaLog, cpVersion: Long,
                   parts: Option[Int], target: Long,
                   predicateOf: StructType => Column): (Snapshot, DataSkipping.Predicate) = {
-    val raw = rawState(spark, log, cpVersion, parts, target)
-    val meta = metaOf(raw, target)
+    val raw = rawState(spark, log, cpVersion, parts, target, withFiles = true)
+    val meta = raw.meta
     val p = DataSkipping.bind(predicateOf(meta.schema), meta.schema, meta.partitionColumns)
-    (survivors(raw, meta, p), p)
+    (survivors(raw, p), p)
   }
 
   /** State at `target` with an arbitrary serializable file predicate
@@ -69,36 +119,65 @@ object DistributedSnapshot {
     * below-target-size files). Same scan-only contract as [[prunedState]]. */
   def stateWhere(spark: SparkSession, log: DeltaLog, cpVersion: Long,
                  parts: Option[Int], target: Long,
-                 pred: AddFile => Boolean): Snapshot = {
-    val raw = rawState(spark, log, cpVersion, parts, target)
-    survivors(raw, metaOf(raw, target), pred)
+                 pred: AddFile => Boolean): Snapshot =
+    survivors(rawState(spark, log, cpVersion, parts, target, withFiles = true), pred)
+
+  /** State at one target version over a decoded checkpoint: the non-file
+    * actions with the commit tail replayed over them (`meta`, no files),
+    * the tail's active adds, and the checkpoint's rows that the tail did
+    * not touch. */
+  private final case class RawState(
+      meta: Snapshot,
+      tailFiles: Seq[AddFile],
+      base: Dataset[AddRow])
+
+  /** Identity of a decoded checkpoint: the table, the checkpoint version
+    * and layout, the OWNING SESSION's identity (the cached rows are bound
+    * to the SparkSession that built them — a second or recreated session in
+    * the same JVM must never be served rows of a stopped session) and a
+    * CONTENT hash of the `_last_checkpoint` pointer, so a dropped-and-
+    * recreated table at the same path — which can repeat version numbers,
+    * and whose pointer can alias on (mtime, length) under coarse-mtime
+    * filesystems — cannot alias a stale entry. The target version is not
+    * part of it: a new commit on the same checkpoint reuses the rows. */
+  private[delta] final case class CheckpointKey(
+      table: String,
+      session: String,
+      cpVersion: Long,
+      parts: Option[Int],
+      fingerprint: String)
+
+  /** One decoded checkpoint: its non-file actions, read when the entry is
+    * made, and its add rows, persisted by the first caller that reads them.
+    * `targets` memoizes the per-target tail state: a claimed query
+    * reconstructs the same pinned state twice (the claim check at
+    * pushFilters, then the scan or metadata fold). */
+  private final class Decoded(val key: CheckpointKey, val meta: Snapshot,
+                              val files: Dataset[AddRow]) {
+    val targets = new java.util.concurrent.ConcurrentHashMap[Long, RawState]()
+
+    def cached: Boolean = files.storageLevel != StorageLevel.NONE
+
+    def materialize(): Unit = {
+      files.persist(StorageLevel.MEMORY_AND_DISK)
+      files.count()
+    }
+
+    /** Unpersists the rows; a session that has since stopped has none. */
+    def release(): Unit =
+      try files.unpersist(blocking = false) catch { case NonFatal(_) => () }
   }
 
-  /** Intermediate reconstruction state shared by the snapshot and the
-    * claimability paths: non-file actions + driver-replayed tail, with the
-    * checkpoint's add set still a distributed Dataset of raw JSON
-    * (checkpoint adds superseded by tail actions already anti-joined out). */
-  private final case class RawState(
-      metadata: Option[TableMetadata],
-      protocol: Option[Protocol],
-      txns: Map[String, Long],
-      tailFiles: Seq[AddFile],
-      baseAddJson: org.apache.spark.sql.Dataset[String])
+  /** A (table, session) pair's decoded checkpoint. Its monitor serializes
+    * decoding, so two first users of a checkpoint decode it once; `dropped`
+    * marks a slot evicted after a caller looked it up. */
+  private final class Slot {
+    var decoded: Decoded = _
+    var dropped = false
+  }
 
-  /** Memo for [[rawState]]: a claimed query reconstructs the same pinned
-    * state twice (the claimability check at pushFilters, then the scan or
-    * metadata fold) — the key pins (table, checkpoint, target version)
-    * PLUS the OWNING SESSION's identity (the cached `baseAddJson` Dataset is
-    * bound to the SparkSession that built it — a second or recreated session
-    * in the same JVM must never be served a Dataset referencing a stopped
-    * session) PLUS a CONTENT hash of the `_last_checkpoint` pointer, so a
-    * dropped-and-recreated table at the same path — which can repeat version
-    * numbers, and whose pointer can alias on (mtime, length) under
-    * coarse-mtime filesystems — cannot alias a stale entry. Entries are
-    * immutable once keyed; sharing one halves per-query checkpoint reads +
-    * tail replays. Bounded: cleared wholesale past 8 entries. */
-  private val rawCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Option[Int], Long, String, String), RawState]()
+  /** Slots by (table, session), least recently used first. */
+  private val slots = new java.util.LinkedHashMap[(String, String), Slot](16, 0.75f, true)
 
   /** Stable identity of the session INSTANCE (not just the app): Spark's
     * own per-session UUID when the runtime exposes it, else the identity
@@ -124,81 +203,109 @@ object DistributedSnapshot {
     } catch { case _: Throwable => "no-checkpoint-pointer" }
 
   private[delta] def cacheKeyFor(spark: SparkSession, log: DeltaLog,
-                                 cpVersion: Long, parts: Option[Int],
-                                 target: Long): (String, Long, Option[Int], Long, String, String) =
-    (log.tablePath.toString, cpVersion, parts, target,
-      sessionIdentity(spark), checkpointFingerprint(log))
+                                 cpVersion: Long, parts: Option[Int]): CheckpointKey =
+    CheckpointKey(log.tablePath.toString, sessionIdentity(spark), cpVersion,
+      parts, checkpointFingerprint(log))
+
+  /** The checkpoint's decoded add rows, persisted — the state every
+    * file-reading call filters. */
+  private[delta] def decodedFiles(spark: SparkSession, log: DeltaLog,
+                                  cpVersion: Long, parts: Option[Int]): Dataset[AddRow] =
+    decoded(spark, log, cpVersion, parts, withFiles = true).files
+
+  /** The decoded checkpoint for (`cpVersion`, `parts`), made when the
+    * (table, session) slot holds none or another one (which is released).
+    * `withFiles` also persists the add rows when they are not cached. */
+  @annotation.tailrec
+  private def decoded(spark: SparkSession, log: DeltaLog, cpVersion: Long,
+                      parts: Option[Int], withFiles: Boolean): Decoded = {
+    val key = cacheKeyFor(spark, log, cpVersion, parts)
+    val evicted = Seq.newBuilder[Slot]
+    val slot = slots.synchronized {
+      val s = slots.computeIfAbsent((key.table, key.session), _ => new Slot)
+      val lru = slots.values.iterator
+      while (slots.size > MaxTables) { evicted += lru.next(); lru.remove() }
+      s
+    }
+    evicted.result().foreach { s =>
+      s.synchronized {
+        s.dropped = true
+        if (s.decoded != null) s.decoded.release()
+        s.decoded = null
+      }
+    }
+    val d = slot.synchronized {
+      if (slot.dropped) null
+      else {
+        val d =
+          if (slot.decoded != null && slot.decoded.key == key) slot.decoded
+          else {
+            if (slot.decoded != null) slot.decoded.release()
+            slot.decoded = decode(spark, log, key)
+            slot.decoded
+          }
+        if (withFiles && !d.cached) d.materialize()
+        d
+      }
+    }
+    if (d != null) d else decoded(spark, log, cpVersion, parts, withFiles)
+  }
+
+  /** The checkpoint's non-file actions, and its add rows as a (not yet
+    * persisted) Dataset: the raw JSON is spread over `defaultParallelism`
+    * partitions first, so the parse runs in that many tasks even when the
+    * checkpoint is one Parquet file. */
+  private def decode(spark: SparkSession, log: DeltaLog, key: CheckpointKey): Decoded = {
+    import spark.implicits._
+    val state = Checkpoints.readStateDf(spark, log, key.cpVersion, key.parts)
+    val files = state.where(col("add").isNotNull).select(col("add"))
+      .repartition(spark.sparkContext.defaultParallelism, col("add"))
+      .as[String].map(AddRow.decode)
+    new Decoded(key, Checkpoints.metaState(state, key.cpVersion), files)
+  }
 
   private def rawState(spark: SparkSession, log: DeltaLog, cpVersion: Long,
-                       parts: Option[Int], target: Long): RawState = {
-    val key = cacheKeyFor(spark, log, cpVersion, parts, target)
-    val hit = rawCache.get(key)
+                       parts: Option[Int], target: Long,
+                       withFiles: Boolean): RawState = {
+    val d = decoded(spark, log, cpVersion, parts, withFiles)
+    val hit = d.targets.get(target)
     if (hit != null) return hit
-    if (rawCache.size > 8) rawCache.clear()
-    val built = buildRawState(spark, log, cpVersion, parts, target)
-    rawCache.put(key, built)
-    built
+    if (d.targets.size >= MaxTargets) d.targets.clear()
+    val built = replayTail(spark, log, d, target)
+    Option(d.targets.putIfAbsent(target, built)).getOrElse(built)
   }
 
-  private def buildRawState(spark: SparkSession, log: DeltaLog, cpVersion: Long,
-                            parts: Option[Int], target: Long): RawState = {
+  /** Replays the commit tail after the checkpoint up to `target` on the
+    * driver. Every path the tail touched leaves the checkpoint rows,
+    * whatever the action: the LAST action for a path wins, and it is among
+    * the replayed files iff it was an add. */
+  private def replayTail(spark: SparkSession, log: DeltaLog, d: Decoded,
+                         target: Long): RawState = {
     import spark.implicits._
-    val state = Checkpoints.readStateDf(spark, log, cpVersion, parts)
-
-    // Non-file actions (metadata/protocol/txn): a handful of rows.
-    var metadata: Option[TableMetadata] = None
-    var protocol: Option[Protocol] = None
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    state.where(col("add").isNull && col("remove").isNull).collect().foreach { r =>
-      if (r.getString(2) != null)
-        metadata = Some(Actions.parseMetadata(JsonMethods.parse(r.getString(2))))
-      else if (r.getString(3) != null)
-        protocol = Some(Actions.parseProtocol(JsonMethods.parse(r.getString(3))))
-      else if (r.getString(4) != null) {
-        val t = Actions.parseTxn(JsonMethods.parse(r.getString(4)))
-        txns.put(t.appId, t.version)
-      }
-    }
-
-    // Commit tail: sequential driver replay, bounded by the checkpoint
-    // interval. `touched` paths override the checkpoint regardless of the
-    // action kind (the LAST action for a path wins, and it lives in
-    // `tailFiles` iff it was an add).
-    val tailVersions = log.listCommitVersions().filter(v => v > cpVersion && v <= target)
-    val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-    val tailFiles = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    tailVersions.foreach { v =>
-      log.readCommit(v).foreach {
-        case a: AddFile => touched += a.path; tailFiles.put(a.path, a)
-        case r: RemoveFile => touched += r.path; tailFiles.remove(r.path)
-        case m: TableMetadata => metadata = Some(m)
-        case p: Protocol => protocol = Some(p)
-        case t: Txn => txns.put(t.appId, t.version)
-        case _ => ()
-      }
-    }
-
-    // Reconcile on executors. Path extraction for the anti-join is
-    // get_json_object (codegen'd) — the full AddFile parse happens once per
-    // row inside whatever per-file work the caller distributes.
-    val addJson = state.where(col("add").isNotNull).select(col("add")).as[String]
+    val commits = log.listCommitVersions()
+      .filter(v => v > d.key.cpVersion && v <= target)
+      .map(v => v -> log.readCommit(v))
+    val replayed = Snapshot.replay(d.meta, commits.iterator)
+    val touched = commits.flatMap(_._2.collect {
+      case a: AddFile => a.path
+      case r: RemoveFile => r.path
+    }).distinct
     val base =
-      if (touched.isEmpty) addJson
-      else addJson.join(broadcast(touched.toSeq.toDF("__p")),
-          get_json_object(col("add"), "$.path") === col("__p"), "left_anti")
-        .select(col("add")).as[String]
-    RawState(metadata, protocol, txns.toMap, tailFiles.values.toSeq, base)
+      if (touched.isEmpty) d.files
+      else d.files.join(broadcast(touched.toDF("__p")), col("path") === col("__p"),
+        "left_anti").as[AddRow]
+    RawState(replayed.copy(version = target, activeFiles = Nil, tombstones = Nil),
+      replayed.activeFiles, base)
   }
 
-  /** `meta` with the active files of `raw` that `keep` admits. */
-  private def survivors(raw: RawState, meta: Snapshot,
-                        keep: AddFile => Boolean): Snapshot = {
-    val cpSurvivors = raw.baseAddJson
-      .filter { js: String => keep(Actions.parseAdd(JsonMethods.parse(js))) }
+  /** `raw.meta` with the active files of `raw` that `keep` admits. */
+  private def survivors(raw: RawState, keep: AddFile => Boolean): Snapshot = {
+    val cpSurvivors = raw.base
+      .filter((r: AddRow) => keep(r.toAddFile))
       .collect()
-      .map(js => Actions.parseAdd(JsonMethods.parse(js)))
+      .map(_.toAddFile)
       .toSeq
-    meta.copy(activeFiles = cpSurvivors ++ raw.tailFiles.filter(keep))
+    raw.meta.copy(activeFiles = cpSurvivors ++ raw.tailFiles.filter(keep))
   }
 
   /** NEVER-MATERIALIZING metadata fold (round 16): COUNT/MIN/MAX, global
@@ -218,15 +325,14 @@ object DistributedSnapshot {
                      claimed: Seq[org.apache.spark.sql.sources.Filter],
                      schema: StructType, groupCols: Seq[String],
                      aggs: Seq[StatsAggregates.StatAgg]): Option[Seq[Seq[Any]]] = {
-    val raw = rawState(spark, log, cpVersion, parts, target)
-    val partCols = raw.metadata.map(_.partitionColumns).getOrElse(Nil).toSet
+    val raw = rawState(spark, log, cpVersion, parts, target, withFiles = true)
+    val partCols = raw.meta.partitionColumns.toSet
     val fold = StatsAggregates.bind(schema, partCols, groupCols, aggs)
       .getOrElse(return None)
     val selects = PartitionFilters.selects(claimed, partCols, schema)
     def keep(f: AddFile): Boolean = selects(f.partitionValues)
-    val states = raw.baseAddJson.rdd.mapPartitions { it =>
-      Iterator.single(fold.over(
-        it.map(js => Actions.parseAdd(JsonMethods.parse(js))).filter(keep)))
+    val states = raw.base.rdd.mapPartitions { it =>
+      Iterator.single(fold.over(it.map(_.toAddFile).filter(keep)))
     }.collect()
     val tail = fold.over(raw.tailFiles.filter(keep))
     StatsAggregates.distributedFolds.incrementAndGet()
@@ -238,11 +344,11 @@ object DistributedSnapshot {
     * payoff is largest): which of `candidates` are exactly decidable
     * ([[PartitionFilters.Bound.eval]] defined) on EVERY active file at
     * `target`.
-    * One narrow job over the checkpoint's add rows — each partition folds
-    * an undecided-bitmask, the driver ORs the per-partition masks and the
-    * tail files — nothing per-file ever materializes on the driver. The
-    * kept set is NOT returned: a claimed filter's verdict is a pure
-    * function of (file, filter, schema), so downstream consumers re-run
+    * One narrow job over the cached rows' `partitionValues` column — each
+    * partition folds an undecided-bitmask, the driver ORs the per-partition
+    * masks and the tail files — nothing per-file ever materializes on the
+    * driver. The kept set is NOT returned: a claimed filter's verdict is a
+    * pure function of (file, filter, schema), so downstream consumers re-run
     * the tri-state eval over their (pruned) survivors instead of holding
     * a 10⁷-path set. */
   def claimDecided(spark: SparkSession, log: DeltaLog, cpVersion: Long,
@@ -250,8 +356,8 @@ object DistributedSnapshot {
                    candidates: Seq[org.apache.spark.sql.sources.Filter],
                    schema: StructType): Seq[org.apache.spark.sql.sources.Filter] = {
     import spark.implicits._
-    val raw = rawState(spark, log, cpVersion, parts, target)
-    val partCols = raw.metadata.map(_.partitionColumns).getOrElse(Nil).toSet
+    val raw = rawState(spark, log, cpVersion, parts, target, withFiles = true)
+    val partCols = raw.meta.partitionColumns.toSet
     if (partCols.isEmpty || candidates.isEmpty) return Nil
     // Bound once here; executors only evaluate. A candidate that does not
     // bind starts out undecided.
@@ -265,23 +371,13 @@ object DistributedSnapshot {
         i += 1
       }
     }
-    // Decidability needs ONLY partitionValues — project it out with
-    // codegen'd from_json (a partial schema: every other AddFile field is
-    // skipped at parse time) instead of fully parsing each add action with
-    // json4s. On the 10⁷-file tables this path targets, per-row parse cost
-    // is the whole job, and stats/DV strings dominate the add JSON.
-    val pvOnly = StructType(Seq(StructField(
-      "partitionValues", MapType(StringType, StringType))))
+    // Decidability needs ONLY partitionValues: the columnar cache hands
+    // over that one column, and no other field is deserialized.
     val perPartition: Array[Array[Boolean]] =
-      raw.baseAddJson
-        .select(org.apache.spark.sql.functions
-          .from_json(col(raw.baseAddJson.columns.head), pvOnly)
-          .getField("partitionValues").as("pv"))
-        .as[Map[String, String]]
+      raw.base.select(col("partitionValues")).as[Map[String, String]]
         .rdd.mapPartitions { it =>
           val und = new Array[Boolean](nC)
-          it.foreach(pv =>
-            undecidedOn(if (pv == null) Map.empty[String, String] else pv, und))
+          it.foreach(pv => undecidedOn(pv, und))
           Iterator.single(und)
         }.collect()
     val und = bound.map(_.isEmpty)

@@ -307,7 +307,9 @@ object Dedup {
   /**
    * MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
    * `docs` must have (idCol, textCol). Returns (id_a, id_b, jaccard) for
-   * verified pairs at or above `threshold`.
+   * verified pairs at or above `threshold`, materialized before returning,
+   * so the shingle and signature caches are released here instead of
+   * leaking two cached frames per call.
    */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, k: Int = 128, bands: Int = 32,
@@ -343,31 +345,36 @@ object Dedup {
       .withColumn("__bands", lshBands(col("__sig"), bands, r))
       .select(col("__id"), col("__bands"))
       .cache()
-    val cands = candidatePairs(signed, "__id", "__bands", maxBucket)
-    val sets = reps.select(col("__id"), col("__sh"))
-    val repPairs = cands
-      .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sa")), "id_a")
-      .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sb")), "id_b")
-      .withColumn("jaccard", jaccard(array_distinct(col("__sa")), array_distinct(col("__sb"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    // Cross-group expansion: every member pair across two near-dup groups
-    // shares the groups' jaccard (identical sets per group).
-    val members = withGroups.select(col("__id").as("__mid"), col("__rid"))
-    val cross = repPairs
-      .join(members.select(col("__mid").as("__ma"), col("__rid").as("id_a")), "id_a")
-      .join(members.select(col("__mid").as("__mb"), col("__rid").as("id_b")), "id_b")
-      .select(least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"), col("jaccard"))
-    // Within-group pairs: identical non-empty sets are jaccard 1.0 (empty
-    // sets are 0.0 by the same convention as [[jaccard]]); salted so a huge
-    // duplicate group never funnels its quadratic output through one task.
-    val wg = withGroups.select(col("__rid"), col("__id"), (size(col("__sh")) > 0).as("__ne"))
-    val within = withinGroupPairs(wg, withinBlock)
-      .withColumn("jaccard", when(col("__ne"), lit(1.0)).otherwise(lit(0.0)))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    cross.unionByName(within)
+    try {
+      val cands = candidatePairs(signed, "__id", "__bands", maxBucket)
+      val sets = reps.select(col("__id"), col("__sh"))
+      val repPairs = cands
+        .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sa")), "id_a")
+        .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sb")), "id_b")
+        .withColumn("jaccard", jaccard(array_distinct(col("__sa")), array_distinct(col("__sb"))))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+      // Cross-group expansion: every member pair across two near-dup groups
+      // shares the groups' jaccard (identical sets per group).
+      val members = withGroups.select(col("__id").as("__mid"), col("__rid"))
+      val cross = repPairs
+        .join(members.select(col("__mid").as("__ma"), col("__rid").as("id_a")), "id_a")
+        .join(members.select(col("__mid").as("__mb"), col("__rid").as("id_b")), "id_b")
+        .select(least(col("__ma"), col("__mb")).as("id_a"),
+          greatest(col("__ma"), col("__mb")).as("id_b"), col("jaccard"))
+      // Within-group pairs: identical non-empty sets are jaccard 1.0 (empty
+      // sets are 0.0 by the same convention as [[jaccard]]); salted so a huge
+      // duplicate group never funnels its quadratic output through one task.
+      val wg = withGroups.select(col("__rid"), col("__id"), (size(col("__sh")) > 0).as("__ne"))
+      val within = withinGroupPairs(wg, withinBlock)
+        .withColumn("jaccard", when(col("__ne"), lit(1.0)).otherwise(lit(0.0)))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+      cross.unionByName(within).localCheckpoint(true)
+    } finally {
+      signed.unpersist(false)
+      withGroups.unpersist(false)
+    }
   }
 
   /**
@@ -650,7 +657,9 @@ object Dedup {
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** SimHash near-dup pairs: band the 64 bits into 4×16-bit keys (any pair
-    * within distance ~3 shares a band w.h.p.), bucket-join, verify Hamming. */
+    * within distance ~3 shares a band w.h.p.), bucket-join, verify Hamming.
+    * The pairs are materialized before returning, so the signature cache is
+    * released here. */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxDistance: Int = 3,
                       tokenHasher: Column => Column = xxhash64(_),
@@ -668,29 +677,31 @@ object Dedup {
       simhash64(TextFunctions.tokens(col(textCol)), tokenHasher).as("__sig"))
       .withColumn("__rid", min(col("__id")).over(Window.partitionBy(col("__sig"))))
       .cache()
-    val reps = signed.filter(col("__id") === col("__rid"))
-    val banded = reps.withColumn("__bands",
-      transform(sequence(lit(0), lit(3)), j =>
-        call_function("shiftright", col("__sig"), (j * 16).cast("int"))
-          .bitwiseAND(lit(0xffffL))))
-    val cands = candidatePairs(banded, "__id", "__bands", maxBucket)
-    val repPairs = cands
-      .join(reps.select(col("__id").as("id_a"), col("__sig").as("__siga")), "id_a")
-      .join(reps.select(col("__id").as("id_b"), col("__sig").as("__sigb")), "id_b")
-      .withColumn("distance", hamming64(col("__siga"), col("__sigb")))
-      .filter(col("distance") <= maxDistance)
-      .select(col("id_a"), col("id_b"), col("distance"))
-    val members = signed.select(col("__id").as("__mid"), col("__rid"))
-    val cross = repPairs
-      .join(members.select(col("__mid").as("__ma"), col("__rid").as("id_a")), "id_a")
-      .join(members.select(col("__mid").as("__mb"), col("__rid").as("id_b")), "id_b")
-      .select(least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"), col("distance"))
-    // Same signature → distance 0 by definition (no self-XOR expression);
-    // salted like the minhash within-group expansion.
-    val within = withinGroupPairs(signed.select(col("__rid"), col("__id")), withinBlock)
-      .withColumn("distance", lit(0))
-    cross.unionByName(within)
+    try {
+      val reps = signed.filter(col("__id") === col("__rid"))
+      val banded = reps.withColumn("__bands",
+        transform(sequence(lit(0), lit(3)), j =>
+          call_function("shiftright", col("__sig"), (j * 16).cast("int"))
+            .bitwiseAND(lit(0xffffL))))
+      val cands = candidatePairs(banded, "__id", "__bands", maxBucket)
+      val repPairs = cands
+        .join(reps.select(col("__id").as("id_a"), col("__sig").as("__siga")), "id_a")
+        .join(reps.select(col("__id").as("id_b"), col("__sig").as("__sigb")), "id_b")
+        .withColumn("distance", hamming64(col("__siga"), col("__sigb")))
+        .filter(col("distance") <= maxDistance)
+        .select(col("id_a"), col("id_b"), col("distance"))
+      val members = signed.select(col("__id").as("__mid"), col("__rid"))
+      val cross = repPairs
+        .join(members.select(col("__mid").as("__ma"), col("__rid").as("id_a")), "id_a")
+        .join(members.select(col("__mid").as("__mb"), col("__rid").as("id_b")), "id_b")
+        .select(least(col("__ma"), col("__mb")).as("id_a"),
+          greatest(col("__ma"), col("__mb")).as("id_b"), col("distance"))
+      // Same signature → distance 0 by definition (no self-XOR expression);
+      // salted like the minhash within-group expansion.
+      val within = withinGroupPairs(signed.select(col("__rid"), col("__id")), withinBlock)
+        .withColumn("distance", lit(0))
+      cross.unionByName(within).localCheckpoint(true)
+    } finally signed.unpersist(false)
   }
 
   // ---- incremental (cross-corpus) dedup ------------------------------------

@@ -2,8 +2,12 @@ package graft.delta
 
 import graft.SparkTestBase
 import org.apache.hadoop.fs.Path
-import org.json4s.jackson.JsonMethods
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.SpecInternals
+import org.apache.spark.sql.sources.EqualTo
 import java.nio.file.Files
+import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /**
  * The distributed snapshot path: checkpoint stays a DataFrame, the commit
@@ -139,14 +143,14 @@ class DistributedSnapshotSpec extends SparkTestBase {
 
   test("rawState cache key pins session identity and checkpoint CONTENT") {
     val log = syntheticLog(1000)
-    val k1 = DistributedSnapshot.cacheKeyFor(spark, log, 0L, None, 1L)
-    assert(k1 == DistributedSnapshot.cacheKeyFor(spark, log, 0L, None, 1L))
+    val k1 = DistributedSnapshot.cacheKeyFor(spark, log, 0L, None)
+    assert(k1 == DistributedSnapshot.cacheKeyFor(spark, log, 0L, None))
 
     // a second session in the same JVM must key separately: the cached
-    // baseAddJson Dataset is bound to the session that built it, and a
-    // recreated session must never be served a Dataset of a stopped one
+    // decoded rows are bound to the session that built them, and a
+    // recreated session must never be served rows of a stopped one
     val other = spark.newSession()
-    val k2 = DistributedSnapshot.cacheKeyFor(other, log, 0L, None, 1L)
+    val k2 = DistributedSnapshot.cacheKeyFor(other, log, 0L, None)
     assert(k2 != k1)
     assert(DistributedSnapshot.sessionIdentity(other) !=
       DistributedSnapshot.sessionIdentity(spark))
@@ -159,10 +163,10 @@ class DistributedSnapshotSpec extends SparkTestBase {
     assert(mutated != body && mutated.length == body.length)
     log.writeString(log.lastCheckpointFile, mutated, overwrite = true)
     try {
-      val k3 = DistributedSnapshot.cacheKeyFor(spark, log, 0L, None, 1L)
+      val k3 = DistributedSnapshot.cacheKeyFor(spark, log, 0L, None)
       assert(k3 != k1)
     } finally log.writeString(log.lastCheckpointFile, body, overwrite = true)
-    assert(DistributedSnapshot.cacheKeyFor(spark, log, 0L, None, 1L) == k1)
+    assert(DistributedSnapshot.cacheKeyFor(spark, log, 0L, None) == k1)
   }
 
   test("claimDecided decides from partitionValues alone (partial JSON projection)") {
@@ -190,5 +194,112 @@ class DistributedSnapshotSpec extends SparkTestBase {
     // equality can't parse "bogus" as int → undecided; IS NOT NULL still
     // decides (the value exists, whatever it spells)
     assert(decided2 == Seq(IsNotNull("k")))
+  }
+
+  /** Completed stages that scan Parquet, and the bytes they read. The
+    * calls these specs count read no data file, so every such stage scans
+    * a checkpoint. */
+  private final class CheckpointScans extends SparkListener {
+    val stages = new AtomicInteger()
+    val bytes = new AtomicLong()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) {
+        stages.incrementAndGet()
+        bytes.addAndGet(e.stageInfo.taskMetrics.inputMetrics.bytesRead)
+      }
+    def read: (Int, Long) = {
+      SpecInternals.drainListeners(spark.sparkContext)
+      (stages.get, bytes.get)
+    }
+  }
+
+  private def countingScans[A](body: CheckpointScans => A): A = {
+    val scans = new CheckpointScans
+    spark.sparkContext.addSparkListener(scans)
+    try body(scans) finally spark.sparkContext.removeSparkListener(scans)
+  }
+
+  private def cachedEntries: Int = SpecInternals.cachedEntries(spark)
+
+  private val k3 = """{"k":{"$eq":3}}"""
+
+  private def prunedPaths(log: DeltaLog, cpVersion: Long, target: Long,
+                          filter: String): Seq[String] =
+    DistributedSnapshot.prunedState(spark, log, cpVersion, None, target,
+      _ => pred(filter))._1.activeFiles.map(_.path).sorted
+
+  test("decode once: claim, prune and fold at one version scan the checkpoint on the first call only") {
+    val log = syntheticLog(20000)
+    def calls(target: Long) = (
+      prunedPaths(log, 0L, target, k3),
+      DistributedSnapshot.claimDecided(spark, log, 0L, None, target,
+        Seq(EqualTo("k", 3)), schema),
+      DistributedSnapshot.foldAggregates(spark, log, 0L, None, target,
+        Seq(EqualTo("k", 3)), schema, Nil, Seq(StatsAggregates.CountStar)))
+    val oracle = driverOracle(log, k3).activeFiles.map(_.path).sorted
+    countingScans { scans =>
+      val first = calls(1L)
+      val decoded = scans.read
+      assert(decoded._1 > 0 && decoded._2 > 0, s"no checkpoint scan seen: $decoded")
+      (1 to 3).foreach(_ => assert(calls(1L) == first))
+      assert(scans.read == decoded, "a repeated call scanned the checkpoint again")
+      assert(first._1 == oracle)
+      assert(first._2 == Seq(EqualTo("k", 3)))
+      // 400 k=3 checkpoint files − 1 removed + 1 added, 10 rows each
+      assert(first._3.contains(Seq(Seq(4000L))))
+
+      // a new commit on the same checkpoint replays its tail over the
+      // cached rows and scans nothing
+      log.writeCommit(2, Seq(AddFile("k=3/part-new.parquet", Map("k" -> "3"),
+        5L, 3L, stats = Some("""{"numRecords":5}"""))))
+      val second = calls(2L)
+      assert(scans.read == decoded, "a new commit re-read the checkpoint")
+      assert(second._1 == (first._1 :+ "k=3/part-new.parquet").sorted)
+      assert(second._3.contains(Seq(Seq(4005L))))
+    }
+  }
+
+  test("a new checkpoint replaces the decoded one: one cached entry for the table") {
+    spark.catalog.clearCache()
+    val log = syntheticLog(5000)
+    val before = prunedPaths(log, 0L, 1L, k3)
+    assert(cachedEntries == 1)
+    Checkpoints.writeDistributed(spark, log, 1L)
+    assert(log.readLastCheckpoint().map(_._1).contains(1L))
+    val after = prunedPaths(log, 1L, 1L, k3)
+    assert(cachedEntries == 1, "the replaced checkpoint's rows are still cached")
+    assert(after == before)
+    assert(after == driverOracle(log, k3).activeFiles.map(_.path).sorted)
+  }
+
+  test("after clearCache the state is decoded again and still equals the driver oracle") {
+    val log = syntheticLog(5000)
+    val oracle = driverOracle(log, k3).activeFiles.map(_.path).sorted
+    assert(prunedPaths(log, 0L, 1L, k3) == oracle)
+    spark.catalog.clearCache()
+    assert(cachedEntries == 0)
+    countingScans { scans =>
+      assert(prunedPaths(log, 0L, 1L, k3) == oracle)
+      assert(cachedEntries == 1, "the dropped state was served uncached")
+      val redecoded = scans.read
+      assert(redecoded._1 > 0)
+      assert(DistributedSnapshot.claimDecided(spark, log, 0L, None, 1L,
+        Seq(EqualTo("k", 3)), schema) == Seq(EqualTo("k", 3)))
+      assert(prunedPaths(log, 0L, 1L, k3) == oracle)
+      assert(scans.read == redecoded)
+    }
+  }
+
+  test("two first users of a checkpoint decode it once and leave one cached entry") {
+    spark.catalog.clearCache()
+    val log = syntheticLog(5000)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val results = (1 to 2).map(_ => pool.submit(new Callable[Seq[String]] {
+        def call(): Seq[String] = prunedPaths(log, 0L, 1L, k3)
+      })).map(_.get())
+      assert(results.distinct == Seq(driverOracle(log, k3).activeFiles.map(_.path).sorted))
+    } finally pool.shutdown()
+    assert(cachedEntries == 1)
   }
 }

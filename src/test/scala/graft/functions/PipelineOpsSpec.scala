@@ -41,6 +41,19 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(pairs.toSeq == Seq((1L, 2L)))
   }
 
+  test("minhash and simhash near-dups release their caches") {
+    spark.catalog.clearCache()
+    val mh = Dedup.minhashNearDups(docs, "id", "text", shingleSize = 3,
+        k = 128, bands = 32, threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(spark.sharedState.cacheManager.isEmpty, "minhashNearDups left a cached frame")
+    assert(mh.toSeq == Seq((1L, 2L)))
+    val sh = Dedup.simhashNearDups(docs, "id", "text", maxDistance = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(spark.sharedState.cacheManager.isEmpty, "simhashNearDups left a cached frame")
+    assert(sh.contains((1L, 2L)))
+  }
+
   test("minhash signature is deterministic across evaluations") {
     val sig1 = docs.select(Dedup.minhashSignature(
       TextFunctions.ngrams(TextFunctions.tokens($"text"), 3)).as("s"))

@@ -1,15 +1,8 @@
 package graft.delta
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.functions.udaf
 import org.json4s._
 import org.roaringbitmap.RoaringBitmap
 
@@ -25,9 +18,10 @@ import scala.collection.mutable
  *
  * The bitmap payload is the "RoaringBitmapArray" portable layout used by the
  * Delta protocol: int32 magic, int64 bitmap count, then per 32-bit key a
- * standard portable RoaringBitmap. Row masking happens distributed, via a
- * broadcast map of per-file bitmaps filtered on `_metadata.row_index` — no
- * driver-side row work.
+ * standard portable RoaringBitmap. Row masking happens in the scan: each DV
+ * file's read partition carries its serialized bitmap, and the reader
+ * drops the masked physical row positions
+ * ([[graft.sources.GraftReaderFactory]]) — no driver-side row work.
  */
 object DeletionVectors {
 
@@ -197,78 +191,6 @@ object DeletionVectors {
       case other => throw new IllegalArgumentException(s"unknown DV storageType $other")
     }
   }
-
-  /** Filter out DV-masked rows. `df` must come from files listed in `adds`
-    * (with `_metadata` available); rows whose (file, row_index) is in a DV
-    * are dropped. The mask is a codegen'd [[DvKeepRow]] expression over the
-    * broadcast bitmaps — no Scala UDF boundary, whole-stage codegen stays
-    * intact, and the bitmap lookup resolves once per file (memoized), not
-    * once per row. */
-  def applyMask(table: DeltaTable, df: DataFrame, adds: Seq[AddFile]): DataFrame = {
-    val withDv = adds.filter(_.deletionVector.isDefined)
-    if (withDv.isEmpty) return df
-    val masks: Map[String, Map[Int, RoaringBitmap]] = withDv.map { a =>
-      val abs = new org.apache.hadoop.fs.Path(table.tablePath, a.path).toUri.getPath
-      abs -> load(table.log, a.deletionVector.get)
-    }.toMap
-    val bc: Broadcast[Map[String, Map[Int, RoaringBitmap]]] =
-      table.spark.sparkContext.broadcast(masks)
-    df.filter(ColumnShim.column(DvKeepRow(
-      ColumnShim.expression(col("_metadata.file_path")),
-      ColumnShim.expression(col("_metadata.row_index")), bc)))
-  }
-}
-
-/**
- * Codegen'd DV row mask: true iff (file, rowIndex) is NOT in the broadcast
- * deletion bitmaps. `_metadata.file_path` is constant within a file split, so
- * the (URI-normalized) map lookup is memoized per file — the per-row work is
- * one UTF8String equality check plus a roaring `contains`. Replaces the
- * round-2 Scala UDF that allocated a `java.net.URI` per row and broke
- * whole-stage codegen (reference semantics: deletion-vectors.ts:409-439).
- */
-case class DvKeepRow(left: Expression, right: Expression,
-    bc: Broadcast[Map[String, Map[Int, RoaringBitmap]]])
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"dv_keep expects (string, bigint), got ${l.simpleString}, ${r.simpleString}")
-    }
-
-  override def dataType: DataType = BooleanType
-
-  @transient private var lastFile: UTF8String = _
-  @transient private var lastMask: Map[Int, RoaringBitmap] = _
-
-  private def masks: Map[String, Map[Int, RoaringBitmap]] = bc.value
-
-  /** Called from generated code; public for codegen access. */
-  def keep(file: UTF8String, idx: Long): Boolean = {
-    if (lastFile == null || !lastFile.equals(file)) {
-      lastFile = file.clone()
-      val f = file.toString
-      lastMask = masks.get(f).orElse {
-        val p = try new java.net.URI(f).getPath catch { case _: Exception => f }
-        masks.get(p)
-      }.orNull
-    }
-    lastMask == null || !DeletionVectors.contains(lastMask, idx)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    keep(a.asInstanceOf[UTF8String], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dvKeep", this, classOf[DvKeepRow].getName)
-    nullSafeCodeGen(ctx, ev, (f, i) => s"${ev.value} = $ref.keep($f, $i);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DvKeepRow =
-    copy(left = newLeft, right = newRight)
 }
 
 /**

@@ -2,7 +2,9 @@ package graft.delta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -151,55 +153,17 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
 
   // ---- read path -----------------------------------------------------------
 
-  /** DataFrame over a snapshot's active files: explicit schema from the log's
-    * metadata (so dropped/added columns resolve and old files backfill null),
-    * basePath so Hive-style partition directories surface as columns. */
-  def toDF(snap: Snapshot): DataFrame = {
-    ProtocolSupport.assertReadable(snap.protocol, path)
-    val schema = snap.schema
-    if (snap.activeFiles.isEmpty) {
-      return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    }
-    val files = snap.activeFiles.map(f => new Path(tablePath, f.path).toString)
-    // Shallow-clone tables reference files OUTSIDE the table root by
-    // absolute path; Spark rejects a basePath that doesn't prefix every
-    // file. Only set it when all files are root-relative (basePath exists
-    // to recover hive-partition columns, and shallow clones are restricted
-    // to unpartitioned tables for exactly this reason).
-    val allRelative = snap.activeFiles.forall(f =>
-      !f.path.startsWith("/") && !f.path.contains(":/"))
-    // Partition directories are UTC-canonical by construction (see
-    // TaskWriter.dirOf) — pin the file source's partition-value PARSING
-    // to UTC too, or a non-UTC session would shift every zoned-timestamp
-    // partition value by its offset (the DSv2 path already parses at UTC
-    // in PartitionPaths.decoder).
-    val reader0 = spark.read.option("timeZone", "UTC")
-    val reader = if (allRelative) reader0.option("basePath", path) else reader0
-    // Column mapping (reference: src/delta/snapshot.ts:29-83, applied at
-    // table.ts:1753-1756): files store physical names from the schema's
-    // `delta.columnMapping.physicalName` field metadata; read physical,
-    // rename to logical.
-    val physical = physicalSchema(schema)
-    // Defaults are write-time-only: strip CURRENT_DEFAULT/EXISTS_DEFAULT
-    // from the READER schema (Spark's parquet readers would otherwise fill
-    // columns missing from old files with EXISTS_DEFAULT instead of NULL),
-    // then restore the field metadata on the output so the catalog-facing
-    // schema still carries the defaults for INSERT-time substitution.
-    val readSchema = DeltaTable.stripDefaultMetadata(physical.getOrElse(schema))
-    val raw = (if (readSchema.nonEmpty) reader.schema(readSchema) else reader)
-      .parquet(files: _*)
-    val renamed = physical match {
-      case Some(_) => raw.toDF(schema.fieldNames.toIndexedSeq: _*)
-      case None => raw
-    }
-    val df =
-      if (!DeltaTable.hasDefaultMetadata(schema)) renamed
-      else renamed.select(schema.fields.map(f =>
-        renamed.col(s"`${f.name.replace("`", "``")}`")
-          .as(f.name, f.metadata)).toIndexedSeq: _*)
-    // Interop: drop rows masked by deletion vectors (no-op when none exist).
-    DeletionVectors.applyMask(this, df, snap.activeFiles)
-  }
+  /** DataFrame over exactly a snapshot's active files: a DSv2 relation of
+    * the table pinned to `snap` ([[graft.sources.GraftTable]]), planned by
+    * the same scan as catalog reads. The schema comes from the snapshot's
+    * metadata (dropped/added columns resolve, old files backfill null),
+    * partition values and file sizes from its add actions; deletion
+    * vectors and column mapping apply in the reader, and
+    * `_metadata.file_path` / `_metadata.row_index` resolve. Nothing is
+    * listed, opened or launched before an action. */
+  def toDF(snap: Snapshot): DataFrame =
+    Shims.ofRows(spark, DataSourceV2Relation.create(
+      graft.sources.GraftTable.pinned(this, snap), None, None))
 
   private val PhysicalNameKey = "delta.columnMapping.physicalName"
   private val MappingModeKey = "delta.columnMapping.mode"
@@ -823,11 +787,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     if (raw.isEmpty) return Nil
     // Stats collect against footer (= physical) names, then re-key to
     // logical so file skipping and readers keep one name space.
-    val withStats = physicalSchema(schema) match {
-      case Some(ps) => remapStatKeys(attachStats(raw, partCols, ps),
-        ps.fieldNames.zip(schema.fieldNames).toMap)
-      case None => attachStats(raw, partCols, schema)
-    }
+    val withStats = attachStats(raw, partCols, schema)
     // Zero-row parts carry no data; keeping them would grow the active set
     // forever. Stats make them identifiable — drop add + file.
     val (empty, adds) = withStats.partition(_.parsedStats.exists(_.numRecords == 0))
@@ -1100,7 +1060,9 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * unreadable for any reason. */
   private def attachStats(adds: Seq[AddFile], partCols: Seq[String],
                           schema: StructType): Seq[AddFile] = {
-    val statable = schema.fields
+    val physical = physicalSchema(schema)
+    val footerSchema = physical.getOrElse(schema)
+    val statable = footerSchema.fields
       .filterNot(f => partCols.contains(f.name))
       .filter(f => isStatable(f.dataType))
     val files = adds.map(f => new Path(tablePath, f.path).toString)
@@ -1112,14 +1074,17 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
         if (files.size <= 8) {
           val cols = statable.toIndexedSeq.map(f => (f.name, f.dataType))
           files.map(p => p -> FooterStats.readOne(p, log.hadoopConf, cols)).toMap
-        } else FooterStats.collect(spark, files, schema,
+        } else FooterStats.collect(spark, files, footerSchema,
           statable.toIndexedSeq, log.hadoopConf)
-      adds.zip(files).map { case (add, file) =>
+      val withStats = adds.zip(files).map { case (add, file) =>
         byPath.get(file) match {
           case Some(st) => add.copy(stats = Some(st.toJsonString))
           case None => add
         }
       }
+      // Footers carry physical names; stats are keyed by logical ones.
+      physical.fold(withStats)(ps =>
+        remapStatKeys(withStats, ps.fieldNames.zip(schema.fieldNames).toMap))
     } catch {
       case e: Throwable =>
         Logging.logger.warn(
@@ -1137,10 +1102,8 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     val statable = schema.fields
       .filterNot(f => partCols.contains(f.name))
       .filter(f => isStatable(f.dataType))
-    val files = adds.map(f => new Path(tablePath, f.path).toString)
-    // timeZone=UTC: partition paths are UTC-canonical (TaskWriter.dirOf)
-    val reader = spark.read.option("timeZone", "UTC").option("basePath", path)
-    val df = (if (schema.nonEmpty) reader.schema(schema) else reader).parquet(files: _*)
+    // the table's own reader: logical names, partition values from the adds
+    val df = toDF(Snapshot(-1L, Some(TableMetadata("", schema.json, partCols)), None, adds, Nil))
 
     val aggs: Seq[Column] = Seq(count(lit(1)).as("__cnt")) ++ statable.flatMap { f =>
       Seq(
@@ -2510,17 +2473,12 @@ object DeltaTable {
     * Spark's readers fill columns missing from a file with EXISTS_DEFAULT,
     * and this engine's defaults are write-time-only — a file written before
     * a column existed must read NULL, not a later default. */
-  private[graft] val DefaultKeys = Seq("CURRENT_DEFAULT", "EXISTS_DEFAULT")
-
-  private[graft] def hasDefaultMetadata(schema: StructType): Boolean =
-    schema.fields.exists(f => DefaultKeys.exists(f.metadata.contains))
+  private val DefaultKeys = Seq("CURRENT_DEFAULT", "EXISTS_DEFAULT")
 
   /** `schema` with CURRENT_DEFAULT/EXISTS_DEFAULT stripped from every
-    * field (other metadata — column-mapping physical names etc. — kept).
-    * Returns `schema` itself when nothing needs stripping. */
+    * field (other metadata — column-mapping physical names etc. — kept). */
   private[graft] def stripDefaultMetadata(schema: StructType): StructType =
-    if (!hasDefaultMetadata(schema)) schema
-    else StructType(schema.fields.map { f =>
+    StructType(schema.fields.map { f =>
       if (!DefaultKeys.exists(f.metadata.contains)) f
       else {
         val b = new MetadataBuilder().withMetadata(f.metadata)

@@ -207,8 +207,7 @@ object Merge {
         if (withRowIndex) base.withColumn("__ri", col("_metadata.row_index")) else base
       }
       lazy val target = scan(None)
-      // Empty active set: `_metadata` cannot resolve on the empty relation
-      // toDF returns, and every source row is unmatched.
+      // Empty active set: every source row is unmatched.
       val (pairUp, unmatched): (DataFrame => DataFrame, () => DataFrame) =
         if (snap.activeFiles.isEmpty) (identity, () => src)
         else on match {

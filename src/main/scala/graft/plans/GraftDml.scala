@@ -704,7 +704,7 @@ final class GraftDmlStrategy(spark: SparkSession) extends SparkStrategy {
         .filterNot(f => targetNames.contains(f.name))
       if (extras.nonEmpty) {
         val extended = org.apache.spark.sql.types.StructType(
-          t.toDF().schema.fields.toSeq ++ extras.map(_.copy(nullable = true)))
+          t.metaSnapshot().schema.fields.toSeq ++ extras.map(_.copy(nullable = true)))
         t.write(spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], extended), "append")
       }

@@ -3,78 +3,77 @@ package graft.sources
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.catalyst.{expressions => catalyst}
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.graft.Shims
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.delta.{DeltaTable, Snapshot, Txn, ValidationException}
+import graft.delta.{DataSkipping, DeltaTable, ProtocolSupport, Snapshot, Txn, ValidationException}
 
 /**
- * Batch DataSource relation for graft Delta tables:
- * `spark.read.format("graft-delta").load(path)` and
- * `df.write.format("graft-delta").mode(...).save(path)` — the reader/writer
- * API a Spark user expects next to the table object API (north-star; the
- * reference's entry points are its TypeScript classes,
- * src/delta/table.ts:694,1482).
- *
- * Read options: `versionAsOf` (version time travel), `timestampAsOf`
- * (epoch millis — state at the last commit at or before it). Column
- * pruning and translatable filters are pushed into the inner scan, so the
- * parquet reader sees them (`PushedFilters` in the plan); Spark re-applies
- * every filter on top, so partially-translated predicates stay correct.
- *
- * Write options: `partitionBy` (comma-separated, first write only).
- * SaveMode mapping: Append/Overwrite → the table's transactional write;
- * ErrorIfExists fails on a non-empty table; Ignore is a no-op then.
+ * The planning side of one read of a graft Delta table, behind
+ * [[GraftTable]]: schema, claims, metadata aggregates, planner statistics
+ * and the file list [[GraftBatchScan]] reads — at a version (latest,
+ * `versionAsOf` or `timestampAsOf`: catalog and path reads) or over
+ * exactly one given snapshot (`pinned`, [[DeltaTable.toDF]]), which it
+ * plans alone: no log read, no distributed route, no file outside it.
+ * The read protocol is checked once, when the metadata first resolves.
+ * Also the V1 relation `df.write.format("graft-delta").save(path)`
+ * returns ([[DeltaRelation.write]]).
  */
 final class DeltaRelation(
     val sqlContext: SQLContext,
     private[sources] val table: DeltaTable,
     version: Option[Long],
-    timestampMs: Option[Long])
-  extends BaseRelation with PrunedFilteredScan with InsertableRelation {
+    timestampMs: Option[Long],
+    pinned: Option[Snapshot] = None) extends BaseRelation {
 
-  /** Filters [[buildScan]] applies INSIDE the scan (via
-    * [[DeltaRelation.toColumn]] — the same Catalyst operators Spark would
-    * use) are handled: re-declaring them unhandled would stack a second
-    * per-row evaluation of every pushed predicate on top of the scan.
-    * Only plain top-level column references qualify — dotted or
-    * backquoted names could resolve differently through `col(...)`. */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters.filterNot { f =>
-      f.references.nonEmpty &&
-        f.references.forall(r =>
-          !r.contains(".") && !r.contains("`") && schema.fieldNames.contains(r)) &&
-        DeltaRelation.toColumn(f).isDefined
+  private def resolvedVersion(): Option[Long] = pinned match {
+    case Some(snap) => Some(snap.version)
+    case None => timestampMs match {
+      case Some(ts) => Some(table.versionAt(ts))
+      case None => version
     }
-
-  /** SQL `INSERT INTO` / `INSERT OVERWRITE` (and `df.write.insertInto`)
-    * land as transactional table writes. */
-  override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    table.write(data, if (overwrite) "overwrite" else "append")
-    ()
   }
 
-  private def resolvedVersion(): Option[Long] = timestampMs match {
-    case Some(ts) => Some(table.versionAt(ts))
-    case None => version
+  /** Metadata and protocol of the version read (O(1) in file count off
+    * the pinned path), checked readable once. */
+  private lazy val meta: Snapshot = {
+    val m = pinned.getOrElse(table.metaSnapshot(resolvedVersion()))
+    ProtocolSupport.assertReadable(m.protocol, table.path)
+    m
   }
 
-  // Schema needs only the log's metadata — resolving it through the
-  // metadata-only snapshot keeps relation construction O(1) in file count.
-  override val schema: StructType =
-    table.toDF(table.metaSnapshot(resolvedVersion())).schema
+  /** The table schema. A pinned read reports every column nullable, as
+    * file reads always have. */
+  override lazy val schema: StructType =
+    if (pinned.isDefined) Shims.asNullable(meta.schema) else meta.schema
 
-  /** Partition columns from metadata alone (O(1) in file count). */
-  private[sources] lazy val partitionColumnSet: Set[String] =
-    table.metaSnapshot(resolvedVersion()).partitionColumns.toSet
+  private[sources] def partitionColumns: Seq[String] = meta.partitionColumns
+
+  private[sources] lazy val partitionColumnSet: Set[String] = partitionColumns.toSet
+
+  /** The `_metadata` column, unless a table column already has its name. */
+  private[sources] def isMetadataField(f: StructField): Boolean =
+    f.name == GraftBatchScan.MetadataColumn && !schema.fieldNames.contains(f.name)
+
+  /** The files of the version read that may hold a row satisfying
+    * `predicate` ([[graft.delta.DataSkipping]]; bloom sidecars too off the
+    * pinned path). */
+  private def prunedState(pinnedVersion: Option[Long], predicate: Column): Snapshot =
+    pinned match {
+      case Some(snap) => snap.copy(activeFiles = DataSkipping.prune(snap, predicate))
+      case None => table.scanState(pinnedVersion.orElse(resolvedVersion()), predicate)
+    }
 
   /** Driver-materialized snapshot pinned at an explicit version, for DSv2
     * filter claiming; None above the distributed-snapshot threshold
     * (then [[distributedClaim]] is the claim path). */
-  private[sources] def claimState(): Option[(Long, Snapshot)] =
-    table.pinnedScanState(resolvedVersion())
+  private[sources] def claimState(): Option[(Long, Snapshot)] = pinned match {
+    case Some(snap) => Some((snap.version, snap))
+    case None => table.pinnedScanState(resolvedVersion())
+  }
 
   /** Distributed claimability over the pinned version — the claim path
     * for tables above the snapshot threshold (round 15). Returns the
@@ -83,7 +82,8 @@ final class DeltaRelation(
     * over their pruned survivors — see [[exactClaimKeep]]). */
   private[sources] def distributedClaim(
       candidates: Seq[Filter]): Option[(Long, Seq[Filter])] =
-    table.distributedClaim(resolvedVersion(), candidates, schema)
+    if (pinned.isDefined) None
+    else table.distributedClaim(resolvedVersion(), candidates, schema)
 
   /** Restrict pruned survivors to the files EVERY claimed filter decides
     * True on. `Some(paths)` is the pushFilters-time memoized claim (driver
@@ -101,24 +101,6 @@ final class DeltaRelation(
         snap.activeFiles.filter(f => keep(f.partitionValues))
     }
 
-  /** The exactly-matching file subset for CLAIMED partition filters over
-    * the pinned snapshot.
-    *
-    * Scale bound: the survivors materialize on the driver here — bounded
-    * by Spark's own scan planning for the same predicate. Metadata
-    * aggregates come through here only below the snapshot threshold
-    * ([[answerAggregates]] routes larger tables to the distributed fold,
-    * whose driver traffic is one state per RDD partition); above it what
-    * remains on this floor is the row scan itself. */
-  private def claimedFiles(pinnedVersion: Option[Long],
-                           claimed: Array[Filter],
-                           claimedPaths: Option[Set[String]]): (Snapshot, Seq[graft.delta.AddFile]) = {
-    val snap = table.scanState(pinnedVersion.orElse(resolvedVersion()),
-      DeltaRelation.conjunction(claimed.toSeq))
-    if (claimed.isEmpty) (snap, snap.activeFiles)
-    else (snap, exactClaimKeep(snap, claimed, claimedPaths))
-  }
-
   /** Metadata-only aggregate answer, grouped by `groupCols` (partition
     * columns; empty for one global row), over this relation's (possibly
     * time-traveled) snapshot, optionally restricted to the exact subset a
@@ -132,14 +114,17 @@ final class DeltaRelation(
     import graft.delta.StatsAggregates
     // Above the snapshot threshold the fold runs on executors and no file
     // list exists anywhere (round 16). Below it, folding the memoized
-    // claimed files on the driver is strictly cheaper than a Spark job.
-    val out = table.distributedAggregates(pinnedVersion.orElse(resolvedVersion()),
-        claimed.toSeq, schema, groupCols, aggs) match {
+    // claimed files on the driver is strictly cheaper than a Spark job;
+    // they materialize there as Spark's own scan planning would.
+    val distributed = if (pinned.isDefined) None
+      else table.distributedAggregates(pinnedVersion.orElse(resolvedVersion()),
+        claimed.toSeq, schema, groupCols, aggs)
+    val out = distributed match {
       case Some(folded) => folded
       case None =>
-        val (snap, files) = claimedFiles(pinnedVersion, claimed, claimedPaths)
+        val snap = plannedSnapshot(Array.empty, None, None, pinnedVersion, claimed, claimedPaths)
         StatsAggregates.bind(schema, snap.partitionColumns.toSet, groupCols, aggs)
-          .flatMap(fold => fold.finish(fold.over(files)))
+          .flatMap(fold => fold.finish(fold.over(snap.activeFiles)))
     }
     if (out.isDefined) StatsAggregates.answered.incrementAndGet()
     out
@@ -151,31 +136,12 @@ final class DeltaRelation(
     * (the knob Spark's own file sources honor for the columnar-on-disk vs
     * in-memory gap). None above the distributed-snapshot threshold. */
   private[sources] def scanDimensions(filters: Array[Filter],
-                                      pinnedVersion: Option[Long] = None): Option[(Long, Option[Long])] =
-    table.tableDimensions(pinnedVersion.orElse(resolvedVersion()),
-      DeltaRelation.conjunction(filters.toSeq))
-      .map { case (bytes, rows) => (DeltaRelation.scaleBytes(sqlContext, bytes), rows) }
-
-  /** Log-derived relation size: Spark's join planner consults
-    * `sizeInBytes` against `autoBroadcastJoinThreshold`, and the
-    * `BaseRelation` default is `defaultSizeInBytes` ("assume huge") — so
-    * without this override a kilobyte-sized dimension table stored as a
-    * graft table would NEVER be auto-broadcast and every join against it
-    * would shuffle both sides. At 100 TB that is the difference between a
-    * map-side join and a full shuffle of the fact table. Large tables
-    * (above the distributed-snapshot threshold) deliberately keep the
-    * huge default — see [[graft.delta.DeltaTable.tableDimensions]]. */
-  override lazy val sizeInBytes: Long =
-    table.tableDimensions(resolvedVersion(), lit(true))
-      .map { case (bytes, _) => DeltaRelation.scaleBytes(sqlContext, bytes) }
-      .getOrElse(super.sizeInBytes)
-
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val snap = plannedSnapshot(filters, None, None)
-    var df = table.toDF(snap)
-    filters.flatMap(DeltaRelation.toColumn).foreach(c => df = df.filter(c))
-    // an empty projection (COUNT(*)) still needs the row stream
-    df.select(requiredColumns.toIndexedSeq.map(col): _*).rdd
+                                      pinnedVersion: Option[Long] = None): Option[(Long, Option[Long])] = {
+    val predicate = DeltaRelation.conjunction(filters.toSeq)
+    val dims =
+      if (pinned.isEmpty) table.tableDimensions(pinnedVersion.orElse(resolvedVersion()), predicate)
+      else Some(graft.delta.StatsAggregates.dimensions(prunedState(None, predicate)))
+    dims.map { case (bytes, rows) => (DeltaRelation.scaleBytes(sqlContext, bytes), rows) }
   }
 
   /** The planned file set for a scan: FILE pruning first (partition values
@@ -184,15 +150,14 @@ final class DeltaRelation(
     * scan); an optional pushed LIMIT / ORDER-BY-LIMIT then trims the list
     * to a survivor-covering prefix / zone-map cover. Untranslatable
     * filters prune nothing and Spark re-evaluates everything, so partial
-    * translation stays correct. Shared by the V1 row bridge and the
-    * native V2 batch scan. */
+    * translation stays correct. */
   private[sources] def plannedSnapshot(filters: Array[Filter],
                                        limit: Option[Int],
                                        topN: Option[DeltaRelation.TopN],
                                        pinnedVersion: Option[Long] = None,
                                        claimed: Array[Filter] = Array.empty,
                                        claimedPaths: Option[Set[String]] = None): Snapshot = {
-    val snapRaw = table.scanState(pinnedVersion.orElse(resolvedVersion()),
+    val snapRaw = prunedState(pinnedVersion,
       DeltaRelation.conjunction((filters ++ claimed).toSeq))
     // CLAIMED filters were removed from Spark's post-scan residuals, so
     // the scan itself must enforce them — exactly: via the memoized
@@ -307,61 +272,89 @@ object DeltaRelation {
   def conjunction(filters: Seq[Filter]): Column =
     filters.flatMap(toColumn).reduceOption(_ && _).getOrElse(lit(true))
 
+  private def option(parameters: Map[String, String], key: String): Option[String] =
+    parameters.get(key.toLowerCase).orElse(parameters.get(key))
+
+  private def isChangeFeed(parameters: Map[String, String]): Boolean =
+    option(parameters, "readChangeFeed").exists(_.toBoolean)
+
+  private def timeTravel(parameters: Map[String, String]): (Option[Long], Option[Long]) = {
+    val version = option(parameters, "versionAsOf").map(_.toLong)
+    val ts = option(parameters, "timestampAsOf").map(_.toLong)
+    if (version.nonEmpty && ts.nonEmpty) throw new ValidationException(
+      "versionAsOf and timestampAsOf are mutually exclusive")
+    (version, ts)
+  }
+
+  /** The table `spark.read.format("graft-delta").load(path)` reads: the
+    * [[GraftTable]] at the latest version, `versionAsOf`, or the last
+    * commit at or before `timestampAsOf` (epoch millis). A path without
+    * commits and a change-feed read go to the V1 relation
+    * ([[forParameters]]), which refuses the first and serves the second. */
+  def pathTable(spark: org.apache.spark.sql.SparkSession,
+                parameters: Map[String, String]): Table = {
+    val path = parameters.getOrElse("path",
+      throw new ValidationException("graft-delta requires a path"))
+    val (version, ts) = timeTravel(parameters)
+    val table = DeltaTable.forPath(spark, path)
+    GraftTable.forPath(table, version, ts,
+      readable = table.version >= 0 && !isChangeFeed(parameters))
+  }
+
+  /** V1 batch read: the change feed (`readChangeFeed=true` with a
+    * starting version or timestamp), and the refusal of a path without
+    * commits. Table rows are read through [[pathTable]]. */
   def forParameters(sqlContext: SQLContext,
                     parameters: Map[String, String]): BaseRelation = {
     val path = parameters.getOrElse("path",
       throw new ValidationException("graft-delta requires a path"))
-    val version = parameters.get("versionasof")
-      .orElse(parameters.get("versionAsOf")).map(_.toLong)
-    val ts = parameters.get("timestampasof")
-      .orElse(parameters.get("timestampAsOf")).map(_.toLong)
-    if (version.nonEmpty && ts.nonEmpty) throw new ValidationException(
-      "versionAsOf and timestampAsOf are mutually exclusive")
+    val (version, ts) = timeTravel(parameters)
     val table = DeltaTable.forPath(sqlContext.sparkSession, path)
     if (table.version < 0) throw new ValidationException(
       s"$path is not a Delta table (no commits)")
     // Batch CDF (Delta parity): readChangeFeed=true + a starting version
     // or timestamp bound returns the change rows, not the table rows.
-    val cdf = parameters.get("readchangefeed")
-      .orElse(parameters.get("readChangeFeed")).exists(_.toBoolean)
-    if (cdf) {
-      if (version.nonEmpty || ts.nonEmpty) throw new ValidationException(
-        "readChangeFeed cannot combine with versionAsOf/timestampAsOf; " +
-          "bound the feed with startingVersion/endingVersion " +
-          "or startingTimestamp/endingTimestamp")
-      def opt(k: String) =
-        parameters.get(k.toLowerCase).orElse(parameters.get(k))
-      val sv = opt("startingVersion").map(_.toLong)
-      val st = opt("startingTimestamp")
-        .map(graft.streaming.DeltaStreamSource.parseTimestampMs)
-      if (sv.nonEmpty && st.nonEmpty) throw new ValidationException(
-        "specify either startingVersion or startingTimestamp, not both")
-      val df = sv match {
+    if (!isChangeFeed(parameters)) throw new ValidationException(
+      "graft-delta reads table rows through its DSv2 table; remove it " +
+        "from spark.sql.sources.useV1SourceList")
+    if (version.nonEmpty || ts.nonEmpty) throw new ValidationException(
+      "readChangeFeed cannot combine with versionAsOf/timestampAsOf; " +
+        "bound the feed with startingVersion/endingVersion " +
+        "or startingTimestamp/endingTimestamp")
+    def opt(k: String) = option(parameters, k)
+    val sv = opt("startingVersion").map(_.toLong)
+    val st = opt("startingTimestamp")
+      .map(graft.streaming.DeltaStreamSource.parseTimestampMs)
+    if (sv.nonEmpty && st.nonEmpty) throw new ValidationException(
+      "specify either startingVersion or startingTimestamp, not both")
+    val df = sv match {
+      case Some(s) =>
+        graft.delta.Cdc.readByVersion(table, s,
+          opt("endingVersion").map(_.toLong).getOrElse(table.version))
+      case None => st match {
         case Some(s) =>
-          graft.delta.Cdc.readByVersion(table, s,
-            opt("endingVersion").map(_.toLong).getOrElse(table.version))
-        case None => st match {
-          case Some(s) =>
-            graft.delta.Cdc.readByTimestamp(table, s,
-              opt("endingTimestamp")
-                .map(graft.streaming.DeltaStreamSource.parseTimestampMs)
-                .getOrElse(System.currentTimeMillis()))
-          case None => throw new ValidationException(
-            "batch readChangeFeed requires startingVersion or startingTimestamp")
-        }
+          graft.delta.Cdc.readByTimestamp(table, s,
+            opt("endingTimestamp")
+              .map(graft.streaming.DeltaStreamSource.parseTimestampMs)
+              .getOrElse(System.currentTimeMillis()))
+        case None => throw new ValidationException(
+          "batch readChangeFeed requires startingVersion or startingTimestamp")
       }
-      new CdfRelation(sqlContext, df)
-    } else new DeltaRelation(sqlContext, table, version, ts)
+    }
+    new CdfRelation(sqlContext, df)
   }
 
+  /** `df.write.format("graft-delta").mode(m).save(path)`: Append and
+    * Overwrite → the table's transactional write; ErrorIfExists fails on a
+    * non-empty table; Ignore is a no-op then. `partitionBy`
+    * (comma-separated) applies to the first write. */
   def write(sqlContext: SQLContext, mode: SaveMode,
             parameters: Map[String, String], data: DataFrame): DeltaRelation = {
     val path = parameters.getOrElse("path",
       throw new ValidationException("graft-delta requires a path"))
     val table = DeltaTable.forPath(sqlContext.sparkSession, path)
     val exists = table.version >= 0
-    val partitionBy = parameters.get("partitionby")
-      .orElse(parameters.get("partitionBy"))
+    val partitionBy = option(parameters, "partitionBy")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
     // Idempotent batch writes (Delta's txnAppId/txnVersion options): a
@@ -369,8 +362,8 @@ object DeltaRelation {
     // orchestrator can safely re-submit a failed-but-actually-committed
     // write.
     val txn = for {
-      app <- parameters.get("txnappid").orElse(parameters.get("txnAppId"))
-      v <- parameters.get("txnversion").orElse(parameters.get("txnVersion"))
+      app <- option(parameters, "txnAppId")
+      v <- option(parameters, "txnVersion")
     } yield Txn(app, v.toLong, System.currentTimeMillis())
     val alreadyApplied = txn.exists(t =>
       exists && table.metaSnapshot().transactions.getOrElse(t.appId, -1L) >= t.version)

@@ -3,30 +3,32 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, CreateNamedStruct, Expression, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftshim.ScanShim
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.OptionalLong
 
 import graft.delta.{AddFile, DeletionVectors, Snapshot}
 
 /**
- * Native DSv2 batch scan over a graft Delta table — the read path behind
- * every catalog `SELECT`. Replaces the earlier `V1Scan` row bridge, which
- * paid two full row conversions per row (vectorized parquet read →
- * `Row` boxing at the bridge → re-encoding to `InternalRow` in
- * `RowDataSourceScanExec`); this scan plans exact file lists from the
- * snapshot (file pruning via partition values + zone-map stats + bloom
- * BEFORE Spark plans, LIMIT / ORDER-BY-LIMIT file-list trimming — all
- * shared with the V1 path through [[DeltaRelation.plannedSnapshot]]) and
- * hands the surviving files to Spark's own vectorized parquet reader
- * factory, so rows flow columnar through `BatchScanExec` and whole-stage
- * codegen with zero engine-boundary conversions.
+ * Native DSv2 batch scan over a graft Delta table — the one reader of table
+ * data: catalog `SELECT`s, `format("graft-delta").load(path)` and every
+ * [[graft.delta.DeltaTable.toDF]] caller plan here. It plans exact file
+ * lists from the log's add actions — path, size and partition values;
+ * nothing is listed in the store — with file pruning via partition values
+ * + zone-map stats + bloom and LIMIT / ORDER-BY-LIMIT trimming
+ * ([[DeltaRelation.plannedSnapshot]]), and hands the surviving files to
+ * Spark's own vectorized parquet reader factory, so rows flow columnar
+ * through `BatchScanExec` and whole-stage codegen.
  *
  * Scale properties:
  *  - Split planning uses Spark's own size formula + bin-packer, so a
@@ -52,6 +54,11 @@ import graft.delta.{AddFile, DeletionVectors, Snapshot}
  *    all. Pushed filters are rewritten to physical names (dropped, not
  *    mis-pushed, when a shape can't be rewritten — Spark re-evaluates
  *    every predicate post-scan regardless).
+ *  - `_metadata.file_path` / `_metadata.row_index` (MERGE, DML and the
+ *    DV build key rows by them): the path is a per-file constant next to
+ *    the partition values, the position Parquet's own row-index column
+ *    (exact under row-group skipping); scans requesting them read rows.
+ *  - `numFiles` driver metric: files read after runtime filtering.
  *
  * Reference behavior: scan with projection/filter over the snapshot's
  * file list (src/delta/table.ts:1689-1761); the planning/execution split
@@ -78,18 +85,24 @@ private[sources] final class GraftBatchScan(
   private def spark: SparkSession = relation.sqlContext.sparkSession
   private def table = relation.table
 
-  // Partition columns come from table metadata (O(1) in file count).
-  private val partCols: Set[String] =
-    table.metaSnapshot().partitionColumns.toSet
+  // Partition columns of the version this scan reads (O(1) in file count).
+  private val partCols: Set[String] = relation.partitionColumnSet
+  private val requiredMeta: Option[StructType] =
+    required.fields.collectFirst { case f if relation.isMetadataField(f) =>
+      f.dataType.asInstanceOf[StructType] }
+  private val requiredCols: Array[StructField] =
+    required.fields.filterNot(relation.isMetadataField)
   private val requiredData: Array[StructField] =
-    required.fields.filterNot(f => partCols.contains(f.name))
+    requiredCols.filterNot(f => partCols.contains(f.name))
   private val requiredPart: Array[StructField] =
-    required.fields.filter(f => partCols.contains(f.name))
+    requiredCols.filter(f => partCols.contains(f.name))
 
   /** Data columns first, partition columns appended — the row layout
-    * Spark's file readers produce; the engine rewires references by name. */
+    * Spark's file readers produce; the engine rewires references by name.
+    * A requested `_metadata` struct comes last. */
   override def readSchema(): StructType =
-    StructType(requiredData ++ requiredPart)
+    StructType(requiredData ++ requiredPart ++
+      requiredMeta.map(StructField(GraftBatchScan.MetadataColumn, _, nullable = false)))
 
   override def toBatch: Batch = this
 
@@ -104,13 +117,11 @@ private[sources] final class GraftBatchScan(
     * can't refute — so any translatable runtime predicate is safe to
     * apply to the file list, partition column or not. */
   override def filterAttributes(): Array[NamedReference] =
-    readSchema().fieldNames.map(Expressions.column)
+    (requiredData ++ requiredPart).map(f => Expressions.column(f.name))
 
   override def filter(predicates: Array[Predicate]): Unit = {
     runtimeFilters = predicates.flatMap(p => ScanShim.toV1Filter(p).toSeq)
     GraftBatchScan.runtimeFilterEvents.incrementAndGet()
-    GraftBatchScan.lastRuntime.set(
-      s"v2=${predicates.mkString(";")} v1=${runtimeFilters.mkString(";")}")
     ()
   }
 
@@ -124,41 +135,62 @@ private[sources] final class GraftBatchScan(
   private def plan(fs: Array[Filter]): GraftBatchScan.Planned = {
     val snap = relation.plannedSnapshot(fs, limit, topN, pinnedVersion,
       claimed, claimedPaths)
-    val (parts, columnarOk) = GraftBatchScan.planFiles(
-      spark, table, snap.activeFiles, requiredPart.toIndexedSeq)
+    val (parts, columnarOk) = GraftBatchScan.planFiles(spark, table,
+      snap.activeFiles, requiredPart.toIndexedSeq, withFilePath = needsFilePath)
     GraftBatchScan.Planned(parts, columnarOk, snap)
   }
 
-  private def fileCount(ps: Array[InputPartition]): Long = ps.map {
-    case fp: FilePartition => fp.files.length.toLong
-    case dv: GraftDvPartition => dv.inner.files.length.toLong
-    case _ => 1L
-  }.sum
+  private def needsFilePath: Boolean =
+    requiredMeta.exists(_.fieldNames.contains(GraftBatchScan.FilePath))
 
-  override def planInputPartitions(): Array[InputPartition] =
-    if (runtimeFilters.isEmpty) basePlan.partitions
-    else {
-      // Re-prune the PINNED base snapshot — never re-read the latest
-      // scan state here. A commit landing between planning and execution
-      // must not change which snapshot this query reads (within-query
-      // snapshot consistency), and runtime filtering must only REMOVE
-      // files: the columnar/row decision and the skipped-file metric both
-      // assume the refiltered set is a subset of the base plan's.
-      val snap = basePlan.snapshot
-      val pruned = graft.delta.DataSkipping.prune(
-        snap, DeltaRelation.conjunction(runtimeFilters.toSeq))
-      val (parts, _) = GraftBatchScan.planFiles(
-        spark, table, pruned, requiredPart.toIndexedSeq)
-      GraftBatchScan.runtimeSkippedFiles.addAndGet(
-        fileCount(basePlan.partitions) - fileCount(parts))
-      parts
-    }
+  private def fileCount(ps: Array[InputPartition]): Long = ps.iterator.flatMap {
+    case fp: FilePartition => fp.files.iterator.map(_.filePath)
+    case dv: GraftDvPartition => dv.inner.files.iterator.map(_.filePath)
+  }.toSet.size.toLong
+
+  /** Files the executed scan reads (the `numFiles` driver metric). */
+  @volatile private var plannedFiles: Long = 0L
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val parts =
+      if (runtimeFilters.isEmpty) basePlan.partitions
+      else {
+        // Re-prune the PINNED base snapshot — never re-read the latest
+        // scan state here. A commit landing between planning and execution
+        // must not change which snapshot this query reads (within-query
+        // snapshot consistency), and runtime filtering must only REMOVE
+        // files: the columnar/row decision and the skipped-file metric both
+        // assume the refiltered set is a subset of the base plan's.
+        val snap = basePlan.snapshot
+        val pruned = graft.delta.DataSkipping.prune(
+          snap, DeltaRelation.conjunction(runtimeFilters.toSeq))
+        val (refiltered, _) = GraftBatchScan.planFiles(spark, table, pruned,
+          requiredPart.toIndexedSeq, withFilePath = needsFilePath)
+        GraftBatchScan.runtimeSkippedFiles.addAndGet(
+          fileCount(basePlan.partitions) - fileCount(refiltered))
+        refiltered
+      }
+    plannedFiles = fileCount(parts)
+    parts
+  }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new GraftBatchScan.NumFiles)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val n = plannedFiles
+    Array(new CustomTaskMetric {
+      override def name(): String = GraftBatchScan.NumFilesMetric
+      override def value(): Long = n
+    })
+  }
 
   // ---- reading --------------------------------------------------------------
 
   override def createReaderFactory(): PartitionReaderFactory =
     GraftBatchScan.readerFactoryFor(spark, table, basePlan.snapshot.schema,
-      partCols, requiredData, requiredPart, allPushed, basePlan.columnarOk)
+      partCols, requiredData, requiredPart, allPushed, basePlan.columnarOk,
+      metadata = requiredMeta)
 
   /** `spark.readStream.table(...)` — the scan builder is the only DSv2
     * entry point for streaming reads, so the batch scan doubles as the
@@ -177,7 +209,7 @@ private[sources] final class GraftBatchScan(
   }
 
   // ---- statistics (what the join planner compares against the broadcast
-  // threshold — see GraftV1Scan's scaladoc history) ---------------------------
+  // threshold) ----------------------------------------------------------------
 
   override def estimateStatistics(): Statistics = {
     // Pinned to the claim-time version: the stats the join planner reads
@@ -221,23 +253,54 @@ private[graft] object GraftBatchScan {
   final case class Planned(partitions: Array[InputPartition],
                            columnarOk: Boolean, snapshot: Snapshot)
 
+  /** The metadata column a graft table exposes, and its two fields: the
+    * file's qualified URI (the string Spark's file source reports) and
+    * the row's physical position in that file. */
+  val MetadataColumn = "_metadata"
+  val FilePath = "file_path"
+  val RowIndex = "row_index"
+  val MetadataType: StructType = StructType(Seq(
+    StructField(FilePath, StringType, nullable = false),
+    StructField(RowIndex, LongType, nullable = false)))
+
+  // Reader-side names of the two metadata inputs: Parquet fills its row-index
+  // column itself; the path is one more per-file partition value.
+  private val RowIndexInput = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+  private val FilePathInput = "_graft_file_path"
+
+  val NumFilesMetric = "numFiles"
+
+  /** Driver metric: files the executed scan read. */
+  final class NumFiles extends CustomSumMetric {
+    override def name(): String = NumFilesMetric
+    override def description(): String = "number of files read"
+  }
+
   /** File list → read partitions: clean files slice by Spark's split-size
     * formula and bin-pack; DV files become whole-file row-mode partitions
     * carrying their own serialized bitmap. Returns the partitions plus
     * whether the whole plan may read columnar (no DV partition present —
-    * Spark requires partition-uniform columnar support). Shared by the
-    * batch scan and the micro-batch stream. */
+    * Spark requires partition-uniform columnar support). `withFilePath`
+    * appends each file's URI to its partition row. Shared by the batch
+    * scan and the micro-batch stream. */
   def planFiles(spark: SparkSession, table: graft.delta.DeltaTable,
-                files: Seq[AddFile], partFields: Seq[StructField])
+                files: Seq[AddFile], partFields: Seq[StructField],
+                withFilePath: Boolean = false)
       : (Array[InputPartition], Boolean) = {
     val (dvFiles, cleanFiles) = files.partition(_.deletionVector.isDefined)
     val partRows = graft.delta.PartitionPaths.rowDecoder(partFields)
-    def partRow(f: AddFile): InternalRow = partRows(f.partitionValues)
-    val tableRoot = table.tablePath
+    val partTypes = partFields.map(_.dataType)
+    def partRow(f: AddFile, p: Path): InternalRow = {
+      val row = partRows(f.partitionValues)
+      if (!withFilePath) row
+      else InternalRow.fromSeq(row.toSeq(partTypes) :+
+        UTF8String.fromString(p.toUri.toString))
+    }
+    val tableRoot = table.log.fs.makeQualified(table.tablePath)
     val splitBytes = ScanShim.maxSplitBytes(spark, cleanFiles.map(_.size))
     val slices = cleanFiles.flatMap { f =>
       val p = new Path(tableRoot, f.path)
-      val row = partRow(f)
+      val row = partRow(f, p)
       (0L until math.max(f.size, 1L) by splitBytes).map { off =>
         ScanShim.partitionedFile(row, p, off,
           math.min(splitBytes, f.size - off), f.size, f.modificationTime)
@@ -248,7 +311,7 @@ private[graft] object GraftBatchScan {
     val dv: Seq[InputPartition] = dvFiles.zipWithIndex.map { case (f, i) =>
       val p = new Path(tableRoot, f.path)
       val whole = ScanShim.filePartitions(spark,
-        Seq(ScanShim.partitionedFile(partRow(f), p, 0L, f.size, f.size,
+        Seq(ScanShim.partitionedFile(partRow(f, p), p, 0L, f.size, f.size,
           f.modificationTime)), Long.MaxValue)
       GraftDvPartition(
         whole.head.copy(index = clean.size + i),
@@ -262,15 +325,17 @@ private[graft] object GraftBatchScan {
     * `tableSchema`: column mapping reads physical parquet names
     * positionally, pushed filters are renamed to physical names (or
     * dropped from pushdown — Spark re-evaluates them post-scan anyway).
-    * `permuteTo` reorders the produced (data ++ partition) layout back to
-    * an arbitrary target order — the streaming path needs table order —
-    * at the price of row-mode reads. */
+    * `metadata` (the requested `_metadata` fields) appends that struct
+    * after the partition columns; `order` (column names) reorders the
+    * produced data ++ partition layout — the streaming path needs table
+    * order. Either costs row-mode reads. */
   def readerFactoryFor(spark: SparkSession, table: graft.delta.DeltaTable,
                        tableSchema: StructType, partCols: Set[String],
                        requiredData: Array[StructField],
                        requiredPart: Array[StructField],
                        filters: Array[Filter], columnarOk: Boolean,
-                       permuteTo: Array[Int] = Array.empty)
+                       order: Seq[String] = Nil,
+                       metadata: Option[StructType] = None)
       : PartitionReaderFactory = {
     val physical = table.physicalSchema(tableSchema).getOrElse(tableSchema)
     def physicalOf(logical: String): String =
@@ -278,6 +343,13 @@ private[graft] object GraftBatchScan {
         case -1 => logical
         case i => physical.fields(i).name
       }
+    val metaFields = metadata.map(_.fieldNames.toSeq).getOrElse(Nil)
+    // Nullable as requested: Parquet refuses a required column the file
+    // lacks, and it fills this one itself.
+    val rowIndexIn = Option.when(metaFields.contains(RowIndex))(
+      StructField(RowIndexInput, LongType))
+    val filePathIn = Option.when(metaFields.contains(FilePath))(
+      StructField(FilePathInput, StringType, nullable = false))
     // Strip CURRENT_DEFAULT/EXISTS_DEFAULT from the reader-facing schemas:
     // parquet readers fill columns missing from a file with EXISTS_DEFAULT,
     // but this engine's defaults are write-time-only — old files must read
@@ -286,12 +358,29 @@ private[graft] object GraftBatchScan {
       physical.fields.zip(tableSchema.fields)
         .collect { case (pf, lf) if !partCols.contains(lf.name) => pf }))
     val readDataSchema = graft.delta.DeltaTable.stripDefaultMetadata(StructType(
-      requiredData.map(f => f.copy(name = physicalOf(f.name)))))
-    val partSchema = StructType(requiredPart)
+      requiredData.map(f => f.copy(name = physicalOf(f.name))) ++ rowIndexIn))
+    val partSchema = StructType(requiredPart ++ filePathIn)
     val mapped = physical ne tableSchema
     val pushable =
       if (!mapped) filters
       else filters.flatMap(renameFilter(_, physicalOf))
+    // The readers produce data ++ [row index] ++ partition ++ [file path].
+    val produced = readDataSchema.fields ++ partSchema.fields
+    def ref(name: String): Expression = {
+      val i = produced.indexWhere(_.name == name)
+      // a file may hold nulls in any column; only the metadata inputs cannot
+      BoundReference(i, produced(i).dataType, name != RowIndexInput && name != FilePathInput)
+    }
+    val columns = (requiredData ++ requiredPart).map(_.name).toSeq
+    val target = if (order.isEmpty) columns else order
+    def column(n: String) = ref(if (partCols.contains(n)) n else physicalOf(n))
+    val project: Seq[Expression] =
+      if (metadata.nonEmpty)
+        target.map(column) :+ CreateNamedStruct(metaFields.flatMap { n =>
+          Seq(Literal(n), ref(if (n == RowIndex) RowIndexInput else FilePathInput))
+        })
+      else if (target == columns) Nil
+      else target.map(column)
     GraftReaderFactory(
       ScanShim.parquetReaderFactory(spark, dataSchema, readDataSchema,
         partSchema, pushable),
@@ -299,9 +388,8 @@ private[graft] object GraftBatchScan {
       // filters, so no row-group or page skipping can shift positions.
       ScanShim.parquetReaderFactory(spark, dataSchema, readDataSchema,
         partSchema, Array.empty),
-      columnarOk = columnarOk && permuteTo.isEmpty,
-      producedTypes = (requiredData ++ requiredPart).map(_.dataType),
-      permuteTo = permuteTo)
+      columnarOk = columnarOk && project.isEmpty,
+      project = project)
   }
 
   /** Test/inspection hook: runtime-filter invocations since JVM start. */
@@ -309,9 +397,6 @@ private[graft] object GraftBatchScan {
 
   /** Test/inspection hook: partitions dropped by runtime filtering. */
   val runtimeSkippedFiles = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test/inspection hook: the last runtime-filter set a scan received. */
-  val lastRuntime = new java.util.concurrent.atomic.AtomicReference[String]("")
 
   /** Rewrite a pushed filter's field names for column-mapped reads; None
     * drops the filter from parquet pushdown (Spark still re-evaluates it
@@ -352,16 +437,15 @@ private[graft] final case class GraftDvPartition(
  * vectorized parquet factory (columnar when the whole scan is DV-free —
  * Spark requires partition-uniform columnar support); DV partitions read
  * row-mode through the no-pushdown factory, dropping bitmap-masked
- * physical row positions by running index. A non-empty `permuteTo`
- * reorders the produced columns (streaming needs table order; the file
- * readers produce data ++ partition order) — rows only.
+ * physical row positions by running index. A non-empty `project` (bound
+ * to the produced data ++ partition layout) reshapes every row — the
+ * `_metadata` struct, streaming's table order — rows only.
  */
 private[graft] final case class GraftReaderFactory(
     clean: PartitionReaderFactory,
     dvRaw: PartitionReaderFactory,
     columnarOk: Boolean,
-    producedTypes: Array[org.apache.spark.sql.types.DataType] = Array.empty,
-    permuteTo: Array[Int] = Array.empty) extends PartitionReaderFactory {
+    project: Seq[Expression] = Nil) extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val base = p match {
@@ -382,12 +466,9 @@ private[graft] final case class GraftReaderFactory(
         }
       case fp => clean.createReader(fp)
     }
-    if (permuteTo.isEmpty) base
+    if (project.isEmpty) base
     else {
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-      val proj = UnsafeProjection.create(
-        permuteTo.toIndexedSeq.map(i =>
-          BoundReference(i, producedTypes(i), nullable = true)))
+      val proj = UnsafeProjection.create(project)
       new PartitionReader[InternalRow] {
         override def next(): Boolean = base.next()
         override def get(): InternalRow = proj(base.get())
@@ -401,6 +482,6 @@ private[graft] final case class GraftReaderFactory(
     clean.createColumnarReader(p)
 
   override def supportColumnarReads(p: InputPartition): Boolean =
-    columnarOk && permuteTo.isEmpty && !p.isInstanceOf[GraftDvPartition] &&
+    columnarOk && project.isEmpty && !p.isInstanceOf[GraftDvPartition] &&
       clean.supportColumnarReads(p)
 }

@@ -16,10 +16,10 @@ import org.apache.spark.sql.connector
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportStatistics, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.{AlwaysTrue, BaseRelation, Filter, InsertableRelation, TableScan}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.delta.{DeltaTable, ValidationException}
+import graft.delta.{DeltaTable, Snapshot, ValidationException}
 
 /**
  * DataSource V2 `TableCatalog` over graft Delta tables: the SQL front door
@@ -237,7 +237,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
           "ADD COLUMN with DEFAULT is not supported (existing rows would " +
             "read NULL, not the default); add the column, backfill, then " +
             "ALTER COLUMN ... SET DEFAULT")
-        val extended = dt.toDF().schema.add(
+        val extended = dt.metaSnapshot().schema.add(
           org.apache.spark.sql.types.StructField(
             a.fieldNames.head, a.dataType, a.isNullable))
         dt.write(spark.createDataFrame(
@@ -266,7 +266,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         // ALTER TABLE ... CLUSTER BY (cols) / CLUSTER BY NONE: updates the
         // layout intent; files re-cluster at the next graft_zorder(t).
         val cols = c.clusteringColumns.toSeq.map(_.fieldNames.mkString("."))
-        val schema = dt.toDF().schema
+        val schema = dt.metaSnapshot().schema
         cols.filterNot(schema.fieldNames.contains).headOption.foreach(x =>
           throw new ValidationException(s"CLUSTER BY column '$x' not in schema"))
         if (cols.isEmpty) dt.updateConfiguration(Map.empty, remove = Seq("graft.clusterBy"))
@@ -301,7 +301,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       // alternative.
       case u: TableChange.UpdateColumnType =>
         require(u.fieldNames.length == 1, "nested type change unsupported")
-        val cur = dt.toDF().schema(u.fieldNames.head).dataType
+        val cur = dt.metaSnapshot().schema(u.fieldNames.head).dataType
         if (cur != u.newDataType)
           throw new ValidationException(
             s"type change ${u.fieldNames.head}: $cur -> ${u.newDataType} is not " +
@@ -430,11 +430,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
  * runtime file pruning from join predicates), writes through the engine's
  * task writer — as a DSv2 write, or via a [[V1Write]] into the table API
  * (see [[GraftWriteBuilder]]) — with one transactional commit per
- * statement. `version`/`timestampMs` carry DSv2 time travel.
+ * statement. `version`/`timestampMs` carry DSv2 time travel; `pinned`
+ * reads exactly one snapshot's files ([[DeltaTable.toDF]]). Exposes
+ * `_metadata.file_path` / `_metadata.row_index`, which MERGE, DML and the
+ * DV build key rows by.
  */
-final class GraftTable(val delta: DeltaTable, identName: String,
-                       version: Option[Long], timestampMs: Option[Long])
-  extends Table with SupportsRead with SupportsWrite with TruncatableTable {
+final class GraftTable private[sources] (val delta: DeltaTable, identName: String,
+    version: Option[Long], timestampMs: Option[Long], pinned: Option[Snapshot] = None,
+    caps: util.Set[TableCapability] = GraftTable.CatalogCapabilities)
+  extends Table with SupportsRead with SupportsWrite with TruncatableTable
+  with SupportsMetadataColumns {
 
   /** `TRUNCATE TABLE t`: one overwrite commit carrying zero adds — every
     * active file is removed atomically, schema and history retained (the
@@ -443,16 +448,18 @@ final class GraftTable(val delta: DeltaTable, identName: String,
   override def truncateTable(): Boolean = {
     val spark = SparkSession.active
     delta.write(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], delta.toDF().schema), "overwrite")
+      spark.sparkContext.emptyRDD[Row], delta.metaSnapshot().schema), "overwrite")
     true
   }
 
-  private def relation: DeltaRelation =
-    new DeltaRelation(SparkSession.active.sqlContext, delta, version, timestampMs)
+  private[sources] lazy val relation: DeltaRelation =
+    new DeltaRelation(SparkSession.active.sqlContext, delta, version, timestampMs, pinned)
 
   override def name(): String = identName
 
   override def schema(): StructType = relation.schema
+
+  override def metadataColumns(): Array[MetadataColumn] = Array(GraftTable.Metadata)
 
   // NOT declared: AUTOMATIC_SCHEMA_EVOLUTION. Spark's
   // ResolveMergeIntoSchemaEvolution proposes UpdateColumnType to the
@@ -463,22 +470,13 @@ final class GraftTable(val delta: DeltaTable, identName: String,
   // `MERGE ... WITH SCHEMA EVOLUTION` is instead handled by
   // [[graft.plans.GraftDmlStrategy]], which widens additively (new source
   // columns only) and leaves existing column types alone.
-  // BATCH_WRITE rides along with V1_BATCH_WRITE only to satisfy
-  // TableCapabilityCheck for dynamic partition overwrite (which has no V1
-  // fallback and is planned by GraftDmlStrategy); actual write ROUTING is
-  // by the Write object's type: GraftDmlStrategy plans a GraftDirectWrite
-  // onto Spark's V2 write execs, a V1Write takes the V1 fallback execs.
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.V1_BATCH_WRITE, TableCapability.BATCH_WRITE,
-      TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE,
-      TableCapability.OVERWRITE_BY_FILTER, TableCapability.OVERWRITE_DYNAMIC)
+  override def capabilities(): util.Set[TableCapability] = caps
 
   /** Report the table's identity partitioning so the analyzer accepts
     * static `INSERT OVERWRITE ... PARTITION (p = v)` specs and routes
     * dynamic-mode overwrites; also what `DESCRIBE` shows as partitioning. */
   override def partitioning(): Array[Transform] =
-    delta.metaSnapshot().partitionColumns
+    relation.partitionColumns
       .map(c => org.apache.spark.sql.connector.expressions.Expressions.identity(c))
       .toArray
 
@@ -490,6 +488,46 @@ final class GraftTable(val delta: DeltaTable, identName: String,
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(delta, info)
+}
+
+object GraftTable {
+
+  // BATCH_WRITE rides along with V1_BATCH_WRITE only to satisfy
+  // TableCapabilityCheck for dynamic partition overwrite (which has no V1
+  // fallback and is planned by GraftDmlStrategy); actual write ROUTING is
+  // by the Write object's type: GraftDmlStrategy plans a GraftDirectWrite
+  // onto Spark's V2 write execs, a V1Write takes the V1 fallback execs.
+  private val CatalogCapabilities: util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
+      TableCapability.V1_BATCH_WRITE, TableCapability.BATCH_WRITE,
+      TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE,
+      TableCapability.OVERWRITE_BY_FILTER, TableCapability.OVERWRITE_DYNAMIC)
+
+  /** Path tables: `save`, `readStream` and `writeStream` take the V1
+    * interfaces (no BATCH_WRITE, MICRO_BATCH_READ, STREAMING_WRITE);
+    * V1_BATCH_WRITE lets `INSERT` into a table `USING graft-delta` reach
+    * [[GraftWriteBuilder]]. An unreadable path (no commits, a change-feed
+    * read) declares nothing at all. */
+  private def pathCapabilities(readable: Boolean): util.Set[TableCapability] =
+    if (!readable) util.EnumSet.noneOf(classOf[TableCapability])
+    else util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
+      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER)
+
+  private val Metadata: MetadataColumn = new MetadataColumn {
+    override def name(): String = GraftBatchScan.MetadataColumn
+    override def dataType(): DataType = GraftBatchScan.MetadataType
+    override def isNullable(): Boolean = false
+  }
+
+  /** The table `load(path)` reads, at the latest or a time-travel version. */
+  private[sources] def forPath(delta: DeltaTable, version: Option[Long],
+                               timestampMs: Option[Long], readable: Boolean): GraftTable =
+    new GraftTable(delta, delta.path, version, timestampMs, None, pathCapabilities(readable))
+
+  /** A read-only table over exactly `snap`'s files. */
+  private[graft] def pinned(delta: DeltaTable, snap: Snapshot): GraftTable =
+    new GraftTable(delta, delta.path, None, None, Some(snap),
+      util.EnumSet.of(TableCapability.BATCH_READ))
 }
 
 private final class GraftScanBuilder(relation: DeltaRelation,

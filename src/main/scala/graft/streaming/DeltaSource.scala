@@ -1,6 +1,10 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
 import org.apache.spark.sql.streaming.OutputMode
@@ -9,6 +13,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.StreamShim
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import org.apache.spark.sql.types.{LongType, StringType, StructField, TimestampType}
 
@@ -349,14 +354,24 @@ final class DeltaStreamSink(
 }
 
 /** `format("graft-delta")` registration (ServiceLoader via
-  * META-INF/services, like any Spark connector): streaming source plus the
-  * batch read/write relations ([[graft.sources.DeltaRelation]]), so one
-  * format name covers `read`, `write`, and `readStream`. */
-final class DeltaSourceProvider extends StreamSourceProvider
+  * META-INF/services, like any Spark connector), so one format name covers
+  * `read`, `write`, `readStream` and `writeStream`. Batch reads resolve to
+  * the DSv2 table catalog reads use ([[graft.sources.DeltaRelation.pathTable]]);
+  * writes, streams and the batch change feed take the V1 interfaces below. */
+final class DeltaSourceProvider extends TableProvider with StreamSourceProvider
   with StreamSinkProvider with RelationProvider with CreatableRelationProvider
   with DataSourceRegister {
 
   override def shortName(): String = "graft-delta"
+
+  /** Unused: `getTable` reads the schema from the log. */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    new StructType()
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: java.util.Map[String, String]): Table =
+    graft.sources.DeltaRelation.pathTable(SparkSession.active,
+      properties.asScala.toMap)
 
   override def createSink(
       sqlContext: SQLContext,

@@ -73,15 +73,6 @@ final class GraftMicroBatchStream(
   private val dataFields = tableSchema.fields.filterNot(f => partCols(f.name))
   private val partFields = tableSchema.fields.filter(f => partCols(f.name))
 
-  /** The file readers produce data ++ partition column order; streaming
-    * output is consumed POSITIONALLY against the table schema, so a
-    * non-trailing partition column needs a reorder projection. */
-  private val perm: Array[Int] = {
-    val produced = (dataFields ++ partFields).map(_.name)
-    if (produced.sameElements(tableSchema.fieldNames)) Array.empty
-    else tableSchema.fieldNames.map(n => produced.indexOf(n))
-  }
-
   // ---- offsets / admission ---------------------------------------------------
 
   override def initialOffset(): Offset = startingVersion match {
@@ -138,8 +129,10 @@ final class GraftMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
+    // Streaming output is consumed POSITIONALLY against the table schema.
     GraftBatchScan.readerFactoryFor(spark, table, tableSchema, partCols,
-      dataFields, partFields, Array.empty, batchColumnarOk, perm)
+      dataFields, partFields, Array.empty, batchColumnarOk,
+      order = tableSchema.fieldNames.toSeq)
 
   override def commit(end: Offset): Unit = ()
 

@@ -27,7 +27,7 @@ class ColumnMappingSpec extends SparkTestBase {
       Protocol(),
       TableMetadata(id = "cm-test", schemaString = schema.json,
         configuration = Map("delta.columnMapping.mode" -> "name")),
-      AddFile("mapped.parquet", size = 1L),
+      AddFile("mapped.parquet", size = new java.io.File(dir, "mapped.parquet").length()),
       CommitInfo(0L, "EXTERNAL-WRITE")))
     val df = t.toDF()
     assert(df.columns.toSeq == Seq("id", "s"))

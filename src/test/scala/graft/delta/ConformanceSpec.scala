@@ -56,8 +56,11 @@ class ConformanceSpec extends SparkTestBase {
       s""""partitionColumns":${partitionColumns.map(jstr).mkString("[", ",", "]")},""" +
       s""""configuration":$configuration,"createdTime":0}}""")
 
-  private def addJson(path: String, partitionValues: String = "{}"): String =
-    s"""{"add":{"path":"$path","partitionValues":$partitionValues,"size":1,""" +
+  /** On-disk length of a fixture file, as a writer records it in `add.size`. */
+  private def len(dir: String, rel: String): Long = Files.size(Paths.get(dir, rel))
+
+  private def addJson(dir: String, path: String, partitionValues: String = "{}"): String =
+    s"""{"add":{"path":"$path","partitionValues":$partitionValues,"size":${len(dir, path)},""" +
       """"modificationTime":0,"dataChange":true}}"""
 
   test("foreign log replays adds/removes and time-travels") {
@@ -68,11 +71,11 @@ class ConformanceSpec extends SparkTestBase {
     writeParquet(Seq((3, "c")).toDF("id", "s"), dir, "data2.parquet")
     writeParquet(Seq((4, "d")).toDF("id", "s"), dir, "data3.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
-      (protoMeta(schema) :+ addJson("data1.parquet")).mkString("\n"))
-    writeText(dir, "_delta_log/00000000000000000001.json", addJson("data2.parquet"))
+      (protoMeta(schema) :+ addJson(dir, "data1.parquet")).mkString("\n"))
+    writeText(dir, "_delta_log/00000000000000000001.json", addJson(dir, "data2.parquet"))
     writeText(dir, "_delta_log/00000000000000000002.json",
       Seq("""{"remove":{"path":"data1.parquet","deletionTimestamp":1,"dataChange":true}}""",
-        addJson("data3.parquet")).mkString("\n"))
+        addJson(dir, "data3.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.version == 2)
@@ -93,8 +96,8 @@ class ConformanceSpec extends SparkTestBase {
     writeParquet(Seq(2).toDF("id"), dir, "p=__HIVE_DEFAULT_PARTITION__/b.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
       (protoMeta(schema, partitionColumns = Seq("p")) :+
-        addJson("p=x/a.parquet", """{"p":"x"}""") :+
-        addJson("p=__HIVE_DEFAULT_PARTITION__/b.parquet", """{"p":null}""")).mkString("\n"))
+        addJson(dir, "p=x/a.parquet", """{"p":"x"}""") :+
+        addJson(dir, "p=__HIVE_DEFAULT_PARTITION__/b.parquet", """{"p":null}""")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     val rows = t.toDF().orderBy("id").as[(Int, Option[String])].collect().toSeq
@@ -111,9 +114,9 @@ class ConformanceSpec extends SparkTestBase {
     writeParquet(Seq(1).toDF("id"), dir, "old.parquet")
     writeParquet(Seq((2, "b")).toDF("id", "s"), dir, "new.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
-      (protoMeta(v0) :+ addJson("old.parquet")).mkString("\n"))
+      (protoMeta(v0) :+ addJson(dir, "old.parquet")).mkString("\n"))
     writeText(dir, "_delta_log/00000000000000000001.json",
-      (protoMeta(v1).tail :+ addJson("new.parquet")).mkString("\n")) // metaData only
+      (protoMeta(v1).tail :+ addJson(dir, "new.parquet")).mkString("\n")) // metaData only
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().columns.toSeq == Seq("id", "s"))
@@ -135,7 +138,7 @@ class ConformanceSpec extends SparkTestBase {
     writeText(dir, "_delta_log/00000000000000000000.json",
       (protoMeta(schema,
         configuration = """{"delta.columnMapping.mode":"name"}""") :+
-        addJson("mapped.parquet")).mkString("\n"))
+        addJson(dir, "mapped.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().columns.toSeq == Seq("id", "s"))
@@ -163,9 +166,9 @@ class ConformanceSpec extends SparkTestBase {
     val cpRows = Seq(
       Row(null, null, metaJson, null),
       Row(null, null, null, """{"minReaderVersion":1,"minWriterVersion":2}"""),
-      Row("""{"path":"dataA.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true}""",
+      Row(s"""{"path":"dataA.parquet","partitionValues":{},"size":${len(dir, "dataA.parquet")},"modificationTime":0,"dataChange":true}""",
         null, null, null),
-      Row("""{"path":"dataB.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true}""",
+      Row(s"""{"path":"dataB.parquet","partitionValues":{},"size":${len(dir, "dataB.parquet")},"modificationTime":0,"dataChange":true}""",
         null, null, null))
     val cpDf = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
@@ -173,7 +176,7 @@ class ConformanceSpec extends SparkTestBase {
     writeParquet(cpDf, dir, "_delta_log/00000000000000000001.checkpoint.parquet")
     writeText(dir, "_delta_log/_last_checkpoint", """{"version":1,"size":4}""")
     // Commits 0 and 1 were CLEANED UP (log retention); only the tail remains.
-    writeText(dir, "_delta_log/00000000000000000002.json", addJson("dataC.parquet"))
+    writeText(dir, "_delta_log/00000000000000000002.json", addJson(dir, "dataC.parquet"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.version == 2)
@@ -191,7 +194,7 @@ class ConformanceSpec extends SparkTestBase {
         |  CAST(12.34 AS DECIMAL(10,2)) AS dec""".stripMargin)
     writeParquet(df, dir, "prim.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
-      (protoMeta(df.schema) :+ addJson("prim.parquet")).mkString("\n"))
+      (protoMeta(df.schema) :+ addJson(dir, "prim.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().schema.map(f => (f.name, f.dataType)) ==
@@ -217,7 +220,7 @@ class ConformanceSpec extends SparkTestBase {
     // vocabulary Spark's StructType speaks
     assert(df.schema.json.contains("timestamp_ntz"))
     writeText(dir, "_delta_log/00000000000000000000.json",
-      (protoMeta(df.schema) :+ addJson("ntz.parquet")).mkString("\n"))
+      (protoMeta(df.schema) :+ addJson(dir, "ntz.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().schema("tntz").dataType == TimestampNTZType)
@@ -232,7 +235,7 @@ class ConformanceSpec extends SparkTestBase {
         |  array(1, 2, 3) AS ar, map('k1', 1.5D, 'k2', 2.5D) AS mp""".stripMargin)
     writeParquet(df, dir, "nested.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
-      (protoMeta(df.schema) :+ addJson("nested.parquet")).mkString("\n"))
+      (protoMeta(df.schema) :+ addJson(dir, "nested.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().schema.map(f => (f.name, f.dataType.simpleString)) ==
@@ -260,9 +263,9 @@ class ConformanceSpec extends SparkTestBase {
       dir, "pb=false/pd=0.10/pt=2021-09-09 12%3A00%3A00/b.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
       (protoMeta(schema, partitionColumns = Seq("pb", "pd", "pt")) :+
-        addJson("pb=true/pd=12.30/pt=2021-09-09 12%3A00%3A00/a.parquet",
+        addJson(dir, "pb=true/pd=12.30/pt=2021-09-09 12%3A00%3A00/a.parquet",
           """{"pb":"true","pd":"12.30","pt":"2021-09-09 12:00:00"}""") :+
-        addJson("pb=false/pd=0.10/pt=2021-09-09 12%3A00%3A00/b.parquet",
+        addJson(dir, "pb=false/pd=0.10/pt=2021-09-09 12%3A00%3A00/b.parquet",
           """{"pb":"false","pd":"0.10","pt":"2021-09-09 12:00:00"}""")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
@@ -285,7 +288,7 @@ class ConformanceSpec extends SparkTestBase {
     // add action carries NO stats field: zone-map pruning must degrade to
     // "keep the file", never to "skip it"
     writeText(dir, "_delta_log/00000000000000000000.json",
-      (protoMeta(schema) :+ addJson("ns.parquet")).mkString("\n"))
+      (protoMeta(schema) :+ addJson(dir, "ns.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.snapshot().activeFiles.forall(_.stats.isEmpty))
@@ -307,7 +310,7 @@ class ConformanceSpec extends SparkTestBase {
         s""""schemaString":${jstr(schema.json)},"partitionColumns":[],""" +
         """"configuration":{},"createdTime":0}"""
     def addWithStats(path: String, lo: Int, hi: Int, n: Int): String =
-      s"""{"path":"$path","partitionValues":{},"size":1,"modificationTime":0,""" +
+      s"""{"path":"$path","partitionValues":{},"size":${len(dir, path)},"modificationTime":0,""" +
         s""""dataChange":true,"stats":"{\\"numRecords\\":$n,\\"minValues\\":{\\"id\\":$lo},""" +
         s"""\\"maxValues\\":{\\"id\\":$hi},\\"nullCount\\":{\\"id\\":0}}"}"""
     val cpRows = Seq(
@@ -343,7 +346,7 @@ class ConformanceSpec extends SparkTestBase {
           .putString("delta.generationExpression", "id + 1").build())))
     writeParquet(Seq((1, 2), (5, 6)).toDF("id", "id_plus"), dir, "gen.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
-      (protoMeta(schema) :+ addJson("gen.parquet")).mkString("\n"))
+      (protoMeta(schema) :+ addJson(dir, "gen.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().orderBy("id").as[(Int, Int)].collect().toSeq ==
@@ -370,7 +373,7 @@ class ConformanceSpec extends SparkTestBase {
       (protoMeta(schema,
         configuration = """{"delta.columnMapping.mode":"id",""" +
           """"delta.enableIcebergCompatV1":"true"}""") :+
-        addJson("ice.parquet")).mkString("\n"))
+        addJson(dir, "ice.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().columns.toSeq == Seq("id", "s"))
@@ -392,7 +395,7 @@ class ConformanceSpec extends SparkTestBase {
     val payload = DeletionVectors.z85Encode(padded)
     writeText(dir, "_delta_log/00000000000000000000.json",
       (protoMeta(schema) :+
-        (s"""{"add":{"path":"dv.parquet","partitionValues":{},"size":1,""" +
+        (s"""{"add":{"path":"dv.parquet","partitionValues":{},"size":${len(dir, "dv.parquet")},""" +
           s""""modificationTime":0,"dataChange":true,"deletionVector":""" +
           s"""{"storageType":"i","pathOrInlineDv":${jstr(payload)},"cardinality":2}}}""")
         ).mkString("\n"))
@@ -410,8 +413,8 @@ class ConformanceSpec extends SparkTestBase {
     writeParquet(Seq(3).toDF("id"), dir, "letter=b/f2.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
       (protoMeta(schema, partitionColumns = Seq("letter")) :+
-        addJson("letter=a/f1.parquet", """{"letter":"a"}""") :+
-        addJson("letter=b/f2.parquet", """{"letter":"b"}""")).mkString("\n"))
+        addJson(dir, "letter=a/f1.parquet", """{"letter":"a"}""") :+
+        addJson(dir, "letter=b/f2.parquet", """{"letter":"b"}""")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().orderBy("id").as[(Int, String)].collect().toSeq ==
@@ -432,8 +435,8 @@ class ConformanceSpec extends SparkTestBase {
     writeParquet(Seq(2).toDF("id"), dir, "p=x%2Fy%3Dz/f2.parquet")
     writeText(dir, "_delta_log/00000000000000000000.json",
       (protoMeta(schema, partitionColumns = Seq("p")) :+
-        addJson("p=a%20b/f1.parquet", """{"p":"a b"}""") :+
-        addJson("p=x%2Fy%3Dz/f2.parquet", """{"p":"x/y=z"}""")).mkString("\n"))
+        addJson(dir, "p=a%20b/f1.parquet", """{"p":"a b"}""") :+
+        addJson(dir, "p=x%2Fy%3Dz/f2.parquet", """{"p":"x/y=z"}""")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().orderBy("id").as[(Int, String)].collect().toSeq ==
@@ -457,9 +460,9 @@ class ConformanceSpec extends SparkTestBase {
     writeText(dir, "_delta_log/00000000000000000000.json",
       (protoMeta(schema,
         configuration = """{"delta.enableChangeDataFeed":"true"}""") :+
-        addJson("d0.parquet") :+
+        addJson(dir, "d0.parquet") :+
         ("""{"cdc":{"path":"_change_data/cdc-00000-abc.c000.parquet",""" +
-          """"partitionValues":{},"size":1,"dataChange":false}}""")).mkString("\n"))
+          s""""partitionValues":{},"size":${len(dir, "_change_data/cdc-00000-abc.c000.parquet")},"dataChange":false}}""")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     // snapshot: only the data file, no _change_type column, no row dupes
@@ -479,7 +482,7 @@ class ConformanceSpec extends SparkTestBase {
     writeText(dir, "_delta_log/00000000000000000000.json",
       (protoMeta(schema,
         configuration = """{"delta.constraints.idpositive":"id > 0"}""") :+
-        addJson("d0.parquet")).mkString("\n"))
+        addJson(dir, "d0.parquet")).mkString("\n"))
 
     val t = DeltaTable.forPath(spark, dir)
     assert(t.toDF().as[(Int, String)].collect().toSeq == Seq((1, "a")))
@@ -495,7 +498,7 @@ class ConformanceSpec extends SparkTestBase {
     writeParquet(Seq(1, 2).toDF("id"), dir, "lo.parquet")
     writeParquet(Seq(100, 200).toDF("id"), dir, "hi.parquet")
     def addWithStats(p: String, lo: Int, hi: Int): String =
-      s"""{"add":{"path":"$p","partitionValues":{},"size":1,""" +
+      s"""{"add":{"path":"$p","partitionValues":{},"size":${len(dir, p)},""" +
         s""""modificationTime":0,"dataChange":true,"stats":${jstr(
           s"""{"numRecords":2,"minValues":{"id":$lo},"maxValues":{"id":$hi},"nullCount":{"id":0}}""")}}}"""
     writeText(dir, "_delta_log/00000000000000000000.json",

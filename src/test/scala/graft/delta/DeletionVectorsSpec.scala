@@ -60,15 +60,20 @@ class DeletionVectorsSpec extends SparkTestBase {
       Seq[Action](RemoveFile(add.path, 0L), newAdd, CommitInfo(0L, "ADD-DV")))
     val total = t.toDF().count()
     assert(total == 98)
-    // the mask is a codegen'd expression, not a UDF: no ScalaUDF/
-    // BatchEvalPython node, and the masked scan stays in whole-stage codegen
-    val plan = t.toDF().queryExecution.executedPlan.toString
+    // the mask runs inside the scan's reader (the file's read partition
+    // carries its bitmap): no UDF and no row filter in the plan
+    val executed = t.toDF().queryExecution.executedPlan
+    val plan = executed.toString
     assert(!plan.contains("ScalaUDF") && !plan.contains("BatchEvalPython"),
       s"DV mask left a UDF node in the plan:\n$plan")
-    // the `*(n)` prefix marks WholeStageCodegen stages in the plan string
-    assert(plan.linesIterator.exists(l =>
-      l.contains("Filter dvkeeprow") && l.contains("*(")),
-      s"DV-masked filter fell out of codegen:\n$plan")
+    assert(executed.find(_.isInstanceOf[org.apache.spark.sql.execution.FilterExec]).isEmpty,
+      s"DV mask left a row filter in the plan:\n$plan")
+    // exactly physical positions 0 and 3 of that file are gone
+    import org.apache.spark.sql.functions.col
+    val left = t.toDF().select(col("_metadata.file_path"), col("_metadata.row_index"))
+      .collect().filter(_.getString(0).endsWith(add.path)).map(_.getLong(1)).toSet
+    assert(left.nonEmpty && !left.contains(0L) && !left.contains(3L) && left.contains(1L),
+      left)
   }
 
   private def pad4(b: Array[Byte]): Array[Byte] =

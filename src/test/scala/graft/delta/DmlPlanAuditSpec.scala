@@ -5,7 +5,8 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -69,7 +70,7 @@ class DmlPlanAuditSpec extends SparkTestBase {
       case other => Seq(other)
     }
     unwrap(plan).flatMap(_.collect {
-      case f: FileSourceScanExec => f.metrics.get("numFiles").map(_.value)
+      case b: BatchScanExec => b.metrics.get("numFiles").map(_.value)
     }.flatten)
   }
 

@@ -10,8 +10,9 @@ class ProtocolSupportSpec extends SparkTestBase {
   import spark.implicits._
 
   private def foreignTable(protocolJson: String,
-                           schemaJson: Option[String] = None): String = {
-    val dir = Files.createTempDirectory("graft-proto").toString
+                           schemaJson: Option[String] = None,
+                           at: Option[String] = None): String = {
+    val dir = at.getOrElse(Files.createTempDirectory("graft-proto").toString)
     val logDir = Paths.get(dir, "_delta_log")
     Files.createDirectories(logDir)
     val df = Seq((1, "a")).toDF("id", "s")
@@ -27,7 +28,7 @@ class ProtocolSupportSpec extends SparkTestBase {
         s""""schemaString":${org.json4s.jackson.JsonMethods.compact(
           org.json4s.JString(schema))},"partitionColumns":[],""" +
         """"configuration":{},"createdTime":0}}""",
-      """{"add":{"path":"data.parquet","partitionValues":{},"size":1,""" +
+      s"""{"add":{"path":"data.parquet","partitionValues":{},"size":${Files.size(Paths.get(dir, "data.parquet"))},""" +
         """"modificationTime":0,"dataChange":true}}""")
     Files.write(logDir.resolve("00000000000000000000.json"),
       commit.mkString("\n").getBytes("UTF-8"))
@@ -49,6 +50,23 @@ class ProtocolSupportSpec extends SparkTestBase {
     }
     assert(err.getMessage.contains("futureMagicEncoding"))
     assert(err.code == "UNSUPPORTED_PROTOCOL")
+  }
+
+  test("an unknown reader feature is refused by toDF, load(path) and a catalog SELECT") {
+    val cat = graft.plans.GraftSql.ensure(spark)
+    val ns = Paths.get(graft.plans.GraftSql.warehousePath(spark).get, "protons")
+    Files.createDirectories(ns)
+    val dir = foreignTable(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+        """"readerFeatures":["futureMagicEncoding"]}}""",
+      at = Some(ns.resolve("magic" + System.nanoTime()).toString))
+    def refused(read: => Any): Unit = {
+      val err = intercept[UnsupportedProtocolException](read)
+      assert(err.getMessage.contains("futureMagicEncoding"))
+    }
+    refused(DeltaTable.forPath(spark, dir).toDF())
+    refused(spark.read.format("graft-delta").load(dir))
+    refused(spark.sql(s"SELECT * FROM $cat.protons.${Paths.get(dir).getFileName}").collect())
   }
 
   test("reader version beyond support is refused; legacy versions read fine") {

@@ -231,26 +231,6 @@ class DeltaRelationSpec extends SparkTestBase {
     assert(got == (6 to 10).toSet, got)
   }
 
-  test("V1 scan handles translatable filters itself; no duplicate Filter node") {
-    val dir = Files.createTempDirectory("graft-rel-uh").toString
-    (1 to 40).map(i => (i, s"s$i", i % 5)).toDF("id", "s", "v")
-      .write.format("graft-delta").save(dir)
-    val df = spark.read.format("graft-delta").load(dir)
-      .where(col("id") > 10 && col("s").startsWith("s2"))
-    // handled filters are applied inside buildScan (toColumn), so Spark
-    // must not stack a second Filter node on top of the row scan
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Filter ("), plan)
-    assert(df.select("id").as[Int].collect().toSet ==
-      (11 to 40).toSet.filter(i => s"s$i".startsWith("s2")))
-    // an untranslatable residual keeps the Filter node (and stays correct)
-    val df2 = spark.read.format("graft-delta").load(dir)
-      .where(col("id") > 10 && col("s").rlike("s2.*"))
-    assert(df2.queryExecution.executedPlan.toString.contains("Filter"), "rlike must stay post-scan")
-    assert(df2.select("id").as[Int].collect().toSet ==
-      (11 to 40).toSet.filter(i => s"s$i".matches("s2.*")))
-  }
-
   test("OR of partition predicates prunes disjunctively (round 14)") {
     import graft.delta.DataSkipping
     import org.apache.spark.sql.sources.{EqualTo => SEq, GreaterThan => SGt, Or => SOr, StringStartsWith}

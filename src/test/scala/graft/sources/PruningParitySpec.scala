@@ -142,7 +142,11 @@ class PruningParitySpec extends SparkTestBase {
   }
 
   private def sqlKept(where: String): Int =
-    spark.sql(s"SELECT * FROM $table WHERE $where").queryExecution.executedPlan
+    planKept(spark.sql(s"SELECT * FROM $table WHERE $where"))
+
+  /** Distinct files the planned table scans of `df` read. */
+  private def planKept(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.executedPlan
       .collect { case b: BatchScanExec => b.scan }
       .collect { case g: GraftBatchScan => g }
       .flatMap(_.planInputPartitions().toSeq)
@@ -164,7 +168,7 @@ class PruningParitySpec extends SparkTestBase {
       case None => Shims.column(condition(s.where, optimized = false))
     }
     (sqlKept(s.where),
-      s.mongo.fold(-1)(m => t.query(m).inputFiles.length),
+      s.mongo.fold(-1)(m => planKept(t.query(m))),
       t.scanState(None, dml).activeFiles.size)
   }
 

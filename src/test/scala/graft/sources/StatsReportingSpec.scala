@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.plans.GraftSql
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
@@ -13,8 +12,8 @@ import org.apache.spark.sql.functions._
   * assume-huge `defaultSizeInBytes`, so a kilobyte dimension table stored
   * as a graft table never auto-broadcasts and each join against it
   * shuffles both sides — at 100 TB, the single worst plan a catalog can
-  * cause. Covers the V1 format path (`BaseRelation.sizeInBytes`), the
-  * DSv2 catalog path (`SupportsReportStatistics` AFTER filter pruning),
+  * cause. Covers the format path (`load(path)`), the DSv2 catalog path
+  * (`SupportsReportStatistics` AFTER filter pruning),
   * and the resulting auto-broadcast decision itself. */
 class StatsReportingSpec extends SparkTestBase {
   import spark.implicits._
@@ -26,20 +25,18 @@ class StatsReportingSpec extends SparkTestBase {
       case r: DataSourceV2ScanRelation => r.stats
     }
 
-  test("V1 format relation reports log-derived sizeInBytes") {
+  test("load(path) scan reports log-derived sizeInBytes") {
     val dir = Files.createTempDirectory("graft-stats-v1").toString
     (1 to 1000).map(i => (i.toLong, s"name$i")).toDF("id", "s")
       .write.format("graft-delta").save(dir)
-    val df = spark.read.format("graft-delta").load(dir)
-    val rels = df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation
-    }
-    assert(rels.size == 1)
-    val size = rels.head.sizeInBytes
+    val stats = v2Stats(spark.read.format("graft-delta").load(dir))
+    assert(stats.size == 1)
+    val size = stats.head.sizeInBytes
     val onDisk = graft.delta.DeltaTable.forPath(spark, dir)
       .snapshot().activeFiles.map(_.size).sum
     assert(size == onDisk, s"sizeInBytes $size != log file bytes $onDisk")
     assert(size > 0 && size < spark.sessionState.conf.defaultSizeInBytes)
+    assert(stats.head.rowCount.contains(BigInt(1000)))
   }
 
   test("DSv2 scan reports size and exact row count from the log") {

@@ -130,14 +130,21 @@ final case class Txn(
     (("appId" -> appId) ~ ("version" -> version) ~ ("lastUpdated" -> lastUpdated))
 }
 
+/** `operationMetrics` (Delta's per-operation row and file counts) is
+  * written only when non-empty, so commits that record none keep their
+  * exact bytes. */
 final case class CommitInfo(
     timestamp: Long,
     operation: String,
-    operationParameters: Map[String, String] = Map.empty) extends Action {
-  def wrap: JObject = "commitInfo" ->
-    (("timestamp" -> timestamp) ~
+    operationParameters: Map[String, String] = Map.empty,
+    operationMetrics: Map[String, String] = Map.empty) extends Action {
+  def wrap: JObject = {
+    val base = ("timestamp" -> timestamp) ~
       ("operation" -> operation) ~
-      ("operationParameters" -> operationParameters))
+      ("operationParameters" -> operationParameters)
+    "commitInfo" ->
+      (if (operationMetrics.isEmpty) base else base ~ ("operationMetrics" -> operationMetrics))
+  }
 }
 
 object Actions {
@@ -222,5 +229,6 @@ object Actions {
   def parseCommitInfo(j: JValue): CommitInfo = CommitInfo(
     timestamp = long(j \ "timestamp"),
     operation = str(j \ "operation"),
-    operationParameters = strMap(j \ "operationParameters"))
+    operationParameters = strMap(j \ "operationParameters"),
+    operationMetrics = strMap(j \ "operationMetrics"))
 }

@@ -1,7 +1,10 @@
 package graft.delta
 
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftshim.WriteShim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s.jackson.JsonMethods
 
 /**
@@ -153,18 +156,34 @@ object Checkpoints {
     log.writeLastCheckpoint(target, total, if (nParts == 1) None else Some(nParts))
   }
 
+  /** Write one checkpoint part on the driver through the task writer's
+    * parquet [[org.apache.spark.sql.execution.datasources.OutputWriter]]:
+    * no Spark job, so no row travels in a task closure. The part lands
+    * under a temporary name and is renamed into place. */
   private def writePart(spark: SparkSession, log: DeltaLog,
                         rows: Seq[Row], target: org.apache.hadoop.fs.Path): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(log.logPath,
-      s".cp-tmp-${java.util.UUID.randomUUID()}")
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = log.fs.listStatus(tmp).map(_.getPath)
-      .find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException("checkpoint write produced no part file"))
+      s".cp-tmp-${java.util.UUID.randomUUID()}.parquet")
+    val (factory, conf) = WriteShim.parquetWriterFactory(spark, schema)
+    val writer = factory.newInstance(tmp.toString, schema, WriteShim.taskContext(conf.value, 0L))
+    try {
+      val row = new GenericInternalRow(schema.length)
+      rows.foreach { r =>
+        var i = 0
+        while (i < row.numFields) {
+          row.update(i, if (r.isNullAt(i)) null else UTF8String.fromString(r.getString(i)))
+          i += 1
+        }
+        writer.write(row)
+      }
+    } catch {
+      case e: Throwable =>
+        try writer.close() finally log.fs.delete(tmp, false)
+        throw e
+    }
+    writer.close()
     log.fs.delete(target, false)
-    log.fs.rename(part, target)
-    log.fs.delete(tmp, true)
+    log.fs.rename(tmp, target)
   }
 
   /** The checkpoint at `version` as a DataFrame of raw action rows — the

@@ -230,7 +230,9 @@ final class DvAggBuffer extends Serializable {
  */
 class DvBitmapAggregator extends Aggregator[Long, DvAggBuffer, Array[Byte]] {
   override def zero: DvAggBuffer = new DvAggBuffer
-  override def reduce(b: DvAggBuffer, rowIndex: Long): DvAggBuffer = b.add(rowIndex)
+  // a negative index marks a row the caller aggregates but does not mask
+  override def reduce(b: DvAggBuffer, rowIndex: Long): DvAggBuffer =
+    if (rowIndex < 0) b else b.add(rowIndex)
   override def merge(a: DvAggBuffer, b: DvAggBuffer): DvAggBuffer = a.mergeIn(b)
   override def finish(b: DvAggBuffer): Array[Byte] = {
     b.bitmaps.valuesIterator.foreach(_.runOptimize())

@@ -779,15 +779,25 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     v
   }
 
-  /** Prepare task-written files for a commit: attach footer stats (keys
-    * remapped to logical names under column mapping), drop zero-row
-    * parts, build bloom sidecars. Shared by every commit shape. */
+  /** Prepare task-written files for a commit: re-key the stats their
+    * tasks read from the footers (physical names) to logical names under
+    * column mapping, stat any file whose task could not read its footer
+    * by the aggregation scan, drop zero-row parts, build bloom sidecars.
+    * Shared by every commit shape. */
   private[graft] def prepareAdds(raw: Seq[AddFile], schema: StructType, partCols: Seq[String],
                                  configuration: Map[String, String]): Seq[AddFile] = {
     if (raw.isEmpty) return Nil
-    // Stats collect against footer (= physical) names, then re-key to
-    // logical so file skipping and readers keep one name space.
-    val withStats = attachStats(raw, partCols, schema)
+    val keyed = physicalSchema(schema).fold(raw)(ps =>
+      remapStatKeys(raw, ps.fieldNames.zip(schema.fieldNames).toMap))
+    val unstated = keyed.filter(_.stats.isEmpty)
+    val withStats =
+      if (unstated.isEmpty) keyed
+      else {
+        Logging.logger.warn(s"[graft.DeltaTable] ${unstated.size} written file(s) " +
+          "carry no footer stats; falling back to aggregation scan")
+        val filled = attachStatsViaAgg(unstated, partCols, schema).map(a => a.path -> a).toMap
+        keyed.map(a => filled.getOrElse(a.path, a))
+      }
     // Zero-row parts carry no data; keeping them would grow the active set
     // forever. Stats make them identifiable — drop add + file.
     val (empty, adds) = withStats.partition(_.parsedStats.exists(_.numRecords == 0))
@@ -950,14 +960,18 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * or leaves NULL are computed from their expressions, so every write
     * path (append, CoW rewrite, merge, maintenance) materializes them. A
     * violation fails the write before anything commits and leaves no
-    * files behind. */
+    * files behind. `observed` receives the write job's observed metrics
+    * (see [[TaskWriter.run]]). */
   private[delta] def writeDataFiles(df: DataFrame, partCols: Seq[String],
                                     schema: StructType,
-                                    region: Option[Column] = None): Seq[AddFile] = {
+                                    region: Option[Column] = None,
+                                    observed: Map[String, Row] => Unit = _ => ())
+      : Seq[AddFile] = {
     val preSnap = metaSnapshot()
     val plan = new WritePlan(this, schema, partCols, df.schema,
       checkConstraints(preSnap), region)
-    prepareAdds(TaskWriter.run(this, df, plan), schema, partCols, preSnap.configuration)
+    prepareAdds(TaskWriter.run(this, df, plan, observed), schema, partCols,
+      preSnap.configuration)
   }
 
   private[graft] def checkConstraints(snap: Snapshot): Map[String, String] =
@@ -1053,55 +1067,16 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     }
 
   /** Per-file column stats (numRecords/min/max/nullCount, reference:
-    * src/delta/table.ts:1110-1147) from parquet FOOTERS — metadata-only
-    * reads fanned out as one Spark job, instead of re-scanning every
-    * written byte (at 100 TB the re-scan doubled write-path I/O). Falls
-    * back to the distributed re-read aggregation if footers are
-    * unreadable for any reason. */
-  private def attachStats(adds: Seq[AddFile], partCols: Seq[String],
-                          schema: StructType): Seq[AddFile] = {
-    val physical = physicalSchema(schema)
-    val footerSchema = physical.getOrElse(schema)
-    val statable = footerSchema.fields
-      .filterNot(f => partCols.contains(f.name))
-      .filter(f => isStatable(f.dataType))
-    val files = adds.map(f => new Path(tablePath, f.path).toString)
-    try Logging.withJobDesc(spark, "graft:attach-stats") {
-      // A handful of footers is faster to read on the driver than to
-      // schedule as a Spark job (one job + task launch per write would
-      // otherwise tax EVERY small commit); bigger writes fan out as before.
-      val byPath =
-        if (files.size <= 8) {
-          val cols = statable.toIndexedSeq.map(f => (f.name, f.dataType))
-          files.map(p => p -> FooterStats.readOne(p, log.hadoopConf, cols)).toMap
-        } else FooterStats.collect(spark, files, footerSchema,
-          statable.toIndexedSeq, log.hadoopConf)
-      val withStats = adds.zip(files).map { case (add, file) =>
-        byPath.get(file) match {
-          case Some(st) => add.copy(stats = Some(st.toJsonString))
-          case None => add
-        }
-      }
-      // Footers carry physical names; stats are keyed by logical ones.
-      physical.fold(withStats)(ps =>
-        remapStatKeys(withStats, ps.fieldNames.zip(schema.fieldNames).toMap))
-    } catch {
-      case e: Throwable =>
-        Logging.logger.warn(
-          s"[graft.DeltaTable] footer stats failed (${e.getMessage}); " +
-            "falling back to aggregation scan")
-        attachStatsViaAgg(adds, partCols, schema)
-    }
-  }
-
-  /** Fallback stats path: one distributed aggregation over
-    * `_metadata.file_path` (re-reads the written data). Kept private[delta]
-    * so tests can assert footer stats and scan stats agree exactly. */
+    * src/delta/table.ts:1110-1147) by one distributed aggregation over
+    * `_metadata.file_path`, re-reading the written data: the fallback for
+    * files whose task could not read its footer ([[FooterStats]] is the
+    * primary path). Same omission rules as the footers, so tests can assert
+    * the two agree exactly. */
   private[delta] def attachStatsViaAgg(adds: Seq[AddFile], partCols: Seq[String],
                                        schema: StructType): Seq[AddFile] = {
     val statable = schema.fields
       .filterNot(f => partCols.contains(f.name))
-      .filter(f => isStatable(f.dataType))
+      .filter(f => FooterStats.isStatable(f.dataType))
     // the table's own reader: logical names, partition values from the adds
     val df = toDF(Snapshot(-1L, Some(TableMetadata("", schema.json, partCols)), None, adds, Nil))
 
@@ -1129,8 +1104,17 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
           statable.foreach { f =>
             val mn = r.getAs[Any](s"__min_${f.name}")
             val mx = r.getAs[Any](s"__max_${f.name}")
-            statJValue(mn).foreach(v => mins += f.name -> v)
-            statJValue(mx).foreach(v => maxs += f.name -> v)
+            // NaN sorts last, so a NaN max means the file holds one: no
+            // bounds at all, as the footers give none
+            val nan = mx match {
+              case d: Double => d.isNaN
+              case x: Float => x.isNaN
+              case _ => false
+            }
+            if (!nan) {
+              statJValue(mn).foreach(v => mins += f.name -> v)
+              statJValue(mx).foreach(v => maxs += f.name -> v)
+            }
             ncs += f.name -> r.getAs[Long](s"__nc_${f.name}")
           }
           add.copy(stats = Some(FileStats(
@@ -1139,14 +1123,9 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     }
   }
 
-  private def isStatable(dt: DataType): Boolean = dt match {
-    case _: NumericType | StringType | BooleanType | TimestampType |
-         TimestampNTZType | DateType => true
-    case _ => false
-  }
-
   /** Long strings are excluded from stats rather than truncated — a truncated
-    * max would understate the bound and break skipping correctness. */
+    * max would understate the bound and break skipping correctness.
+    * Decimals are omitted, as the footer path omits them. */
   private def statJValue(v: Any): Option[JValue] = v match {
     case null => None
     case s: String => if (s.length <= 256) Some(JString(s)) else None
@@ -1170,7 +1149,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
         java.time.LocalDateTime.ofInstant(inst, java.time.ZoneOffset.UTC))))
     case d: java.sql.Date => Some(JString(d.toString))
     case ld: java.time.LocalDate => Some(JString(ld.toString))
-    case dec: java.math.BigDecimal => Some(JDecimal(BigDecimal(dec)))
+    case _: java.math.BigDecimal => None
     case other => Some(JString(other.toString))
   }
 
@@ -1290,7 +1269,8 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
                                   // specs the caller assigned identity
                                   // values from (MoR merge inserts) — mark
                                   // re-checked in the OCC loop
-                                  idAlloc: Seq[IdentityColumns.Spec] = Nil): Long = {
+                                  idAlloc: Seq[IdentityColumns.Spec] = Nil,
+                                  metrics: Map[String, String] = Map.empty): Long = {
     val relByAbs = snapAtRead.activeFiles
       .map(f => new Path(tablePath, f.path).toUri.getPath -> f.path).toMap
     val maskedRel: Map[String, Array[Byte]] = dvByPath.map { case (abs, dv) =>
@@ -1339,7 +1319,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
           CommitInfo(now, op, Map("mode" -> "deletion-vectors",
             "numMatchedRows" -> nMatched.toString,
             "numDvFiles" -> touched.size.toString,
-            "numAddedFiles" -> extraAdds.size.toString)))
+            "numAddedFiles" -> extraAdds.size.toString), metrics))
       maybeCheckpoint(vN)
       vN
     }
@@ -1566,7 +1546,8 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * same commit. */
   private[delta] def appendCommit(adds: Seq[AddFile], op: String,
       snapAtRead: Option[Snapshot] = None,
-      idAlloc: Seq[IdentityColumns.Spec] = Nil): Long =
+      idAlloc: Seq[IdentityColumns.Spec] = Nil,
+      metrics: Map[String, String] = Map.empty): Long =
     Retry.withRetry() {
       val identityTable = snapAtRead.exists(_.metadata.exists(
         _.schemaString.contains(IdentityColumns.StartKey)))
@@ -1579,7 +1560,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
         }
       val now = System.currentTimeMillis()
       log.writeCommit(v, (catchUp.toSeq: Seq[Action]) ++ (adds: Seq[Action]) ++
-        Seq[Action](CommitInfo(now, op, Map("numFiles" -> adds.size.toString))))
+        Seq[Action](CommitInfo(now, op, Map("numFiles" -> adds.size.toString), metrics)))
       maybeCheckpoint(v)
       v
     }
@@ -1677,14 +1658,17 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
   private[delta] def commitFileRewrite(snapAtRead: Snapshot, rewrittenAbs: Set[String],
                                        adds: Seq[AddFile], op: String,
                                        tailAddConflict: Option[AddFile => Boolean] = None,
-                                       idAlloc: Seq[IdentityColumns.Spec] = Nil): Long =
-    commitRewrite(snapAtRead, rewrittenAbs, adds, op, tailAddConflict, idAlloc)
+                                       idAlloc: Seq[IdentityColumns.Spec] = Nil,
+                                       metrics: Map[String, String] = Map.empty): Long =
+    commitRewrite(snapAtRead, rewrittenAbs, adds, op, tailAddConflict, idAlloc,
+      metrics = metrics)
 
   private def commitRewrite(snapAtRead: Snapshot, rewrittenAbs: Set[String],
                             adds: Seq[AddFile], op: String,
                             tailAddConflict: Option[AddFile => Boolean] = None,
                             idAlloc: Seq[IdentityColumns.Spec] = Nil,
-                            lateConstraints: Option[(Map[String, String], Seq[AddFile])] = None): Long = {
+                            lateConstraints: Option[(Map[String, String], Seq[AddFile])] = None,
+                            metrics: Map[String, String] = Map.empty): Long = {
     // Normalize once into a set: an `exists` over rewrittenAbs inside this
     // filter would be O(activeFiles × rewritten) string compares — a driver
     // CPU blow-up at 10⁶ files.
@@ -1766,7 +1750,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       val removes = rewrittenRel.toSeq.sorted.map(p => RemoveFile(p, now))
       val v = cur + 1
       log.writeCommit(v, (catchUp.toSeq: Seq[Action]) ++ removes ++ adds :+
-        CommitInfo(now, op, Map("numRewrittenFiles" -> removes.size.toString)))
+        CommitInfo(now, op, Map("numRewrittenFiles" -> removes.size.toString), metrics))
       maybeCheckpoint(v)
       v
     }

@@ -2,8 +2,10 @@ package graft.delta
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.spark.sql.types._
 import org.json4s._
 
@@ -11,12 +13,12 @@ import org.json4s._
  * Per-file column statistics from parquet FOOTERS (metadata-only reads)
  * instead of a second full scan of just-written data.
  *
- * At 100 TB the difference is structural: the previous implementation
- * re-read every written byte through a distributed aggregation to compute
- * numRecords/min/max/nullCount, doubling write-path I/O; footers carry the
- * same row-group statistics at ~KB per file. Footer reads fan out as one
- * Spark job over the file list, so stats collection scales with executor
- * count, not driver throughput.
+ * The task that writes a file reads its footer right after closing it
+ * ([[TaskWriter]]'s commit) and ships the stats in its commit message, so
+ * no write pays a separate stats pass: no Spark job, no driver-side footer
+ * reads. A file whose footer its task could not read falls back to the
+ * aggregation scan ([[DeltaTable.attachStatsViaAgg]]), whose rules below
+ * match these value for value.
  *
  * Conservative by construction — a stat that cannot be trusted is OMITTED,
  * and [[DataSkipping]] treats missing stats as "keep the file":
@@ -28,8 +30,8 @@ import org.json4s._
  *    dropped.
  *
  * String min/max use parquet's unsigned-byte (UTF-8 binary) ordering, which
- * is exactly Spark's `UTF8String` comparison — the same values the previous
- * aggregation produced.
+ * is exactly Spark's `UTF8String` comparison — the same values the
+ * aggregation produces.
  */
 object FooterStats {
 
@@ -38,35 +40,29 @@ object FooterStats {
   val CanonFormat: java.time.format.DateTimeFormatter =
     java.time.format.DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS")
 
-  /** Read per-file stats for `files` (absolute path strings) as one Spark
-    * job. Returns map keyed by the input path string. */
-  def collect(spark: org.apache.spark.sql.SparkSession,
-              files: Seq[String], schema: StructType,
-              statCols: Seq[StructField], hadoopConf: Configuration): Map[String, FileStats] = {
-    // Hadoop Configuration is not serializable; ship the entries and rebuild.
-    val confItems: Seq[(String, String)] = {
-      val it = hadoopConf.iterator()
-      val b = Seq.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.result()
-    }
-    val cols = statCols.map(f => (f.name, f.dataType))
-    val parallelism = math.max(1, math.min(files.size, 64))
-    spark.sparkContext.parallelize(files, parallelism)
-      .map { p =>
-        val conf = new Configuration(false)
-        confItems.foreach { case (k, v) => conf.set(k, v) }
-        p -> readOne(p, conf, cols)
-      }
-      .collect().toMap
+  /** Column types that carry stats (the rest get none). */
+  def isStatable(dt: DataType): Boolean = dt match {
+    case _: NumericType | StringType | BooleanType | TimestampType |
+         TimestampNTZType | DateType => true
+    case _ => false
   }
 
-  /** Footer stats for one file; throws on unreadable footers (callers treat
-    * the write as failed — a just-written file must have a valid footer). */
+  /** (name, type) of the statable columns of a file schema. */
+  def statColumns(fileSchema: StructType): Seq[(String, DataType)] =
+    fileSchema.fields.toSeq.filter(f => isStatable(f.dataType)).map(f => (f.name, f.dataType))
+
+  /** Footer stats for one file by path. */
   def readOne(file: String, conf: Configuration,
+              cols: Seq[(String, DataType)]): FileStats =
+    readOne(HadoopInputFile.fromPath(new Path(file), conf), conf, cols)
+
+  /** Footer stats for one file; throws on an unreadable footer. The read
+    * options come from `conf`: parquet's default options build a fresh
+    * Hadoop `Configuration`, whose resource parsing costs ~8 ms — more
+    * than the footer read itself. */
+  def readOne(file: InputFile, conf: Configuration,
               cols: Seq[(String, DataType)]): FileStats = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf))
+    val reader = ParquetFileReader.open(file, HadoopReadOptions.builder(conf).build())
     try {
       val blocks = {
         val it = reader.getFooter.getBlocks.iterator()
@@ -104,10 +100,11 @@ object FooterStats {
               toJValue(s.genericGetMin.asInstanceOf[AnyRef], dt))
             val highs = withValues.flatMap(s =>
               toJValue(s.genericGetMax.asInstanceOf[AnyRef], dt))
-            if (lows.size == withValues.size && highs.size == withValues.size) {
+            // each bound stands alone: a long string max leaves the min
+            if (lows.size == withValues.size)
               mins += name -> lows.reduce((a, b) => if (jLess(a, b)) a else b)
+            if (highs.size == withValues.size)
               maxs += name -> highs.reduce((a, b) => if (jLess(a, b)) b else a)
-            }
           }
         }
       }
@@ -116,7 +113,7 @@ object FooterStats {
   }
 
   /** Parquet statistics value → the log's canonical JSON form (must match
-    * DeltaTable.statJValue for every representable case). None = omit. */
+    * DeltaTable.statJValue for every case). None = omit. */
   private def toJValue(v: AnyRef, dt: DataType): Option[JValue] = (v, dt) match {
     case (null, _) => None
     case (i: java.lang.Integer, ByteType | ShortType | IntegerType) => Some(JInt(i.toInt))

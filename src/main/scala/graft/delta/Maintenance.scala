@@ -540,7 +540,7 @@ object Maintenance {
   }
 
   /** Hadoop conf entries as plain pairs — serializable for executor-side
-    * FileSystem rebuilds (the FooterStats pattern). */
+    * FileSystem rebuilds. */
   private def confItems(table: DeltaTable): Seq[(String, String)] = {
     val ci = table.log.hadoopConf.iterator()
     val b = Seq.newBuilder[(String, String)]

@@ -24,10 +24,27 @@ import org.apache.spark.sql.types.StructType
  *     candidates — by key equality ([[Keys]]) or by an arbitrary condition
  *     resolved first-match ([[Theta]]);
  *  3. everything after pairing is shared: first-true-wins clause effects,
- *     one census (`graft:merge-census`), one insert builder, one commit
- *     with its CDC capture, and one materialization switch — rewrite the
- *     touched files (copy-on-write), or mask the affected rows with
- *     deletion vectors and append only their post-images (merge-on-read).
+ *     one insert builder, one commit with its CDC capture, one
+ *     materialization switch — rewrite the affected files (copy-on-write),
+ *     or mask the affected rows with deletion vectors and append only their
+ *     post-images (merge-on-read) — and two Spark passes:
+ *      - `graft:merge-census` aggregates, per target file, the rows that
+ *        have a source match or that a clause affects: deleted and updated
+ *        counts, the mask bitmap, and under SQL semantics the cardinality
+ *        check (a matched pair whose source key is duplicated fails the
+ *        statement before anything is written). Its rows — flags and the
+ *        matched source keys, O(matched + affected) — stay persisted for
+ *        the write;
+ *      - `graft:merge-write` is ONE task-writer job over the union of the
+ *        affected files' kept rows and post-images and the insert rows,
+ *        counting the inserts as it writes them; file stats ride each
+ *        task's commit message.
+ *     A file is AFFECTED when a clause deletes or updates one of its rows:
+ *     only those are rewritten or masked. The inserts are the source rows
+ *     in no matched pair, an anti-join against the census's matched keys,
+ *     so the write reads no target file for them. A matched row no clause
+ *     accepts leaves its file unaffected, and its source row is not
+ *     inserted.
  *
  * Semantics notes:
  *  - the reference resolves each incoming row against the FIRST matching
@@ -164,12 +181,13 @@ object Merge {
           "NOT MATCHED BY SOURCE requires an equality match condition")
     }
 
-    // The source (deduped) and the theta pair set are each materialized
-    // once across the passes that re-read them (cardinality check, census
-    // join, image join, insert anti-join, CDC parts) — the same choice
-    // Delta's MERGE makes — MEMORY_AND_DISK so a huge change set spills
-    // instead of OOMing, and released on every exit path, thrown
-    // validation errors included.
+    // The source (deduped), the theta pair set and the census rows are
+    // each materialized once across the passes that re-read them (census
+    // join, write job, CDC parts) — the same choice Delta's MERGE makes —
+    // MEMORY_AND_DISK so a huge change set spills instead of OOMing, and
+    // released on every exit path, thrown validation errors included. A
+    // persisted source is also planned on its real size: the census
+    // broadcasts a small change set to the target scan, not the target.
     //
     // Round-17 note (verdict item 2 asked to CONDITION this): measured on
     // an idle host at the contract config (local[32], sf0.1, 19 merge/DML
@@ -185,15 +203,22 @@ object Merge {
       persisted += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df
     }
+    var releaseInserts: () => Unit = () => ()
     try {
       // ---- 1. bind ----
       // First-match semantics (programmatic key API): one source row per
-      // key. SQL keeps every source row and errors on ambiguous matches.
+      // key. SQL keeps every source row and errors on ambiguous matches:
+      // with matched clauses each source row carries `__dup`, the count of
+      // source rows sharing its key, for the census to check.
+      val checkCard = sqlSemantics && matchedClauses.nonEmpty &&
+        snap.activeFiles.nonEmpty && on.isInstanceOf[Keys]
       val src = persist(on match {
         case Keys(pairs, _) if !sqlSemantics => source.dropDuplicates(pairs.map(_._2))
+        case Keys(pairs, _) if checkCard => source.withColumn("__dup",
+          count(lit(1)).over(Window.partitionBy(pairs.map(p => col(p._2)): _*)))
         case _ => source
       })
-      val srcCols = src.columns.toSeq
+      val srcCols = source.columns.toSeq
 
       // ---- 2. pair ----
       // The target scan, whole or restricted to a file list, with `__file`;
@@ -207,15 +232,14 @@ object Merge {
         if (withRowIndex) base.withColumn("__ri", col("_metadata.row_index")) else base
       }
       lazy val target = scan(None)
-      // Empty active set: every source row is unmatched.
-      val (pairUp, unmatched): (DataFrame => DataFrame, () => DataFrame) =
-        if (snap.activeFiles.isEmpty) (identity, () => src)
+      // Empty active set: no census, and every source row is unmatched.
+      val pairing =
+        if (snap.activeFiles.isEmpty) Paired(identity, Nil, identity)
         else on match {
-          case Keys(pairs, tgtKeyExpr) => pairByKeys(table, snap, src, pairs,
-            tgtKeyExpr, sqlSemantics, checkCard = sqlSemantics && matchedClauses.nonEmpty)
-          case Theta(cond) => pairByTheta(target, src, cond, persist)
+          case Keys(pairs, tgtKeyExpr) =>
+            pairByKeys(src, srcCols, pairs, tgtKeyExpr, sqlSemantics)
+          case Theta(cond) => pairByTheta(target, src, srcCols, cond, persist)
         }
-      lazy val joined = pairUp(target)
 
       // ---- 3. shared steps ----
       // First-true-wins effective conditions (null condition ⇒ not matched,
@@ -233,38 +257,63 @@ object Merge {
         .reduceOption(_ || _).getOrElse(lit(false))
       val updateEff = effs.collect { case (e, a) if a != MergeAction.Delete => e }
         .reduceOption(_ || _).getOrElse(lit(false))
+      val affectedC = deleteEff || updateEff
 
-      // Census: ONE aggregation, restricted BEFORE the shuffle to the rows a
+      // Census (pass 1): ONE aggregation over the paired target, restricted
+      // BEFORE the shuffle to the rows that have a source match or that a
       // clause affects (each target row appears once: the pairing gives it
-      // at most one source row) — deleted/updated counts per file, plus each
-      // file's mask bitmap under `mask` (built on the executors; the driver
-      // sees only compressed bitmaps). The exchange carries O(affected)
-      // rows, and one row per file, never a collect_set of paths.
-      // Insert-only merges (no clauses at all) skip it.
-      val perFile =
-        if (effs.isEmpty || snap.activeFiles.isEmpty) Array.empty[Row]
-        else Logging.withJobDesc(spark, "graft:merge-census") {
-          val counts = Seq(sum(when(deleteEff, 1L).otherwise(0L)).as("__d"),
-            sum(when(updateEff, 1L).otherwise(0L)).as("__u"))
-          val aggs =
-            if (mask) counts :+ DeletionVectors.bitmapAgg(col("__ri")).as("__dv")
-            else counts
-          joined.filter(deleteEff || updateEff).groupBy(col("__file"))
-            .agg(aggs.head, aggs.tail: _*).collect()
+      // at most one source row) — per file the deleted and updated counts,
+      // the mask bitmap of the affected rows under `mask` (built on the
+      // executors; the driver sees only compressed bitmaps), and under
+      // `checkCard` a matched pair's duplicated source key. The exchange
+      // carries O(matched) rows, and one row per file, never a collect_set
+      // of paths. The census reads its rows as flags; when inserts follow,
+      // those narrow rows are persisted, and their matched rows' source keys
+      // are what the insert anti-join reads. Insert-only merges skip it.
+      val censusFeedsInserts = pairing.keyCols.nonEmpty && inserts.nonEmpty
+      val censusRows =
+        if (effs.isEmpty || snap.activeFiles.isEmpty) None
+        else {
+          val rows = pairing.pairUp(target).filter(matchedC || affectedC).select(
+            Seq(col("__file"), deleteEff.as("__del"), updateEff.as("__upd"),
+              matchedC.as("__m")) ++ (if (mask) Seq(col("__ri")) else Nil) ++
+              (if (checkCard) Seq(col("__dup")) else Nil) ++
+              (if (checkCard || censusFeedsInserts) pairing.keyCols.map(col) else Nil): _*)
+          Some(if (censusFeedsInserts) persist(rows) else rows)
         }
-      val dels = perFile.iterator.map(_.getLong(1)).sum
-      val upds = perFile.iterator.map(_.getLong(2)).sum
-      val touched = perFile.iterator.map(_.getString(0)).toIndexedSeq
-
-      // Every later pass over pre-image rows (the images and the CDC parts)
-      // reads only TOUCHED files — affected rows live there by the census's
-      // definition. Re-pair a scan whose FILE LIST is restricted to them
-      // (DeltaTable.matchedFilesDF): at scale O(touched) files instead of a
-      // full re-scan. When every file is touched the restriction removes
-      // nothing — reuse the census join.
-      lazy val joinedTouched =
-        if (touched.size >= snap.activeFiles.size) joined
-        else pairUp(scan(Some(touched)))
+      val census = censusRows.fold(Array.empty[Row]) { rows =>
+        Logging.withJobDesc(spark, "graft:merge-census") {
+          val aggs = Seq(sum(when(col("__del"), 1L).otherwise(0L)).as("__d"),
+            sum(when(col("__upd"), 1L).otherwise(0L)).as("__u")) ++
+            (if (mask) Seq(DeletionVectors.bitmapAgg(
+              when(col("__del") || col("__upd"), col("__ri")).otherwise(lit(-1L)))
+              .as("__dv")) else Nil) ++
+            (if (checkCard) Seq(first(when(col("__dup") > 1,
+              struct(pairing.keyCols.map(col): _*)), ignoreNulls = true).as("__dupKey"))
+            else Nil)
+          rows.groupBy(col("__file")).agg(aggs.head, aggs.tail: _*).collect()
+        }
+      }
+      // SQL MERGE cardinality: >1 source row matching the SAME target row is
+      // an error, not a nondeterministic pick. With key-equality matching
+      // that is exactly "a duplicated source key that exists in the target"
+      // (a null key matches nothing under `=`). Raised before anything is
+      // written.
+      if (checkCard) census.iterator.map(_.getAs[Row]("__dupKey")).find(_ != null)
+        .foreach(k => throw new ValidationException(
+          "MERGE cardinality violation: multiple source rows match the same " +
+            s"target row (duplicate source key $k)"))
+      val affected = census.filter(r => r.getAs[Long]("__d") + r.getAs[Long]("__u") > 0)
+      val dels = affected.iterator.map(_.getAs[Long]("__d")).sum
+      val upds = affected.iterator.map(_.getAs[Long]("__u")).sum
+      val affectedFiles = affected.map(_.getString(0)).toIndexedSeq
+      // The images and the CDC parts re-pair a scan whose FILE LIST is
+      // restricted to the affected files (DeltaTable.matchedFilesDF): at
+      // scale O(affected) files instead of a full re-scan; when every file
+      // is affected, the whole scan.
+      lazy val joinedAffected = pairing.pairUp(
+        if (affectedFiles.size >= snap.activeFiles.size) target
+        else scan(Some(affectedFiles)))
 
       // Per-column post-images under the clause chain; generated columns
       // recompute over clause-updated rows only (the flag evaluates over the
@@ -277,104 +326,125 @@ object Merge {
           Some(col("__upd"))).drop("__upd")
       }
 
-      // Materialization. Rewrite: each touched file's kept rows and
-      // post-images replace it. Mask: the census bitmaps mask every affected
-      // row in place and only the post-images are written.
-      val imageAdds =
-        if (if (mask) upds == 0 else touched.isEmpty) Nil
-        else Logging.withJobDesc(spark, "graft:merge-rewrite") {
-          table.writeDataFiles(
-            postImage(joinedTouched.filter(if (mask) updateEff else !deleteEff)),
-            snap.partitionColumns, schema)
-        }
-
-      // Inserts: the unmatched source rows some insert clause accepts.
-      // Identity columns no clause provides are allocated from the
-      // high-water mark (Delta's MERGE INSERT behavior); the commit re-checks
-      // the mark in its OCC loop. The count comes from the written files'
-      // own stats, so the unmatched set is evaluated once.
+      // Write (pass 2): ONE task-writer job over the union of the images
+      // and the inserts. Images — rewrite: each affected file's kept rows
+      // and post-images replace it; mask: the census bitmaps mask every
+      // affected row in place and only the post-images are written.
+      // Inserts: the source rows in no matched pair that some insert
+      // clause accepts; identity columns no clause provides are
+      // allocated from the high-water mark (Delta's MERGE INSERT behavior;
+      // the commit re-checks the mark in its OCC loop), pinned so the CDC
+      // image sees the values written. The write job counts the inserts.
+      val imagePart =
+        if (if (mask) upds == 0 else affectedFiles.isEmpty) None
+        else Some(postImage(joinedAffected.filter(if (mask) updateEff else !deleteEff)))
       val idSpecs = IdentityColumns.specs(schema)
-      lazy val insertRows = buildInserts(unmatched(), inserts, schema, srcCols)
-      val insertAdds =
-        if (inserts.isEmpty) Nil
-        else Logging.withJobDesc(spark, "graft:merge-insert") {
-          // the identity CDC image reads back the committed files, never
-          // this frame — safe to drop the pinned blocks once written
-          val (rows, release) = IdentityColumns.assign(spark, insertRows, idSpecs)
-          try writeInsertFiles(table, snap, rows) finally release()
+      val insertRows = if (inserts.isEmpty) None else {
+        // against the census's matched rows, or (no census) every pair
+        val unmatched =
+          if (snap.activeFiles.isEmpty) src
+          else pairing.unmatched(censusRows.getOrElse(pairing.pairUp(target)
+            .select(matchedC.as("__m") +: pairing.keyCols.map(col): _*)).filter(col("__m")))
+        val (rows, release) = IdentityColumns.assign(spark,
+          buildInserts(unmatched, inserts, schema, srcCols), idSpecs)
+        releaseInserts = release
+        Some(rows)
+      }
+      var inserted = 0L
+      val adds = (imagePart ++ insertRows.map(_.observe(InsertedMetric,
+          count(lit(1)).as("n")))).reduceOption(_.unionByName(_, allowMissingColumns = true))
+        .fold(Seq.empty[AddFile]) { rows =>
+          Logging.withJobDesc(spark, "graft:merge-write") {
+            table.writeDataFiles(rows, snap.partitionColumns, schema,
+              observed = _.get(InsertedMetric).foreach(r => inserted = r.getLong(0)))
+          }
         }
-      val inserted = insertAdds.map(_._2).sum
-      val insertFiles = insertAdds.map(_._1)
 
       // ONE commit covering the images AND the inserts: MERGE is atomic, so
       // no version — time travel, CDF, a concurrent reader, a crash between
       // jobs — may expose updates-without-inserts (the half-merged state the
       // model-based property spec caught when these were two commits).
-      val idAlloc = if (insertFiles.nonEmpty) idSpecs else Nil
+      val idAlloc = if (inserted > 0) idSpecs else Nil
+      val metrics = Map(
+        "numTargetRowsUpdated" -> upds.toString,
+        "numTargetRowsDeleted" -> dels.toString,
+        "numTargetRowsInserted" -> inserted.toString,
+        // a mask removes no data file: the masked files are re-added
+        // under their deletion vectors
+        "numTargetFilesRemoved" -> (if (mask) 0 else affectedFiles.size).toString,
+        "numTargetFilesAdded" -> adds.size.toString)
       val v =
-        if (touched.isEmpty) {
-          if (insertFiles.isEmpty) return MergeResult(0L, 0L, 0L, snap.version)
-          table.appendCommit(insertFiles, "MERGE-INSERT", Some(snap), idAlloc)
+        if (affectedFiles.isEmpty) {
+          if (adds.isEmpty) return MergeResult(0L, 0L, 0L, snap.version)
+          table.appendCommit(adds, "MERGE-INSERT", Some(snap), idAlloc, metrics)
         } else if (mask) {
-          val dvByPath = perFile.map(r =>
+          val dvByPath = affected.map(r =>
             new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath ->
-              r.getAs[Array[Byte]](3)).toMap
-          table.commitDvMask(snap, dvByPath, imageAdds ++ insertFiles, "MERGE",
-            dels + upds, idAlloc = idAlloc)
-        } else table.commitFileRewrite(snap, touched.toSet,
-          imageAdds ++ insertFiles, "MERGE", idAlloc = idAlloc)
+              r.getAs[Array[Byte]]("__dv")).toMap
+          table.commitDvMask(snap, dvByPath, adds, "MERGE", dels + upds,
+            idAlloc = idAlloc, metrics = metrics)
+        } else table.commitFileRewrite(snap, affectedFiles.toSet, adds, "MERGE",
+          idAlloc = idAlloc, metrics = metrics)
 
       captureMergeCdc(table, snap, v, {
         def tag(df: DataFrame, kind: String) = df.withColumn(Cdc.ChangeType, lit(kind))
         val deletePart =
           if (dels == 0) Nil
-          else Seq(tag(joinedTouched.filter(deleteEff).select(dataCols.map(col): _*),
+          else Seq(tag(joinedAffected.filter(deleteEff).select(dataCols.map(col): _*),
             "delete"))
         val updatePart =
           if (upds == 0) Nil
           else {
-            val updated = joinedTouched.filter(updateEff)
+            val updated = joinedAffected.filter(updateEff)
             Seq(tag(updated.select(dataCols.map(col): _*), "update_preimage"),
               tag(postImage(updated), "update_postimage"))
           }
-        val insertPart =
-          if (insertFiles.isEmpty) Nil
-          // allocated identity values are nondeterministic — read back the
-          // COMMITTED insert files instead of re-running the allocator
-          else if (idSpecs.nonEmpty) Seq(tag(table.toDF(Snapshot(snap.version,
-            snap.metadata, snap.protocol, insertFiles, Nil)), "insert"))
-          else Seq(tag(insertRows, "insert"))
+        // the rows written, allocated identity values included: the pinned
+        // frame, released only after this capture
+        val insertPart = if (inserted == 0) Nil else insertRows.map(tag(_, "insert")).toSeq
         deletePart ++ updatePart ++ insertPart
       })
       MergeResult(upds, dels, inserted, v)
-    } finally persisted.foreach(_.unpersist(false))
+    } finally {
+      releaseInserts()
+      persisted.foreach(_.unpersist(false))
+    }
   }
 
+  /** Name of the write job's observed insert count. */
+  private val InsertedMetric = "graft_merge_inserted"
+
+  /** A pairing's frames: `pairUp` carries each row of a target scan's
+    * source match as `__src` (null when unmatched), plus `keyCols`, the
+    * matched source row's key columns; `unmatched` is the source rows that
+    * appear in none of the given matched rows (their `keyCols`). */
+  private final case class Paired(pairUp: DataFrame => DataFrame,
+                                  keyCols: Seq[String],
+                                  unmatched: DataFrame => DataFrame)
+
   /** Key pairing: one `left_outer` join carries each target row's source
-    * match as `__src`. The unmatched source rows are an anti-join against
-    * the distinct target keys under the SAME key semantics as the matched
+    * match as `__src` and its keys as `__k_<target column>` (plus `__dup`
+    * when the source has it). The unmatched source rows are an anti-join
+    * against the matched keys under the SAME key semantics as the matched
     * join: a plain equality anti-join would let a null-key source row that
     * `<=>` matched through (null = null is null), so one row would both
     * UPDATE and be INSERTED. */
-  private def pairByKeys(table: DeltaTable, snap: Snapshot, src: DataFrame,
+  private def pairByKeys(src: DataFrame, srcCols: Seq[String],
                          pairs: Seq[(String, String)],
-                         tgtKeyExpr: Map[String, Column], sqlSemantics: Boolean,
-                         checkCard: Boolean): (DataFrame => DataFrame, () => DataFrame) = {
+                         tgtKeyExpr: Map[String, Column],
+                         sqlSemantics: Boolean): Paired = {
     def keyEq(l: Column, r: Column): Column = if (sqlSemantics) l === r else l <=> r
-    if (checkCard) checkCardinality(table, snap, src, pairs, keyEq)
     val packed = src.select(
-      struct(src.columns.toSeq.map(col): _*).as("__src") +:
-        pairs.map { case (tk, sk) => col(sk).as(s"__k_$tk") }: _*)
+      (struct(srcCols.map(col): _*).as("__src") +:
+        pairs.map { case (tk, sk) => col(sk).as(s"__k_$tk") }) ++
+        src.columns.find(_ == "__dup").map(col): _*)
     val joinCond = pairs.map { case (tk, _) =>
       keyEq(tgtKeyExpr.getOrElse(tk, col(tk)), col(s"__k_$tk")) }.reduce(_ && _)
-    def unmatched(): DataFrame = {
-      val targetKeys = table.toDF(snap)
-        .select(pairs.map { case (tk, _) => col(tk).as(s"__tk_$tk") }: _*).distinct()
-      src.join(targetKeys,
-        pairs.map { case (tk, sk) => keyEq(col(sk), col(s"__tk_$tk")) }.reduce(_ && _),
-        "left_anti")
-    }
-    (_.join(packed, joinCond, "left_outer"), () => unmatched())
+    val keyCols = pairs.map { case (tk, _) => s"__k_$tk" }
+    Paired(_.join(packed, joinCond, "left_outer"), keyCols,
+      matched => src.join(matched.select(keyCols.map(col): _*),
+        pairs.map { case (tk, sk) => keyEq(col(sk), col(s"__k_$tk")) }.reduce(_ && _),
+        "left_anti"))
   }
 
   /** Theta pairing ([[Theta]]'s steps 1–3): the candidate pairs are
@@ -382,11 +452,9 @@ object Merge {
     * anti-join, and without the barrier the theta join (the dominant cost)
     * would evaluate three times. The chosen pairs join back on
     * (`__file`, `__ri`); unmatched source rows are those in no candidate
-    * pair (null-safe whole-row identity). */
-  private def pairByTheta(target: DataFrame, src: DataFrame, cond: Column,
-                          persist: DataFrame => DataFrame)
-      : (DataFrame => DataFrame, () => DataFrame) = {
-    val srcCols = src.columns.toSeq
+    * pair (null-safe whole-row identity), whatever matched rows are given. */
+  private def pairByTheta(target: DataFrame, src: DataFrame, srcCols: Seq[String],
+                          cond: Column, persist: DataFrame => DataFrame): Paired = {
     val rows = src.select(struct(srcCols.map(col): _*).as("__srow"))
       .withColumn("__sid", xxhash64(col("__srow")))
     val pairs = persist(target.as("t")
@@ -401,35 +469,10 @@ object Merge {
       .withColumn("__r1", row_number().over(bySource)).filter(col("__r1") === 1)
       .withColumn("__r2", row_number().over(byTarget)).filter(col("__r2") === 1)
       .select(col("__file"), col("__ri"), col("__srow").as("__src"))
-    (_.join(chosen, Seq("__file", "__ri"), "left_outer"),
-      () => rows.join(pairs.select(col("__srow").as("__mrow")).distinct(),
+    Paired(_.join(chosen, Seq("__file", "__ri"), "left_outer"), Nil,
+      _ => rows.join(pairs.select(col("__srow").as("__mrow")).distinct(),
           col("__srow") <=> col("__mrow"), "left_anti")
         .select(srcCols.map(c => col(s"__srow.$c").as(c)): _*))
-  }
-
-  /** SQL MERGE cardinality: >1 source row matching the SAME target row is
-    * an error, not a nondeterministic pick. With key-equality matching that
-    * is exactly "a duplicated source key that exists in the target". Cost
-    * shape: ONE aggregation over the source finds duplicated keys (usually
-    * zero — the overwhelmingly common case pays nothing else); only when
-    * duplicates exist does a semi-join against the column-pruned distinct
-    * target keys decide whether any of them actually matches. */
-  private def checkCardinality(table: DeltaTable, snap: Snapshot, src: DataFrame,
-                               keyPairs: Seq[(String, String)],
-                               keyEq: (Column, Column) => Column): Unit = {
-    val srcKeys = keyPairs.map(_._2)
-    val dups = src.groupBy(srcKeys.map(col): _*).agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1)
-      .select(keyPairs.map { case (tk, sk) => col(sk).as(s"__dk_$tk") }: _*)
-    if (Logging.withJobDesc(table.spark, "graft:merge-cardcheck") {
-        dups.head(1).isEmpty }) return
-    val inTarget = dups.join(
-      table.toDF(snap).select(keyPairs.map { case (tk, _) => col(tk) }: _*),
-      keyPairs.map { case (tk, _) => keyEq(col(tk), col(s"__dk_$tk")) }.reduce(_ && _),
-      "left_semi").head(1)
-    if (inTarget.nonEmpty) throw new ValidationException(
-      "MERGE cardinality violation: multiple source rows match the same " +
-        s"target row (duplicate source key ${inTarget.head})")
   }
 
   /** SQL clause-order semantics as Columns: effective condition of clause i
@@ -526,18 +569,6 @@ object Merge {
       }.as(c)
     }
 
-  /** Write insert rows WITHOUT committing: (AddFile, rowCount) per
-    * non-empty file, zero-row part files deleted on the spot. The caller
-    * owns the commit so images + inserts share one. */
-  private def writeInsertFiles(table: DeltaTable, snap: Snapshot,
-                               rows: DataFrame): Seq[(AddFile, Long)] = {
-    val adds = table.writeDataFiles(rows, snap.partitionColumns, snap.schema)
-    val counted = adds.map(a =>
-      a -> a.stats.flatMap(FileStats.fromJsonString).map(_.numRecords).getOrElse(0L))
-    counted.filterNot(_._2 > 0).foreach(a => table.deleteDataFile(a._1.path))
-    counted.filter(_._2 > 0)
-  }
-
   /** CDF capture for MERGE (reference: processMergeMatch/processMergeNoMatch
     * + finalizeCommit, src/cdc/index.ts:1975-2046): clause-updated rows emit
     * update_preimage/update_postimage, clause-deleted rows delete, and
@@ -569,7 +600,7 @@ object Merge {
    * UpdateSet of every non-generated, non-identity column — or None, a
    * Delete; `whenNotMatched(incoming)` returns the row to insert (shaped to
    * the TABLE schema) or None to skip. Closures run on executors and must
-   * be deterministic: the census, the images and the CDC capture each
+   * be deterministic: the census, the write and the CDC capture each
    * evaluate them.
    */
   def executeWith(table: DeltaTable, source: DataFrame, keyColumns: Seq[String])

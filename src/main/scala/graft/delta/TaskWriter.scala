@@ -3,8 +3,9 @@ package graft.delta
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BasePredicate, BoundReference, Cast, Coalesce, EqualNullSafe, Expression, IsNotNull, Literal, Not, Predicate, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
@@ -22,8 +23,10 @@ import org.apache.spark.util.SerializableConfiguration
  * table — `DeltaTable.write`, DML and MERGE rewrites, maintenance, catalog
  * INSERTs and streaming epochs — runs these task writers: each task
  * writes its rows under final, unique names in the table layout and
- * reports (path, size); the log commit decides visibility, so no staging
- * directory or rename exists anywhere.
+ * reports (path, size, stats), the stats read from the footer of the file
+ * it has just closed; the log commit decides visibility, so no staging
+ * directory or rename exists anywhere, and no pass re-opens a written
+ * file for its stats.
  *
  * A [[WritePlan]] binds, once on the driver, everything a task needs to
  * turn a query row into a file row: the value of every written column
@@ -205,16 +208,19 @@ final class WritePlan(
         case _ => false
       }
     TaskWriterFactory(table.path, fileSchema, dataExprs, passThrough, partCols.toArray,
-      partExprs, clustered && sortColumns.nonEmpty, writerFactory, conf, violationChecks, specs)
+      partExprs, clustered && sortColumns.nonEmpty, writerFactory, conf, violationChecks, specs,
+      FooterStats.statColumns(fileSchema))
   }
 }
 
-/** Files one task wrote, as (table-relative path, bytes). `idAlloc` echoes
-  * the identity specs the task allocated from, so a streaming commit pairs
-  * marks with the right epoch. `violation` is a row-contract breach: the
-  * task wrote nothing and the whole write must fail. */
+/** Files one task wrote, as (table-relative path, bytes, footer stats JSON
+  * keyed by physical column names; None when the task could not read the
+  * footer). `idAlloc` echoes the identity specs the task allocated from, so
+  * a streaming commit pairs marks with the right epoch. `violation` is a
+  * row-contract breach: the task wrote nothing and the whole write must
+  * fail. */
 final case class TaskWriteMessage(
-    files: Seq[(String, Long)],
+    files: Seq[(String, Long, Option[String])],
     idAlloc: Seq[IdentityColumns.Spec] = Nil,
     violation: Option[String] = None)
   extends WriterCommitMessage
@@ -235,7 +241,9 @@ final case class TaskWriterFactory(
     factory: OutputWriterFactory,
     conf: SerializableConfiguration,
     violationChecks: Seq[(String, Expression)],
-    idAlloc: Seq[IdentityColumns.Spec])
+    idAlloc: Seq[IdentityColumns.Spec],
+    // (physical name, type) of the file columns the footer stats cover
+    statCols: Seq[(String, org.apache.spark.sql.types.DataType)])
   extends StreamingDataWriterFactory with DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
@@ -350,12 +358,20 @@ final class TaskWriter(f: TaskWriterFactory, partitionId: Int, taskId: Long, epo
     w.write(if (dataProj == null) row else dataProj(row))
   }
 
+  /** Closes every file and stats each one from its own footer, through
+    * the status the size comes from (one `getFileStatus` per file). */
   override def commit(): WriterCommitMessage = {
     finishOpen()
-    val fs = new Path(f.tablePath).getFileSystem(f.conf.value)
-    TaskWriteMessage(
-      finished.toSeq.map(rel => rel -> fs.getFileStatus(new Path(f.tablePath, rel)).getLen),
-      f.idAlloc)
+    val conf = f.conf.value
+    val fs = new Path(f.tablePath).getFileSystem(conf)
+    TaskWriteMessage(finished.toSeq.map { rel =>
+      val status = fs.getFileStatus(new Path(f.tablePath, rel))
+      val stats =
+        try Some(FooterStats.readOne(HadoopInputFile.fromStatus(status, conf), conf, f.statCols)
+          .toJsonString)
+        catch { case scala.util.control.NonFatal(_) => None }
+      (rel, status.getLen, stats)
+    }, f.idAlloc)
   }
 
   override def abort(): Unit = {
@@ -376,11 +392,14 @@ final class TaskWriter(f: TaskWriterFactory, partitionId: Int, taskId: Long, epo
 
 object TaskWriter {
 
-  /** Add actions (no stats yet) for the files the messages name. */
+  /** Add actions for the files the messages name, carrying the stats
+    * their tasks read (physical column names; [[DeltaTable.prepareAdds]]
+    * re-keys them). */
   def addsOf(messages: Seq[WriterCommitMessage]): Seq[AddFile] = {
     val now = System.currentTimeMillis()
-    messages.collect { case m: TaskWriteMessage => m.files }.flatten.map { case (rel, size) =>
-      AddFile(rel, PartitionPaths.parse(rel), size, now)
+    messages.collect { case m: TaskWriteMessage => m.files }.flatten.map {
+      case (rel, size, stats) =>
+        AddFile(rel, PartitionPaths.parse(rel), size, now, stats = stats)
     }.toIndexedSeq
   }
 
@@ -395,8 +414,11 @@ object TaskWriter {
     * behind. Any other task failure fails the job; the files of tasks
     * that had already finished are deleted, and a failing task deletes
     * its own. The job runs under its own SQL execution id, so
-    * query-execution listeners see the write's plan. */
-  def run(table: DeltaTable, df: DataFrame, plan: WritePlan): Seq[AddFile] = {
+    * query-execution listeners see the write's plan; `observed` receives
+    * the metrics its `observe` nodes collected (a MERGE counts its inserts
+    * in the write job this way). */
+  def run(table: DeltaTable, df: DataFrame, plan: WritePlan,
+          observed: Map[String, Row] => Unit = _ => ()): Seq[AddFile] = {
     val spark = table.spark
     val sorted =
       if (plan.sortColumns.isEmpty) df
@@ -404,7 +426,7 @@ object TaskWriter {
     val factory = plan.factory(clustered = true)
     val qe = sorted.queryExecution.asInstanceOf[org.apache.spark.sql.execution.QueryExecution]
     def deleteAll(ms: Iterable[TaskWriteMessage]): Unit =
-      ms.foreach(_.files.foreach { case (rel, _) => table.deleteDataFile(rel) })
+      ms.foreach(_.files.foreach(file => table.deleteDataFile(file._1)))
     // The job keeps an enclosing engine phase label (a MERGE's rewrite or
     // insert pass); a write outside any phase is its own.
     val phase = Option(spark.sparkContext.getLocalProperty("spark.job.description"))
@@ -426,6 +448,7 @@ object TaskWriter {
       deleteAll(messages)
       throw new ValidationException(v)
     }
+    observed(qe.observedMetrics)
     addsOf(messages)
   }
 

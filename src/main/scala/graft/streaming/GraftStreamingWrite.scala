@@ -199,7 +199,7 @@ final class GraftDirectWrite(
   private def deleteStaged(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case m: TaskWriteMessage =>
-        m.files.foreach { case (rel, _) => table.deleteDataFile(rel) }
+        m.files.foreach(file => table.deleteDataFile(file._1))
       case _ => ()
     }
 

@@ -145,4 +145,35 @@ class DistributedCheckpointSpec extends SparkTestBase {
       .as[(Int, String)].collect().toSeq
     assert(v1 == Seq((1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")))
   }
+
+  test("a driver checkpoint writes its parts without a Spark job") {
+    val meta = TableMetadata("tid", schemaString = schema.json, partitionColumns = Seq("k"))
+    val snap = Snapshot(4L, Some(meta), Some(Protocol(1, 2)),
+      (0 until 2500).map(i => AddFile(s"k=${i % 5}/f-$i.parquet",
+        Map("k" -> (i % 5).toString), 100L + i, 1L)),
+      Seq(RemoveFile("k=0/gone.parquet", 1L)), Map("app" -> 3L))
+    Seq(Checkpoints.DefaultActionsPerPart, 1000L).foreach { perPart =>
+      val log = new DeltaLog(new Path(Files.createTempDirectory("graft-cpjob").toString),
+        spark.sessionState.newHadoopConf())
+      log.fs.mkdirs(log.logPath)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Checkpoints.write(spark, log, snap, perPart)
+        // the listener bus is asynchronous: a job would have posted by now
+        org.apache.spark.sql.SpecInternals.drainListeners(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get == 0, s"checkpoint ($perPart actions per part) ran ${jobs.get} job(s)")
+      val parts = Checkpoints.partsFor(log, 4L)
+      assert(parts == (if (perPart == 1000L) Some(3) else None))
+      val back = Checkpoints.read(spark, log, 4L, parts)
+      assert(back.activeFiles.toSet == snap.activeFiles.toSet)
+      assert(back.tombstones.toSet == snap.tombstones.toSet)
+      assert(back.transactions == snap.transactions && back.metadata == snap.metadata)
+    }
+  }
 }

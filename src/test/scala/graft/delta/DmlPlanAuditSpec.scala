@@ -181,14 +181,14 @@ class DmlPlanAuditSpec extends SparkTestBase {
     assert(t.toDF().filter($"s" === "merged").count() == 200)
   }
 
-  /** The distinct `graft:merge-*` job labels `body` runs, in first-run
-    * order. The listener bus is async — poll until the set is quiescent. */
-  private def mergeLabels(body: => Unit): Seq[String] = {
+  /** The distinct `graft:*` job labels `body` runs, in first-run order.
+    * The listener bus is async — poll until the set is quiescent. */
+  private def graftLabels(body: => Unit): Seq[String] = {
     val labels = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.startsWith("graft:merge-")).foreach(labels.add)
+          .filter(_.startsWith("graft:")).foreach(labels.add)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -204,6 +204,9 @@ class DmlPlanAuditSpec extends SparkTestBase {
       labels.asScala.toSeq.distinct
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  private def mergeLabels(body: => Unit): Seq[String] =
+    graftLabels(body).filter(_.startsWith("graft:merge-"))
 
   test("MERGE: each route runs exactly its pinned graft:merge-* passes") {
     val cat = graft.plans.GraftSql.ensure(spark)
@@ -222,13 +225,14 @@ class DmlPlanAuditSpec extends SparkTestBase {
          |WHEN MATCHED AND src.op = 'D' THEN DELETE
          |WHEN MATCHED THEN UPDATE SET *
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val fourPasses = Seq("graft:merge-cardcheck", "graft:merge-census",
-      "graft:merge-rewrite", "graft:merge-insert")
+    // two passes on every route: the census (which also checks SQL
+    // cardinality) and one write job for the images and the inserts
+    val twoPasses = Seq("graft:merge-census", "graft:merge-write")
     val cow = table("labcow")
-    assert(mergeLabels(keyMerge(cow)) == fourPasses)
+    assert(mergeLabels(keyMerge(cow)) == twoPasses)
     val mask = table("labmask")
     spark.conf.set("spark.graft.sql.dml.mor", "true")
-    try assert(mergeLabels(keyMerge(mask)) == fourPasses)
+    try assert(mergeLabels(keyMerge(mask)) == twoPasses)
     finally spark.conf.unset("spark.graft.sql.dml.mor")
     val theta = table("labtheta")
     assert(mergeLabels(spark.sql(
@@ -236,12 +240,21 @@ class DmlPlanAuditSpec extends SparkTestBase {
          |USING (SELECT id, concat('u', id) AS v FROM range(995, 1005)) src
          |ON tgt.id > src.id AND tgt.id <= src.id + 1
          |WHEN MATCHED THEN UPDATE SET *
-         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)) ==
-      Seq("graft:merge-census", "graft:merge-rewrite", "graft:merge-insert"))
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)) == twoPasses)
     Seq(cow, mask).foreach { t =>
       assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0) == 1005)
     }
     assert(spark.sql(s"SELECT count(*) FROM $theta").head().getLong(0) == 1006)
+  }
+
+  test("a write of more than 8 files runs one job and no stats pass") {
+    val t = DeltaTable.forPath(spark, Files.createTempDirectory("graft-statsjob").toString)
+    val labels = graftLabels {
+      t.write((0 until 2000).map(i => (i, s"r$i")).toDF("id", "s").repartition(12))
+    }
+    assert(t.snapshot().activeFiles.size == 12)
+    assert(t.snapshot().activeFiles.forall(_.parsedStats.exists(_.numRecords > 0)))
+    assert(labels == Seq("graft:write-data"), s"write ran $labels")
   }
 
   test("correlated-subquery SQL DML: no file-path In, no nested-loop join") {

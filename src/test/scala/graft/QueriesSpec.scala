@@ -63,17 +63,19 @@ class QueriesSpec extends SparkTestBase {
     assert(plan.contains("CollectMetrics"))
   }
 
-  test("plan audit: d6 merge restricts files via the scan's file list, not a literal In-list") {
-    // The merge's affected-file restriction is the FILE LIST of the scan
-    // (DeltaTable.matchedFilesDF), visible in the d6 plan only during
-    // execution, so assert on the call the code path makes (no `isin` over
-    // collected paths remains anywhere in Merge; DmlPlanAuditSpec checks
-    // the executed plans).
+  test("plan audit: d6 merge restricts files via join, not a literal In-list") {
+    // The merge restricts the target to the affected files by the FILE LIST
+    // of the scan (DeltaTable.matchedFilesDF) and re-pairs that restricted
+    // scan with the source by a join (pairUp). Both are visible in the d6
+    // plan only during execution, so assert on the calls the code path makes
+    // (no `isin` over collected paths remains anywhere in Merge;
+    // DmlPlanAuditSpec checks the executed plans).
     val src = scala.io.Source.fromFile(
       "src/main/scala/graft/delta/Merge.scala", "UTF-8").mkString
     assert(!src.contains(".isin(matchedFiles"),
       "merge must not build literal In-lists from file sets")
     assert(src.contains("table.matchedFilesDF(snap"))
+    assert(src.contains("pairing.pairUp("))
   }
 
   test("plan audit: MoR DV builds aggregate bitmaps on executors, never raw row indexes") {

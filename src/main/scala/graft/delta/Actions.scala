@@ -72,7 +72,11 @@ final case class AddFile(
     val withStats = stats.fold(base)(st => base ~ ("stats" -> st))
     deletionVector.fold(withStats)(dv => withStats ~ ("deletionVector" -> dv))
   }
-  def parsedStats: Option[FileStats] = stats.flatMap(FileStats.fromJsonString)
+  /** The stats JSON, parsed on first use and kept with the action: a
+    * cached table state hands the same parse to every later statement.
+    * Not a constructor field, so equality and [[wrap]] ignore it, and
+    * transient, so a serialized action re-parses instead of shipping it. */
+  @transient lazy val parsedStats: Option[FileStats] = stats.flatMap(FileStats.fromJsonString)
 }
 
 final case class RemoveFile(

@@ -260,14 +260,7 @@ object Checkpoints {
     * pointer is missing or lags (the discovery fallback must not assume
     * single-file — a multi-part checkpoint read through the single-file path
     * fails on a file that doesn't exist). */
-  def partsFor(log: DeltaLog, version: Long): Option[Int] = {
-    if (log.fs.exists(log.checkpointFile(version))) return None
-    val PartRe = raw"\d{20}\.checkpoint\.\d{10}\.(\d{10})\.parquet".r
-    log.fs.globStatus(new org.apache.hadoop.fs.Path(
-        log.logPath, f"$version%020d.checkpoint.*.parquet"))
-      .iterator.map(_.getPath.getName)
-      .collectFirst { case PartRe(n) => n.toInt }
-  }
+  def partsFor(log: DeltaLog, version: Long): Option[Int] = log.list().partsNamed(version)
 
   /** Layout of the checkpoint at `version` IF it is complete on disk:
     * `Some(None)` single-file, `Some(Some(n))` all n parts present, `None`
@@ -276,21 +269,9 @@ object Checkpoints {
     * group), and a cleanup race can leave `_last_checkpoint` dangling —
     * readers must verify completeness BEFORE trusting either, and fall
     * back to an earlier complete checkpoint or full log replay. */
-  def completeParts(log: DeltaLog, version: Long): Option[Option[Int]] = {
-    if (log.fs.exists(log.checkpointFile(version))) return Some(None)
-    partsFor(log, version) match {
-      case Some(n) if (1 to n).forall(p =>
-          log.fs.exists(log.checkpointPart(version, p, n))) => Some(Some(n))
-      case _ => None
-    }
-  }
+  def completeParts(log: DeltaLog, version: Long): Option[Option[Int]] =
+    log.list().completeParts(version)
 
   /** Versions that have a (single or multi-part) checkpoint on disk. */
-  def listCheckpointVersions(log: DeltaLog): Seq[Long] = {
-    if (!log.fs.exists(log.logPath)) return Nil
-    val Re = raw"(\d{20})\.checkpoint(\.\d{10}\.\d{10})?\.parquet".r
-    log.fs.listStatus(log.logPath).iterator.map(_.getPath.getName).collect {
-      case Re(v, _) => v.toLong
-    }.toSeq.distinct.sorted
-  }
+  def listCheckpointVersions(log: DeltaLog): Seq[Long] = log.list().checkpointVersions
 }

@@ -115,6 +115,23 @@ object DataSkipping {
   private final case class PartSlot(known: Int, value: PartitionFilters.PartValue)
     extends Slot
 
+  /** The columns of a table of decoded file rows ([[DistributedSnapshot]]'s
+    * cached checkpoint rows), by the stats-row slot each one fills. */
+  trait FileColumns {
+    /** The file's `numRecords`. */
+    def numRecords: Expression
+
+    /** The decoded min (`kind` 'l'), max ('h') or null count ('n') of
+      * column `name`, as [[statValue]] decodes it for type `dt`; None when
+      * the rows do not carry it. */
+    def stat(name: String, dt: DataType, kind: Char): Option[Expression]
+
+    /** The decode state and value of partition column `name` of type
+      * `dt` ([[PartitionFilters.decode]]); None when the rows do not carry
+      * it. */
+    def partition(name: String, dt: DataType): Option[(Expression, Expression)]
+  }
+
   /** A bound skipping predicate: keeps a file unless its stats row proves
     * the predicate FALSE or NULL for every row. `points` are the
     * predicate's equality point sets ([[pointSets]]) by column name, for
@@ -141,6 +158,27 @@ object DataSkipping {
       val row = new FileRow(f)
       parts.foreach(p => row.setBoolean(p.known, p.value.fill(row, f.partitionValues)))
       try keep.eval(row) != false catch { case NonFatal(_) => true }
+    }
+
+    /** The same test as one Catalyst expression over rows that carry the
+      * decoded stats and partition values in `cols`: a file is kept unless
+      * it evaluates FALSE (a NULL or an evaluation error keeps it, as in
+      * [[apply]]). None when a slot the predicate reads has no column. */
+    def overColumns(cols: FileColumns): Option[Expression] = {
+      if (!prunes) return Some(Literal.TrueLiteral)
+      val bySlot = new Array[Expression](width)
+      bySlot(0) = cols.numRecords
+      slots.foreach {
+        case StatSlot(at, name, dt, kind) =>
+          bySlot(at) = cols.stat(name, dt, kind).getOrElse(return None)
+        case PartSlot(known, v) =>
+          val (state, value) = cols.partition(v.name, v.dt).getOrElse(return None)
+          val (k, x) = v.overColumns(state, value)
+          bySlot(known) = k
+          bySlot(v.ordinal) = x
+      }
+      val onColumns = keep.transformUp { case b: BoundReference => bySlot(b.ordinal) }
+      Some(Coalesce(Seq(TryEval(onColumns), Literal.TrueLiteral)))
     }
 
     /** One file's stats row. The stats JSON parses on the first read of a
@@ -206,6 +244,14 @@ object DataSkipping {
       }
       case _ => null
     } catch { case NonFatal(_) => null }
+  }
+
+  /** Whether [[statValue]] decodes min and max stats of type `dt` (it
+    * leaves every other type's null). */
+  def decodesBounds(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
+    case DateType | TimestampType | TimestampNTZType => true
+    case _ => binaryString(dt)
   }
 
   /** Literal prefix of a start-anchored regex ('^abc.*' → "abc"): the

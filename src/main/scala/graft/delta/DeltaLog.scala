@@ -20,6 +20,9 @@ final class DeltaLog(val tablePath: Path, val hadoopConf: Configuration) {
 
   val fs: FileSystem = tablePath.getFileSystem(hadoopConf)
   val logPath: Path = new Path(tablePath, "_delta_log")
+  /** The log directory with scheme and authority: the table's identity in
+    * process-wide caches ([[TableStateCache]]). */
+  lazy val qualifiedLogPath: String = fs.makeQualified(logPath).toString
 
   def commitFile(version: Long): Path = new Path(logPath, f"$version%020d.json")
   def checkpointFile(version: Long): Path =
@@ -28,31 +31,25 @@ final class DeltaLog(val tablePath: Path, val hadoopConf: Configuration) {
     new Path(logPath, f"$version%020d.checkpoint.$part%010d.$parts%010d.parquet")
   def lastCheckpointFile: Path = new Path(logPath, "_last_checkpoint")
 
-  /** Latest committed version, or -1 for an empty/nonexistent log. */
   /** Latest known version: the newest commit file, or — when log cleanup has
     * removed every commit at/below a checkpoint — the checkpointed version
     * itself (the checkpoint is complete state, so the version is live even
-    * with no commit JSON present). */
+    * with no commit JSON present). -1 for an empty or nonexistent log. */
   def latestVersion(): Long = {
-    val fromCommits = listCommitVersions().lastOption.getOrElse(-1L)
-    val fromCheckpoint = readLastCheckpoint().map(_._1).getOrElse(-1L)
-    math.max(fromCommits, fromCheckpoint)
+    val listing = list()
+    math.max(listing.newestCommit, pointer(listing).fold(-1L)(_._1))
   }
 
-  def listCommitVersions(): Seq[Long] = Retry.withRetry(retryOn = Errors.isTransientIo) {
-    if (!fs.exists(logPath)) Nil
-    else fs.listStatus(logPath).iterator
-      .map(_.getPath.getName)
-      .collect { case CommitName(v) => v }
-      .toSeq.sorted
-  }
+  def listCommitVersions(): Seq[Long] = list().commitVersions
 
-  private object CommitName {
-    private val Re = raw"(\d{20})\.json".r
-    def unapply(name: String): Option[Long] = name match {
-      case Re(v) => Some(v.toLong)
-      case _ => None
-    }
+  /** One listing of the log directory ([[LogListing]]); empty when the log
+    * does not exist. */
+  def list(): LogListing = Retry.withRetry(retryOn = Errors.isTransientIo) {
+    val entries =
+      try fs.listStatus(logPath).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    LogListing(entries.map(st =>
+      st.getPath.getName -> FileStamp(st.getLen, st.getModificationTime)))
   }
 
   def readCommit(version: Long): Seq[Action] =
@@ -107,6 +104,15 @@ final class DeltaLog(val tablePath: Path, val hadoopConf: Configuration) {
   /** `{version, size, parts?}` (reference: src/delta/types.ts:334-340). */
   def readLastCheckpoint(): Option[(Long, Long, Option[Int])] = {
     if (!fs.exists(lastCheckpointFile)) return None
+    parseLastCheckpoint()
+  }
+
+  /** The `_last_checkpoint` pointer as [[readLastCheckpoint]] reads it,
+    * opened only when `listing` shows one. */
+  def pointer(listing: LogListing): Option[(Long, Long, Option[Int])] =
+    if (listing.hasPointer) parseLastCheckpoint() else None
+
+  private def parseLastCheckpoint(): Option[(Long, Long, Option[Int])] =
     scala.util.Try {
       val j = JsonMethods.parse(readString(lastCheckpointFile))
       val v = j \ "version" match { case JInt(n) => n.toLong; case JLong(n) => n; case _ => -1L }
@@ -114,7 +120,6 @@ final class DeltaLog(val tablePath: Path, val hadoopConf: Configuration) {
       val parts = j \ "parts" match { case JInt(n) => Some(n.toInt); case _ => None }
       (v, size, parts)
     }.toOption.filter(_._1 >= 0)
-  }
 
   def writeLastCheckpoint(version: Long, size: Long, parts: Option[Int]): Unit = {
     val base = s"""{"version":$version,"size":$size"""
@@ -139,6 +144,87 @@ final class DeltaLog(val tablePath: Path, val hadoopConf: Configuration) {
     val out = fs.create(p, overwrite)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
+  }
+}
+
+/** A log file's length and modification time, as a listing reports them. */
+final case class FileStamp(length: Long, modificationTime: Long)
+
+/**
+ * What one listing of `_delta_log` shows: each commit's [[FileStamp]] by
+ * version, the checkpoint files by version, and whether a
+ * `_last_checkpoint` pointer exists. The checkpoint layout is read from
+ * file names, so a torn multi-part checkpoint (a subset of its parts) or a
+ * pointer whose files are gone is seen without opening anything.
+ */
+final class LogListing private (
+    commits: scala.collection.immutable.SortedMap[Long, FileStamp],
+    checkpoints: Map[Long, Seq[(Option[(Int, Int)], FileStamp)]],
+    val hasPointer: Boolean) {
+
+  def commitVersions: Seq[Long] = commits.keys.toSeq
+
+  /** Newest commit version, or -1 with none listed. */
+  def newestCommit: Long = commits.lastOption.fold(-1L)(_._1)
+
+  /** Commit versions in (`after`, `upTo`], ascending. */
+  def commitsBetween(after: Long, upTo: Long): Seq[Long] =
+    commits.rangeFrom(after + 1).rangeTo(upTo).keys.toSeq
+
+  def checkpointVersions: Seq[Long] = checkpoints.keys.toSeq.sorted
+
+  /** Layout of the checkpoint at `version` IF it is complete:
+    * `Some(None)` single-file, `Some(Some(n))` all n parts listed, `None`
+    * torn or absent. */
+  def completeParts(version: Long): Option[Option[Int]] =
+    checkpoints.get(version).flatMap { files =>
+      if (files.exists(_._1.isEmpty)) Some(None)
+      else files.flatMap(_._1).groupBy(_._2).collectFirst {
+        case (n, ps) if ps.map(_._1).toSet == (1 to n).toSet => Some(n)
+      }
+    }
+
+  /** Part count named by the checkpoint files at `version`, complete or
+    * not: None when a single-file checkpoint is listed or none is. */
+  def partsNamed(version: Long): Option[Int] =
+    checkpoints.get(version).filterNot(_.exists(_._1.isEmpty))
+      .flatMap(_.flatMap(_._1).headOption.map(_._2))
+
+  /** The newest complete checkpoint at or below `version`. */
+  def newestCompleteCheckpoint(version: Long): Option[(Long, Option[Int])] =
+    checkpoints.keys.filter(_ <= version).toSeq.sorted.reverseIterator
+      .map(v => (v, completeParts(v)))
+      .collectFirst { case (v, Some(parts)) => (v, parts) }
+
+  /** The stamp that identifies the state AT `version`: its commit file's,
+    * or — when log cleanup removed that commit — its checkpoint's first
+    * file's. None when neither is listed. */
+  def stamp(version: Long): Option[FileStamp] =
+    commits.get(version).orElse(checkpoints.get(version).map(_.head._2))
+}
+
+object LogListing {
+  private val Commit = raw"(\d{20})\.json".r
+  private val Single = raw"(\d{20})\.checkpoint\.parquet".r
+  private val Part = raw"(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet".r
+
+  /** The listing of (file name, stamp) entries; other names are ignored. */
+  def apply(entries: Seq[(String, FileStamp)]): LogListing = {
+    val commits = scala.collection.immutable.TreeMap.newBuilder[Long, FileStamp]
+    val cps = Seq.newBuilder[(Long, (String, Option[(Int, Int)], FileStamp))]
+    var pointer = false
+    entries.foreach {
+      case (Commit(v), st) => commits += v.toLong -> st
+      case (name @ Single(v), st) => cps += v.toLong -> ((name, None, st))
+      case (name @ Part(v, p, n), st) => cps += v.toLong -> ((name, Some((p.toInt, n.toInt)), st))
+      case ("_last_checkpoint", _) => pointer = true
+      case _ => ()
+    }
+    // files of one version in name order
+    val checkpoints = cps.result().groupBy(_._1).map { case (v, fs) =>
+      v -> fs.map(_._2).sortBy(_._1).map(f => (f._2, f._3))
+    }
+    new LogListing(commits.result(), checkpoints, pointer)
   }
 }
 

@@ -42,77 +42,90 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
 
   def version: Long = log.latestVersion()
 
-  /** Newest fully-replayed state, reused as the base for INCREMENTAL replay
-    * on later calls — turns the per-call O(commits since checkpoint) log
-    * re-read into O(commits since last call). Correct under concurrent
-    * writers because every call still re-lists the log and replays anything
-    * new; only the already-replayed prefix is reused, and commit files are
-    * immutable once written, so that prefix cannot change. Time-travel
-    * targets below the cache replay from scratch (rare, driver path only).
-    * Holding one extra Snapshot is O(active files) driver memory — the same
-    * order the driver fast-path materializes per call anyway; large tables
-    * route through [[DistributedSnapshot]] and never populate this. */
-  @volatile private var cachedLatest: Option[Snapshot] = None
+  /** What one listing of the log says about `versionOpt` (default: the
+    * latest version): the listing, the `_last_checkpoint` pointer when the
+    * listing shows one, the latest version and the target. Every read-state
+    * entry point resolves once and reads everything else from here. */
+  private final class Resolution(val listing: LogListing, versionOpt: Option[Long]) {
+    val pointer: Option[(Long, Long, Option[Int])] = log.pointer(listing)
+    val latest: Long = math.max(listing.newestCommit, pointer.fold(-1L)(_._1))
+    val target: Long = versionOpt.getOrElse(latest)
+
+    /** The size routing every read-state entry point shares: the
+      * pointer's checkpoint as (cpVersion, parts) when it is at or below
+      * `target`, lists at least `distributedSnapshotThreshold` actions,
+      * and is complete in the listing. None takes the driver path, which
+      * reads the newest complete checkpoint at or below `target`, or
+      * replays the whole log — so a dangling or torn pointer (crash or
+      * cleanup race) degrades instead of reading a missing file. */
+    def distributed: Option[(Long, Option[Int])] =
+      pointer.filter { case (v, size, _) => v <= target && size >= distributedSnapshotThreshold }
+        .flatMap { case (v, _, _) => listing.completeParts(v).map(v -> _) }
+  }
+
+  private def resolve(versionOpt: Option[Long]): Resolution =
+    new Resolution(log.list(), versionOpt)
 
   /** State at `versionOpt` (default: latest), replayed from the newest
-    * checkpoint at or below it (reference: src/delta/table.ts:557-642). */
-  def snapshot(versionOpt: Option[Long] = None): Snapshot = {
-    val latest = log.latestVersion()
-    val target = versionOpt.getOrElse(latest)
+    * complete checkpoint at or below it (reference:
+    * src/delta/table.ts:557-642).
+    *
+    * The state is shared by every instance of the table in the process
+    * ([[TableStateCache]]): one listing of the log validates the cached
+    * state (the commit its version stands on must be listed with the same
+    * length and modification time) and names the commits since it, which
+    * alone are read and replayed onto it. Commit files are immutable once
+    * written, so the replayed prefix cannot change; a commit made through
+    * another instance, or written into the log by another process, is a
+    * listed commit like any other. A cold read, or one after the state
+    * fails validation (the table was dropped and recreated at the path),
+    * reads the newest complete checkpoint at or below the target and the
+    * commits after it. Time travel below the cached state replays from its
+    * checkpoint and does not displace the newer state; a target beyond
+    * the latest version replays the latest state under the target's
+    * number, as before, and is never cached. */
+  def snapshot(versionOpt: Option[Long] = None): Snapshot = snapshotAt(resolve(versionOpt))
+
+  private def snapshotAt(r: Resolution): Snapshot = {
+    val target = r.target
     if (target < 0) return Snapshot.empty
-    // Only versions that exist may enter the cache: a future-version time
-    // travel replays (and mislabels) the state at `latest` exactly like the
-    // pre-cache behavior, but caching that phantom would corrupt every
-    // read once the table actually reaches `target`.
-    val real = target <= latest
-    cachedLatest match {
-      case Some(c) if c.version == target && real => return c
-      case Some(c) if c.version < target && real =>
-        val tail = log.listCommitVersions().filter(v => v > c.version && v <= target)
-        // Contiguity guard: retention cleanup can delete old commits, but
-        // never ones above the cached version; a hole here means something
-        // external mutated the log shape — fall through to a full replay.
-        if (tail.size == (target - c.version)) {
-          val s = Snapshot.replay(c.copy(version = target),
-            tail.iterator.map(v => (v, log.readCommit(v))))
-          cachedLatest = Some(s)
-          return s
-        }
-      case _ => ()
+    val cache = TableStateCache.shared
+    val key = log.qualifiedLogPath
+    val seen = cache.get(key)
+    val valid = seen.filter(e => r.listing.stamp(e.snapshot.version).contains(e.stamp))
+    // Only versions that exist may enter the cache: a target beyond the
+    // latest replays the latest state under the target's number, and
+    // caching that phantom would corrupt every read once the table
+    // actually reaches the target.
+    val real = target <= r.latest
+    val reused = valid.filter(_ => real).flatMap { e =>
+      val from = e.snapshot.version
+      val tail = r.listing.commitsBetween(from, target)
+      // A hole in the tail (an external change to the log's shape) falls
+      // through to a full read.
+      if (from > target || tail.size != target - from) None
+      else if (tail.isEmpty) Some(e.snapshot)
+      else Some(Snapshot.replay(e.snapshot.copy(version = target),
+        tail.iterator.map(v => (v, log.readCommit(v)))))
     }
-    val snap = replayFromCheckpoint(target)
-    if (real && cachedLatest.forall(_.version < target)) cachedLatest = Some(snap)
+    val snap = reused.getOrElse(replayFromCheckpoint(r.listing, target))
+    if (real && !valid.exists(_.snapshot.version >= target))
+      r.listing.stamp(target).foreach(st =>
+        cache.put(key, TableStateCache.Entry(snap, st), seen))
     snap
   }
 
-  private def replayFromCheckpoint(target: Long): Snapshot = {
-    // Trust `_last_checkpoint` only after verifying the files it points at
-    // are ALL on disk (layout re-derived from the files, not the pointer):
-    // a crash between the checkpoint part renames and the pointer write —
-    // or a cleanup race — leaves a dangling pointer or a torn multi-part
-    // checkpoint, and either must degrade to recovery, not a read error.
-    val cpFromPointer = log.readLastCheckpoint().filter(_._1 <= target)
-      .flatMap { case (v, size, _) =>
-        Checkpoints.completeParts(log, v).map(parts => (v, size, parts))
-      }
-    val cp = cpFromPointer.orElse {
-      // Fallback: scan for checkpoint files (pointer may lag, be missing,
-      // or dangle); use the NEWEST COMPLETE one at or below target —
-      // torn checkpoints are skipped, and with none left the replay walks
-      // the full commit log from version 0.
-      Checkpoints.listCheckpointVersions(log).filter(_ <= target)
-        .reverseIterator
-        .map(v => (v, Checkpoints.completeParts(log, v)))
-        .collectFirst { case (v, Some(parts)) => (v, 0L, parts) }
-    }
-    val (base, from) = cp match {
-      case Some((cv, _, parts)) =>
-        (Checkpoints.read(spark, log, cv, parts), cv + 1)
+  private def replayFromCheckpoint(listing: LogListing, target: Long): Snapshot = {
+    // Only a checkpoint whose files are all listed is read: a crash between
+    // the part renames and the pointer write, or a cleanup race, leaves a
+    // torn checkpoint or a dangling pointer, and either must degrade to an
+    // earlier checkpoint or a full replay, not a read error.
+    val (base, from) = listing.newestCompleteCheckpoint(target) match {
+      case Some((cv, parts)) => (Checkpoints.read(spark, log, cv, parts), cv + 1)
       case None => (Snapshot.empty, 0L)
     }
-    val versions = log.listCommitVersions().filter(v => v >= from && v <= target)
     Snapshot.replay(base.copy(version = target),
-      versions.iterator.map(v => (v, log.readCommit(v))))
+      listing.commitsBetween(from - 1, target).iterator.map(v => (v, log.readCommit(v))))
   }
 
   /** Time travel (reference: src/delta/table.ts:1546-1556). */
@@ -221,33 +234,23 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
   /** Which path the last `query(...)` snapshot took (plan-audit hook). */
   private[delta] var lastQueryDistributed: Boolean = false
 
-  /** The size routing every read-state entry point shares: the
-    * `_last_checkpoint` pointer's checkpoint as (cpVersion, parts) when it
-    * is at or below `target`, lists at least `distributedSnapshotThreshold`
-    * actions, and is complete on disk. None takes the driver path, whose
-    * own fallback walks back to the newest complete checkpoint or a full
-    * replay — so a dangling or torn pointer (crash or cleanup race)
-    * degrades instead of reading a missing file. */
-  private def distributedCheckpoint(target: Long): Option[(Long, Option[Int])] =
-    log.readLastCheckpoint()
-      .filter { case (v, size, _) => v <= target && size >= distributedSnapshotThreshold }
-      .flatMap { case (v, _, _) => Checkpoints.completeParts(log, v).map(v -> _) }
-
   /** Pruned scan state at `versionOpt` via the size-appropriate path: a
     * SCAN-ONLY snapshot whose `activeFiles` may hold a row satisfying the
     * predicate `predicateOf` builds from the schema at that version
     * ([[DataSkipping]]; tombstones are empty on the distributed path). */
   private[graft] def scanState(versionOpt: Option[Long],
-                               predicateOf: StructType => Column): Snapshot = {
-    val target = versionOpt.getOrElse(log.latestVersion())
-    val (s, p) = distributedCheckpoint(target) match {
+                               predicateOf: StructType => Column): Snapshot =
+    scanStateAt(resolve(versionOpt), predicateOf)
+
+  private def scanStateAt(r: Resolution, predicateOf: StructType => Column): Snapshot = {
+    val (s, p) = r.distributed match {
       case Some((cv, parts)) =>
         // Large table: never materialize the full add set on the driver.
         lastQueryDistributed = true
-        DistributedSnapshot.prunedState(spark, log, cv, parts, target, predicateOf)
+        DistributedSnapshot.prunedState(spark, log, cv, parts, r.target, predicateOf)
       case None =>
         lastQueryDistributed = false
-        val snap = snapshot(Some(target))
+        val snap = snapshotAt(r)
         val p = DataSkipping.bind(predicateOf(snap.schema), snap.schema,
           snap.partitionColumns)
         (if (p.prunes) snap.copy(activeFiles = snap.activeFiles.filter(p)) else snap, p)
@@ -271,9 +274,9 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * assume-huge default, which is also the right planning answer. */
   private[graft] def tableDimensions(versionOpt: Option[Long],
                                      predicate: Column): Option[(Long, Option[Long])] = {
-    val target = versionOpt.getOrElse(log.latestVersion())
-    if (distributedCheckpoint(target).isDefined) None
-    else Some(StatsAggregates.dimensions(scanState(Some(target), predicate)))
+    val r = resolve(versionOpt)
+    if (r.distributed.isDefined) None
+    else Some(StatsAggregates.dimensions(scanStateAt(r, _ => predicate)))
   }
 
   /** Driver-materialized scan state pinned at an EXPLICIT version, for
@@ -282,9 +285,9 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * re-used by the scan. None above the distributed-snapshot threshold
     * (claiming needs per-file evaluation on the driver). */
   private[graft] def pinnedScanState(versionOpt: Option[Long]): Option[(Long, Snapshot)] = {
-    val target = versionOpt.getOrElse(log.latestVersion())
-    if (distributedCheckpoint(target).isDefined) None
-    else Some((target, scanState(Some(target), lit(true))))
+    val r = resolve(versionOpt)
+    if (r.distributed.isDefined) None
+    else Some((r.target, scanStateAt(r, _ => lit(true))))
   }
 
   /** Distributed twin of the claim evaluation for tables ABOVE the
@@ -297,10 +300,10 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
   private[graft] def distributedClaim(versionOpt: Option[Long],
       candidates: Seq[org.apache.spark.sql.sources.Filter],
       schema: StructType): Option[(Long, Seq[org.apache.spark.sql.sources.Filter])] = {
-    val target = versionOpt.getOrElse(log.latestVersion())
-    distributedCheckpoint(target).map { case (cv, parts) =>
-      (target, DistributedSnapshot.claimDecided(spark, log, cv, parts,
-        target, candidates, schema))
+    val r = resolve(versionOpt)
+    r.distributed.map { case (cv, parts) =>
+      (r.target, DistributedSnapshot.claimDecided(spark, log, cv, parts,
+        r.target, candidates, schema))
     }
   }
 
@@ -312,9 +315,9 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       claimed: Seq[org.apache.spark.sql.sources.Filter], schema: StructType,
       groupCols: Seq[String],
       aggs: Seq[StatsAggregates.StatAgg]): Option[Option[Seq[Seq[Any]]]] = {
-    val target = versionOpt.getOrElse(log.latestVersion())
-    distributedCheckpoint(target).map { case (cv, parts) =>
-      DistributedSnapshot.foldAggregates(spark, log, cv, parts, target,
+    val r = resolve(versionOpt)
+    r.distributed.map { case (cv, parts) =>
+      DistributedSnapshot.foldAggregates(spark, log, cv, parts, r.target,
         claimed, schema, groupCols, aggs)
     }
   }
@@ -323,13 +326,12 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * table size — schema resolution and txn-idempotence checks should use
     * this instead of a full [[snapshot]]. */
   private[graft] def metaSnapshot(versionOpt: Option[Long] = None): Snapshot = {
-    val target = versionOpt.getOrElse(log.latestVersion())
-    distributedCheckpoint(target) match {
+    val r = resolve(versionOpt)
+    r.distributed match {
       case Some((cv, parts)) =>
-        DistributedSnapshot.metaState(spark, log, cv, parts, target)
+        DistributedSnapshot.metaState(spark, log, cv, parts, r.target)
       case None =>
-        val snap = snapshot(Some(target))
-        snap.copy(activeFiles = Nil, tombstones = Nil)
+        snapshotAt(r).copy(activeFiles = Nil, tombstones = Nil)
     }
   }
 
@@ -1596,9 +1598,9 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * stale records. */
   private[delta] def tailState(snapAtRead: Snapshot, relPaths: Set[String])
       : (Long, Map[String, AddFile], Option[TableMetadata], Option[Protocol]) = {
-    val cur = log.latestVersion()
-    val tail = log.listCommitVersions()
-      .filter(v => v > snapAtRead.version && v <= cur)
+    val r = resolve(None)
+    val cur = r.latest
+    val tail = r.listing.commitsBetween(snapAtRead.version, cur)
     // Contiguity guard (mirrors snapshot()'s cache guard): log cleanup never
     // deletes commits above a live reader's version under the retention
     // contract, so a hole in (snapAtRead.version, cur] means something
@@ -1636,12 +1638,12 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * driver (e.g. compaction's below-target-size candidates); below it the
     * cached driver snapshot filters in memory. */
   private[delta] def scanStateWhere(pred: AddFile => Boolean): Snapshot = {
-    val target = log.latestVersion()
-    distributedCheckpoint(target) match {
+    val r = resolve(None)
+    r.distributed match {
       case Some((cv, parts)) =>
-        DistributedSnapshot.stateWhere(spark, log, cv, parts, target, pred)
+        DistributedSnapshot.stateWhere(spark, log, cv, parts, r.target, pred)
       case None =>
-        val snap = snapshot(Some(target))
+        val snap = snapshotAt(r)
         snap.copy(activeFiles = snap.activeFiles.filter(pred))
     }
   }

@@ -8,8 +8,8 @@ import org.json4s.jackson.JsonMethods
 /**
  * Driver-memory soak for the bounded-driver claims: a ~10⁶-file table
  * (synthetic checkpoint entries + a handful of real files in one
- * partition) driven through scan → CoW DML → distributed checkpoint
- * roll-forward → distributed vacuum under a deliberately small heap
+ * partition) driven through scan → warm scan → CoW DML → distributed
+ * checkpoint roll-forward → distributed vacuum under a deliberately small heap
  * (the spec forks this main with `-Xmx1g`). Every phase would OOM a 1 GB
  * driver if it materialized the full file list (~10⁶ AddFile objects plus
  * JSON parse garbage), so survival IS the evidence that the distributed
@@ -109,15 +109,28 @@ object DriverSoak {
       require(big.lastQueryDistributed, "scan did not take the distributed path")
     }
 
+    val schema = org.apache.spark.sql.types.DataType
+      .fromJson(realSnap.metadata.get.schemaString)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+
+    // ---- warm scan: claim and prune on the decoded checkpoint ------------
+    // The first scan paid the one-time decode; this phase times what every
+    // later partition-pruned query pays at this file count: the claim
+    // check and the pruned file list. Its rows are counted after it.
+    val warm = phase("warm-scan") {
+      val claimed = DistributedSnapshot.claimDecided(spark, big.log, realSnap.version,
+        None, big.version, Seq(org.apache.spark.sql.sources.EqualTo("k", 999)), schema)
+      require(claimed.nonEmpty, "the partition filter was not claimed")
+      big.query("""{"k":999}""")
+    }
+    require(warm.count() == realRows, "warm scan lost rows")
+
     // ---- metadata fold: distributed aggregates over 10⁶ files ------------
     // The never-materializing path: COUNT(*) claimed to one partition, over
     // the whole table and GROUP BY k, folded as per-RDD-partition states.
     // Under the 1 GB cap a driver-side file list (10⁶ AddFiles) would OOM
     // here — completing is the heap audit.
     phase("metadata-fold") {
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(realSnap.metadata.get.schemaString)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
       def countStar(claimed: Seq[org.apache.spark.sql.sources.Filter],
                     groupCols: Seq[String]) =
         DistributedSnapshot.foldAggregates(spark, big.log, realSnap.version,

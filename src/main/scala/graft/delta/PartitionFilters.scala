@@ -56,6 +56,26 @@ object PartitionFilters {
     case _ => false
   }
 
+  /** How a file's partition value decodes ([[decode]]): absent (missing
+    * or JSON-null in the log), the null marker, a value of the column's
+    * type, or a string the type's ANSI cast rejects. */
+  val Absent: Byte = 0
+  val NullValue: Byte = 1
+  val Decoded: Byte = 2
+  val Uncastable: Byte = 3
+
+  /** The file's value of a partition column of type `dt` through
+    * [[PartitionPaths.decoder]]: how it decoded ([[Absent]], [[NullValue]],
+    * [[Decoded]] or [[Uncastable]]) and the internal value (null unless
+    * [[Decoded]]). */
+  def decode(value: Option[String], dt: DataType): (Byte, Any) = value match {
+    case None | Some(null) => (Absent, null)
+    case Some(PartitionPaths.NullMarker) => (NullValue, null)
+    case Some(s) =>
+      try (Decoded, PartitionPaths.decoder(dt)(s))
+      catch { case NonFatal(_) => (Uncastable, null) }
+  }
+
   /** One partition column a bound predicate reads: its ordinal in the row
     * [[fill]] writes, and whether the predicate reads its value or only
     * tests it for NULL. */
@@ -68,17 +88,23 @@ object PartitionFilters {
       * decodes to NULL), so a column the predicate only tests for NULL
       * still decides. */
     def fill(row: InternalRow, pv: Map[String, String]): Boolean =
-      pv.get(name) match {
-        case None | Some(null) => false
-        case Some(PartitionPaths.NullMarker) => row.setNullAt(ordinal); true
-        case Some(s) =>
-          try { row.update(ordinal, PartitionPaths.decoder(dt)(s)); true }
-          catch {
-            case NonFatal(_) if !valueRead =>
-              row.update(ordinal, Literal.default(dt).value); true
-            case NonFatal(_) => false
-          }
+      decode(pv.get(name), dt) match {
+        case (Absent, _) => false
+        case (NullValue, _) => row.setNullAt(ordinal); true
+        case (Decoded, v) => row.update(ordinal, v); true
+        case _ if !valueRead => row.update(ordinal, Literal.default(dt).value); true
+        case _ => false
       }
+
+    /** [[fill]] as two expressions over a file's [[decode]]d `state` and
+      * `value` columns: whether the value is known, and the value the row
+      * holds. */
+    def overColumns(state: Expression, value: Expression): (Expression, Expression) =
+      if (valueRead)
+        (cx.In(state, Seq(Literal(NullValue), Literal(Decoded))), value)
+      else
+        (cx.Not(cx.EqualTo(state, Literal(Absent))),
+          cx.If(cx.EqualTo(state, Literal(Uncastable)), Literal.default(dt), value))
   }
 
   /** A filter resolved and bound once, on the driver, against the

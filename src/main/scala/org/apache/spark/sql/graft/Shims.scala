@@ -40,6 +40,14 @@ object Shims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A DataFrame of `schema` over rows already in Catalyst's internal form
+    * (`internalCreateDataFrame` is `private[sql]`). */
+  def ofInternalRows(spark: SparkSession,
+                     rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                     schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema, isStreaming = false)
+
   /** Re-cache any cached plans that read `plan` after a write commits
     * (what Spark's own DSv2 write planning does via its `refreshCache`
     * callback). `CacheManager` is `private[sql]`, hence the shim. */

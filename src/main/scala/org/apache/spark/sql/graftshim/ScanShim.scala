@@ -29,7 +29,8 @@ object ScanShim {
    * source configures it, so a custom `Batch` only has to PLAN partitions.
    * The factory is serializable and creates readers task-side. The file
    * index argument is planning-only and unused by factory construction,
-   * so an empty one is passed.
+   * so an empty one is passed: one per session, since building it lists
+   * (nothing) through a fresh Hadoop job configuration.
    */
   def parquetReaderFactory(spark: SparkSession,
                            dataSchema: StructType,
@@ -38,10 +39,23 @@ object ScanShim {
                            pushedFilters: Array[Filter]): PartitionReaderFactory = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val hadoopConf = cs.sessionState.newHadoopConfWithOptions(Map.empty)
-    val emptyIndex = new InMemoryFileIndex(cs, Nil, Map.empty, None)
-    ParquetScan(cs, hadoopConf, emptyIndex, dataSchema, readDataSchema,
+    ParquetScan(cs, hadoopConf, emptyIndex(cs), dataSchema, readDataSchema,
       partitionSchema, pushedFilters, CaseInsensitiveStringMap.empty(),
       None, Nil, Nil, Array.empty).createReaderFactory()
+  }
+
+  /** The last session's empty index. Only one is held, so a stopped
+    * session is kept alive by at most this reference. */
+  @volatile private var lastEmptyIndex: (SparkSession, InMemoryFileIndex) = (null, null)
+
+  private def emptyIndex(cs: org.apache.spark.sql.classic.SparkSession): InMemoryFileIndex = {
+    val (session, index) = lastEmptyIndex
+    if (session eq cs) index
+    else {
+      val made = new InMemoryFileIndex(cs, Nil, Map.empty, None)
+      lastEmptyIndex = (cs, made)
+      made
+    }
   }
 
   /** One file slice of a [[FilePartition]]. `partitionValues` must match

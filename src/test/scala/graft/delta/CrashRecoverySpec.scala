@@ -24,8 +24,12 @@ class CrashRecoverySpec extends SparkTestBase {
     t
   }
 
-  private def reopen(t: DeltaTable): DeltaTable =
-    DeltaTable.forPath(spark, t.path) // fresh instance = fresh snapshot cache
+  /** A new instance with the table's shared state dropped, as a new
+    * driver process would open it: its read replays from disk. */
+  private def reopen(t: DeltaTable): DeltaTable = {
+    TableStateCache.shared.remove(t.log.qualifiedLogPath)
+    DeltaTable.forPath(spark, t.path)
+  }
 
   test("torn multi-part checkpoint: reader skips it and replays the log") {
     val t = freshTable()

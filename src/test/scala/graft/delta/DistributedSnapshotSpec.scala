@@ -302,4 +302,27 @@ class DistributedSnapshotSpec extends SparkTestBase {
     } finally pool.shutdown()
     assert(cachedEntries == 1)
   }
+
+  test("a claimed query on an already decoded checkpoint launches no claim job") {
+    val log = syntheticLog(5000)
+    assert(prunedPaths(log, 0L, 1L, k3) == driverOracle(log, k3).activeFiles.map(_.path).sorted)
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    import org.apache.spark.sql.sources.{GreaterThan, IsNotNull}
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(DistributedSnapshot.claimDecided(spark, log, 0L, None, 1L,
+        Seq(EqualTo("k", 3), GreaterThan("v", 10L), IsNotNull("k")), schema) ==
+        Seq(EqualTo("k", 3), IsNotNull("k")))
+      // a tail file whose value does not decode leaves equality undecided
+      log.writeCommit(2, Seq(AddFile("k=bogus/part-x.parquet", Map("k" -> "bogus"), 1L, 3L)))
+      assert(DistributedSnapshot.claimDecided(spark, log, 0L, None, 2L,
+        Seq(EqualTo("k", 3), IsNotNull("k")), schema) == Seq(IsNotNull("k")))
+      SpecInternals.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"the claim checks ran ${jobs.get} job(s)")
+  }
 }

@@ -29,6 +29,15 @@ object SessionEnv {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).map(p => s"--add-opens=$p=ALL-UNNAMED")
 
+  /** Off unless the user set it: under Spark's default artifact isolation
+    * each streaming query runs on a cloned session whose tasks get their
+    * own class loader, and generated code is cached per (class loader,
+    * code), so every query compiled its classes again (~50 per streaming
+    * MERGE). A graft session adds no artifacts; one that does can set the
+    * key back to `true`. Set here at build time and on a live session by
+    * [[graft.plans.GraftSql.ensure]]. */
+  val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
   /** Apply master + (when multi-process) executor wiring to a builder. */
   def withMaster(b: SparkSession.Builder, cpus: String): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
@@ -40,6 +49,7 @@ object SessionEnv {
     // and at every scale the cached exchange sizes to the DATA, not to the
     // static partition count (guide §2.2).
     val b0 = b.config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config(ArtifactIsolation, sys.props.getOrElse(ArtifactIsolation, "false"))
     val b1 = b0.master(master)
     if (!master.startsWith("local-cluster")) b1
     else b1

@@ -103,12 +103,11 @@ object BloomIndex {
       val fpp = config.get(FppKey).map(_.toDouble).getOrElse(0.01)
       val maxBits = config.get(MaxBytesKey).map(_.toLong)
         .getOrElse(1024L * 1024).max(64L) * 8L
-      // key every per-row lookup by the scheme-less URI path — the one form
-      // `_metadata.file_path` and `new Path(...)` agree on
-      def uriPath(p: Path): String = p.toUri.getPath
+      // key each file by its decoded path (DeltaTable.fileKey of its
+      // `_metadata.file_path`)
       val info: Map[String, (String, Long)] = adds.map { a =>
-        val abs = new Path(tablePath, a.path)
-        uriPath(abs) -> (a.path, a.parsedStats.map(_.numRecords).getOrElse(1L << 20))
+        new Path(tablePath, a.path).toUri.getPath ->
+          (a.path, a.parsedStats.map(_.numRecords).getOrElse(1L << 20))
       }.toMap
       val absPaths = adds.map(a => new Path(tablePath, a.path).toString)
       val readSchema = StructType(cols.map { case (_, phys, dt) =>
@@ -147,10 +146,10 @@ object BloomIndex {
         bs
       }
       rows.rdd
-        .map(r => (uriPath(new Path(r.getString(0))), r))
+        .map(r => (DeltaTable.fileKey(r.getString(0)), r))
         .combineByKey[Array[BloomFilter]](
           (r: org.apache.spark.sql.Row) => insert(
-            newBlooms(infoB.value.get(uriPath(new Path(r.getString(0))))
+            newBlooms(infoB.value.get(DeltaTable.fileKey(r.getString(0)))
               .map(_._2).getOrElse(1L << 20)), r),
           (bs: Array[BloomFilter], r: org.apache.spark.sql.Row) => insert(bs, r),
           (a: Array[BloomFilter], b: Array[BloomFilter]) => {

@@ -760,7 +760,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     // a small serializable set, shippable by the distributed path.
     val replaced = scanStateWhere(f => written.contains(f.partitionValues))
     val rewrittenAbs = replaced.activeFiles
-      .map(f => new Path(tablePath, f.path).toUri.getPath).toSet
+      .map(f => new Path(tablePath, f.path).toUri.toString).toSet
     val v = commitRewrite(replaced, rewrittenAbs, adds,
       "WRITE-DYNAMIC-OVERWRITE",
       tailAddConflict = Some(a => a.dataChange && written.contains(a.partitionValues)),
@@ -1092,11 +1092,11 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       .agg(aggs.head, aggs.tail: _*).collect()
 
     val byPath: Map[String, Row] = rows.map { r =>
-      new Path(r.getString(0)).toUri.getPath -> r
+      DeltaTable.fileKey(r.getString(0)) -> r
     }.toMap
 
     adds.map { add =>
-      val key = new Path(tablePath, add.path).toUri.getPath
+      val key = fileKeyOf(add.path)
       byPath.get(key) match {
         case None => add
         case Some(r) =>
@@ -1248,8 +1248,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       .groupBy(col("__file"))
       .agg(DeletionVectors.bitmapAgg(col("__ri")).as("__dv"))
       .collect()
-      .map(r => new Path(r.getString(0)).toUri.getPath ->
-        r.getAs[Array[Byte]](1))
+      .map(r => DeltaTable.fileKey(r.getString(0)) -> r.getAs[Array[Byte]](1))
       .toMap
     val v = commitDvMask(snap, dvByPath, Nil, "DELETE", nMatched)
     if (cdcConfigured(snap)) {
@@ -1274,7 +1273,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
                                   idAlloc: Seq[IdentityColumns.Spec] = Nil,
                                   metrics: Map[String, String] = Map.empty): Long = {
     val relByAbs = snapAtRead.activeFiles
-      .map(f => new Path(tablePath, f.path).toUri.getPath -> f.path).toMap
+      .map(f => fileKeyOf(f.path) -> f.path).toMap
     val maskedRel: Map[String, Array[Byte]] = dvByPath.map { case (abs, dv) =>
       relByAbs.getOrElse(abs, throw new IllegalStateException(
         s"DV mask for a file absent from the read snapshot: $abs")) -> dv
@@ -1372,8 +1371,7 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
       .groupBy(col("__file"))
       .agg(DeletionVectors.bitmapAgg(col("__ri")).as("__dv"))
       .collect()
-      .map(r => new Path(r.getString(0)).toUri.getPath ->
-        r.getAs[Array[Byte]](1))
+      .map(r => DeltaTable.fileKey(r.getString(0)) -> r.getAs[Array[Byte]](1))
       .toMap
     // ONE projection over the matched rows, every RHS against the OLD row.
     val assigned = updates.toMap
@@ -1497,6 +1495,9 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     target.fold(c)(dt => c.cast(dt))
   }
 
+  /** [[DeltaTable.fileKey]] of a log entry's relative path. */
+  private[delta] def fileKeyOf(rel: String): String = new Path(tablePath, rel).toUri.getPath
+
   /** DataFrame over candidate files with their source file path attached. */
   private def candidateDF(snap: Snapshot, candidates: Seq[AddFile]): DataFrame =
     toDF(snap.copy(activeFiles = candidates))
@@ -1513,9 +1514,8 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     * also skips the unmatched files' IO. */
   private[delta] def matchedFilesDF(snap: Snapshot, candidates: Seq[AddFile],
                                     matchedFiles: Seq[String]): DataFrame = {
-    val matchedNorm = matchedFiles.map(p => new Path(p).toUri.getPath).toSet
-    candidateDF(snap, candidates.filter(f =>
-      matchedNorm.contains(new Path(tablePath, f.path).toUri.getPath)))
+    val matchedNorm = matchedFiles.map(DeltaTable.fileKey).toSet
+    candidateDF(snap, candidates.filter(f => matchedNorm.contains(fileKeyOf(f.path))))
   }
 
   /** Which candidate files actually contain matching rows, and how many rows
@@ -1674,9 +1674,9 @@ final class DeltaTable private (val spark: SparkSession, val path: String) {
     // Normalize once into a set: an `exists` over rewrittenAbs inside this
     // filter would be O(activeFiles × rewritten) string compares — a driver
     // CPU blow-up at 10⁶ files.
-    val rewrittenNorm = rewrittenAbs.map(abs => new Path(abs).toUri.getPath)
+    val rewrittenNorm = rewrittenAbs.map(DeltaTable.fileKey)
     val rewrittenRel = snapAtRead.activeFiles.filter(f =>
-      rewrittenNorm.contains(new Path(tablePath, f.path).toUri.getPath))
+      rewrittenNorm.contains(fileKeyOf(f.path)))
       .map(_.path).toSet
     val readRecords = snapAtRead.activeFiles
       .filter(f => rewrittenRel.contains(f.path)).map(f => f.path -> f).toMap
@@ -2446,6 +2446,13 @@ object DeltaTable {
     * JVM replaces it with a park-and-await so the parent can kill -9 it
     * in the vulnerable window; production never touches it. */
   private[graft] var onDataFilesStaged: Seq[AddFile] => Unit = _ => ()
+
+  /** The key DML and index builds match a read file by: the decoded path
+    * of a `_metadata.file_path` URI, equal to [[DeltaTable.fileKeyOf]] of
+    * the log entry it was read from. `new Path(uri).toUri.getPath` is not: a
+    * Path built from a string quotes its `%` again, so an escaped
+    * partition directory (`p=a%3Ab`, `p=caf%C3%A9`) would match nothing. */
+  def fileKey(filePath: String): String = new java.net.URI(filePath).getPath
 
   /** Whether `path` holds a Delta table (a `_delta_log` with ≥1 commit). */
   def isDeltaTable(spark: SparkSession, path: String): Boolean =

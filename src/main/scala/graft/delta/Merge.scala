@@ -379,8 +379,7 @@ object Merge {
           table.appendCommit(adds, "MERGE-INSERT", Some(snap), idAlloc, metrics)
         } else if (mask) {
           val dvByPath = affected.map(r =>
-            new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath ->
-              r.getAs[Array[Byte]]("__dv")).toMap
+            DeltaTable.fileKey(r.getString(0)) -> r.getAs[Array[Byte]]("__dv")).toMap
           table.commitDvMask(snap, dvByPath, adds, "MERGE", dels + upds,
             idAlloc = idAlloc, metrics = metrics)
         } else table.commitFileRewrite(snap, affectedFiles.toSet, adds, "MERGE",

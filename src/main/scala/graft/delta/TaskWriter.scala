@@ -321,9 +321,9 @@ final class TaskWriter(f: TaskWriterFactory, partitionId: Int, taskId: Long, epo
         if (rendered.isNullAt(i)) PartitionPaths.NullMarker
         else {
           val s = rendered.getUTF8String(i).toString
-          if (s.isEmpty) PartitionPaths.NullMarker else WriteShim.escapePathName(s)
+          if (s.isEmpty) PartitionPaths.NullMarker else PartitionPaths.escape(s)
         }
-      s"${WriteShim.escapePathName(f.partCols(i))}=$v"
+      s"${PartitionPaths.escape(f.partCols(i))}=$v"
     }.mkString("", "/", "/")
   }
 

@@ -1342,9 +1342,12 @@ object GraftSql {
 
   /** Idempotently enable the catalog + SQL DML on a live session; returns
     * the catalog name. `warehouse` overrides the default temp-dir
-    * warehouse (first caller wins for the session). */
+    * warehouse (first caller wins for the session). Also turns
+    * [[graft.SessionEnv.ArtifactIsolation]] off unless the key is set. */
   def ensure(spark: SparkSession, warehouse: Option[String] = None): String =
     synchronized {
+      if (!spark.conf.getAll.contains(graft.SessionEnv.ArtifactIsolation))
+        spark.conf.set(graft.SessionEnv.ArtifactIsolation, "false")
       val key = s"spark.sql.catalog.$CatalogName"
       if (spark.conf.getOption(key).isEmpty) {
         val wh = warehouse.getOrElse {

@@ -39,6 +39,51 @@ class DirectDataWriteSpec extends graft.SparkTestBase {
     assert(snap.activeFiles.forall(_.stats.nonEmpty))
   }
 
+  test("non-ASCII and + partition values write ASCII directory names and read back") {
+    val dir = newDir()
+    val t = DeltaTable.forPath(spark, dir)
+    val ps = Seq("café", "ｶ", "𝄞", "a:b", "a+b c", "plain")
+    t.write(ps.zipWithIndex.map { case (p, i) => (i.toLong, p) }.toDF("id", "p"),
+      partitionBy = Seq("p"))
+    val paths = t.snapshot().activeFiles.map(_.path)
+    assert(paths.forall(_.forall(_ < 0x80)), s"non-ASCII path in $paths")
+    assert(paths.exists(_.startsWith("p=caf%C3%A9/")), paths)
+    assert(t.snapshot().activeFiles.map(_.partitionValues("p")).toSet == ps.toSet)
+    assert(t.toDF().orderBy("id").collect().map(_.getString(1)).toSeq == ps)
+    assert(t.toDF().where(col("p") === "𝄞").count() == 1)
+  }
+
+  // DML matches the files it read (`_metadata.file_path`, a URI) against
+  // the log's relative paths; an escaped directory name holds `%` and a
+  // space, which the URI form quotes.
+  for ((mode, dv) <- Seq("copy-on-write" -> false, "deletion vectors" -> true))
+    test(s"a non-ASCII partition column and escaped values survive DML ($mode)") {
+      val dir = newDir()
+      val t = DeltaTable.forPath(spark, dir)
+      val ps = Seq("café", "a:b", "a b")
+      val rows = for ((p, i) <- ps.zipWithIndex; j <- 0 to 1) yield (i * 2L + j, p, "v")
+      t.write(rows.toDF("id", "café", "v"), partitionBy = Seq("café"))
+      val files = t.snapshot().activeFiles
+      assert(files.forall(_.partitionValues.keySet == Set("café")), files)
+      assert(files.exists(_.path.startsWith("caf%C3%A9=caf%C3%A9/")), files)
+      assert(files.exists(_.path.startsWith("caf%C3%A9=a%3Ab/")), files)
+      def rowsNow = t.toDF().orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+      assert(rowsNow == rows)
+
+      val gone = col("café") === "café" && col("id") === 0L
+      if (dv) t.deleteWithDV(gone) else t.delete(gone)
+      val set = Seq("v" -> lit("u"))
+      val upd = col("café") === "a:b"
+      if (dv) t.updateWithDV(upd, set) else t.update(upd, set)
+      val src = Seq((1L, "café", "m"), (6L, "café", "new")).toDF("id", "café", "v")
+      if (dv) t.mergeWithDV(src, Seq("id")) else t.merge(src, Seq("id"))
+
+      assert(rowsNow == Seq((1L, "café", "m"), (2L, "a:b", "u"), (3L, "a:b", "u"),
+        (4L, "a b", "v"), (5L, "a b", "v"), (6L, "café", "new")))
+      assert(t.toDF().where(col("café") === "café").count() == 2)
+    }
+
   test("repeated writes never collide on a file name") {
     val dir = newDir()
     val t = DeltaTable.forPath(spark, dir)

@@ -1,8 +1,6 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 import graft.SparkTestBase
 import graft.delta.StatsAggregates
@@ -35,13 +33,8 @@ class AggPushdownPropertySpec extends SparkTestBase {
   private def rows(q: String): Seq[String] =
     spark.sql(q).collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
 
-  /** Builds one seeded table; returns its name and directory. Rows with
-    * a non-ASCII partition value are committed as files another writer
-    * made: a Delta path need not be a Hive directory (and a non-ASCII
-    * directory name does not encode under a POSIX locale), while the log's
-    * `partitionValues` are what the engine reads. */
+  /** Builds one seeded table through SQL; returns its name and directory. */
   private def table(seed: Int): (String, String) = {
-    import org.apache.spark.sql.types._
     val rnd = new scala.util.Random(seed)
     val t = s"$cat.aggprop.t${seed}_${System.nanoTime()}"
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.aggprop")
@@ -54,26 +47,8 @@ class AggPushdownPropertySpec extends SparkTestBase {
       (i.toLong, orNull(rnd.nextInt(1000) - 500), orNull(ps(1 + rnd.nextInt(4)) + rnd.nextInt(9)),
         Option(ps(rnd.nextInt(ps.size))), Option(qs(rnd.nextInt(qs.size))).map(_.asInstanceOf[Int]))
     }
-    val (ascii, foreign) = data.partition(_._4.forall(_.forall(_ < 128)))
-    ascii.toDF("id", "v", "s", "p", "q").repartition(3).createOrReplaceTempView("aggprop_src")
+    data.toDF("id", "v", "s", "p", "q").repartition(3).createOrReplaceTempView("aggprop_src")
     spark.sql(s"INSERT INTO $t SELECT * FROM aggprop_src")
-    val delta = graft.delta.DeltaTable.forPath(spark, dir.toString)
-    val adds = foreign.groupBy(r => (r._4.get, r._5)).toSeq.zipWithIndex.map {
-      case (((p, q), rows), i) =>
-        val tmp = Files.createTempDirectory("graft-aggprop").toString
-        rows.map(r => (r._1, r._2, r._3)).toDF("id", "v", "s").coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
-        val src = Files.list(Paths.get(tmp)).iterator().asScala
-          .find(_.toString.endsWith(".parquet")).get
-        val name = s"foreign-$i.parquet"
-        Files.copy(src, dir.resolve(name))
-        val stats = graft.delta.FooterStats.readOne(dir.resolve(name).toString,
-          delta.log.hadoopConf, Seq("id" -> LongType, "v" -> IntegerType, "s" -> StringType))
-        graft.delta.AddFile(name,
-          Map("p" -> p, "q" -> q.fold(graft.delta.PartitionPaths.NullMarker)(_.toString)),
-          Files.size(src), 0L, stats = Some(stats.toJsonString))
-    }
-    if (adds.nonEmpty) delta.log.writeCommit(delta.version + 1, adds)
     (t, dir.toString)
   }
 

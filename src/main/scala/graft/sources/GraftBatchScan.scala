@@ -58,7 +58,9 @@ import graft.delta.{AddFile, DeletionVectors, Snapshot}
  *    DV build key rows by them): the path is a per-file constant next to
  *    the partition values, the position Parquet's own row-index column
  *    (exact under row-group skipping); scans requesting them read rows.
- *  - `numFiles` driver metric: files read after runtime filtering.
+ *  - Driver metrics: `numFiles` (files read after runtime filtering),
+ *    `runtimeFilters` (runtime-filter calls) and `runtimeSkippedFiles`
+ *    (planned files the last runtime filtering dropped).
  *
  * Reference behavior: scan with projection/filter over the snapshot's
  * file list (src/delta/table.ts:1689-1761); the planning/execution split
@@ -121,8 +123,7 @@ private[sources] final class GraftBatchScan(
 
   override def filter(predicates: Array[Predicate]): Unit = {
     runtimeFilters = predicates.flatMap(p => ScanShim.toV1Filter(p).toSeq)
-    GraftBatchScan.runtimeFilterEvents.incrementAndGet()
-    ()
+    runtimeFilterCalls += 1
   }
 
   // ---- planning -------------------------------------------------------------
@@ -148,8 +149,11 @@ private[sources] final class GraftBatchScan(
     case dv: GraftDvPartition => dv.inner.files.iterator.map(_.filePath)
   }.toSet.size.toLong
 
-  /** Files the executed scan reads (the `numFiles` driver metric). */
+  // The driver metrics: files the executed scan reads, runtime-filter
+  // calls, and the base-plan files the last runtime filtering dropped.
   @volatile private var plannedFiles: Long = 0L
+  @volatile private var runtimeFilterCalls: Long = 0L
+  @volatile private var runtimeSkipped: Long = 0L
 
   override def planInputPartitions(): Array[InputPartition] = {
     val parts =
@@ -166,31 +170,38 @@ private[sources] final class GraftBatchScan(
           snap, DeltaRelation.conjunction(runtimeFilters.toSeq))
         val (refiltered, _) = GraftBatchScan.planFiles(spark, table, pruned,
           requiredPart.toIndexedSeq, withFilePath = needsFilePath)
-        GraftBatchScan.runtimeSkippedFiles.addAndGet(
-          fileCount(basePlan.partitions) - fileCount(refiltered))
+        runtimeSkipped = fileCount(basePlan.partitions) - fileCount(refiltered)
         refiltered
       }
     plannedFiles = fileCount(parts)
     parts
   }
 
-  override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new GraftBatchScan.NumFiles)
+  override def supportedCustomMetrics(): Array[CustomMetric] = Array(
+    new GraftBatchScan.NumFiles, new GraftBatchScan.RuntimeFilters,
+    new GraftBatchScan.RuntimeSkippedFiles)
 
-  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
-    val n = plannedFiles
-    Array(new CustomTaskMetric {
-      override def name(): String = GraftBatchScan.NumFilesMetric
-      override def value(): Long = n
-    })
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = Array(
+    GraftBatchScan.NumFilesMetric -> plannedFiles,
+    GraftBatchScan.RuntimeFiltersMetric -> runtimeFilterCalls,
+    GraftBatchScan.RuntimeSkippedFilesMetric -> runtimeSkipped).map { case (n, v) =>
+    new CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
   }
 
   // ---- reading --------------------------------------------------------------
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  /** Built once per scan: Spark asks again for every `BatchScanExec` that
+    * planning and each adaptive re-plan make over this scan, and runtime
+    * filters change only the partitions, never the factory. */
+  private lazy val readerFactory: PartitionReaderFactory =
     GraftBatchScan.readerFactoryFor(spark, table, basePlan.snapshot.schema,
       partCols, requiredData, requiredPart, allPushed, basePlan.columnarOk,
       metadata = requiredMeta)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** `spark.readStream.table(...)` — the scan builder is the only DSv2
     * entry point for streaming reads, so the batch scan doubles as the
@@ -269,12 +280,19 @@ private[graft] object GraftBatchScan {
   private val FilePathInput = "_graft_file_path"
 
   val NumFilesMetric = "numFiles"
+  val RuntimeFiltersMetric = "runtimeFilters"
+  val RuntimeSkippedFilesMetric = "runtimeSkippedFiles"
 
-  /** Driver metric: files the executed scan read. */
-  final class NumFiles extends CustomSumMetric {
-    override def name(): String = NumFilesMetric
-    override def description(): String = "number of files read"
-  }
+  // The scan's driver metrics. Spark re-instantiates a metric by its class
+  // name when it aggregates, so each needs its own no-argument class.
+  sealed abstract class DriverMetric(override val name: String,
+                                     override val description: String)
+    extends CustomSumMetric
+  final class NumFiles extends DriverMetric(NumFilesMetric, "number of files read")
+  final class RuntimeFilters
+    extends DriverMetric(RuntimeFiltersMetric, "runtime filters applied")
+  final class RuntimeSkippedFiles
+    extends DriverMetric(RuntimeSkippedFilesMetric, "files skipped by runtime filters")
 
   /** File list → read partitions: clean files slice by Spark's split-size
     * formula and bin-pack; DV files become whole-file row-mode partitions
@@ -381,22 +399,13 @@ private[graft] object GraftBatchScan {
         })
       else if (target == columns) Nil
       else target.map(column)
-    GraftReaderFactory(
-      ScanShim.parquetReaderFactory(spark, dataSchema, readDataSchema,
-        partSchema, pushable),
-      // DV readers must see every physical row IN ORDER: no pushed
-      // filters, so no row-group or page skipping can shift positions.
-      ScanShim.parquetReaderFactory(spark, dataSchema, readDataSchema,
-        partSchema, Array.empty),
-      columnarOk = columnarOk && project.isEmpty,
-      project = project)
+    // DV readers must see every physical row IN ORDER: the second factory
+    // pushes no filter, so no row-group or page skipping can shift positions.
+    val (clean, dvRaw) = ScanShim.parquetReaderFactories(spark, dataSchema,
+      readDataSchema, partSchema, pushable)
+    GraftReaderFactory(clean, dvRaw,
+      columnarOk = columnarOk && project.isEmpty, project = project)
   }
-
-  /** Test/inspection hook: runtime-filter invocations since JVM start. */
-  val runtimeFilterEvents = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test/inspection hook: partitions dropped by runtime filtering. */
-  val runtimeSkippedFiles = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Rewrite a pushed filter's field names for column-mapped reads; None
     * drops the filter from parquet pushdown (Spark still re-evaluates it

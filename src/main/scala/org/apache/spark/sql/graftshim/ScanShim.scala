@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
 import org.apache.spark.sql.internal.connector.PredicateUtils
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -22,26 +22,35 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 object ScanShim {
 
   /**
-   * A parquet [[PartitionReaderFactory]] built by Spark's OWN
+   * A pair of parquet [[PartitionReaderFactory]]s built by Spark's OWN
    * `ParquetScan.createReaderFactory` — every session read semantic
    * (vectorized reader, timestamp units/rebase modes, case sensitivity,
    * off-heap buffers) is configured exactly as Spark's native parquet
    * source configures it, so a custom `Batch` only has to PLAN partitions.
-   * The factory is serializable and creates readers task-side. The file
-   * index argument is planning-only and unused by factory construction,
-   * so an empty one is passed: one per session, since building it lists
-   * (nothing) through a fresh Hadoop job configuration.
+   * The first factory pushes `pushedFilters` into the Parquet reader; the
+   * second is its copy with none (deletion-vector reads must see every
+   * physical row). The pair shares ONE broadcast Hadoop configuration, as a
+   * native scan's factory does: the conf carries the read schema, never the
+   * filters, and serializing it (each property's GZIP-compressed source
+   * list) is most of a factory's driver cost. The factories are
+   * serializable and create readers task-side. The file index argument is
+   * planning-only and unused by factory construction, so an empty one is
+   * passed: one per session, since building it lists (nothing) through a
+   * fresh Hadoop job configuration.
    */
-  def parquetReaderFactory(spark: SparkSession,
-                           dataSchema: StructType,
-                           readDataSchema: StructType,
-                           partitionSchema: StructType,
-                           pushedFilters: Array[Filter]): PartitionReaderFactory = {
+  def parquetReaderFactories(spark: SparkSession,
+                             dataSchema: StructType,
+                             readDataSchema: StructType,
+                             partitionSchema: StructType,
+                             pushedFilters: Array[Filter])
+      : (PartitionReaderFactory, PartitionReaderFactory) = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val hadoopConf = cs.sessionState.newHadoopConfWithOptions(Map.empty)
-    ParquetScan(cs, hadoopConf, emptyIndex(cs), dataSchema, readDataSchema,
-      partitionSchema, pushedFilters, CaseInsensitiveStringMap.empty(),
-      None, Nil, Nil, Array.empty).createReaderFactory()
+    val pushed = ParquetScan(cs, hadoopConf, emptyIndex(cs), dataSchema,
+      readDataSchema, partitionSchema, pushedFilters,
+      CaseInsensitiveStringMap.empty(), None, Nil, Nil, Array.empty)
+      .createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
+    (pushed, pushed.copy(filters = Array.empty))
   }
 
   /** The last session's empty index. Only one is held, so a stopped

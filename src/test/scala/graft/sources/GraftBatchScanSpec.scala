@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -12,7 +13,7 @@ import graft.plans.GraftSql
  * column-mapped, DV-masked, mixed), columnar execution for DV-free
  * tables, and runtime file pruning from broadcast-join predicates.
  */
-class GraftBatchScanSpec extends SparkTestBase {
+class GraftBatchScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private lazy val cat: String = GraftSql.ensure(spark)
 
@@ -140,17 +141,21 @@ class GraftBatchScanSpec extends SparkTestBase {
     val dim = freshTable()
     sql(s"CREATE TABLE $dim (p STRING, keep INT)")
     sql(s"INSERT INTO $dim VALUES ('p3', 1), ('p9', 0)")
-    val events = GraftBatchScan.runtimeFilterEvents.get()
-    val skipped = GraftBatchScan.runtimeSkippedFiles.get()
     val joined = sql(
       s"SELECT t.id FROM $t t JOIN $dim d ON t.p = d.p WHERE d.keep = 1")
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruningexpression"),
       s"DPP filter not injected into the scan:\n$plan")
-    assert(joined.count() == 1000)
-    assert(GraftBatchScan.runtimeFilterEvents.get() > events,
+    assert(joined.collect().length == 1000)
+    // The executed fact-side scan's own driver metrics.
+    val fact = collect(joined.queryExecution.executedPlan) {
+      case b: BatchScanExec if b.runtimeFilters.nonEmpty => b
+    }
+    assert(fact.size == 1, joined.queryExecution.executedPlan.toString)
+    def metric(name: String) = fact.head.metrics(name).value
+    assert(metric(GraftBatchScan.RuntimeFiltersMetric) > 0,
       "runtime filter should have reached the scan")
-    assert(GraftBatchScan.runtimeSkippedFiles.get() > skipped,
+    assert(metric(GraftBatchScan.RuntimeSkippedFilesMetric) > 0,
       "runtime filter should have pruned planned partitions")
   }
 

@@ -66,12 +66,18 @@ class RuntimeFilterPinSpec extends SparkTestBase {
     val scan = df.queryExecution.executedPlan
       .collect { case b: BatchScanExec => b }.head
       .scan.asInstanceOf[GraftBatchScan]
+    def metrics = scan.reportDriverMetrics().map(m => m.name() -> m.value()).toMap
     scan.planInputPartitions()
-    val before = GraftBatchScan.runtimeSkippedFiles.get()
+    val planned = metrics(GraftBatchScan.NumFilesMetric)
+    assert(metrics(GraftBatchScan.RuntimeSkippedFilesMetric) == 0)
     sql(s"INSERT INTO $t SELECT id, 'p1' FROM range(25)") // concurrent append
     scan.filter(Array(eqPred("p", "p1")))
     scan.planInputPartitions()
-    assert(GraftBatchScan.runtimeSkippedFiles.get() >= before,
-      "skipped-file metric must not decrease (refiltered set ⊆ base set)")
+    val after = metrics
+    assert(after(GraftBatchScan.RuntimeFiltersMetric) == 1)
+    assert(after(GraftBatchScan.RuntimeSkippedFilesMetric) >= 0,
+      "skipped-file metric must not go negative (refiltered set ⊆ base set)")
+    assert(after(GraftBatchScan.RuntimeSkippedFilesMetric) +
+      after(GraftBatchScan.NumFilesMetric) == planned)
   }
 }
